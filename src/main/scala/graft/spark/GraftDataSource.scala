@@ -512,14 +512,8 @@ class GraftReplaceBatchWrite(root: String, schema: StructType,
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DataWriterFactory = {
     graft.table.TableIO.mkdirs(staging)
-    val spec = if (Meta.exists(root)) Meta.load(root).spec else Seq.empty
     ReplaceRowAdapterFactory(
-      GraftWriterFactory(staging.toString,
-        GraftConnectorShim.prepareParquetWriteConf(SparkSession.active,
-          GraftWriteSchemas.withTableFieldIds(root, schema),
-          GraftWriteSchemas.bloomOptions(root)),
-        RowTransform.forSpec(spec, schema)),
-      schema)
+      GraftWriterFactory.forTable(root, schema, staging.toString), schema)
   }
 
   override def commit(
@@ -1025,7 +1019,7 @@ class GraftScan(root: String, table: Meta.TableMetadata,
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GraftMicroBatchStream(root, requiredSchema, streamOptions)
+    TableMicroBatchStream.graft(root, requiredSchema, streamOptions)
 
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
@@ -1848,115 +1842,30 @@ class GraftWrite(root: String, schema: StructType, mode: GraftWriteMode,
   override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
     new GraftBatchWrite(root, schema, mode, presorted, branch)
 
-  override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-    new GraftStreamingWrite(root, schema,
-      mode == GraftWriteMode.Truncate, queryId, branch)
-}
-
-/** Structured Streaming sink (`df.writeStream.format("graft")`):
-  * each micro-batch stages per-epoch parquet on the executors and
-  * the driver commits ONE snapshot per epoch, stamped with the
-  * stable streaming query id + epoch id. Exactly-once across query
-  * restarts comes from the stamp: Spark replays the last epoch after
-  * recovery, and a replayed commit whose (query-id, epoch-id) is
-  * already in the snapshot history is dropped (Iceberg's streaming
-  * writer dedups the same way). Complete mode (truncate) overwrites
-  * the table per epoch. Crashed epochs leave only a `stage-stream-*`
-  * dir that remove_orphan_files sweeps. */
-class GraftStreamingWrite(root: String, schema: StructType,
-    truncate: Boolean, queryId: String, branch: String = "main")
-  extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  import graft.table.TableIO
-
-  // per-RUN staging root: a crashed run's half-staged epoch can never
-  // leak into a later run's ingest (it becomes an orphan dir instead)
-  private val staging = TableIO.path(root,
-    s"stage-stream-${java.util.UUID.randomUUID().toString.take(8)}")
-
-  private def epochDir(epochId: Long) =
-    new org.apache.hadoop.fs.Path(staging, s"epoch-$epochId")
-
-  override def createStreamingWriterFactory(
-      info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
-    val spec = if (Meta.exists(root)) Meta.load(root).spec else Seq.empty
-    GraftStreamingWriterFactory(staging.toString,
-      GraftConnectorShim.prepareParquetWriteConf(SparkSession.active,
-        GraftWriteSchemas.withTableFieldIds(root, schema),
-        GraftWriteSchemas.bloomOptions(root)),
-      RowTransform.forSpec(spec, schema))
-  }
-
-  override def commit(epochId: Long,
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
-    val t = GraftTable.load(SparkSession.active, root)
-    // dedup anchors: the snapshot stamp AND a high-water table
-    // property that survives expireSnapshots dropping the stamped
-    // snapshots — a delayed recovery replay after an expire still
-    // commits nothing. The SAME predicate is re-evaluated inside the
-    // commit's conflict-retry loop (skipIf below): a zombie run that
-    // loses the CAS race to a concurrent run of the same query must
-    // observe the winner's epoch and back off, not double-commit and
-    // regress the high-water on retry.
-    val hwKey = s"graft.streaming.epoch.$queryId"
-    // unparseable stamps (a hand-edited or corrupted property) read as
-    // ABSENT — the snapshot-stamp anchor still dedups — rather than
-    // permanently failing every commit of this query with an NFE
-    def stampedAtLeast(v: String): Boolean =
-      scala.util.Try(v.toLong).toOption.exists(_ >= epochId)
-    def replayedIn(m: graft.table.Meta.TableMetadata): Boolean =
-      m.properties.get(hwKey).exists(stampedAtLeast) ||
-        m.snapshots.exists(s =>
-          s.summary.get("streaming-query-id").contains(queryId) &&
-            s.summary.get("streaming-epoch-id").exists(stampedAtLeast))
-    val replayed = replayedIn(t.meta)
-    val dir = epochDir(epochId)
-    val rows = messages.collect { case GraftCommitMessage(_, n) => n }.sum
-    // recovery replay of an already-committed epoch, or a rowless
-    // append batch (watermark-only tick): nothing to commit — but an
-    // EMPTY complete-mode result must still truncate
-    if (replayed || !TableIO.exists(dir) || (rows == 0 && !truncate)) {
-      TableIO.delete(staging, recursive = true)
-      return
-    }
-    t.commitStagedWrite(dir, truncate, summaryExtra = Map(
-      "streaming-query-id" -> queryId,
-      "streaming-epoch-id" -> epochId.toString),
-      // micro-batch planning honors RequiresDistributionAndOrdering,
-      // so sorted-table epochs arrive range-clustered like batch writes
-      presorted = GraftWriteLayout.presorted(root), branch = branch,
-      propsExtra = Map(hwKey -> epochId.toString),
-      skipIf = replayedIn)
-    // the ingest consumed the epoch dir; an empty run root is just
-    // residue — drop it (the next epoch's writers re-mkdir on demand)
-    if (TableIO.exists(staging) && TableIO.listDir(staging).isEmpty)
-      TableIO.delete(staging, recursive = true)
-    ()
-  }
-
-  override def abort(epochId: Long,
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
-    TableIO.delete(epochDir(epochId), recursive = true)
-}
-
-/** Executor side of the streaming sink: same writers as the batch
-  * path, rooted in the epoch's staging dir (partition-spec'd tables
-  * row-route exactly like batch writes). */
-case class GraftStreamingWriterFactory(staging: String,
-    conf: org.apache.spark.util.SerializableConfiguration,
-    transforms: Seq[RowTransform] = Seq.empty)
-  extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[org.apache.spark.sql.catalyst.InternalRow] = {
-    val dir = s"$staging/epoch-$epochId"
-    val hp = new org.apache.hadoop.fs.Path(dir)
-    hp.getFileSystem(conf.value).mkdirs(hp)
-    if (transforms.isEmpty)
-      new GraftDataWriter(
-        s"$dir/part-$partitionId-$taskId-${GraftWriterFactory.fileTag()}.parquet",
-        conf.value, partitionId, taskId)
-    else
-      new PartitionedGraftDataWriter(dir, conf.value, partitionId, taskId, transforms)
+  /** Complete mode (truncate) overwrites the target ref per epoch;
+    * the epoch's dedup predicate is re-evaluated inside the commit's
+    * conflict-retry loop (skipIf): a zombie run that loses the CAS race
+    * to a concurrent run of the same query must observe the winner's
+    * epoch and back off, not double-commit and regress the high-water
+    * on retry. */
+  override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
+    val truncate = mode == GraftWriteMode.Truncate
+    new StagedStreamingWrite(root, truncate,
+      GraftWriterFactory.forTable(root, schema, _),
+      (dir, epochId) => {
+        val t = GraftTable.load(SparkSession.active, root)
+        val epoch = graft.table.StreamEpoch(queryId, epochId)
+        def replayed(m: Meta.TableMetadata): Boolean =
+          epoch.replayedIn(m.properties, m.snapshots.iterator.map(_.summary))
+        !replayed(t.meta) && graft.table.TableIO.exists(dir) && {
+          t.commitStagedWrite(dir, truncate, summaryExtra = epoch.summary,
+            // micro-batch planning honors RequiresDistributionAndOrdering,
+            // so sorted-table epochs arrive range-clustered like batch writes
+            presorted = presorted, branch = branch,
+            propsExtra = Map(epoch.highWater), skipIf = replayed)
+          true
+        }
+      })
   }
 }
 
@@ -1970,12 +1879,7 @@ class GraftBatchWrite(root: String, schema: StructType, mode: GraftWriteMode,
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DataWriterFactory = {
     graft.table.TableIO.mkdirs(staging)
-    val spec = if (Meta.exists(root)) Meta.load(root).spec else Seq.empty
-    GraftWriterFactory(staging.toString,
-      GraftConnectorShim.prepareParquetWriteConf(SparkSession.active,
-        GraftWriteSchemas.withTableFieldIds(root, schema),
-        GraftWriteSchemas.bloomOptions(root)),
-      RowTransform.forSpec(spec, schema))
+    GraftWriterFactory.forTable(root, schema, staging.toString)
   }
 
   override def commit(
@@ -2032,20 +1936,57 @@ object GraftWriterFactory {
     * (or reclaim) another commit's file. */
   def fileTag(): String =
     java.util.UUID.randomUUID().toString.take(8)
+
+  /** Writes into graft table `root`: footers carry the table's field
+    * ids and bloom filters, rows route through its partition spec. */
+  def forTable(root: String, schema: StructType,
+      staging: String): GraftWriterFactory =
+    GraftWriterFactory(staging,
+      GraftConnectorShim.prepareParquetWriteConf(SparkSession.active,
+        GraftWriteSchemas.withTableFieldIds(root, schema),
+        GraftWriteSchemas.bloomOptions(root)),
+      RowTransform.forSpec(
+        if (Meta.exists(root)) Meta.load(root).spec else Seq.empty, schema))
+
+  /** Writes into a real-format Iceberg table: footers carry its field
+    * ids, rows route through its default spec. A row-less schema (a
+    * delete-only write) routes nothing. */
+  def forIceberg(m: graft.table.iceberg.IcebergMetadata.IceMetadata,
+      schema: StructType, staging: String): GraftWriterFactory =
+    GraftWriterFactory(staging,
+      GraftConnectorShim.prepareParquetWriteConf(SparkSession.active,
+        m.schema.withFieldIds(schema)),
+      if (schema.isEmpty) Seq.empty
+      else RowTransform.forSpec(m.defaultPartitionFields, schema))
 }
 
+/** Executor side of every staged write, batch and streaming: partition-
+  * spec'd tables row-route into `<field>=<value>` dirs. Streaming
+  * writers stage under the epoch's `epoch-<id>` dir. */
 case class GraftWriterFactory(staging: String,
     conf: org.apache.spark.util.SerializableConfiguration,
     transforms: Seq[RowTransform] = Seq.empty)
-  extends org.apache.spark.sql.connector.write.DataWriterFactory {
+  extends org.apache.spark.sql.connector.write.DataWriterFactory
+    with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
+      : org.apache.spark.sql.connector.write.DataWriter[org.apache.spark.sql.catalyst.InternalRow] =
+    writerIn(staging, partitionId, taskId)
+
+  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
+      : org.apache.spark.sql.connector.write.DataWriter[org.apache.spark.sql.catalyst.InternalRow] = {
+    val dir = new org.apache.hadoop.fs.Path(s"$staging/epoch-$epochId")
+    dir.getFileSystem(conf.value).mkdirs(dir)
+    writerIn(dir.toString, partitionId, taskId)
+  }
+
+  private def writerIn(dir: String, partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[org.apache.spark.sql.catalyst.InternalRow] =
     if (transforms.isEmpty)
       new GraftDataWriter(
-        s"$staging/part-$partitionId-$taskId-${GraftWriterFactory.fileTag()}.parquet",
+        s"$dir/part-$partitionId-$taskId-${GraftWriterFactory.fileTag()}.parquet",
         conf.value, partitionId, taskId)
     else
-      new PartitionedGraftDataWriter(staging, conf.value, partitionId, taskId, transforms)
+      new PartitionedGraftDataWriter(dir, conf.value, partitionId, taskId, transforms)
 }
 
 /** Partition-routing writer: evaluates the spec transforms per row

@@ -156,23 +156,21 @@ class IcebergSparkTable(location: String,
       : Array[org.apache.spark.sql.connector.expressions.Transform] = {
     import org.apache.spark.sql.connector.expressions.Expressions
     val m = ice
-    m.specs.find(_.specId == m.defaultSpecId).map(_.fields)
-      .getOrElse(Seq.empty)
-      .flatMap { pf =>
-        m.schema.fields.find(_.id == pf.sourceId).map(_.name).flatMap { c =>
-          pf.transform match {
-            case "identity" => Some(Expressions.identity(c))
-            case t if t.startsWith("bucket[") =>
-              Some(Expressions.bucket(
-                t.stripPrefix("bucket[").stripSuffix("]").toInt, c))
-            case "year" => Some(Expressions.years(c))
-            case "month" => Some(Expressions.months(c))
-            case "day" => Some(Expressions.days(c))
-            case "hour" => Some(Expressions.hours(c))
-            case _ => None
-          }
+    m.defaultSpecFields.flatMap { pf =>
+      m.schema.fields.find(_.id == pf.sourceId).map(_.name).flatMap { c =>
+        pf.transform match {
+          case "identity" => Some(Expressions.identity(c))
+          case t if t.startsWith("bucket[") =>
+            Some(Expressions.bucket(
+              t.stripPrefix("bucket[").stripSuffix("]").toInt, c))
+          case "year" => Some(Expressions.years(c))
+          case "month" => Some(Expressions.months(c))
+          case "day" => Some(Expressions.days(c))
+          case "hour" => Some(Expressions.hours(c))
+          case _ => None
         }
-      }.toArray
+      }
+    }.toArray
   }
 
   /** Row-address metadata columns (_file, _pos) — the delta row id,
@@ -252,11 +250,20 @@ class IcebergSparkTable(location: String,
       override def build(): org.apache.spark.sql.connector.write.Write =
         new org.apache.spark.sql.connector.write.V1Write {
           // writeStream.toTable on an adopted/REST table: per-epoch
-          // executor-staged files, one stamped snapshot per epoch
+          // executor-staged files, one stamped snapshot per epoch.
+          // Epochs skip the sort-order range-clustering batch writes
+          // apply (micro-batches are small by construction); CALL
+          // rewrite_data_files restores clustering.
           override def toStreaming
               : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-            new IcebergStreamingWrite(location, info.schema(),
-              overwriteAll, info.queryId())
+            new StagedStreamingWrite(location, overwriteAll,
+              GraftWriterFactory.forIceberg(
+                IcebergMetadata.load(location), info.schema(), _),
+              // over a REST catalog each epoch commit rides the
+              // update-table protocol
+              graft.table.iceberg.IcebergWrite.commitStreamEpoch(
+                SparkSession.active, location, _, info.queryId(), _,
+                overwriteAll))
           override def toInsertableRelation
               : org.apache.spark.sql.sources.InsertableRelation =
             (data: org.apache.spark.sql.DataFrame, _: Boolean) => {
@@ -455,8 +462,7 @@ class IcebergScan(location: String, snapshotId: Option[Long],
 
   // ---- storage-partitioned join over foreign identity/bucket specs --
 
-  private lazy val spec = ice.specs.find(_.specId == ice.defaultSpecId)
-    .map(_.fields).getOrElse(Seq.empty)
+  private lazy val spec = ice.defaultSpecFields
 
   private def srcName(pf: graft.table.iceberg.IcebergMetadata.IcePartitionField): String =
     schemaAt.fields.find(_.id == pf.sourceId).map(_.name).getOrElse("")
@@ -507,7 +513,7 @@ class IcebergScan(location: String, snapshotId: Option[Long],
     * (readStream on a catalog Iceberg table or format("graft") path). */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new IcebergMicroBatchStream(location, requiredSchema, streamOptions)
+    TableMicroBatchStream.iceberg(location, requiredSchema, streamOptions)
 
   private def resolve(p: String): org.apache.hadoop.fs.Path =
     table.resolvePath(p) // remaps absolute paths across catalog renames
@@ -687,14 +693,7 @@ class IcebergScan(location: String, snapshotId: Option[Long],
     * widened types up-cast). Skipped for exported-from-legacy tables
     * whose footers carry no ids. */
   private def withFieldIds(s: StructType): StructType =
-    if (!table.fileIdResolution) s
-    else StructType(s.fields.map(f => schemaAt.fieldId(f.name) match {
-      case Some(id) => f.copy(metadata =
-        new org.apache.spark.sql.types.MetadataBuilder()
-          .withMetadata(f.metadata)
-          .putLong(graft.table.Meta.FieldIdKey, id.toLong).build())
-      case None => f
-    }))
+    if (!table.fileIdResolution) s else schemaAt.withFieldIds(s)
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = sparkSession
@@ -784,36 +783,18 @@ class IcebergDeltaBatchWrite(location: String, rowSchema: StructType)
     TableIO.mkdirs(stagingDel)
     val spark = SparkSession.active
     val ice = IcebergMetadata.load(location)
-    val spec = ice.specs.find(_.specId == ice.defaultSpecId)
-      .map(_.fields).getOrElse(Seq.empty)
-    // data parquet carries the table's Iceberg FIELD IDS in its
-    // footers (id-based readers need no name mapping for delta files)
-    val withIds = StructType(rowSchema.fields.map { f =>
-      ice.schema.fieldId(f.name) match {
-        case Some(id) => f.copy(metadata =
-          new org.apache.spark.sql.types.MetadataBuilder()
-            .withMetadata(f.metadata).putLong("parquet.field.id", id.toLong)
-            .build())
-        case None => f
-      }
-    })
-    // the same executor-side transform evaluation graft writes use:
-    // the Iceberg spec's (source, transform, name) triples map 1:1
-    val metaSpec = spec.map { pf =>
-      val src = ice.schema.fields.find(_.id == pf.sourceId)
-        .map(_.name).getOrElse(throw new IllegalStateException(
-          s"partition source id ${pf.sourceId} not in schema"))
-      graft.table.Meta.PartitionField(src, pf.transform, pf.name)
-    }
     GraftDeltaWriterFactory(
       stagingData.toString, stagingDel.toString,
-      GraftConnectorShim.prepareParquetWriteConf(spark, withIds),
+      // data parquet carries the table's Iceberg FIELD IDS in its
+      // footers (id-based readers need no name mapping for delta files)
+      GraftConnectorShim.prepareParquetWriteConf(spark,
+        ice.schema.withFieldIds(rowSchema)),
       GraftConnectorShim.prepareParquetWriteConf(spark,
         GraftDeltaWriterFactory.DeleteSchema),
       // a delete-only delta (SQL DELETE) carries an EMPTY row schema —
       // no rows are written, so no transforms must compile against it
       if (rowSchema.isEmpty) Seq.empty
-      else RowTransform.forSpec(metaSpec, rowSchema))
+      else RowTransform.forSpec(ice.defaultPartitionFields, rowSchema))
   }
 
   override def commit(
@@ -879,31 +860,8 @@ class IcebergReplaceBatchWrite(location: String, rowSchema: StructType,
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DataWriterFactory = {
     TableIO.mkdirs(staging)
-    val spark = SparkSession.active
-    val ice = IcebergMetadata.load(location)
-    val spec = ice.specs.find(_.specId == ice.defaultSpecId)
-      .map(_.fields).getOrElse(Seq.empty)
-    val withIds = StructType(rowSchema.fields.map { f =>
-      ice.schema.fieldId(f.name) match {
-        case Some(id) => f.copy(metadata =
-          new org.apache.spark.sql.types.MetadataBuilder()
-            .withMetadata(f.metadata).putLong("parquet.field.id", id.toLong)
-            .build())
-        case None => f
-      }
-    })
-    val metaSpec = spec.map { pf =>
-      val src = ice.schema.fields.find(_.id == pf.sourceId)
-        .map(_.name).getOrElse(throw new IllegalStateException(
-          s"partition source id ${pf.sourceId} not in schema"))
-      graft.table.Meta.PartitionField(src, pf.transform, pf.name)
-    }
-    ReplaceRowAdapterFactory(
-      GraftWriterFactory(staging.toString,
-        GraftConnectorShim.prepareParquetWriteConf(spark, withIds),
-        if (rowSchema.isEmpty) Seq.empty
-        else RowTransform.forSpec(metaSpec, rowSchema)),
-      rowSchema)
+    ReplaceRowAdapterFactory(GraftWriterFactory.forIceberg(
+      IcebergMetadata.load(location), rowSchema, staging.toString), rowSchema)
   }
 
   override def commit(
@@ -914,83 +872,4 @@ class IcebergReplaceBatchWrite(location: String, rowSchema: StructType,
   override def abort(
       messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
     TableIO.delete(staging, recursive = true)
-}
-
-/** Structured Streaming sink for REAL-format tables (adopted
-  * warehouse tables and every REST-catalog table) —
-  * `df.writeStream.toTable("cat.db.t")`. Executors stage per-epoch
-  * parquet (field-id-stamped footers, partition-routed through the
-  * table's default spec exactly like batch writes), and the driver
-  * commits ONE snapshot per epoch through
-  * IcebergWrite.commitStreamEpoch — stamped with the stable query id
-  * + epoch id, so a recovery replay of an already-committed epoch is
-  * dropped (Iceberg's streaming writer dedups the same way), and over
-  * a REST catalog each epoch commit rides the update-table protocol.
-  * Complete mode truncates per epoch via a solo-manifest-list
-  * 'overwrite' snapshot. Epochs skip the sort-order range-clustering
-  * batch writes apply (micro-batches are small by construction);
-  * CALL rewrite_data_files restores clustering. Crashed epochs leave
-  * only a `stage-stream-*` dir that remove_orphan_files sweeps. */
-class IcebergStreamingWrite(location: String, writeSchema: StructType,
-    truncate: Boolean, queryId: String)
-  extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  import graft.table.TableIO
-
-  // per-RUN staging root: a crashed run's half-staged epoch can never
-  // leak into a later run's ingest (it becomes an orphan dir instead)
-  private val staging = TableIO.path(location,
-    s"stage-stream-${java.util.UUID.randomUUID().toString.take(8)}")
-
-  private def epochDir(epochId: Long) =
-    new org.apache.hadoop.fs.Path(staging, s"epoch-$epochId")
-
-  override def createStreamingWriterFactory(
-      info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
-    val ice = IcebergMetadata.load(location)
-    // footers carry the table's field ids (the spec's data-file
-    // requirement) — id-based readers resolve without name mapping
-    val withIds = StructType(writeSchema.fields.map { f =>
-      ice.schema.fieldId(f.name) match {
-        case Some(id) => f.copy(metadata =
-          new org.apache.spark.sql.types.MetadataBuilder()
-            .withMetadata(f.metadata)
-            .putLong("parquet.field.id", id.toLong).build())
-        case None => f
-      }
-    })
-    // the default spec as row-level transforms: executors route each
-    // row into its `<field>=<value>` partition dir as it streams
-    // through (same units-since-epoch/murmur semantics as the batch
-    // writer's transform columns), and the epoch ingest parses the
-    // dirs back into manifest partition values
-    val spec = ice.specs.find(_.specId == ice.defaultSpecId)
-      .map(_.fields).getOrElse(Seq.empty)
-    val pfs = spec.flatMap(pf =>
-      ice.schema.fields.find(_.id == pf.sourceId).map(src =>
-        graft.table.Meta.PartitionField(src.name, pf.transform, pf.name)))
-    GraftStreamingWriterFactory(staging.toString,
-      org.apache.spark.sql.execution.datasources.GraftConnectorShim
-        .prepareParquetWriteConf(SparkSession.active, withIds),
-      RowTransform.forSpec(pfs, writeSchema))
-  }
-
-  override def commit(epochId: Long,
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage])
-      : Unit = {
-    val committed = graft.table.iceberg.IcebergWrite.commitStreamEpoch(
-      SparkSession.active, location, epochDir(epochId), queryId, epochId,
-      truncate)
-    // replayed or rowless epochs consumed nothing — drop the residue;
-    // a consumed epoch leaves the run root empty, so drop that too
-    // (the next epoch's writers re-mkdir on demand)
-    if (!committed ||
-        (TableIO.exists(staging) && TableIO.listDir(staging).isEmpty))
-      TableIO.delete(staging, recursive = true)
-  }
-
-  override def abort(epochId: Long,
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage])
-      : Unit =
-    TableIO.delete(epochDir(epochId), recursive = true)
 }

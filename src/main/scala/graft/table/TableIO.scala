@@ -37,7 +37,7 @@ object TableIO {
     * a session is live, which silently dropped them to a fresh
     * `new Configuration()` per call and Hadoop's RawLocalFileSystem —
     * whose getFileStatus forks `ls` for permission info (~55 ms per
-    * namespaces listing, measured in tools/RestMicro). Falling back to
+    * namespaces listing, measured on a loopback REST catalog). Falling back to
     * the GLOBAL default session routes every thread to the session's
     * conf (and FastLocalFileSystem when configured); the bare-JVM
     * fallback conf is cached — Configuration() re-parses XML resources

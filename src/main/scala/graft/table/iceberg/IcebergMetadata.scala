@@ -36,6 +36,16 @@ object IcebergMetadata {
           .putLong(graft.table.Meta.FieldIdKey, f.id.toLong).build())))
     def fieldId(name: String): Option[Int] = fields.find(_.name == name).map(_.id)
 
+    /** `s` with each top-level column this schema names stamped with
+      * its field id as `parquet.field.id`: written footers carry the
+      * ids (the spec's data-file requirement), and reads resolve by ID
+      * (rename-safe; widened types up-cast). Unknown columns pass. */
+    def withFieldIds(s: StructType): StructType =
+      StructType(s.fields.map(f => fieldId(f.name).fold(f)(id =>
+        f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
+          .withMetadata(f.metadata)
+          .putLong(graft.table.Meta.FieldIdKey, id.toLong).build()))))
+
     /** Highest field id anywhere in the schema, nested ids included
       * (the spec's last-column-id must cover struct fields,
       * element-ids, and key/value-ids). */
@@ -138,6 +148,17 @@ object IcebergMetadata {
       snapshots.find(_.snapshotId == id)
     def currentSnapshot: Option[IceSnapshot] =
       currentSnapshotId.flatMap(snapshot)
+    def defaultSpecFields: Seq[IcePartitionField] =
+      specs.find(_.specId == defaultSpecId).map(_.fields).getOrElse(Seq.empty)
+    /** The default spec as graft partition fields (source by name):
+      * the executor-side row transforms writes route rows through. */
+    def defaultPartitionFields: Seq[graft.table.Meta.PartitionField] =
+      defaultSpecFields.map { pf =>
+        val src = schema.fields.find(_.id == pf.sourceId).getOrElse(
+          throw new IllegalStateException(
+            s"partition source id ${pf.sourceId} not in schema"))
+        graft.table.Meta.PartitionField(src.name, pf.transform, pf.name)
+      }
     /** The fields of the default sort order; empty = unsorted. */
     def defaultSortFields: Seq[IceSortField] =
       sortOrders.find(_.orderId == defaultSortOrderId)

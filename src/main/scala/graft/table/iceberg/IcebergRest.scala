@@ -1024,7 +1024,7 @@ class IcebergRestServer(val warehouse: String, bindPort: Int = 0,
         // (every Spark statement resolves its tables through it), and
         // the old shape — full graft-parse attempt, existence check,
         // then a second list+read+parse in loadTableResult — cost
-        // 4.6 ms/req against 1.5 ms for a namespace GET (RestMicro4).
+        // 4.6 ms/req against 1.5 ms for a namespace GET (loopback).
         // only ABSENCE is a 404; corrupt metadata must still surface
         // as the parse error it is (500), as before
         scala.util.Try(IcebergMetadata.currentMetadataFile(root)).toOption match {
@@ -1388,7 +1388,7 @@ class IcebergRestServer(val warehouse: String, bindPort: Int = 0,
     // first HttpServer.create in the JVM). Without it every
     // request/response pair on loopback stalls in the Nagle +
     // delayed-ACK interaction: measured 46 ms -> 2.5 ms per request
-    // (tools/RestMicro2), which dominated every REST-backed query's
+    // on loopback, which dominated every REST-backed query's
     // wall time (guide §1: measure first — the driver gap was 67-72%
     // sendAuth).
     System.setProperty("sun.net.httpserver.nodelay", "true")
@@ -1428,7 +1428,7 @@ object IcebergRestClient {
 
   /** Blocking HttpURLConnection transport with the JDK's transparent
     * keep-alive pool: measured 1.2 ms/req on loopback vs 3.9 ms for
-    * java.net.http.HttpClient (tools/RestMicro2 — the async client
+    * java.net.http.HttpClient (the async client
     * pays selector + executor thread hops on every send). The REST
     * protocol here is strictly sequential request/response per
     * caller thread, so the blocking client is faster and allocates

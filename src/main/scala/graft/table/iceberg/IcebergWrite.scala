@@ -206,8 +206,7 @@ object IcebergWrite {
     val location = m.location
     val schema = m.schema
     val sparkSchema = schema.toSpark
-    val spec = m.specs.find(_.specId == m.defaultSpecId)
-      .map(_.fields).getOrElse(Seq.empty)
+    val spec = m.defaultSpecFields
     val specSrcCols = spec.map(pf =>
       schema.fields.find(_.id == pf.sourceId).get.name)
     val specHelpers = spec.map(pf => s"_p_${pf.name}")
@@ -222,18 +221,9 @@ object IcebergWrite {
     // write path, whose task writers already stamp ids — a mixed
     // table made schema-inferring readers fail nondeterministically
     // depending on which file they sampled.
-    val dfWithIds = {
-      import org.apache.spark.sql.functions.col
-      df.select(df.schema.fields.map { f =>
-        schema.fieldId(f.name) match {
-          case Some(id) => col(f.name).as(f.name,
-            new org.apache.spark.sql.types.MetadataBuilder()
-              .withMetadata(f.metadata)
-              .putLong("parquet.field.id", id.toLong).build())
-          case None => col(f.name)
-        }
-      }.toIndexedSeq: _*)
-    }
+    val dfWithIds = df.select(schema.withFieldIds(df.schema).fields.map(f =>
+      org.apache.spark.sql.functions.col(f.name).as(f.name, f.metadata))
+      .toIndexedSeq: _*)
     val staging = TableIO.path(location, s"stage-${UUID.randomUUID().toString.take(8)}")
     // the default sort order clusters every write (spec/sort.rs: the
     // write-time order): range-repartition on the sort key so files
@@ -302,8 +292,7 @@ object IcebergWrite {
     val location = m.location
     val schema = m.schema
     val sparkSchema = schema.toSpark
-    val spec = m.specs.find(_.specId == m.defaultSpecId)
-      .map(_.fields).getOrElse(Seq.empty)
+    val spec = m.defaultSpecFields
     val dataDir = TableIO.path(location, "data")
     TableIO.mkdirs(dataDir)
     // files FLATTEN into data/ — Iceberg carries partition values in
@@ -347,8 +336,7 @@ object IcebergWrite {
       ref: String = "main"): IcebergMetadata.IceSnapshot = {
     val location = m.location
     val schema = m.schema
-    val spec = m.specs.find(_.specId == m.defaultSpecId)
-      .map(_.fields).getOrElse(Seq.empty)
+    val spec = m.defaultSpecFields
     // branch-targeted appends (reference: TableTransaction::new's
     // target branch, transaction/mod.rs:33) chain from the BRANCH
     // head; a ref that doesn't exist yet starts empty, matching the
@@ -467,7 +455,7 @@ object IcebergWrite {
     * Unpartitioned tables only. Returns (files, rows) imported. */
   def addFiles(location: String, sourceDir: String): (Int, Long) = {
     val m = IcebergMetadata.load(location)
-    require(m.specs.find(_.specId == m.defaultSpecId).forall(_.fields.isEmpty),
+    require(m.defaultSpecFields.isEmpty,
       "add_files into a PARTITIONED real-format table is not supported")
     // importing id-less files flips the WHOLE table to name-based
     // reads (NameBasedFilesProp below); if a column was ever RENAMED,
@@ -997,11 +985,6 @@ object IcebergWrite {
     movedDel
   }
 
-  private def defaultSpecFields(m: IcebergMetadata.IceMetadata)
-      : Seq[IcebergMetadata.IcePartitionField] =
-    m.specs.find(_.specId == m.defaultSpecId)
-      .map(_.fields).getOrElse(Seq.empty)
-
   /** Stage an equality DELETE (the distinct key tuples) without
     * committing. Rebase-safe by construction. */
   def stageDeleteByKey(spark: SparkSession, m: IcebergMetadata.IceMetadata,
@@ -1013,7 +996,7 @@ object IcebergWrite {
     val keyDf = keys.select(eqCols.map(col): _*).distinct()
     val movedDel = stageDeleteFile(spark, m, keyDf, 2)
     new StagedDelta(spark, m.location, Seq.empty, Map.empty, movedDel, 2,
-      eqCols, defaultSpecFields(m), Set.empty)
+      eqCols, m.defaultSpecFields, Set.empty)
   }
 
   /** Stage a keyed UPSERT: one snapshot holding an equality delete of
@@ -1036,7 +1019,7 @@ object IcebergWrite {
     val (moved, stats) = stageData(spark, m, df, None)
     val movedDel = stageDeleteFile(spark, m, keyDf, 2)
     new StagedDelta(spark, m.location, moved, stats, movedDel, 2, eqCols,
-      defaultSpecFields(m), Set.empty, m.defaultSpecId)
+      m.defaultSpecFields, Set.empty, m.defaultSpecId)
   }
 
   /** Stage a positional DELETE of (file_path, pos) rows. Rebase-AWARE:
@@ -1055,7 +1038,7 @@ object IcebergWrite {
         .distinct().collect()
         .map(r => new HPath(r.getString(0)).toUri.getPath).toSet
     new StagedDelta(spark, m.location, Seq.empty, Map.empty, movedDel, 1,
-      Seq.empty, defaultSpecFields(m), referenced)
+      Seq.empty, m.defaultSpecFields, referenced)
   }
 
   /** A transaction-staged REWRITE (reference: the transaction's
@@ -1107,7 +1090,7 @@ object IcebergWrite {
         refuse(s"$lateDeletes delete file(s) landed at a later sequence " +
           "than the staged rewrite; its rewritten rows would escape them")
       val next = replaceFilesMutation(location, moved, stats, sourcePaths,
-        defaultSpecFields(m), "replace", lineage)(m)
+        m.defaultSpecFields, "replace", lineage)(m)
       recordAttempt(next.snapshots.last)
       next
     }
@@ -1146,29 +1129,14 @@ object IcebergWrite {
     * epoch's snapshot carries a solo manifest list, replacing the
     * table's live content. Over a REST-registered root the commit
     * rides the update-table protocol like every other write. Returns
-    * whether a snapshot was committed.
-    *
-    * The dedup has TWO anchors committed atomically with the epoch:
-    * the per-snapshot (query-id, epoch-id) summary stamp, and a
-    * high-water table property `graft.streaming.epoch.<query-id>` —
-    * the property survives expire_snapshots dropping the stamped
-    * snapshots from history, so a delayed recovery replay of an old
-    * epoch still commits nothing (the same reason Iceberg's own
-    * streaming writer keeps its watermark in table properties). */
+    * whether a snapshot was committed. The dedup anchors are
+    * graft.table.StreamEpoch's. */
   def commitStreamEpoch(spark: SparkSession, location: String,
       epochDir: HPath, queryId: String, epochId: Long,
       truncate: Boolean): Boolean = {
-    val hwKey = s"graft.streaming.epoch.$queryId"
-    // unparseable stamps read as absent (see GraftStreamingWrite):
-    // the snapshot-stamp anchor still dedups; a corrupted property
-    // must not permanently fail the query with an NFE
-    def stampedAtLeast(v: String): Boolean =
-      scala.util.Try(v.toLong).toOption.exists(_ >= epochId)
+    val epoch = graft.table.StreamEpoch(queryId, epochId)
     def replayed(m: IcebergMetadata.IceMetadata): Boolean =
-      m.properties.get(hwKey).exists(stampedAtLeast) ||
-        m.snapshots.exists(s =>
-          s.summary.get("streaming-query-id").contains(queryId) &&
-            s.summary.get("streaming-epoch-id").exists(stampedAtLeast))
+      epoch.replayedIn(m.properties, m.snapshots.iterator.map(_.summary))
     val base = IcebergMetadata.load(location)
     if (replayed(base)) {
       TableIO.delete(epochDir, recursive = true)
@@ -1180,9 +1148,6 @@ object IcebergWrite {
     // a rowless append tick (watermark-only) commits nothing; an
     // empty Complete-mode result must still truncate
     if (moved.isEmpty && !truncate) return false
-    val stamp = Map(
-      "streaming-query-id" -> queryId,
-      "streaming-epoch-id" -> epochId.toString)
     var replayedInside = false
     IcebergMetadata.commitRetry(location) { m =>
       if (replayed(m)) { replayedInside = true; m }
@@ -1191,13 +1156,13 @@ object IcebergWrite {
         val snap1 =
           if (truncate) soloManifestList(m, snap0, "overwrite")._1
           else snap0
-        val snap = snap1.copy(summary = snap1.summary ++ stamp)
+        val snap = snap1.copy(summary = snap1.summary ++ epoch.summary)
         m.copy(
           lastSequenceNumber = snap.sequenceNumber,
           currentSnapshotId = Some(snap.snapshotId),
           snapshots = m.snapshots :+ snap,
           refs = m.refs + ("main" -> snap.snapshotId),
-          properties = m.properties + (hwKey -> epochId.toString))
+          properties = m.properties + epoch.highWater)
       }
     }
     // a concurrent run of the SAME query won the epoch between our
@@ -1435,8 +1400,7 @@ object IcebergWrite {
       val old = m.schema
       val field = old.fields.find(_.name == name).getOrElse(
         throw new IllegalArgumentException(s"no column $name"))
-      require(!m.specs.find(_.specId == m.defaultSpecId)
-          .exists(_.fields.exists(_.sourceId == field.id)),
+      require(!m.defaultSpecFields.exists(_.sourceId == field.id),
         s"cannot drop $name: it is a partition source of the default " +
           "spec; evolve the spec first")
       require(!m.defaultSortFields.exists(_.sourceId == field.id),
@@ -1677,8 +1641,7 @@ object IcebergWrite {
     require((delContent == 2) == eqCols.nonEmpty,
       "equality delete staging needs its key columns (and only then)")
     val base = IcebergMetadata.load(location)
-    val spec = base.specs.find(_.specId == base.defaultSpecId)
-      .map(_.fields).getOrElse(Seq.empty)
+    val spec = base.defaultSpecFields
     val sparkSchema = base.schema.toSpark
     val dataDir = TableIO.path(location, "data")
     TableIO.mkdirs(dataDir)
@@ -1973,8 +1936,7 @@ object IcebergWrite {
   def commitReplaceFiles(spark: SparkSession, location: String,
       staging: HPath, removedPaths: Set[String]): Unit = {
     val base = IcebergMetadata.load(location)
-    val spec = base.specs.find(_.specId == base.defaultSpecId)
-      .map(_.fields).getOrElse(Seq.empty)
+    val spec = base.defaultSpecFields
     val sparkSchema = base.schema.toSpark
     val dataDir = TableIO.path(location, "data")
     TableIO.mkdirs(dataDir)
@@ -2779,8 +2741,7 @@ object IcebergWrite {
     TableIO.delete(delStaging, recursive = true)
     commitDeltaSnapshot(spark, location, moved, stats, movedDel,
       Set.empty, 2, eqCols,
-      base.specs.find(_.specId == base.defaultSpecId)
-        .map(_.fields).getOrElse(Seq.empty),
+      base.defaultSpecFields,
       // the fetched rows were derived from `base`: a concurrent
       // commit (a DELETE of one of these keys, another keyed update)
       // would be silently overwritten by re-inserting stale rows at a

@@ -14,6 +14,57 @@ class StreamingSpec extends AnyFunSuite {
 
   private def eventsSchema = Tables.events(spark, sf).schema
 
+  /** A table format the shared stream source serves, for the legs that
+    * run over both. The graft legs keep their original test names. */
+  private sealed trait Fmt {
+    def suffix: String
+    def create(root: String, df: org.apache.spark.sql.DataFrame): Unit
+    def append(root: String, df: org.apache.spark.sql.DataFrame): Unit
+    def snapshotIds(root: String): Seq[Long]
+    /** read URIs of the files the current snapshot added */
+    def headFiles(root: String): Seq[String]
+    /** the stream `readStream` builds over the table, all columns */
+    def stream(root: String): graft.spark.TableMicroBatchStream
+  }
+  private object GraftFmt extends Fmt {
+    import graft.table.{GraftTable, Meta}
+    val suffix = ""
+    def create(root: String, df: org.apache.spark.sql.DataFrame): Unit =
+      GraftTable.create(spark, root, df.schema).append(df)
+    def append(root: String, df: org.apache.spark.sql.DataFrame): Unit =
+      GraftTable.load(spark, root).append(df)
+    def snapshotIds(root: String): Seq[Long] =
+      Meta.load(root).snapshots.map(_.snapshotId)
+    def headFiles(root: String): Seq[String] = {
+      val m = Meta.load(root)
+      m.currentSnapshotId.flatMap(m.snapshot).get.files.map(f =>
+        new org.apache.hadoop.fs.Path(
+          graft.table.TableIO.path(root, "data"), f.path).toString)
+    }
+    def stream(root: String): graft.spark.TableMicroBatchStream =
+      graft.spark.TableMicroBatchStream.graft(root, Meta.load(root).schema)
+  }
+  private object IcebergFmt extends Fmt {
+    import graft.table.iceberg.{IcebergMetadata, IcebergTable, IcebergWrite}
+    val suffix = " [iceberg]"
+    def create(root: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      IcebergWrite.create(spark, root, df); ()
+    }
+    def append(root: String, df: org.apache.spark.sql.DataFrame): Unit =
+      IcebergWrite.append(spark, root, df)
+    def snapshotIds(root: String): Seq[Long] =
+      IcebergMetadata.load(root).snapshots.map(_.snapshotId)
+    def headFiles(root: String): Seq[String] = {
+      val t = IcebergTable.load(spark, root)
+      t.plannedFiles().map(e =>
+        graft.table.TableIO.qualified(t.resolvePath(e._1.filePath)))
+    }
+    def stream(root: String): graft.spark.TableMicroBatchStream =
+      graft.spark.TableMicroBatchStream.iceberg(root,
+        IcebergMetadata.load(root).schema.toSpark)
+  }
+  private val formats = Seq(GraftFmt, IcebergFmt)
+
   test("streaming windowed agg matches the batch groupBy") {
     val dir = java.nio.file.Files.createTempDirectory("graft-stream").toFile
     dir.deleteOnExit()
@@ -341,21 +392,21 @@ class StreamingSpec extends AnyFunSuite {
       Option(ex.getCause).exists(_.getMessage.contains("append-only streams")))
   }
 
-  test("admission control: maxFilesPerTrigger drains a backlog in bounded batches") {
+  for (fmt <- formats)
+  test("admission control: maxFilesPerTrigger drains a backlog in bounded batches" +
+      fmt.suffix) {
     val spark0 = spark
     import spark0.implicits._
-    import graft.table.GraftTable
     val root = java.nio.file.Files.createTempDirectory("graft-src-admission")
       .toString + "/t"
     // 10-snapshot backlog, one file per snapshot
     val df1 = (1L to 10L).map(i => (i, s"s0-$i")).toDF("k", "v").coalesce(1)
-    val t = GraftTable.create(spark, root, df1.schema)
-    t.append(df1)
+    fmt.create(root, df1)
     (1 to 9).foreach { s =>
-      t.append((1L to 10L).map(i => (s * 10 + i, s"s$s-$i"))
+      fmt.append(root, (1L to 10L).map(i => (s * 10 + i, s"s$s-$i"))
         .toDF("k", "v").coalesce(1))
     }
-    assert(t.meta.snapshots.size === 10)
+    assert(fmt.snapshotIds(root).size === 10)
 
     // cap at 3 files per micro-batch: 10 one-file snapshots need >= 4
     // batches; AvailableNow must still drain the WHOLE backlog
@@ -379,8 +430,8 @@ class StreamingSpec extends AnyFunSuite {
     // checkpoint resume: new snapshots drain from the checkpoint, still
     // bounded — this leg caps by BYTES (each one-file snapshot is well
     // over 1 byte, so the cap admits exactly one snapshot per batch)
-    t.append((101L to 110L).map(i => (i, s"x$i")).toDF("k", "v").coalesce(1))
-    t.append((111L to 120L).map(i => (i, s"y$i")).toDF("k", "v").coalesce(1))
+    fmt.append(root, (101L to 110L).map(i => (i, s"x$i")).toDF("k", "v").coalesce(1))
+    fmt.append(root, (111L to 120L).map(i => (i, s"y$i")).toDF("k", "v").coalesce(1))
     val q2 = spark.readStream.format("graft")
       .option("maxBytesPerTrigger", "1")
       .load(root)
@@ -398,17 +449,17 @@ class StreamingSpec extends AnyFunSuite {
       s"expected 2 one-snapshot batches, got ${progress2.length}")
   }
 
-  test("startingSnapshotId: a fresh stream skips history before the pin") {
+  for (fmt <- formats)
+  test("startingSnapshotId: a fresh stream skips history before the pin" +
+      fmt.suffix) {
     val spark0 = spark
     import spark0.implicits._
-    import graft.table.GraftTable
     val root = java.nio.file.Files.createTempDirectory("graft-src-start")
       .toString + "/t"
     val df1 = (1L to 20L).map(i => (i, s"old$i")).toDF("k", "v").coalesce(1)
-    val t = GraftTable.create(spark, root, df1.schema)
-    t.append(df1)
-    val pin = t.meta.currentSnapshotId.get
-    t.append((21L to 30L).map(i => (i, s"new$i")).toDF("k", "v").coalesce(1))
+    fmt.create(root, df1)
+    val pin = fmt.snapshotIds(root).last
+    fmt.append(root, (21L to 30L).map(i => (i, s"new$i")).toDF("k", "v").coalesce(1))
     val out = root + "-out"
     val q = spark.readStream.format("graft")
       .option("startingSnapshotId", pin.toString)
@@ -422,6 +473,28 @@ class StreamingSpec extends AnyFunSuite {
     val ks = spark.read.parquet(out).select("k")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(ks === (21L to 30L), s"pre-pin history leaked: $ks")
+  }
+
+  for (fmt <- formats)
+  test("startingSnapshotId off the timeline fails loudly" + fmt.suffix) {
+    val spark0 = spark
+    import spark0.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-src-badpin")
+      .toString + "/t"
+    fmt.create(root, (1L to 20L).map(i => (i, s"a$i")).toDF("k", "v").coalesce(1))
+    // a pin past every snapshot used to skip the whole table, now and
+    // after every later append, without a word
+    def drain(): Unit = spark.readStream.format("graft")
+      .option("startingSnapshotId", "999").load(root)
+      .writeStream.outputMode("append")
+      .format("memory").queryName(s"badpin_${java.util.UUID.randomUUID().toString.take(6)}")
+      .option("checkpointLocation", root + "-ckpt")
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination(120000)
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException](drain())
+    val msgs = Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null)
+      .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
+    assert(msgs.contains("startingSnapshotId 999"), msgs)
   }
 
   test("expire squash: resumed streams fail loudly, fresh streams read the base") {
@@ -475,25 +548,31 @@ class StreamingSpec extends AnyFunSuite {
     assert(ks === (1L to 40L), s"fresh stream over squashed base: $ks")
   }
 
-  test("sub-snapshot admission: one 100-file snapshot drains in bounded, resumable batches") {
+  // inputs: table format x cap (maxFilesPerTrigger, or a
+  // maxBytesPerTrigger budget of ten of the largest files)
+  for (fmt <- formats; byBytes <- Seq(false, true))
+  test("sub-snapshot admission: one 100-file snapshot drains in bounded, resumable batches" +
+      fmt.suffix + (if (byBytes) " [maxBytesPerTrigger]" else "")) {
     val spark0 = spark
     import spark0.implicits._
-    import graft.table.GraftTable
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     import org.apache.spark.sql.execution.datasources.FilePartition
     val root = java.nio.file.Files.createTempDirectory("graft-subsnap")
       .toString + "/t"
     val df = (1L to 1000L).map(i => (i, s"v$i")).toDF("k", "v")
-    val t = GraftTable.create(spark, root, df.schema)
-    t.append(df.repartition(100)) // ONE snapshot, 100 files
-    val m = t.meta
-    val snap = m.currentSnapshotId.flatMap(m.snapshot).get
-    assert(snap.files.size === 100)
+    fmt.create(root, df.repartition(100)) // ONE snapshot, 100 files
+    val headFiles = fmt.headFiles(root)
+    assert(headFiles.size === 100)
+    val budget = 10 * headFiles.map(f =>
+      new java.io.File(new java.net.URI(f).getPath).length).max
+    val (capOption, capValue) =
+      if (byBytes) ("maxBytesPerTrigger", budget) else ("maxFilesPerTrigger", 10L)
 
     // drive the MicroBatchStream protocol like the engine would, with
     // a checkpoint round-trip (serialize/deserialize) at every step
-    val stream = new graft.spark.GraftMicroBatchStream(root, m.schema)
-    val limit = ReadLimit.maxFiles(10)
+    val stream = fmt.stream(root)
+    val limit =
+      if (byBytes) ReadLimit.maxBytes(capValue) else ReadLimit.maxFiles(capValue.toInt)
     var offset = stream.initialOffset()
     var batches = 0
     val seen = scala.collection.mutable.ArrayBuffer[String]()
@@ -503,26 +582,28 @@ class StreamingSpec extends AnyFunSuite {
       if (next.json() == offset.json()) done = true
       else {
         val parts = stream.planInputPartitions(offset, next)
-        seen ++= parts.toSeq.flatMap(p =>
-          p.asInstanceOf[FilePartition].files.toSeq.map(_.filePath.toString))
+        val files = parts.toSeq.flatMap(_.asInstanceOf[FilePartition].files.toSeq)
+        if (byBytes) assert(files.map(_.length).sum <= budget,
+          s"batch $batches exceeded the byte budget")
+        seen ++= files.map(_.filePath.toString)
         batches += 1
         // checkpoint round-trip: the next batch starts from the
         // DESERIALIZED offset, as a restarted query would
         offset = stream.deserializeOffset(next.json())
       }
     }
-    assert(batches === 10, s"100 files at 10/trigger must take 10 batches, got $batches")
+    if (byBytes) assert(batches >= 2 && batches <= 10,
+      s"a ten-file byte budget must split 100 files into 2..10 batches, got $batches")
+    else assert(batches === 10,
+      s"100 files at 10/trigger must take 10 batches, got $batches")
     assert(seen.size === 100 && seen.distinct.size === 100,
       "every file exactly once across batches")
-    val expected = snap.files.map(f =>
-      new org.apache.hadoop.fs.Path(
-        graft.table.TableIO.path(root, "data"), f.path).toString).toSet
-    assert(seen.toSet === expected)
+    assert(seen.toSet === headFiles.toSet)
 
     // end-to-end: the same drain through a real query, exactly-once rows
     val out = root + "-out"
     val q = spark.readStream.format("graft")
-      .option("maxFilesPerTrigger", "10").load(root)
+      .option(capOption, capValue.toString).load(root)
       .writeStream.outputMode("append")
       .format("parquet").option("path", out)
       .option("checkpointLocation", root + "-ckpt")
@@ -532,9 +613,9 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).count() === 1000L)
     assert(spark.read.parquet(out).select("k").distinct().count() === 1000L)
     // a second append resumes from the checkpoint without replaying
-    t.append(Seq((2000L, "new")).toDF("k", "v").coalesce(1))
+    fmt.append(root, Seq((2000L, "new")).toDF("k", "v").coalesce(1))
     val q2 = spark.readStream.format("graft")
-      .option("maxFilesPerTrigger", "10").load(root)
+      .option(capOption, capValue.toString).load(root)
       .writeStream.outputMode("append")
       .format("parquet").option("path", out)
       .option("checkpointLocation", root + "-ckpt")
@@ -542,6 +623,48 @@ class StreamingSpec extends AnyFunSuite {
       .start()
     q2.awaitTermination(180000)
     assert(spark.read.parquet(out).count() === 1001L)
+  }
+
+  for (fmt <- formats)
+  test("stream file-list memo holds only the snapshot a partial offset points into" +
+      fmt.suffix) {
+    val spark0 = spark
+    import spark0.implicits._
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val root = java.nio.file.Files.createTempDirectory("graft-memo")
+      .toString + "/t"
+    // 8 snapshots of 3 files each, drained 2 files per batch: most
+    // batches end inside a snapshot
+    fmt.create(root, (1L to 30L).map(i => (i, s"a$i")).toDF("k", "v").repartition(3))
+    (1 to 7).foreach(s => fmt.append(root,
+      (1L to 30L).map(i => (s * 100 + i, s"b$i")).toDF("k", "v").repartition(3)))
+    val stream = fmt.stream(root)
+    stream.prepareForTriggerAvailableNow()
+    val limit = ReadLimit.maxFiles(2)
+    var offset = stream.initialOffset()
+    var batches = 0
+    var partials = 0
+    var done = false
+    while (!done && batches < 50) {
+      val next = stream.latestOffset(offset, limit)
+      if (next.json() == offset.json()) done = true
+      else {
+        stream.planInputPartitions(offset, next)
+        stream.commit(next)
+        batches += 1
+        // a partial offset serializes as id:pos:hash
+        val partialId = next.json().split(":") match {
+          case Array(id, _, _) => partials += 1; Set(id.toLong)
+          case _ => Set.empty[Long]
+        }
+        assert(stream.memoized.subsetOf(partialId),
+          s"after batch $batches the memo holds ${stream.memoized}, " +
+            s"offset ${next.json()}")
+        offset = next
+      }
+    }
+    assert(batches === 12 && partials > 0, s"batches=$batches partials=$partials")
+    assert(stream.memoized.isEmpty)
   }
 
   test("expire squash above a tag-pinned checkpoint: resume fails loudly") {
@@ -1078,7 +1201,7 @@ class StreamingSpec extends AnyFunSuite {
     val conf = org.apache.spark.sql.execution.datasources.GraftConnectorShim
       .prepareParquetWriteConf(spark, schema)
     def staged(run: String): String = {
-      val w = graft.spark.GraftStreamingWriterFactory(dir + "/" + run, conf)
+      val w = graft.spark.GraftWriterFactory(dir + "/" + run, conf)
         .createWriter(0, 0L, 7L)
       w.commit() match {
         case graft.spark.GraftCommitMessage(p, _) => new java.io.File(p).getName
