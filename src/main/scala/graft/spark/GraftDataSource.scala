@@ -106,36 +106,13 @@ class GraftSparkTable(root: String,
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
 
-  /** SQL UPDATE / MERGE INTO (and DELETEs SupportsDelete can't take).
-    * Default: group-based copy-on-write — the operation's scan records
-    * the candidate files it planned; the replacement write commits new
-    * files and removes exactly those in one snapshot. Rows are never
-    * filtered inside the scan (the condition lives in the replacement
-    * projection), so non-matching rows of candidate files are copied
-    * forward intact.
-    *
-    * With `write.update.mode` / `write.merge.mode` /
-    * `write.delete.mode` = merge-on-read (Iceberg's table properties)
-    * the operation runs as a DELTA write instead (SupportsDelta):
-    * matched rows position-delete their old slots and only changed
-    * rows are written — write cost O(changed rows), no candidate-file
-    * rewrite, which is the right default for point updates at 100 TB. */
+  /** SQL UPDATE / MERGE INTO (and DELETEs SupportsDelete can't take):
+    * copy-on-write by default, merge-on-read by table property — see
+    * GraftRowLevelTarget. */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    () => {
-      import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-      val key = info.command() match {
-        case Command.DELETE => "write.delete.mode"
-        case Command.UPDATE => "write.update.mode"
-        case _ => "write.merge.mode"
-      }
-      val props = if (Meta.exists(root)) Meta.load(root).properties
-        else Map.empty[String, String]
-      if (props.get(key).contains("merge-on-read"))
-        new GraftDeltaOperation(root, info.command())
-      else new GraftRowLevelOperation(root, info.command())
-    }
+    RowLevelOperations.builder(info, () => new GraftRowLevelTarget(root))
 
   /** Row-address metadata columns, the delta row id (Iceberg exposes
     * the same pair as _file/_pos). Emitted by the scan on request via
@@ -153,15 +130,11 @@ class GraftSparkTable(root: String,
     * make canDeleteWhere return false and the statement fails fast —
     * better than a silent wrong delete. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.forall(f => GraftSparkTable.filterColumn(f).isDefined)
+    GraftSparkTable.translatable(filters)
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
-    import org.apache.spark.sql.functions.lit
-    val spark = SparkSession.active
-    val cond = filters.flatMap(GraftSparkTable.filterColumn)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val touched = filters.flatMap(statFilterOf).toSeq
-    val t = GraftTable.load(spark, root)
+    val (cond, touched, _) = GraftSparkTable.overwriteByFilter(filters.toSeq)
+    val t = GraftTable.load(SparkSession.active, root)
     // write.delete.mode=merge-on-read (Iceberg's table property):
     // point deletes commit a position-delete FILE instead of
     // rewriting every candidate data file — at 100 TB, CoW rewrite is
@@ -173,9 +146,6 @@ class GraftSparkTable(root: String,
     else t.delete(cond, touched.map(f =>
       t.StatFilter(f._1, f._2, f._3)))
   }
-
-  private def statFilterOf(f: Filter): Option[(String, String, String)] =
-    GraftSparkTable.statFilterOf(f)
 
   override def name(): String = s"graft.`$root`"
   override def schema(): StructType =
@@ -293,116 +263,35 @@ object GraftSparkTable {
     case AlwaysFalse() => Some(lit(false))
     case _ => None
   }
-}
 
-/** One SQL row-level statement: scan side records the replaced group,
-  * write side swaps it atomically (copy-on-write ReplaceData). */
-class GraftRowLevelOperation(root: String,
-    cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command)
-  extends org.apache.spark.sql.connector.write.RowLevelOperation {
+  /** A DELETE or overwrite whose condition does not translate fails
+    * the statement fast — never a silent wrong delete or a whole-table
+    * truncate. */
+  private[spark] def translatable(filters: Array[Filter]): Boolean =
+    filters.forall(f => filterColumn(f).isDefined)
 
-  /** Union across (re)plannings: the op's scans DECLINE runtime
-    * filtering (filterAttributes), so every planning — supportsColumnar,
-    * AQE, the group-filter subquery's own scan — sees the same
-    * statically-pruned candidate set, and the union equals exactly the
-    * files whose rows feed the replacement write. */
-  private[spark] val scanned =
-    new java.util.concurrent.atomic.AtomicReference[Set[String]](Set.empty)
+  /** An overwrite with no filter, or only AlwaysTrue, IS a truncate. */
+  private[spark] def selectsAll(filters: Array[Filter]): Boolean =
+    filters.forall(_.isInstanceOf[AlwaysTrue])
 
-  override def command(): org.apache.spark.sql.connector.write.RowLevelOperation.Command = cmd
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(root, None, None, Some(this))
-
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new GraftReplaceWrite(root, info.schema(), () => scanned.get().toSeq)
-    }
-}
-
-/** Delta row-level operation (SupportsDelta): merge-on-read UPDATE /
-  * MERGE / DELETE. The scan emits the row address (_file, _pos) per
-  * candidate row; the write position-deletes matched slots and
-  * appends only the changed rows — one snapshot, no candidate-file
-  * rewrite (reference: operation.rs delete-file commits; Iceberg's
-  * Spark delta writes use the same row-id pair). */
-class GraftDeltaOperation(root: String,
-    cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command)
-  extends org.apache.spark.sql.connector.write.RowLevelOperation
-    with org.apache.spark.sql.connector.write.SupportsDelta {
-
-  override def command(): org.apache.spark.sql.connector.write.RowLevelOperation.Command = cmd
-
-  override def rowId(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(
-      org.apache.spark.sql.connector.expressions.Expressions.column(
-        GraftSparkTable.FileColName),
-      org.apache.spark.sql.connector.expressions.Expressions.column(
-        GraftSparkTable.PosColName))
-
-  // the writer implements update() natively (delete old slot + write
-  // the new row in the same task)
-  override def representUpdateAsDeleteAndInsert(): Boolean = false
-
-  // no capture: nothing is replaced wholesale, so runtime filtering
-  // may freely narrow the candidate FILES (positions are file-local)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(root, None, None, None)
-
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DeltaWriteBuilder =
-    new org.apache.spark.sql.connector.write.DeltaWriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.DeltaWrite =
-        new org.apache.spark.sql.connector.write.DeltaWrite {
-          override def toBatch(): org.apache.spark.sql.connector.write.DeltaBatchWrite =
-            new GraftDeltaBatchWrite(root, info.schema())
-        }
-    }
-}
-
-/** Executors stage new data files (partition-routed like every graft
-  * write) and position-delete files; the driver commit lands both in
-  * one snapshot via commitStagedDelta. */
-class GraftDeltaBatchWrite(root: String, rowSchema: StructType)
-  extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
-
-  private val suffix = java.util.UUID.randomUUID().toString.take(8)
-  private val stagingData = graft.table.TableIO.path(root, s"stage-delta-$suffix")
-  private val stagingDel = graft.table.TableIO.path(root, s"stage-deltadel-$suffix")
-
-  override def createBatchWriterFactory(
-      info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DeltaWriterFactory = {
-    graft.table.TableIO.mkdirs(stagingData)
-    graft.table.TableIO.mkdirs(stagingDel)
-    val spark = SparkSession.active
-    val spec = if (Meta.exists(root)) Meta.load(root).spec else Seq.empty
-    GraftDeltaWriterFactory(
-      stagingData.toString, stagingDel.toString,
-      GraftConnectorShim.prepareParquetWriteConf(spark,
-        GraftWriteSchemas.withTableFieldIds(root, rowSchema),
-        GraftWriteSchemas.bloomOptions(root)),
-      GraftConnectorShim.prepareParquetWriteConf(spark,
-        GraftDeltaWriterFactory.DeleteSchema),
-      // a delete-only delta (SQL DELETE) carries an EMPTY row schema —
-      // no rows are written, so no transforms must compile against it
-      if (rowSchema.isEmpty) Seq.empty
-      else RowTransform.forSpec(spec, rowSchema))
-  }
-
-  override def commit(
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
-    GraftTable.load(SparkSession.active, root)
-      .commitStagedDelta(stagingData, stagingDel)
-
-  override def abort(
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
-    graft.table.TableIO.delete(stagingData, recursive = true)
-    graft.table.TableIO.delete(stagingDel, recursive = true)
+  /** Both formats' delete/overwrite-by-filter translation: the row
+    * condition, the manifest stat triples that prune rewrite
+    * candidates, and the (column, value) equalities that prove
+    * whole-file drops. Those proofs exist only when EVERY conjunct is a
+    * stat-expressible equality — else stats can't cover the residual
+    * and every candidate rewrites. */
+  private[spark] def overwriteByFilter(filters: Seq[Filter])
+      : (Column, Seq[(String, String, String)], Seq[(String, String)]) = {
+    val cond = filters.flatMap(filterColumn).reduceOption(_ && _).getOrElse(lit(true))
+    val triples = filters.flatMap(statFilterOf)
+    val eqProofs =
+      if (triples.size == filters.size && filters.forall {
+            case _: EqualTo | _: EqualNullSafe => true
+            case _ => false
+          })
+        triples.map(f => (f._1, f._3))
+      else Seq.empty
+    (cond, triples, eqProofs)
   }
 }
 
@@ -422,11 +311,12 @@ object GraftDeltaWriterFactory {
         .putLong("parquet.field.id", 2147483545L).build())))
 }
 
-case class GraftDeltaWriterFactory(
-    dataStaging: String, delStaging: String,
-    dataConf: org.apache.spark.util.SerializableConfiguration,
-    delConf: org.apache.spark.util.SerializableConfiguration,
-    transforms: Seq[RowTransform])
+/** Executor side of every delta write: changed rows go through the
+  * format's data-writer factory, deleted slots into position-delete
+  * files under `delStaging`. */
+case class GraftDeltaWriterFactory(data: GraftWriterFactory,
+    delStaging: String,
+    delConf: org.apache.spark.util.SerializableConfiguration)
   extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long)
@@ -443,8 +333,7 @@ case class GraftDeltaWriterFactory(
 
       override def insert(row: org.apache.spark.sql.catalyst.InternalRow): Unit = {
         if (insertWriter == null)
-          insertWriter = GraftWriterFactory(dataStaging, dataConf, transforms)
-            .createWriter(partitionId, taskId)
+          insertWriter = data.createWriter(partitionId, taskId)
         insertWriter.write(row)
       }
 
@@ -482,50 +371,6 @@ case class GraftDeltaWriterFactory(
     }
 }
 
-/** ReplaceData write: same executor-side partition routing as the
-  * plain V2 write, but the commit removes the scanned group. */
-class GraftReplaceWrite(root: String, schema: StructType,
-    replaced: () => Seq[String])
-  extends org.apache.spark.sql.connector.write.Write
-    with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-
-  override def requiredDistribution()
-      : org.apache.spark.sql.connector.distributions.Distribution =
-    GraftWriteLayout.distribution(root)
-
-  override def requiredOrdering()
-      : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    GraftWriteLayout.ordering(root)
-
-  override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-    new GraftReplaceBatchWrite(root, schema, replaced,
-      GraftWriteLayout.presorted(root))
-}
-
-class GraftReplaceBatchWrite(root: String, schema: StructType,
-    replaced: () => Seq[String], presorted: Boolean = false)
-  extends org.apache.spark.sql.connector.write.BatchWrite {
-  private val staging = graft.table.TableIO.path(
-    root, s"stage-rlo-${java.util.UUID.randomUUID().toString.take(8)}")
-
-  override def createBatchWriterFactory(
-      info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DataWriterFactory = {
-    graft.table.TableIO.mkdirs(staging)
-    ReplaceRowAdapterFactory(
-      GraftWriterFactory.forTable(root, schema, staging.toString), schema)
-  }
-
-  override def commit(
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
-    GraftTable.load(SparkSession.active, root)
-      .commitStagedReplace(staging, replaced(), presorted = presorted)
-
-  override def abort(
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
-    graft.table.TableIO.delete(staging, recursive = true)
-}
-
 /** ReplaceData feeds writers `__row_operation +: dataColumns` when the
   * operation declares no metadata attributes (Spark applies a
   * projection only on the metadata path) — this adapter strips the
@@ -549,27 +394,6 @@ case class ReplaceRowAdapterFactory(
       override def abort(): Unit = w.abort()
       override def close(): Unit = w.close()
     }
-}
-
-object GraftWriteSchemas {
-  /** The query's output schema usually arrives WITHOUT the table's
-    * field-id metadata — graft parquet footers must carry the ids or
-    * id-matched reads break, so re-attach them by name before the
-    * write conf is prepared. */
-  def withTableFieldIds(root: String, schema: StructType): StructType = {
-    if (!Meta.exists(root)) return schema
-    val t = Meta.load(root).schema
-    if (!Meta.hasFieldIds(t)) return schema
-    StructType(schema.fields.map(f =>
-      t.fields.find(_.name == f.name)
-        .map(tf => f.copy(metadata = tf.metadata)).getOrElse(f)))
-  }
-
-  /** Bloom-filter write options for the V2 task writers, from the
-    * table's properties (no-op before the table exists). */
-  def bloomOptions(root: String): Map[String, String] =
-    if (!Meta.exists(root)) Map.empty
-    else GraftTable.bloomWriteOptions(Meta.load(root))
 }
 
 object GraftScanBuilder {
@@ -601,7 +425,7 @@ object GraftScanBuilder {
 
 class GraftScanBuilder(root: String, snapshotId: Option[Long],
     branch: Option[String],
-    capture: Option[GraftRowLevelOperation] = None,
+    capture: Option[CopyOnWriteOperation] = None,
     streamOptions: Map[String, String] = Map.empty,
     startSnapshot: Option[Long] = None)
   extends ScanBuilder with SupportsPushDownFilters
@@ -747,7 +571,7 @@ class GraftScan(root: String, table: Meta.TableMetadata,
     snapshotId: Option[Long], branch: Option[String],
     requiredSchema: StructType, pushedFilters: Array[Filter],
     statFilters: Array[(String, String, String)],
-    capture: Option[GraftRowLevelOperation] = None,
+    capture: Option[CopyOnWriteOperation] = None,
     streamOptions: Map[String, String] = Map.empty,
     rowIdCols: Seq[org.apache.spark.sql.types.StructField] = Seq.empty,
     startSnapshot: Option[Long] = None)
@@ -1721,14 +1545,11 @@ class GraftWriteBuilder(root: String, schema: StructType,
     * back to an error, never to a silent whole-table truncate) —
     * same contract as canDeleteWhere. */
   override def canOverwrite(filters: Array[Filter]): Boolean =
-    filters.forall(f => GraftSparkTable.filterColumn(f).isDefined)
+    GraftSparkTable.translatable(filters)
   override def overwrite(filters: Array[Filter])
       : org.apache.spark.sql.connector.write.WriteBuilder = {
     mode =
-      // AlwaysTrue (or no filter at all) IS a truncate
-      if (filters.isEmpty ||
-          filters.forall(_.isInstanceOf[org.apache.spark.sql.sources.AlwaysTrue]))
-        GraftWriteMode.Truncate
+      if (GraftSparkTable.selectsAll(filters)) GraftWriteMode.Truncate
       else GraftWriteMode.ByFilter(filters.toSeq)
     this
   }
@@ -1737,7 +1558,7 @@ class GraftWriteBuilder(root: String, schema: StructType,
     mode = GraftWriteMode.DynamicPartitions; this
   }
   override def build(): org.apache.spark.sql.connector.write.Write =
-    new GraftWrite(root, schema, mode, queryId, branch)
+    new GraftWrite(root, Meta.load(root), schema, mode, queryId, branch)
 }
 
 /** Shared write-layout derivation: the table's partition spec and
@@ -1751,18 +1572,13 @@ private[spark] object GraftWriteLayout {
   type V2Expr = org.apache.spark.sql.connector.expressions.Expression
   type V2Sort = org.apache.spark.sql.connector.expressions.SortOrder
 
-  def spec(root: String): Seq[Meta.PartitionField] =
-    if (Meta.exists(root)) Meta.load(root).spec else Seq.empty
-
   /** Plain-column sort-order entries, or empty when any entry is an
     * expression (zorder) the V2 ordering can't express — those fall
     * back to the driver-side re-cluster at commit. */
-  def sortRefs(root: String): Seq[String] = {
-    val so = if (Meta.exists(root)) Meta.load(root).sortOrder else Seq.empty
-    if (so.nonEmpty && so.forall(e => !e.contains("(") && !e.contains(" ")))
-      so
+  def sortRefs(m: Meta.TableMetadata): Seq[String] =
+    if (m.sortOrder.forall(e => !e.contains("(") && !e.contains(" ")))
+      m.sortOrder
     else Seq.empty
-  }
 
   // truncate has no catalog function to resolve against; cluster by
   // the (finer) source column instead — still a valid routing
@@ -1782,65 +1598,62 @@ private[spark] object GraftWriteLayout {
     * none | hash | range): `none` skips the exchange entirely — tasks
     * still sort locally, for pre-clustered ingest where a shuffle
     * would only move already-placed rows. */
-  def distribution(root: String): Distribution = {
-    val mode =
-      if (Meta.exists(root))
-        Meta.load(root).properties.getOrElse("write.distribution-mode", "")
-      else ""
-    val sp = spec(root)
-    mode match {
+  def distribution(m: Meta.TableMetadata): Distribution = {
+    val sp = m.spec
+    val so = sortRefs(m)
+    m.properties.getOrElse("write.distribution-mode", "") match {
       case "none" => Distributions.unspecified()
       case "hash" if sp.nonEmpty =>
         Distributions.clustered(sp.map(partExpr).toArray)
-      case "range" if sortRefs(root).nonEmpty =>
-        Distributions.ordered(sortExprs(sortRefs(root)).toArray)
+      case "range" if so.nonEmpty =>
+        Distributions.ordered(sortExprs(so).toArray)
       case _ =>
         if (sp.nonEmpty) Distributions.clustered(sp.map(partExpr).toArray)
-        else {
-          val so = sortRefs(root)
-          if (so.nonEmpty) Distributions.ordered(sortExprs(so).toArray)
-          else Distributions.unspecified()
-        }
+        else if (so.nonEmpty) Distributions.ordered(sortExprs(so).toArray)
+        else Distributions.unspecified()
     }
   }
 
   /** In-task ordering: partition transforms first (keeps one file
     * open per partition value in a routed writer), then the sort
     * columns for tight per-file bounds. */
-  def ordering(root: String): Array[V2Sort] = {
-    val so = sortRefs(root)
+  def ordering(m: Meta.TableMetadata): Array[V2Sort] = {
+    val so = sortRefs(m)
     if (so.isEmpty) Array.empty
-    else (spec(root).map(pf =>
+    else (m.spec.map(pf =>
       Expressions.sort(partExpr(pf), SortDirection.ASCENDING)) ++
       sortExprs(so)).toArray
   }
 
   /** The executors applied the table's whole sort order, so the
     * commit may ingest staged files as-is. */
-  def presorted(root: String): Boolean = sortRefs(root).nonEmpty
+  def presorted(m: Meta.TableMetadata): Boolean = sortRefs(m).nonEmpty
 }
 
-class GraftWrite(root: String, schema: StructType, mode: GraftWriteMode,
-    queryId: String = "", branch: String = "main")
+/** A write into graft table `root`, laid out and staged by the table
+  * metadata `m` loaded when the write was built. */
+class GraftWrite(root: String, m: Meta.TableMetadata, schema: StructType,
+    mode: GraftWriteMode, queryId: String = "", branch: String = "main")
   extends org.apache.spark.sql.connector.write.Write
     with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
 
   override def requiredDistribution()
       : org.apache.spark.sql.connector.distributions.Distribution =
-    GraftWriteLayout.distribution(root)
+    GraftWriteLayout.distribution(m)
 
   override def requiredOrdering()
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    GraftWriteLayout.ordering(root)
+    GraftWriteLayout.ordering(m)
 
-  private[spark] def presorted: Boolean = GraftWriteLayout.presorted(root)
+  private val presorted: Boolean = GraftWriteLayout.presorted(m)
 
   override def supportedCustomMetrics()
       : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     GraftScanMetrics.writeMetrics
 
   override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-    new GraftBatchWrite(root, schema, mode, presorted, branch)
+    new GraftBatchWrite(root, GraftWriterFactory.forTable(m, schema, _), mode,
+      presorted, branch)
 
   /** Complete mode (truncate) overwrites the target ref per epoch;
     * the epoch's dedup predicate is re-evaluated inside the commit's
@@ -1851,7 +1664,7 @@ class GraftWrite(root: String, schema: StructType, mode: GraftWriteMode,
   override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
     val truncate = mode == GraftWriteMode.Truncate
     new StagedStreamingWrite(root, truncate,
-      GraftWriterFactory.forTable(root, schema, _),
+      GraftWriterFactory.forTable(m, schema, _),
       (dir, epochId) => {
         val t = GraftTable.load(SparkSession.active, root)
         val epoch = graft.table.StreamEpoch(queryId, epochId)
@@ -1869,8 +1682,8 @@ class GraftWrite(root: String, schema: StructType, mode: GraftWriteMode,
   }
 }
 
-class GraftBatchWrite(root: String, schema: StructType, mode: GraftWriteMode,
-    presorted: Boolean = false, branch: String = "main")
+class GraftBatchWrite(root: String, factory: String => GraftWriterFactory,
+    mode: GraftWriteMode, presorted: Boolean, branch: String)
   extends org.apache.spark.sql.connector.write.BatchWrite {
   private val staging =
     graft.table.TableIO.path(root, s"stage-v2-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -1879,12 +1692,11 @@ class GraftBatchWrite(root: String, schema: StructType, mode: GraftWriteMode,
       info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DataWriterFactory = {
     graft.table.TableIO.mkdirs(staging)
-    GraftWriterFactory.forTable(root, schema, staging.toString)
+    factory(staging.toString)
   }
 
   override def commit(
       messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
-    import org.apache.spark.sql.functions.lit
     val t = GraftTable.load(SparkSession.active, root)
     mode match {
       case GraftWriteMode.Append =>
@@ -1894,21 +1706,9 @@ class GraftBatchWrite(root: String, schema: StructType, mode: GraftWriteMode,
         t.commitStagedWrite(staging, overwrite = true,
           presorted = presorted, branch = branch)
       case GraftWriteMode.ByFilter(filters) =>
-        val cond = filters.flatMap(GraftSparkTable.filterColumn)
-          .reduceOption(_ && _).getOrElse(lit(true))
-        val triples = filters.flatMap(GraftSparkTable.statFilterOf)
-        val touched = triples.map(f => t.StatFilter(f._1, f._2, f._3))
-        // whole-file drops are provable only when EVERY conjunct is a
-        // stat-expressible equality — else stats can't cover the
-        // residual and every candidate rewrites
-        val eqProofs =
-          if (filters.forall(f => f.isInstanceOf[EqualTo] ||
-                f.isInstanceOf[org.apache.spark.sql.sources.EqualNullSafe]) &&
-              triples.size == filters.size &&
-              triples.forall(_._2 == "="))
-            triples.map(f => (f._1, f._3))
-          else Seq.empty
-        t.commitStagedOverwrite(staging, cond, touched,
+        val (cond, triples, eqProofs) = GraftSparkTable.overwriteByFilter(filters)
+        t.commitStagedOverwrite(staging, cond,
+          triples.map(f => t.StatFilter(f._1, f._2, f._3)),
           eqProofs = eqProofs, presorted = presorted)
       case GraftWriteMode.DynamicPartitions =>
         t.commitStagedDynamicOverwrite(staging, presorted = presorted)
@@ -1937,16 +1737,25 @@ object GraftWriterFactory {
   def fileTag(): String =
     java.util.UUID.randomUUID().toString.take(8)
 
-  /** Writes into graft table `root`: footers carry the table's field
-    * ids and bloom filters, rows route through its partition spec. */
-  def forTable(root: String, schema: StructType,
+  /** Writes into the graft table `m` describes: footers carry its
+    * field ids and bloom filters, rows route through its partition
+    * spec. A row-less schema (a delete-only write) routes nothing. */
+  def forTable(m: Meta.TableMetadata, schema: StructType,
       staging: String): GraftWriterFactory =
     GraftWriterFactory(staging,
       GraftConnectorShim.prepareParquetWriteConf(SparkSession.active,
-        GraftWriteSchemas.withTableFieldIds(root, schema),
-        GraftWriteSchemas.bloomOptions(root)),
-      RowTransform.forSpec(
-        if (Meta.exists(root)) Meta.load(root).spec else Seq.empty, schema))
+        withTableFieldIds(m.schema, schema), GraftTable.bloomWriteOptions(m)),
+      if (schema.isEmpty) Seq.empty else RowTransform.forSpec(m.spec, schema))
+
+  /** The query's output schema usually arrives WITHOUT the table's
+    * field-id metadata — graft parquet footers must carry the ids or
+    * id-matched reads break, so re-attach them by name before the
+    * write conf is prepared. */
+  private def withTableFieldIds(table: StructType, schema: StructType): StructType =
+    if (!Meta.hasFieldIds(table)) schema
+    else StructType(schema.fields.map(f =>
+      table.fields.find(_.name == f.name)
+        .map(tf => f.copy(metadata = tf.metadata)).getOrElse(f)))
 
   /** Writes into a real-format Iceberg table: footers carry its field
     * ids, rows route through its default spec. A row-less schema (a

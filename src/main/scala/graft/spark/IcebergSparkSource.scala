@@ -179,36 +179,13 @@ class IcebergSparkTable(location: String,
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
     Array(GraftSparkTable.FileMetaCol, GraftSparkTable.PosMetaCol)
 
-  /** SQL DELETE / UPDATE / MERGE on an adopted real-format table runs
-    * merge-on-read by DEFAULT: matched rows position-delete their old
-    * slots (a v2 delete manifest any Iceberg reader folds) and only
-    * changed rows are written — one real snapshot, write cost
-    * O(changed rows), no candidate-file rewrite. That is the right
-    * default at 100 TB for point mutations; readers who want the
-    * files re-folded call the compaction procedure
-    * (CALL rewrite_data_files), which absorbs the delete files.
-    * Iceberg's `write.delete.mode` / `write.update.mode` /
-    * `write.merge.mode` = copy-on-write table properties opt a table
-    * into group-based CoW instead: the operation's scan records the
-    * candidate files it planned and the replacement write swaps
-    * exactly that group in one 'overwrite' snapshot (reference: v2
-    * delete commits of iceberg-rust/src/table/transaction +
-    * datafusion_iceberg's delete semantics). */
+  /** SQL DELETE / UPDATE / MERGE on an adopted real-format table:
+    * merge-on-read by default, copy-on-write by table property — see
+    * IcebergRowLevelTarget. */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    () => {
-      import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-      val key = info.command() match {
-        case Command.DELETE => "write.delete.mode"
-        case Command.UPDATE => "write.update.mode"
-        case _ => "write.merge.mode"
-      }
-      if (IcebergMetadata.load(location).properties.get(key)
-          .contains("copy-on-write"))
-        new IcebergRowLevelOperation(location, info.command())
-      else new IcebergDeltaOperation(location, info.command())
-    }
+    RowLevelOperations.builder(info, () => new IcebergRowLevelTarget(location))
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     import scala.jdk.CollectionConverters._
@@ -233,17 +210,13 @@ class IcebergSparkTable(location: String,
       override def truncate(): org.apache.spark.sql.connector.write.WriteBuilder = {
         overwriteAll = true; this
       }
-      /** Untranslatable conditions fail fast — never a silent
-        * whole-table truncate (same contract as the graft dialect). */
       override def canOverwrite(
           filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-        filters.forall(f => GraftSparkTable.filterColumn(f).isDefined)
+        GraftSparkTable.translatable(filters)
       override def overwrite(
           filters: Array[org.apache.spark.sql.sources.Filter])
           : org.apache.spark.sql.connector.write.WriteBuilder = {
-        if (filters.isEmpty || filters.forall(
-            _.isInstanceOf[org.apache.spark.sql.sources.AlwaysTrue]))
-          overwriteAll = true
+        if (GraftSparkTable.selectsAll(filters)) overwriteAll = true
         else byFilter = Some(filters.toSeq)
         this
       }
@@ -267,20 +240,10 @@ class IcebergSparkTable(location: String,
           override def toInsertableRelation
               : org.apache.spark.sql.sources.InsertableRelation =
             (data: org.apache.spark.sql.DataFrame, _: Boolean) => {
-              import org.apache.spark.sql.functions.lit
               byFilter match {
                 case Some(filters) =>
-                  val cond = filters.flatMap(GraftSparkTable.filterColumn)
-                    .reduceOption(_ && _).getOrElse(lit(true))
-                  val triples = filters.flatMap(GraftSparkTable.statFilterOf)
-                  val eqProofs =
-                    if (filters.forall(f =>
-                        f.isInstanceOf[org.apache.spark.sql.sources.EqualTo] ||
-                        f.isInstanceOf[org.apache.spark.sql.sources.EqualNullSafe]) &&
-                        triples.size == filters.size &&
-                        triples.forall(_._2 == "="))
-                      triples.map(f => (f._1, f._3))
-                    else Seq.empty
+                  val (cond, triples, eqProofs) =
+                    GraftSparkTable.overwriteByFilter(filters)
                   graft.table.iceberg.IcebergWrite.overwriteWhere(
                     data.sparkSession, location, data, cond, triples, eqProofs)
                 case None if overwriteAll =>
@@ -297,7 +260,7 @@ class IcebergSparkTable(location: String,
 
 class IcebergScanBuilder(location: String, snapshotId: Option[Long],
     streamOptions: Map[String, String] = Map.empty,
-    capture: Option[IcebergRowLevelOperation] = None)
+    capture: Option[CopyOnWriteOperation] = None)
   extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
 
@@ -385,7 +348,7 @@ class IcebergScan(location: String, snapshotId: Option[Long],
     deletes: Seq[(IcebergAvro.DataFileEntry, Long)],
     streamOptions: Map[String, String] = Map.empty,
     rowIdCols: Seq[org.apache.spark.sql.types.StructField] = Seq.empty,
-    capture: Option[IcebergRowLevelOperation] = None)
+    capture: Option[CopyOnWriteOperation] = None)
   extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
@@ -721,155 +684,4 @@ class IcebergScan(location: String, snapshotId: Option[Long],
     if (deletes.isEmpty) delegate
     else MorReaderFactory(delegate, deleteSpecsByPartition, posSpecsByPartition)
   }
-}
-
-/** Delta row-level operation on an ADOPTED real-format Iceberg table
-  * (SupportsDelta): merge-on-read UPDATE / MERGE / DELETE. The scan
-  * emits the row address (_file, _pos) per candidate row; the write
-  * position-deletes matched slots and appends only the changed rows —
-  * ONE real Iceberg snapshot (data manifest + v2 delete manifest) any
-  * other engine folds on read (reference: the v2 delete-file commits
-  * of iceberg-rust/src/table/transaction). */
-class IcebergDeltaOperation(location: String,
-    cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command)
-  extends org.apache.spark.sql.connector.write.RowLevelOperation
-    with org.apache.spark.sql.connector.write.SupportsDelta {
-
-  override def command(): org.apache.spark.sql.connector.write.RowLevelOperation.Command = cmd
-
-  override def rowId(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(
-      org.apache.spark.sql.connector.expressions.Expressions.column(
-        GraftSparkTable.FileColName),
-      org.apache.spark.sql.connector.expressions.Expressions.column(
-        GraftSparkTable.PosColName))
-
-  // the writer implements update() natively (delete old slot + write
-  // the new row in the same task)
-  override def representUpdateAsDeleteAndInsert(): Boolean = false
-
-  // no capture: nothing is replaced wholesale, so runtime filtering
-  // may freely narrow the candidate FILES (positions are file-local)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new IcebergScanBuilder(location, None)
-
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DeltaWriteBuilder =
-    new org.apache.spark.sql.connector.write.DeltaWriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.DeltaWrite =
-        new org.apache.spark.sql.connector.write.DeltaWrite {
-          override def toBatch(): org.apache.spark.sql.connector.write.DeltaBatchWrite =
-            new IcebergDeltaBatchWrite(location, info.schema())
-        }
-    }
-}
-
-/** Executors stage new data files (partition-routed through the
-  * table's Iceberg transforms, executor-side) and position-delete
-  * files; the driver commit lands both in one real-format snapshot
-  * via IcebergWrite.commitDelta. */
-class IcebergDeltaBatchWrite(location: String, rowSchema: StructType)
-  extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
-
-  private val suffix = java.util.UUID.randomUUID().toString.take(8)
-  private val stagingData = TableIO.path(location, s"stage-delta-$suffix")
-  private val stagingDel = TableIO.path(location, s"stage-deltadel-$suffix")
-
-  override def createBatchWriterFactory(
-      info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DeltaWriterFactory = {
-    TableIO.mkdirs(stagingData)
-    TableIO.mkdirs(stagingDel)
-    val spark = SparkSession.active
-    val ice = IcebergMetadata.load(location)
-    GraftDeltaWriterFactory(
-      stagingData.toString, stagingDel.toString,
-      // data parquet carries the table's Iceberg FIELD IDS in its
-      // footers (id-based readers need no name mapping for delta files)
-      GraftConnectorShim.prepareParquetWriteConf(spark,
-        ice.schema.withFieldIds(rowSchema)),
-      GraftConnectorShim.prepareParquetWriteConf(spark,
-        GraftDeltaWriterFactory.DeleteSchema),
-      // a delete-only delta (SQL DELETE) carries an EMPTY row schema —
-      // no rows are written, so no transforms must compile against it
-      if (rowSchema.isEmpty) Seq.empty
-      else RowTransform.forSpec(ice.defaultPartitionFields, rowSchema))
-  }
-
-  override def commit(
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
-    graft.table.iceberg.IcebergWrite.commitDelta(
-      SparkSession.active, location, stagingData, stagingDel)
-
-  override def abort(
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
-    TableIO.delete(stagingData, recursive = true)
-    TableIO.delete(stagingDel, recursive = true)
-  }
-}
-
-/** Group-based copy-on-write row-level operation on an ADOPTED
-  * real-format table (write.<op>.mode=copy-on-write): the scan side
-  * records the candidate files it planned, the write side swaps
-  * exactly that group atomically — rewritten manifests drop the
-  * replaced entries, the replacement files commit as one 'overwrite'
-  * snapshot (reference: the CoW delete semantics of
-  * datafusion_iceberg; Iceberg v2 overwrite snapshots). */
-class IcebergRowLevelOperation(location: String,
-    cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command)
-  extends org.apache.spark.sql.connector.write.RowLevelOperation {
-
-  /** Union across (re)plannings: the runtime group-filter subquery
-    * plans a SUBSET of the main scan's files, and AQE may re-plan —
-    * accumulating keeps the replaced set a superset of every file
-    * whose rows fed the replacement write. */
-  private[spark] val scanned =
-    new java.util.concurrent.atomic.AtomicReference[Set[String]](Set.empty)
-
-  override def command(): org.apache.spark.sql.connector.write.RowLevelOperation.Command = cmd
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new IcebergScanBuilder(location, None, capture = Some(this))
-
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.Write {
-          override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-            new IcebergReplaceBatchWrite(location, info.schema(),
-              () => scanned.get())
-        }
-    }
-}
-
-/** ReplaceData write on a real-format table: executors stage the
-  * replacement rows (partition-routed through the Iceberg
-  * transforms), the driver commit swaps the scanned group via
-  * IcebergWrite.commitReplaceFiles. */
-class IcebergReplaceBatchWrite(location: String, rowSchema: StructType,
-    replaced: () => Set[String])
-  extends org.apache.spark.sql.connector.write.BatchWrite {
-
-  private val staging = TableIO.path(location,
-    s"stage-rlo-${java.util.UUID.randomUUID().toString.take(8)}")
-
-  override def createBatchWriterFactory(
-      info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DataWriterFactory = {
-    TableIO.mkdirs(staging)
-    ReplaceRowAdapterFactory(GraftWriterFactory.forIceberg(
-      IcebergMetadata.load(location), rowSchema, staging.toString), rowSchema)
-  }
-
-  override def commit(
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
-    graft.table.iceberg.IcebergWrite.commitReplaceFiles(
-      SparkSession.active, location, staging, replaced())
-
-  override def abort(
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
-    TableIO.delete(staging, recursive = true)
 }

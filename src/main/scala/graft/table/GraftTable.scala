@@ -2396,7 +2396,19 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       }
     TableIO.delete(delStaging, recursive = true)
     if (newFiles.isEmpty && delFiles.isEmpty) return
-    commit("update-mor", newFiles, Seq.empty, addedDeletes = delFiles)
+    // the data files these deletes reference must still be live when
+    // the snapshot lands (IcebergWrite.commitDelta's guard): over a
+    // concurrent rewrite the deletes would point at dead paths and
+    // every deleted row stay visible. The deletes carry the scan's
+    // qualified URIs; map them back to manifest paths.
+    val referenced = GraftTable.positionDeleteTargets(spark,
+      delFiles.map(f => new HPath(dataDir, f.path)))
+    val manifestPath =
+      if (referenced.isEmpty) Map.empty[String, String]
+      else m.liveFiles(None).map(f => new HPath(TableIO.qualified(
+        new HPath(dataDir, f.path))).toUri.getPath -> f.path).toMap
+    commit("update-mor", newFiles, Seq.empty, addedDeletes = delFiles,
+      requireLive = referenced.toSeq.map(p => manifestPath.getOrElse(p, p)))
   }
 
   def updateProperties(entries: Map[String, String]): GraftTable = this.synchronized {
@@ -2435,6 +2447,18 @@ class GraftTable private (val root: String, val spark: SparkSession) {
 }
 
 object GraftTable {
+
+  /** The data files a set of position-delete files reference, as URI
+    * paths (so `file:/` and `file:///` forms agree): distinct FILE
+    * paths only, never the delete rows. */
+  private[graft] def positionDeleteTargets(spark: SparkSession,
+      deleteFiles: Seq[HPath]): Set[String] =
+    if (deleteFiles.isEmpty) Set.empty
+    else spark.read
+      .schema(StructType(Seq(StructField("file_path", StringType))))
+      .parquet(deleteFiles.map(_.toString): _*)
+      .distinct().collect()
+      .map(r => new HPath(r.getString(0)).toUri.getPath).toSet
 
   /** Property prefix for analyze()'s per-column NDV estimates. */
   val NdvProp = "stats.ndv."

@@ -1683,13 +1683,8 @@ object IcebergWrite {
     // validateDataFilesExist guard below (read once, outside the
     // retry loop; distinct FILE paths only — never the delete rows)
     val referenced: Set[String] =
-      if (movedDel.isEmpty || delContent == 2) Set.empty
-      else spark.read
-        .schema(StructType(Seq(StructField("file_path",
-          org.apache.spark.sql.types.StringType))))
-        .parquet(movedDel.map(_._1.toString): _*)
-        .distinct().collect()
-        .map(r => new HPath(r.getString(0)).toUri.getPath).toSet
+      if (delContent == 2) Set.empty
+      else graft.table.GraftTable.positionDeleteTargets(spark, movedDel.map(_._1))
 
     commitDeltaSnapshot(spark, location, moved, statsByPath, movedDel,
       referenced, delContent, eqCols, spec)

@@ -1675,6 +1675,23 @@ class IcebergInteropSpec extends AnyFunSuite {
       r.getAs[Long]("_commit_snapshot_id") == updSnap.snapshotId)
     assert(updChanges.forall(r => r.getAs[Long]("k") <= 50),
       "carryover rows of rewritten files must cancel in the changelog")
+
+    // CoW MERGE: matched rows update and unmatched rows insert through
+    // the same candidate-file swap, still with no delete files
+    IcebergMetadata.commitRetry(loc)(m => m.copy(properties =
+      m.properties + ("write.merge.mode" -> "copy-on-write")))
+    spark.sql("MERGE INTO ice_cow.m.t t USING (SELECT id AS k, " +
+      "concat('m', id) AS v, id * 100 AS amt FROM range(271, 302)) s " +
+      "ON t.k = s.k WHEN MATCHED THEN UPDATE SET amt = s.amt " +
+      "WHEN NOT MATCHED THEN INSERT *")
+    val t3 = IcebergTable.load(spark, loc)
+    assert(t3.deleteEntries().isEmpty,
+      "copy-on-write MERGE must not commit delete files")
+    assert(t3.meta.currentSnapshot.get.operation === "overwrite")
+    assert(t3.scan().count() === 301L)
+    assert(t3.scan().agg(sum("amt")).collect()(0).getLong(0) ===
+      (1L to 50L).map(_ * 10L + 1L).sum + (51L to 270L).map(_ * 10L).sum +
+        (271L to 301L).map(_ * 100L).sum)
   }
 
   test("pure-equality SQL DELETE on an adopted table commits metadata-only") {
@@ -1952,13 +1969,26 @@ class IcebergInteropSpec extends AnyFunSuite {
       .collect()(0).getLong(0) === 130L)
   }
 
-  test("a delta commit refuses when its referenced data files were rewritten") {
+  // the graft leg commits through GraftTable.commitStagedDelta, which
+  // staged SQL merge-on-read writes of the graft dialect also land in
+  for (format <- Seq("iceberg", "graft"))
+  test("a delta commit refuses when its referenced data files were rewritten" +
+      (if (format == "graft") " [graft]" else "")) {
     val spark0 = spark
     import spark0.implicits._
     val loc = tmp()
-    IcebergWrite.create(spark, loc,
-      (1L to 50L).map(i => (i, s"v$i")).toDF("k", "v").coalesce(1))
-    val target = IcebergTable.load(spark, loc).plannedFiles().head._1.filePath
+    val iceberg = format == "iceberg"
+    val rows = (1L to 50L).map(i => (i, s"v$i")).toDF("k", "v").coalesce(1)
+    // each format's position deletes name the file the way its scans do
+    val target =
+      if (iceberg) {
+        IcebergWrite.create(spark, loc, rows)
+        IcebergTable.load(spark, loc).plannedFiles().head._1.filePath
+      } else {
+        graft.table.GraftTable.create(spark, loc, rows.schema).append(rows)
+        TableIO.qualified(new HPath(TableIO.path(loc, "data"),
+          graft.table.Meta.load(loc).liveFiles(None).head.path))
+      }
     def stageDelta(): (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) = {
       val ds = TableIO.path(loc, s"stage-t-${System.nanoTime()}")
       val del = TableIO.path(loc, s"stage-td-${System.nanoTime()}")
@@ -1967,25 +1997,39 @@ class IcebergInteropSpec extends AnyFunSuite {
         .coalesce(1).write.parquet(del.toString)
       (ds, del)
     }
+    def commitDelta(ds: HPath, del: HPath): Unit =
+      if (iceberg) graft.table.iceberg.IcebergWrite.commitDelta(spark, loc, ds, del)
+      else graft.table.GraftTable.load(spark, loc).commitStagedDelta(ds, del)
+    def count(): Long =
+      if (iceberg) IcebergTable.load(spark, loc).scan().count()
+      else graft.table.GraftTable.load(spark, loc).scan().count()
     // the happy path commits (references still live)
     val (ds1, del1) = stageDelta()
-    graft.table.iceberg.IcebergWrite.commitDelta(spark, loc, ds1, del1)
-    assert(IcebergTable.load(spark, loc).scan().count() === 49L)
+    commitDelta(ds1, del1)
+    assert(count() === 49L)
 
     // a compaction replaces every data file; a delta staged against
     // the OLD files must refuse instead of committing dead references
     // (the write-skew the reference's validateDataFilesExist prevents)
     val (ds2, del2) = stageDelta()
-    IcebergWrite.rewrite(spark, loc)
+    if (iceberg) IcebergWrite.rewrite(spark, loc)
+    else graft.table.GraftTable.load(spark, loc).applyDeletes()
     val ex = intercept[java.util.ConcurrentModificationException] {
-      graft.table.iceberg.IcebergWrite.commitDelta(spark, loc, ds2, del2)
+      commitDelta(ds2, del2)
     }
-    assert(ex.getMessage.contains("position deletes reference"))
-    // nothing committed: content and delete set unchanged
-    val t = IcebergTable.load(spark, loc)
-    assert(t.scan().count() === 49L)
-    assert(t.deleteEntries().isEmpty, "rewrite folded the old delete; " +
-      "the refused delta must not add one")
+    if (iceberg) {
+      assert(ex.getMessage.contains("position deletes reference"))
+      // nothing committed: content and delete set unchanged
+      val t = IcebergTable.load(spark, loc)
+      assert(t.scan().count() === 49L)
+      assert(t.deleteEntries().isEmpty, "rewrite folded the old delete; " +
+        "the refused delta must not add one")
+    } else {
+      assert(ex.getMessage.contains("were rewritten or removed"))
+      assert(count() === 49L)
+      assert(graft.table.Meta.load(loc).liveDeleteFiles(None).isEmpty,
+        "applyDeletes folded the old delete; the refused delta must not add one")
+    }
   }
 
   test("consolidation preserves foreign manifest columns it does not model") {
