@@ -179,12 +179,12 @@ class GraftSparkTable(root: String,
     // (start-snapshot-id, end-snapshot-id ?? current] — IO scales
     // with the delta, not the table (appends-only ranges enforced)
     val endSnapshot = Option(options.get("end-snapshot-id")).map(_.toLong)
-    new GraftScanBuilder(root,
+    new TableScanBuilder(new GraftScanSource(root,
       pinnedSnapshot.orElse(Option(options.get("snapshot")).map(_.toLong))
         .orElse(endSnapshot),
       Option(options.get("branch")),
-      streamOptions = options.asCaseSensitiveMap().asScala.toMap,
-      startSnapshot = Option(options.get("start-snapshot-id")).map(_.toLong))
+      Option(options.get("start-snapshot-id")).map(_.toLong)),
+      options = options.asCaseSensitiveMap().asScala.toMap)
   }
 
   override def newWriteBuilder(
@@ -204,8 +204,7 @@ object GraftSparkTable {
   // literals rendered through the SAME canonical form the manifest
   // stats use — naive toString on temporal values would make the
   // rewrite-candidate pruning unsound (matching rows silently kept)
-  private[spark] def statFilterOf(f: Filter): Option[(String, String, String)] = {
-    import GraftScanBuilder.canonicalLiteral
+  private[spark] def statFilterOf(f: Filter): Option[(String, String, String)] =
     f match {
       case EqualTo(a, v) => canonicalLiteral(v).map((a, "=", _))
       // <=> with a non-null literal selects exactly = v (the shape a
@@ -216,6 +215,30 @@ object GraftSparkTable {
       case GreaterThanOrEqual(a, v) => canonicalLiteral(v).map((a, ">=", _))
       case LessThan(a, v) => canonicalLiteral(v).map((a, "<", _))
       case LessThanOrEqual(a, v) => canonicalLiteral(v).map((a, "<=", _))
+      case _ => None
+    }
+
+  /** Render a filter literal in the SAME canonical string form
+    * FooterStats writes into the manifest — naive toString is unsound
+    * for temporal values (java.sql.Timestamp appends '.0', Instant
+    * uses 'T...Z'), and a lexicographic mismatch silently drops files
+    * whose stat boundary equals the literal. Types with no canonical
+    * form return None: the filter still runs, it just can't prune. */
+  private def canonicalLiteral(v: Any): Option[String] = {
+    def micros(i: java.time.Instant): Long =
+      Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L), i.getNano / 1000L)
+    v match {
+      case null => None
+      case _: java.math.BigDecimal | _: BigDecimal => None // stats skip decimals
+      case n: Number => Some(n.toString)
+      case s: String => Some(s)
+      case s: org.apache.spark.unsafe.types.UTF8String => Some(s.toString)
+      case d: java.sql.Date => Some(d.toLocalDate.toString)
+      case d: java.time.LocalDate => Some(d.toString)
+      case t: java.sql.Timestamp =>
+        Some(graft.table.FooterStats.canonicalTimestampMicros(micros(t.toInstant)))
+      case i: java.time.Instant =>
+        Some(graft.table.FooterStats.canonicalTimestampMicros(micros(i)))
       case _ => None
     }
   }
@@ -394,734 +417,6 @@ case class ReplaceRowAdapterFactory(
       override def abort(): Unit = w.abort()
       override def close(): Unit = w.close()
     }
-}
-
-object GraftScanBuilder {
-  /** Render a filter literal in the SAME canonical string form
-    * FooterStats writes into the manifest — naive toString is unsound
-    * for temporal values (java.sql.Timestamp appends '.0', Instant
-    * uses 'T...Z'), and a lexicographic mismatch silently drops files
-    * whose stat boundary equals the literal. Types with no canonical
-    * form return None: the filter still runs, it just can't prune. */
-  private[spark] def canonicalLiteral(v: Any): Option[String] = {
-    def micros(i: java.time.Instant): Long =
-      Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L), i.getNano / 1000L)
-    v match {
-      case null => None
-      case _: java.math.BigDecimal | _: BigDecimal => None // stats skip decimals
-      case n: Number => Some(n.toString)
-      case s: String => Some(s)
-      case s: org.apache.spark.unsafe.types.UTF8String => Some(s.toString)
-      case d: java.sql.Date => Some(d.toLocalDate.toString)
-      case d: java.time.LocalDate => Some(d.toString)
-      case t: java.sql.Timestamp =>
-        Some(graft.table.FooterStats.canonicalTimestampMicros(micros(t.toInstant)))
-      case i: java.time.Instant =>
-        Some(graft.table.FooterStats.canonicalTimestampMicros(micros(i)))
-      case _ => None
-    }
-  }
-}
-
-class GraftScanBuilder(root: String, snapshotId: Option[Long],
-    branch: Option[String],
-    capture: Option[CopyOnWriteOperation] = None,
-    streamOptions: Map[String, String] = Map.empty,
-    startSnapshot: Option[Long] = None)
-  extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
-
-  // connector reads resolve columns by field id. The vectorized path
-  // takes the flag from GraftConnectorShim's per-relation hadoop conf,
-  // but the non-vectorized binding (nested types) consults SQLConf.get
-  // — the session conf — so the READ flag must be on session-wide (see
-  // the GraftTable constructor note; the WRITE flag stays scoped).
-  SparkSession.active.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-
-  private val table = Meta.load(root)
-  private var pushed: Array[Filter] = Array.empty
-  private def snapshotSchema: StructType =
-    snapshotId.orElse(branch.flatMap(table.refs.get))
-      .flatMap(table.snapshot)
-      .flatMap(sn => table.schemas.get(sn.schemaId))
-      .getOrElse(table.schema)
-  private var requiredSchema: StructType = snapshotSchema
-  private var pushedAgg: Option[MetadataAggSpec] = None
-
-  /** Ungrouped, unfiltered COUNT(*)/MIN/MAX answer straight from the
-    * manifest — zero data IO (the metadata-only query path the
-    * reference gets from manifest stats). Declined when filters,
-    * grouping, merge-on-read deletes, or missing stats make the
-    * manifest answer unsound. */
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    import org.apache.spark.sql.connector.expressions.aggregate._
-    import org.apache.spark.sql.connector.expressions.NamedReference
-    val snapId = branch.flatMap(table.refs.get).orElse(snapshotId)
-    // an incremental range answers over the delta, not the live set —
-    // the manifest totals would be wrong
-    if (startSnapshot.isDefined) return false
-    if (pushed.nonEmpty || agg.groupByExpressions().nonEmpty) return false
-    if (table.liveDeleteFiles(snapId).nonEmpty) return false
-    val files = table.liveFiles(snapId)
-    if (files.isEmpty) return false
-
-    def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-      e match {
-        case r: NamedReference if r.fieldNames().length == 1 =>
-          Some(r.fieldNames()(0))
-        case _ => None
-      }
-    val resolved = agg.aggregateExpressions().toSeq.map {
-      case _: CountStar => Some(MetadataAgg("count", ""))
-      case m: Min => colOf(m.column()).filter(statsComplete(files, _))
-        .map(MetadataAgg("min", _))
-      case m: Max => colOf(m.column()).filter(statsComplete(files, _))
-        .map(MetadataAgg("max", _))
-      case _ => None
-    }
-    if (resolved.exists(_.isEmpty)) return false
-    pushedAgg = Some(MetadataAggSpec(resolved.flatten, snapId))
-    true
-  }
-
-  override def supportCompletePushDown(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    pushAggregation(agg)
-
-  private def statsComplete(files: Seq[Meta.DataFile], c: String): Boolean = {
-    import org.apache.spark.sql.types._
-    if (table.statsUnprunable.contains(c)) return false
-    val simpleTyped = table.schema.fields.find(_.name == c).exists(_.dataType match {
-      case IntegerType | LongType | ShortType | DoubleType | FloatType |
-          StringType => true
-      case _ => false
-    })
-    simpleTyped && files.forall(f => f.stats.get(c).exists(s =>
-      s.min.nonEmpty && s.max.nonEmpty && s.nullCount == 0))
-  }
-
-  /** Translate the pushable comparisons into manifest StatFilters;
-    * everything is also returned as residual (pruning is a skip
-    * optimization, never an exactness guarantee). */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(f => toStatFilter(f).isDefined || parquetPushable(f))
-    filters
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(required: StructType): Unit = {
-    // retain field order and types of the SNAPSHOT schema, not the
-    // current one — a time-travel/branch scan may select a column the
-    // live schema has since dropped
-    val names = required.fieldNames.toSet
-    requiredSchema = StructType(snapshotSchema.fields.filter(f => names.contains(f.name)))
-    // _file/_pos metadata columns (the delta row id) are not data
-    // columns: the reader APPENDS them per row, so track them apart
-    rowIdCols = required.fields.filter(f =>
-      f.name == GraftSparkTable.FileColName ||
-        f.name == GraftSparkTable.PosColName).toSeq
-  }
-
-  private var rowIdCols: Seq[org.apache.spark.sql.types.StructField] = Seq.empty
-
-  private def parquetPushable(f: Filter): Boolean = f match {
-    case _: EqualTo | _: GreaterThan | _: GreaterThanOrEqual | _: LessThan |
-        _: LessThanOrEqual | _: In | _: IsNull | _: IsNotNull => true
-    case And(l, r) => parquetPushable(l) && parquetPushable(r)
-    case _ => false
-  }
-
-  private[spark] def toStatFilter(f: Filter): Option[(String, String, String)] = f match {
-    case EqualTo(c, v: Any) => canonicalLiteral(v).map((c, "=", _))
-    case GreaterThan(c, v: Any) => canonicalLiteral(v).map((c, ">", _))
-    case GreaterThanOrEqual(c, v: Any) => canonicalLiteral(v).map((c, ">=", _))
-    case LessThan(c, v: Any) => canonicalLiteral(v).map((c, "<", _))
-    case LessThanOrEqual(c, v: Any) => canonicalLiteral(v).map((c, "<=", _))
-    case _ => None
-  }
-
-  private def canonicalLiteral(v: Any): Option[String] =
-    GraftScanBuilder.canonicalLiteral(v)
-
-  override def build(): Scan = {
-    pushedAgg match {
-      case Some(spec) => return MetadataAggScan.build(table, spec)
-      case None =>
-    }
-    // merge-on-read: if equality-delete files are live, their key
-    // columns must be read even when pruned away (Spark projects the
-    // extra columns back out above the scan)
-    val deletes = table.liveDeleteFiles(
-      branch.flatMap(table.refs.get).orElse(snapshotId))
-    val eqCols = deletes.flatMap(_.equalityColumns).distinct
-    val withKeys =
-      if (eqCols.forall(requiredSchema.fieldNames.contains)) requiredSchema
-      else StructType(snapshotSchema.fields.filter(f =>
-        requiredSchema.fieldNames.contains(f.name) || eqCols.contains(f.name)))
-    new GraftScan(root, table, snapshotId, branch, withKeys,
-      pushed, pushed.flatMap(toStatFilter), capture, streamOptions,
-      rowIdCols, startSnapshot)
-  }
-}
-
-class GraftScan(root: String, table: Meta.TableMetadata,
-    snapshotId: Option[Long], branch: Option[String],
-    requiredSchema: StructType, pushedFilters: Array[Filter],
-    statFilters: Array[(String, String, String)],
-    capture: Option[CopyOnWriteOperation] = None,
-    streamOptions: Map[String, String] = Map.empty,
-    rowIdCols: Seq[org.apache.spark.sql.types.StructField] = Seq.empty,
-    startSnapshot: Option[Long] = None)
-  extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
-    with org.apache.spark.sql.connector.read.SupportsReportPartitioning
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-
-  // ---- scan planning metrics (Spark UI SQL tab) ----------------------
-  // At 100 TB the question "did pruning work" must be answerable from
-  // the UI, not a debugger: how many live files the snapshot had, how
-  // many survived stat/partition pruning, the bytes actually planned,
-  // and how many delete files the scan applies.
-  import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
-
-  override def supportedCustomMetrics(): Array[CustomMetric] =
-    GraftScanMetrics.all
-
-  @volatile private var planningMetrics: Array[CustomTaskMetric] =
-    Array.empty
-
-  override def reportDriverMetrics(): Array[CustomTaskMetric] =
-    planningMetrics
-
-  private def recordPlanningMetrics(planned: Seq[Meta.DataFile]): Unit = {
-    val live = table.liveFiles(snapId).size
-    planningMetrics = Array(
-      GraftScanMetrics.task("liveDataFiles", live),
-      GraftScanMetrics.task("plannedDataFiles", planned.size),
-      GraftScanMetrics.task("prunedDataFiles",
-        math.max(0, live - planned.size)),
-      GraftScanMetrics.task("plannedBytes",
-        planned.map(_.fileSizeBytes).sum),
-      GraftScanMetrics.task("deleteFilesApplied", deletesWithSeq.size))
-  }
-
-  /** Manifest-derived statistics (reference:
-    * datafusion_iceberg/src/statistics.rs reports the same totals to
-    * its planner): sizeInBytes/rowCount from the PRUNED file list, so
-    * Spark sizes joins from what will actually be read — a graft
-    * relation under the broadcast threshold gets broadcast instead of
-    * shuffled, which is the difference that matters at 100 TB. */
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val files = plannedDataFiles(SparkSession.active)
-    val bytes = files.map(_.fileSizeBytes).sum
-    val rows = files.map(_.recordCount).filter(_ >= 0).sum
-    // analyze()-persisted NDV (plus per-file null counts when every
-    // planned file carries the column's stats) as V2 column stats —
-    // the CBO's join-reorder inputs. NDV is table-level: after
-    // pruning it's an upper bound, which is the safe direction.
-    val colStats = new java.util.HashMap[
-      org.apache.spark.sql.connector.expressions.NamedReference,
-      org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
-    requiredSchema.fieldNames.foreach { c =>
-      val ndv = table.properties.get(s"${GraftTable.NdvProp}$c").map(_.toLong)
-      val nulls =
-        if (files.nonEmpty && files.forall(_.stats.contains(c)))
-          Some(files.map(_.stats(c).nullCount).sum)
-        else None
-      if (ndv.isDefined || nulls.isDefined)
-        colStats.put(
-          org.apache.spark.sql.connector.expressions.Expressions.column(c),
-          new org.apache.spark.sql.connector.read.colstats.ColumnStatistics {
-            override def distinctCount(): java.util.OptionalLong =
-              ndv.map(java.util.OptionalLong.of)
-                .getOrElse(java.util.OptionalLong.empty())
-            override def nullCount(): java.util.OptionalLong =
-              nulls.map(java.util.OptionalLong.of)
-                .getOrElse(java.util.OptionalLong.empty())
-          })
-    }
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(bytes)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-      override def columnStats(): java.util.Map[
-        org.apache.spark.sql.connector.expressions.NamedReference,
-        org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = colStats
-    }
-  }
-
-  /** Identity partition columns whose source survives into the scan
-    * output — the storage-partitioned-join clustering. */
-  private def identityPartCols: Seq[String] =
-    table.spec.filter(_.transform == "identity").map(_.sourceColumn)
-      .filter(requiredSchema.fieldNames.contains)
-
-  private def snapId: Option[Long] =
-    branch.flatMap(table.refs.get).orElse(snapshotId)
-
-  /** Live equality deletes with sequence numbers: a delete applies
-    * only to data files with a SMALLER data sequence (Iceberg v2). */
-  private lazy val deletesWithSeq: Seq[(Meta.DataFile, Long)] =
-    table.liveDeleteFilesWithSeq(snapId)
-
-  private lazy val seqByPath: Map[String, Long] =
-    table.liveFilesWithSeq(snapId).map { case (f, q) => f.path -> q }.toMap
-
-  /** The applicable-delete signature of a data file: (equality delete
-    * paths, position delete paths) that scope to it. Partition bins
-    * never mix signatures, so the reader applies one uniform delete
-    * set per task; files under position deletes get single-file bins
-    * (the reader tracks row indexes per file). */
-  private def deleteSig(f: Meta.DataFile): (Seq[String], Seq[String]) = {
-    // incremental files rewritten away later in range aren't in the
-    // live map; their carried dataSequence keeps delete scoping sound
-    val seq = seqByPath.getOrElse(f.path,
-      f.dataSequence.getOrElse(Long.MinValue))
-    (deletesWithSeq.filter { case (d, ds) =>
-      d.content == 2 && ds > seq && eqDeleteMayApply(d, f) }
-      .map(_._1.path).sorted,
-      deletesWithSeq.filter { case (d, ds) => d.content == 1 && ds >= seq }
-        .map(_._1.path).sorted)
-  }
-
-  /** Delete-manifest pruning (Iceberg's delete-file bounds check): an
-    * equality delete whose recorded key range is DISJOINT from the
-    * data file's range on any equality column cannot delete a row in
-    * that file — the file's task never ships or reads that delete. A
-    * delete carrying null keys always applies (nulls live outside the
-    * min/max); missing stats on either side apply conservatively. */
-  private def eqDeleteMayApply(d: Meta.DataFile, f: Meta.DataFile): Boolean =
-    d.equalityColumns.forall { c =>
-      (d.stats.get(c), f.stats.get(c),
-          table.schema.fields.find(_.name == c)) match {
-        case (Some(ds), Some(fs), Some(field)) if ds.nullCount == 0 &&
-            ds.min.nonEmpty && ds.max.nonEmpty &&
-            fs.min.nonEmpty && fs.max.nonEmpty =>
-          val cmp = Meta.comparator(field.dataType)
-          cmp(ds.min, fs.max) <= 0 && cmp(fs.min, ds.max) <= 0
-        case _ => true
-      }
-    }
-
-  /** After partition-spec evolution, files from older eras don't carry
-    * the default spec's values — key-grouped claims would be unsound
-    * until a rewrite migrates them, so SPJ requires a uniform spec. */
-  private lazy val uniformSpec: Boolean =
-    table.liveFiles(snapId).forall(_.specId == table.defaultSpecId)
-
-  // SPJ is declined while equality deletes are outstanding: the keyed
-  // single-partition-per-value layout cannot also honor per-file
-  // delete scoping bins
-  /** Any live imported (name-mapped) file forces the plain planning
-    * path: keyed SPJ/bucket partitions assume one uniform reader
-    * factory, and mapped files need their own renamed-schema one.
-    * Metadata-only: commit() stamps `added-files-imported` on every
-    * snapshot whose files carry a name mapping (incl. expire-squashed
-    * bases), so the chain summaries answer this without resolving any
-    * (possibly spilled) manifest. Conservative if imports were later
-    * compacted away — that only declines SPJ, never corrupts it. */
-  private lazy val anyMapped: Boolean =
-    table.chainSnapshots(snapId)
-      .exists(_.summary.contains("added-files-imported"))
-
-  private def spjEligible: Boolean =
-    table.spec.nonEmpty && table.spec.forall(_.transform == "identity") &&
-      identityPartCols.size == table.spec.size && deletesWithSeq.isEmpty &&
-      uniformSpec && !anyMapped
-
-  /** Single bucket[n] partition spec whose source column survives into
-    * the output — the bucket-SPJ clustering (needs the catalog's
-    * FunctionCatalog to resolve `bucket` on both join sides). */
-  private def bucketSpec: Option[(Meta.PartitionField, Int)] = table.spec match {
-    case Seq(pf) if pf.transform.startsWith("bucket[") &&
-        requiredSchema.fieldNames.contains(pf.sourceColumn) &&
-        deletesWithSeq.isEmpty && uniformSpec && !anyMapped =>
-      Some((pf, pf.transform.stripPrefix("bucket[").stripSuffix("]").toInt))
-    case _ => None
-  }
-
-  /** Report key-grouped partitioning over identity partition columns:
-    * two tables partitioned the same way then join WITHOUT a shuffle
-    * (storage-partitioned join; needs
-    * spark.sql.sources.v2.bucketing.enabled). */
-  override def outputPartitioning()
-      : org.apache.spark.sql.connector.read.partitioning.Partitioning = {
-    if (spjEligible) {
-      val parts = planInputPartitions()
-      new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
-        identityPartCols.map(c =>
-          org.apache.spark.sql.connector.expressions.Expressions.identity(c)
-            .asInstanceOf[org.apache.spark.sql.connector.expressions.Expression]).toArray,
-        parts.length)
-    } else bucketSpec match {
-      case Some((pf, n)) =>
-        val parts = planInputPartitions()
-        new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
-          Array(org.apache.spark.sql.connector.expressions.Expressions
-            .bucket(n, pf.sourceColumn)
-            .asInstanceOf[org.apache.spark.sql.connector.expressions.Expression]),
-          parts.length)
-      case None =>
-        new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
-    }
-  }
-
-  override def readSchema(): StructType =
-    StructType(requiredSchema.fields ++ rowIdCols)
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"GraftScan(root=$root, prunedBy=${statFilters.length} stat filters)"
-
-  // ---- runtime filtering (dynamic file pruning from join keys) -------
-
-  /** Columns a runtime filter (e.g. the build side of a join) may
-    * arrive on — restricted to the scan's own output, which is what
-    * Spark resolves the references against. */
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    // a row-level operation's replaced group must equal EXACTLY the
-    // files every one of its scans planned; Spark also routes the
-    // runtime group-filter subquery through the operation's builder,
-    // so runtime narrowing of just the main scan would desynchronize
-    // the sets (files removed whose rows were never rewritten). The
-    // op's scans therefore decline runtime filtering: every scan
-    // plans the same statically-pruned set.
-    if (capture.isDefined) Array.empty
-    else requiredSchema.fieldNames.map(
-      org.apache.spark.sql.connector.expressions.Expressions.column)
-
-  @volatile private var runtimeStatFilters: Seq[(String, String, String)] = Seq.empty
-
-  /** Runtime IN-filters become min/max envelopes over the manifest:
-    * files outside [min(values), max(values)] are dropped before any
-    * task launches — dynamic partition/file pruning. Only numeric and
-    * string keys translate: other types (e.g. timestamps) render
-    * differently from the canonical stat strings, and pruning must
-    * stay sound, so they are ignored rather than risked. */
-  override def filter(filters: Array[Filter]): Unit = {
-    if (capture.isDefined) return // see filterAttributes
-    def safe(v: Any): Boolean = v.isInstanceOf[Number] || v.isInstanceOf[String]
-    runtimeStatFilters = filters.toSeq.flatMap {
-      case In(c, values) if values.nonEmpty &&
-          values.forall(v => v != null && safe(v)) =>
-        val strs = values.map(_.toString)
-        val cmp: (String, String) => Int =
-          if (values.head.isInstanceOf[Number])
-            (a, b) => java.lang.Double.compare(a.toDouble, b.toDouble)
-          else (a, b) => a.compareTo(b)
-        Seq((c, ">=", strs.min(Ordering.fromLessThan[String](cmp(_, _) < 0))),
-          (c, "<=", strs.max(Ordering.fromLessThan[String](cmp(_, _) < 0))))
-      case EqualTo(c, v) if v != null && safe(v) =>
-        Seq((c, "=", v.toString))
-      case _ => Seq.empty
-    }
-  }
-
-  private def plannedDataFiles(spark: org.apache.spark.sql.SparkSession): Seq[Meta.DataFile] = {
-    val t = GraftTable.load(spark, root)
-    val filters = (statFilters.toSeq ++ runtimeStatFilters)
-      .map(s => t.StatFilter(s._1, s._2, s._3))
-    startSnapshot match {
-      case Some(s) => t.plannedAppendedFiles(filters, Some(s), snapId)
-      case None => t.plannedFiles(filters, snapshotId, branch)
-    }
-  }
-
-  private def toFilePartition(idx: Int, bin: Seq[Meta.DataFile])
-      : org.apache.spark.sql.execution.datasources.FilePartition = {
-    val dataDir = graft.table.TableIO.path(root, "data")
-    GraftConnectorShim.filePartition(idx, bin.map { f =>
-      val p = new org.apache.hadoop.fs.Path(dataDir, f.path)
-      GraftConnectorShim.partitionedFile(
-        graft.table.TableIO.qualified(p), f.fileSizeBytes, 0L)
-    })
-  }
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    TableMicroBatchStream.graft(root, requiredSchema, streamOptions)
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
-    val files = plannedDataFiles(spark)
-    recordPlanningMetrics(files)
-    // group-based row-level ops replace exactly the files this scan
-    // planned (runtime filtering is declined under capture, so every
-    // planning sees the same statically-pruned set)
-    capture.foreach(_.scanned.updateAndGet(_ ++ files.map(_.path)))
-    if (rowIdCols.nonEmpty) {
-      // row-id scans (delta row-level ops): one file per partition so
-      // the reader's raw stream index IS the row position, the same
-      // trick the position-delete read path uses. Keyed (SPJ/bucket)
-      // partitioning is skipped — a delta op's scan feeds a write,
-      // not a join.
-      val dataDir = graft.table.TableIO.path(root, "data")
-      val specsOut = scala.collection.mutable.Map[String, Seq[DeleteFilesSpec]]()
-      val posOut = scala.collection.mutable.Map[String, (PosDeleteSpec, String)]()
-      val fileOut = scala.collection.mutable.Map[String, String]()
-      val mapOut = scala.collection.mutable.Map[String, ImportedGroup]()
-      val out = scala.collection.mutable.ArrayBuffer[InputPartition]()
-      files.groupBy(planSig).toSeq.sortBy { case (k, _) => sigKey(k) }
-        .foreach { case ((eqSig, posSig, mapping, mSpecId, mPvs), group) =>
-          val specs =
-            if (eqSig.isEmpty) Seq.empty else buildDeleteSpecs(spark, eqSig)
-          val posSpec =
-            if (posSig.isEmpty) None else Some(buildPosSpec(spark, posSig))
-          group.foreach { f =>
-            out += toFilePartition(out.length, Seq(f))
-            val uri = graft.table.TableIO.qualified(
-              new org.apache.hadoop.fs.Path(dataDir, f.path))
-            val bind = PartitionBindKey.ofPath(uri)
-            if (specs.nonEmpty) specsOut(bind) = specs
-            mapping.foreach(mp =>
-              mapOut(bind) = ImportedGroup(mp, mSpecId, mPvs))
-            fileOut(bind) = uri
-            posSpec.foreach(spec => posOut(bind) = (spec, bind))
-          }
-        }
-      deleteSpecsByPartition = specsOut.toMap
-      posSpecsByPartition = posOut.toMap
-      rowIdFileByPartition = fileOut.toMap
-      mappingByPartition = mapOut.toMap
-      out.toArray
-    } else if (spjEligible) {
-      // one partition per partition-value tuple, keyed for SPJ
-      val specNames = table.spec.map(_.name)
-      val types = identityPartCols.map(c =>
-        table.schema.fields.find(_.name == c).get.dataType)
-      files.groupBy(f => specNames.map(f.partitionValues.getOrElse(_, "")))
-        .toSeq.sortBy(_._1.mkString("/"))
-        .zipWithIndex.map { case ((key, bin), i) =>
-          val keyVals = key.zip(types).map { case (v, t) =>
-            org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst(t match {
-              case org.apache.spark.sql.types.IntegerType => v.toInt
-              case org.apache.spark.sql.types.LongType => v.toLong
-              case org.apache.spark.sql.types.ShortType => v.toShort
-              case _ => v
-            })
-          }
-          KeyedFilePartition(
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              keyVals.toArray[Any]),
-            toFilePartition(i, bin)): InputPartition
-        }.toArray
-    } else if (bucketSpec.isDefined) {
-      // one partition per bucket value, keyed by the bucket int
-      val (pf, _) = bucketSpec.get
-      files.groupBy(_.partitionValues.getOrElse(pf.name, "0"))
-        .toSeq.sortBy(_._1.toInt)
-        .zipWithIndex.map { case ((bucket, bin), i) =>
-          KeyedFilePartition(
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              Array[Any](bucket.toInt)),
-            toFilePartition(i, bin)): InputPartition
-        }.toArray
-    } else {
-      val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
-      val out = scala.collection.mutable.ArrayBuffer[InputPartition]()
-      val specsOut = scala.collection.mutable.Map[String, Seq[DeleteFilesSpec]]()
-      val posOut = scala.collection.mutable.Map[String, (PosDeleteSpec, String)]()
-      val mapOut = scala.collection.mutable.Map[String, ImportedGroup]()
-      def bindOf(f: Meta.DataFile): String = PartitionBindKey.ofPath(
-        graft.table.TableIO.qualified(new org.apache.hadoop.fs.Path(
-          graft.table.TableIO.path(root, "data"), f.path)))
-      // bins never mix delete signatures OR name mappings (imported
-      // bins are also partition-value-uniform, so identity constants
-      // the hive layout stripped fill per bin): one task, one delete
-      // set, one schema shape
-      files.groupBy(planSig).toSeq.sortBy { case (k, _) => sigKey(k) }
-        .foreach { case ((eqSig, posSig, mapping, mSpecId, mPvs), group) =>
-          val specs =
-            if (eqSig.isEmpty) Seq.empty else buildDeleteSpecs(spark, eqSig)
-          val posSpec =
-            if (posSig.isEmpty) None else Some(buildPosSpec(spark, posSig))
-          if (posSig.nonEmpty) {
-            // single-file bins: the reader counts row indexes per file
-            group.foreach { f =>
-              out += toFilePartition(out.length, Seq(f))
-              val bind = bindOf(f)
-              if (specs.nonEmpty) specsOut(bind) = specs
-              mapping.foreach(mp =>
-                mapOut(bind) = ImportedGroup(mp, mSpecId, mPvs))
-              posOut(bind) = (posSpec.get, bind)
-            }
-          } else {
-            // bin-pack files into tasks toward maxPartitionBytes
-            val bins = scala.collection.mutable.ArrayBuffer[scala.collection.mutable.ArrayBuffer[Meta.DataFile]]()
-            var cur = scala.collection.mutable.ArrayBuffer[Meta.DataFile]()
-            var curBytes = 0L
-            group.sortBy(-_.fileSizeBytes).foreach { f =>
-              if (curBytes + f.fileSizeBytes > maxBytes && cur.nonEmpty) {
-                bins += cur; cur = scala.collection.mutable.ArrayBuffer(); curBytes = 0L
-              }
-              cur += f; curBytes += f.fileSizeBytes
-            }
-            if (cur.nonEmpty) bins += cur
-            bins.foreach { bin =>
-              out += toFilePartition(out.length, bin.toSeq)
-              val bind = bindOf(bin.head)
-              if (specs.nonEmpty) specsOut(bind) = specs
-              mapping.foreach(mp =>
-                mapOut(bind) = ImportedGroup(mp, mSpecId, mPvs))
-            }
-          }
-        }
-      deleteSpecsByPartition = specsOut.toMap
-      posSpecsByPartition = posOut.toMap
-      mappingByPartition = mapOut.toMap
-      out.toArray
-    }
-  }
-
-  /** partition index → applicable delete groups, bound at planning
-    * time (partition bins are delete-signature-uniform). */
-  @volatile private var deleteSpecsByPartition: Map[String, Seq[DeleteFilesSpec]] = Map.empty
-
-  /** partition index → import-group info, for partitions of
-    * add_files-imported (id-less) parquet — routed to a
-    * renamed-schema reader factory plus identity-constant fill. */
-  @volatile private var mappingByPartition: Map[String, ImportedGroup] = Map.empty
-
-  /** bin-uniformity key: delete signature plus (for imported files)
-    * the name mapping, spec id and partition values — so every task
-    * reads one schema shape and fills one constant set. */
-  private def planSig(f: Meta.DataFile): (Seq[String], Seq[String],
-      Option[Map[String, String]], Int, Map[String, String]) = {
-    val (eq, pos) = deleteSig(f)
-    if (f.nameMapping.isDefined)
-      (eq, pos, f.nameMapping, f.specId, f.partitionValues)
-    else (eq, pos, None, 0, Map.empty)
-  }
-
-  /** deterministic ordering for planSig groups (Map.toString isn't). */
-  private def sigKey(k: (Seq[String], Seq[String],
-      Option[Map[String, String]], Int, Map[String, String])): String =
-    (k._1 ++ k._2).mkString(";") + "|" +
-      k._3.map(_.toSeq.sorted.mkString(",")).getOrElse("") + "|" +
-      k._4 + "|" + k._5.toSeq.sorted.mkString(",")
-
-  /** partition index → (position-delete spec, this partition's data
-    * file path) for single-file partitions under position deletes. */
-  @volatile private var posSpecsByPartition: Map[String, (PosDeleteSpec, String)] = Map.empty
-
-  /** partition index → qualified data-file URI, for row-id scans
-    * (single-file partitions; the reader appends _file/_pos). */
-  @volatile private var rowIdFileByPartition: Map[String, String] = Map.empty
-
-  /** Position-delete files become an executor-readable spec like the
-    * equality ones: schema (file_path string, pos long). */
-  private def buildPosSpec(spark: SparkSession, sig: Seq[String]): PosDeleteSpec = {
-    val dataDir = graft.table.TableIO.path(root, "data")
-    val byPath = deletesWithSeq.map(_._1).map(f => f.path -> f).toMap
-    val schema = StructType(Seq(
-      org.apache.spark.sql.types.StructField("file_path",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("pos",
-        org.apache.spark.sql.types.LongType)))
-    val part = GraftConnectorShim.filePartition(0, sig.map(byPath).map { f =>
-      val p = new org.apache.hadoop.fs.Path(dataDir, f.path)
-      GraftConnectorShim.partitionedFile(
-        graft.table.TableIO.qualified(p), f.fileSizeBytes, 0L)
-    })
-    PosDeleteSpec(
-      factory = GraftConnectorShim.parquetReaderFactory(
-        spark, schema, schema, Array.empty),
-      part = part,
-      cacheKey = "pos:" + sig.sorted.mkString(";"))
-  }
-
-  /** Build the executor-readable delete specs for one signature: the
-    * delete keys are NEVER collected on the driver — each executor
-    * reads the (small) delete parquets itself and caches the key set
-    * per JVM, so task closures stay O(file list), not O(deleted keys). */
-  private def buildDeleteSpecs(spark: SparkSession,
-      sig: Seq[String]): Seq[DeleteFilesSpec] = {
-    val dataDir = graft.table.TableIO.path(root, "data")
-    val byPath = deletesWithSeq.map(_._1).map(f => f.path -> f).toMap
-    sig.map(byPath).groupBy(_.equalityColumns).toSeq.map { case (eqCols, dfiles) =>
-      val keySchema = StructType(
-        table.schema.fields.filter(f => eqCols.contains(f.name)))
-      val part = GraftConnectorShim.filePartition(0, dfiles.map { f =>
-        val p = new org.apache.hadoop.fs.Path(dataDir, f.path)
-        GraftConnectorShim.partitionedFile(
-          graft.table.TableIO.qualified(p), f.fileSizeBytes, 0L)
-      })
-      DeleteFilesSpec(
-        keyIndexes = keySchema.fields.map(f => requiredSchema.fieldIndex(f.name)),
-        keyTypes = keySchema.fields.map(_.dataType),
-        factory = GraftConnectorShim.parquetReaderFactory(
-          spark, keySchema, keySchema, Array.empty),
-        part = part,
-        cacheKey = dfiles.map(_.path).sorted.mkString(";"))
-    }
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = SparkSession.active
-    // position deletes are applied by STREAM index, which is only the
-    // file row index if the parquet reader skips nothing — so row-group
-    // predicate pushdown must be off while any position delete is live
-    // (filters still run above the scan: pushFilters keeps them all as
-    // residual)
-    // ...and a row-level operation's scan must read candidate files
-    // WHOLE: the pushed group-filter condition may only prune files,
-    // never rows — non-matching rows are copied forward by the
-    // replacement projection, so dropping them here would lose data
-    // ...and a row-id scan counts RAW stream indexes as positions, so
-    // the parquet reader must not skip row groups either
-    val pushForDelegate =
-      if (capture.isDefined || rowIdCols.nonEmpty) Array.empty[Filter]
-      else pushedFilters
-    // partitions of imported (name-mapped) files read through a
-    // factory built over their pinned import-time schema — same
-    // positions and types, different names, no parquet-level filter
-    // pushdown (filters name live columns; all filters stay residual
-    // above the scan, so dropping the pushdown is only a perf choice).
-    // Identity sources the hive layout stripped from the pages fill
-    // back in as per-bin constants (an UnsafeProjection per task).
-    val mappedFactories: Map[Map[String, String], PartitionReaderFactory] =
-      mappingByPartition.values.map(_.mapping).toSet.map {
-        (mp: Map[String, String]) =>
-          mp -> (UnwrapKeyedFactory(GraftConnectorShim.parquetReaderFactory(
-            spark, Meta.importReadSchema(table.schema, mp),
-            Meta.importReadSchema(requiredSchema, mp),
-            Array.empty)): PartitionReaderFactory)
-      }.toMap
-    val routeByPartition: Map[String, (PartitionReaderFactory, Seq[(Int, Any)])] =
-      mappingByPartition.map { case (i, g) =>
-        i -> (mappedFactories(g.mapping),
-          ImportedGroup.overrides(table, requiredSchema, g))
-      }
-    def routed(f: PartitionReaderFactory): PartitionReaderFactory =
-      if (routeByPartition.isEmpty) f
-      else NameMapRoutingFactory(f, routeByPartition, requiredSchema)
-    val parquetFactory: PartitionReaderFactory = routed(UnwrapKeyedFactory(
-      GraftConnectorShim.parquetReaderFactory(
-        spark, table.schema, requiredSchema, pushForDelegate)))
-    // ONLY the partitions bound to a position delete read raw (their
-    // stream index must equal the file row index, so the reader may
-    // skip nothing); eq-only and delete-free partitions keep the
-    // pushed filters — equality filtering matches row CONTENT, so
-    // row-group skipping stays sound for them
-    val rawFactory: PartitionReaderFactory =
-      if (pushForDelegate.nonEmpty && posSpecsByPartition.nonEmpty)
-        routed(UnwrapKeyedFactory(GraftConnectorShim.parquetReaderFactory(
-          spark, table.schema, requiredSchema, Array.empty)))
-      else parquetFactory
-    // _file/_pos append BELOW the MoR filter: positions must count
-    // every raw row of the file, including rows a live delete hides
-    val delegate =
-      if (rowIdCols.isEmpty) parquetFactory
-      else RowIdAppendFactory(parquetFactory, rowIdFileByPartition,
-        rowIdCols.map(_.name))
-    if (deletesWithSeq.isEmpty) delegate
-    else MorReaderFactory(delegate, deleteSpecsByPartition, posSpecsByPartition,
-      rawDelegate = if (rowIdCols.isEmpty) Some(rawFactory) else None)
-  }
 }
 
 /** Stable per-partition binding key: the FIRST file's normalized URI

@@ -3,12 +3,10 @@ package graft.spark
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.execution.datasources.GraftConnectorShim
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.table.TableIO
-import graft.table.iceberg.{IcebergAvro, IcebergMetadata, IcebergTable}
+import graft.table.iceberg.IcebergMetadata
 
 /** Standard Spark SQL over REAL (foreign-written) Iceberg v2 tables:
   * the TableCatalog serves this V2 table for any directory holding
@@ -189,9 +187,9 @@ class IcebergSparkTable(location: String,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     import scala.jdk.CollectionConverters._
-    new IcebergScanBuilder(location,
-      Option(options.get("snapshot")).map(_.toLong).orElse(pinnedSnapshot),
-      streamOptions = options.asCaseSensitiveMap().asScala.toMap)
+    new TableScanBuilder(new IcebergScanSource(location,
+      Option(options.get("snapshot")).map(_.toLong).orElse(pinnedSnapshot)),
+      options = options.asCaseSensitiveMap().asScala.toMap)
   }
 
   /** INSERT INTO a table some other engine created (reference:
@@ -256,432 +254,4 @@ class IcebergSparkTable(location: String,
             }
         }
     }
-}
-
-class IcebergScanBuilder(location: String, snapshotId: Option[Long],
-    streamOptions: Map[String, String] = Map.empty,
-    capture: Option[CopyOnWriteOperation] = None)
-  extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns {
-
-  private val ice = IcebergMetadata.load(location)
-  // a time-travel scan plans against the PINNED snapshot's schema:
-  // era labels, era types, since-dropped columns included
-  private val schemaAt = snapshotId.flatMap(ice.snapshot)
-    .flatMap(sn => ice.schemas.find(_.schemaId == sn.schemaId))
-    .getOrElse(ice.schema)
-  private var pushed: Array[Filter] = Array.empty
-  private var requiredSchema: StructType = schemaAt.toSpark
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters
-    filters // everything stays residual; pruning is a skip optimization
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(required: StructType): Unit = {
-    val names = required.fieldNames.toSet
-    requiredSchema = StructType(
-      schemaAt.toSpark.fields.filter(f => names.contains(f.name)))
-    // _file/_pos metadata columns (the delta row id) are not data
-    // columns: the reader APPENDS them per row, so track them apart
-    rowIdCols = required.fields.filter(f =>
-      f.name == GraftSparkTable.FileColName ||
-        f.name == GraftSparkTable.PosColName).toSeq
-  }
-
-  private var rowIdCols: Seq[org.apache.spark.sql.types.StructField] = Seq.empty
-
-  /** The manifest-prunable subset of the pushed filters, rendered in
-    * canonical stat-string form (same translation as GraftScan). */
-  private def statFilters: Seq[(String, String, String)] = {
-    def lit(v: Any): Option[String] = v match {
-      case null => None
-      case n: Number => Some(n.toString)
-      case s: String => Some(s)
-      case d: java.sql.Date => Some(d.toLocalDate.toString)
-      case t: java.sql.Timestamp =>
-        val i = t.toInstant
-        Some(graft.table.FooterStats.canonicalTimestampMicros(
-          Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L),
-            i.getNano / 1000L)))
-      case i: java.time.Instant =>
-        Some(graft.table.FooterStats.canonicalTimestampMicros(
-          Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L),
-            i.getNano / 1000L)))
-      case _ => None
-    }
-    pushed.toSeq.flatMap {
-      case EqualTo(c, v) => lit(v).map((c, "=", _))
-      case GreaterThan(c, v) => lit(v).map((c, ">", _))
-      case GreaterThanOrEqual(c, v) => lit(v).map((c, ">=", _))
-      case LessThan(c, v) => lit(v).map((c, "<", _))
-      case LessThanOrEqual(c, v) => lit(v).map((c, "<=", _))
-      case _ => None
-    }
-  }
-
-  override def build(): Scan = {
-    // merge-on-read: equality-delete key columns must be read even
-    // when pruned away. Load the table + delete manifests ONCE and
-    // hand them to the scan — metadata walks are driver round-trips
-    // on object storage. The builder's own metadata load is reused
-    // (one read serves planning end to end, not one per phase).
-    val t = IcebergTable.fromMetadataAt(SparkSession.active, location, ice)
-    val deletes = t.deleteEntries(snapshotId)
-    val eqIds = deletes.map(_._1)
-      .filter(_.content == 2).flatMap(_.equalityIds).distinct
-    val eqCols = eqIds.flatMap(id => schemaAt.fields.find(_.id == id).map(_.name))
-    val withKeys =
-      if (eqCols.forall(requiredSchema.fieldNames.contains)) requiredSchema
-      else StructType(schemaAt.toSpark.fields.filter(f =>
-        requiredSchema.fieldNames.contains(f.name) || eqCols.contains(f.name)))
-    new IcebergScan(location, snapshotId, withKeys, pushed, statFilters,
-      t, deletes, streamOptions, rowIdCols, capture)
-  }
-}
-
-class IcebergScan(location: String, snapshotId: Option[Long],
-    requiredSchema: StructType, pushedFilters: Array[Filter],
-    statFilters: Seq[(String, String, String)],
-    table: IcebergTable,
-    deletes: Seq[(IcebergAvro.DataFileEntry, Long)],
-    streamOptions: Map[String, String] = Map.empty,
-    rowIdCols: Seq[org.apache.spark.sql.types.StructField] = Seq.empty,
-    capture: Option[CopyOnWriteOperation] = None)
-  extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
-    with org.apache.spark.sql.connector.read.SupportsReportPartitioning
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-
-  private def sparkSession = SparkSession.active
-  private lazy val ice = table.meta
-  // era schema of the pinned snapshot (current schema otherwise):
-  // name<->id resolution must use the SAME labels the builder planned
-  private lazy val schemaAt = snapshotId.flatMap(ice.snapshot)
-    .flatMap(sn => ice.schemas.find(_.schemaId == sn.schemaId))
-    .getOrElse(ice.schema)
-
-  /** Manifest-derived sizes from the PRUNED file list — foreign tables
-    * get the same statistics-driven broadcast decisions as graft's own
-    * (reference: datafusion_iceberg/src/statistics.rs). */
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val files = table.plannedFiles(snapshotId, statFilters)
-    val bytes = files.map(_._1.fileSizeBytes).sum
-    val rows = files.map(_._1.recordCount).filter(_ >= 0).sum
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(bytes)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
-  }
-
-  // ---- runtime filtering (dynamic file pruning from join keys) -------
-
-  /** A row-level operation's replaced group must equal EXACTLY the
-    * files every one of its scans planned: runtime narrowing of just
-    * the main scan would desynchronize the captured set from the
-    * rows the replacement write actually read (files removed whose
-    * surviving rows were never rewritten — data loss), so CoW scans
-    * decline runtime filtering, like the graft dialect. Row-id scans
-    * (the delta path) decline too: their single-file partition maps
-    * and position counting must not be re-planned out from under the
-    * already-created reader factory. */
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    if (capture.isDefined || rowIdCols.nonEmpty) Array.empty
-    else requiredSchema.fieldNames.map(
-      org.apache.spark.sql.connector.expressions.Expressions.column)
-
-  @volatile private var runtimeStatFilters: Seq[(String, String, String)] = Seq.empty
-
-  /** Runtime IN-filters from the build side of a join become min/max
-    * envelopes over the manifest bounds; equality literals also map
-    * through partition transforms (bucket pruning on foreign tables).
-    * Numeric/string keys only — other literal types render differently
-    * from the canonical stat strings and pruning must stay sound. */
-  override def filter(filters: Array[Filter]): Unit = {
-    if (capture.isDefined || rowIdCols.nonEmpty) return // see filterAttributes
-    def safe(v: Any): Boolean = v.isInstanceOf[Number] || v.isInstanceOf[String]
-    runtimeStatFilters = filters.toSeq.flatMap {
-      case In(c, values) if values.nonEmpty &&
-          values.forall(v => v != null && safe(v)) =>
-        val strs = values.map(_.toString)
-        val cmp: (String, String) => Int =
-          if (values.head.isInstanceOf[Number])
-            (a, b) => java.lang.Double.compare(a.toDouble, b.toDouble)
-          else (a, b) => a.compareTo(b)
-        Seq((c, ">=", strs.min(Ordering.fromLessThan[String](cmp(_, _) < 0))),
-          (c, "<=", strs.max(Ordering.fromLessThan[String](cmp(_, _) < 0))))
-      case EqualTo(c, v) if v != null && safe(v) =>
-        Seq((c, "=", v.toString))
-      case _ => Seq.empty
-    }
-  }
-
-  private def allStatFilters: Seq[(String, String, String)] =
-    statFilters ++ runtimeStatFilters
-
-  // ---- storage-partitioned join over foreign identity/bucket specs --
-
-  private lazy val spec = ice.defaultSpecFields
-
-  private def srcName(pf: graft.table.iceberg.IcebergMetadata.IcePartitionField): String =
-    schemaAt.fields.find(_.id == pf.sourceId).map(_.name).getOrElse("")
-
-  private def spjEligible: Boolean =
-    rowIdCols.isEmpty &&
-      spec.nonEmpty && spec.forall(_.transform == "identity") &&
-      spec.forall(pf => requiredSchema.fieldNames.contains(srcName(pf))) &&
-      deletes.isEmpty
-
-  private def bucketSpec
-      : Option[(graft.table.iceberg.IcebergMetadata.IcePartitionField, Int)] =
-    spec match {
-      case Seq(pf) if rowIdCols.isEmpty && pf.transform.startsWith("bucket[") &&
-          requiredSchema.fieldNames.contains(srcName(pf)) && deletes.isEmpty =>
-        Some((pf, pf.transform.stripPrefix("bucket[").stripSuffix("]").toInt))
-      case _ => None
-    }
-
-  override def outputPartitioning()
-      : org.apache.spark.sql.connector.read.partitioning.Partitioning = {
-    if (spjEligible) {
-      val parts = planInputPartitions()
-      new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
-        spec.map(pf =>
-          org.apache.spark.sql.connector.expressions.Expressions.identity(srcName(pf))
-            .asInstanceOf[org.apache.spark.sql.connector.expressions.Expression]).toArray,
-        parts.length)
-    } else bucketSpec match {
-      case Some((pf, n)) =>
-        val parts = planInputPartitions()
-        new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
-          Array(org.apache.spark.sql.connector.expressions.Expressions
-            .bucket(n, srcName(pf))
-            .asInstanceOf[org.apache.spark.sql.connector.expressions.Expression]),
-          parts.length)
-      case None =>
-        new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
-    }
-  }
-
-  override def readSchema(): StructType =
-    StructType(requiredSchema.fields ++ rowIdCols)
-  override def toBatch: Batch = this
-  override def description(): String = s"IcebergScan($location)"
-
-  /** Incremental append stream over the foreign table's snapshot tail
-    * (readStream on a catalog Iceberg table or format("graft") path). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    TableMicroBatchStream.iceberg(location, requiredSchema, streamOptions)
-
-  private def resolve(p: String): org.apache.hadoop.fs.Path =
-    table.resolvePath(p) // remaps absolute paths across catalog renames
-
-  @volatile private var deleteSpecsByPartition: Map[String, Seq[DeleteFilesSpec]] = Map.empty
-  @volatile private var posSpecsByPartition: Map[String, (PosDeleteSpec, String)] = Map.empty
-
-  /** Avro partition value → catalyst value for the SPJ key row. */
-  private def catalystKey(v: Any): Any = v match {
-    case null => null
-    case u: org.apache.avro.util.Utf8 =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(u.toString)
-    case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
-    case other => other // Integer (int/date), Long (long/timestamp)
-  }
-
-  /** partition index → qualified data-file URI, for row-id scans
-    * (single-file partitions; the reader appends _file/_pos). */
-  @volatile private var rowIdFileByPartition: Map[String, String] = Map.empty
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val spark = sparkSession
-    val files = table.plannedFiles(snapshotId, allStatFilters)
-    // group-based row-level ops replace exactly the files this scan
-    // planned (runtime group filtering has already narrowed the set);
-    // paths recorded in MANIFEST form so the commit matches entries
-    capture.foreach(_.scanned.updateAndGet(_ ++ files.map(_._1.filePath)))
-    def toPartition(idx: Int, bin: Seq[IcebergAvro.DataFileEntry])
-        : org.apache.spark.sql.execution.datasources.FilePartition =
-      GraftConnectorShim.filePartition(idx, bin.map { e =>
-        GraftConnectorShim.partitionedFile(
-          TableIO.qualified(resolve(e.filePath)), e.fileSizeBytes, 0L)
-      })
-    if (rowIdCols.nonEmpty) {
-      // row-id scans (delta row-level ops): one file per partition so
-      // the reader's raw stream index IS the row position — the same
-      // trick the position-delete read path uses. Keyed (SPJ/bucket)
-      // partitioning is skipped: a delta op's scan feeds a write, not
-      // a join. Live MoR deletes still apply (below the row-id append,
-      // so positions count every raw row of the file).
-      val specsOut = scala.collection.mutable.Map[String, Seq[DeleteFilesSpec]]()
-      val posOut = scala.collection.mutable.Map[String, (PosDeleteSpec, String)]()
-      val fileOut = scala.collection.mutable.Map[String, String]()
-      val out = scala.collection.mutable.ArrayBuffer[InputPartition]()
-      def sig2(seq: Long): (Seq[String], Seq[String]) =
-        (deletes.filter { case (d, ds) => d.content == 2 && ds > seq }
-          .map(_._1.filePath).sorted,
-          deletes.filter { case (d, ds) => d.content == 1 && ds >= seq }
-            .map(_._1.filePath).sorted)
-      files.groupBy { case (_, _, seq) => sig2(seq) }.toSeq
-        .sortBy { case ((eq, pos), _) => (eq ++ pos).mkString(";") }
-        .foreach { case ((eqSig, posSig), group) =>
-          val specs =
-            if (eqSig.isEmpty) Seq.empty else buildEqSpecs(spark, eqSig)
-          val posSpec =
-            if (posSig.isEmpty) None else Some(buildPosSpec(spark, posSig))
-          group.foreach { case (e, _, _) =>
-            out += toPartition(out.length, Seq(e))
-            val uri = TableIO.qualified(resolve(e.filePath))
-            val bind = PartitionBindKey.ofPath(uri)
-            if (specs.nonEmpty) specsOut(bind) = specs
-            fileOut(bind) = uri
-            posSpec.foreach(spec => posOut(bind) = (spec, bind))
-          }
-        }
-      deleteSpecsByPartition = specsOut.toMap
-      posSpecsByPartition = posOut.toMap
-      rowIdFileByPartition = fileOut.toMap
-      return out.toArray
-    }
-    if (spjEligible || bucketSpec.isDefined) {
-      // one keyed partition per partition-value tuple (SPJ layout)
-      val names = if (spjEligible) spec.map(_.name) else Seq(bucketSpec.get._1.name)
-      return files.groupBy(f => names.map(n => f._1.partition.get(n).orNull))
-        .toSeq.sortBy(_._1.map(String.valueOf).mkString("/"))
-        .zipWithIndex.map { case ((key, bin), i) =>
-          KeyedFilePartition(
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              key.map(catalystKey).toArray[Any]),
-            toPartition(i, bin.map(_._1))): InputPartition
-        }.toArray
-    }
-    val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
-    def sig(seq: Long): (Seq[String], Seq[String]) =
-      (deletes.filter { case (d, ds) => d.content == 2 && ds > seq }
-        .map(_._1.filePath).sorted,
-        deletes.filter { case (d, ds) => d.content == 1 && ds >= seq }
-          .map(_._1.filePath).sorted)
-    val out = scala.collection.mutable.ArrayBuffer[InputPartition]()
-    val specsOut = scala.collection.mutable.Map[String, Seq[DeleteFilesSpec]]()
-    val posOut = scala.collection.mutable.Map[String, (PosDeleteSpec, String)]()
-    def bindOf(e: IcebergAvro.DataFileEntry): String =
-      PartitionBindKey.ofPath(TableIO.qualified(resolve(e.filePath)))
-
-    files.groupBy { case (_, _, seq) => sig(seq) }.toSeq
-      .sortBy { case ((eq, pos), _) => (eq ++ pos).mkString(";") }
-      .foreach { case ((eqSig, posSig), group) =>
-        val specs =
-          if (eqSig.isEmpty) Seq.empty
-          else buildEqSpecs(spark, eqSig)
-        val posSpec =
-          if (posSig.isEmpty) None else Some(buildPosSpec(spark, posSig))
-        if (posSig.nonEmpty) {
-          group.foreach { case (e, _, _) =>
-            out += toPartition(out.length, Seq(e))
-            val bind = bindOf(e)
-            if (specs.nonEmpty) specsOut(bind) = specs
-            posOut(bind) = (posSpec.get, bind)
-          }
-        } else {
-          val bins = scala.collection.mutable.ArrayBuffer[scala.collection.mutable.ArrayBuffer[IcebergAvro.DataFileEntry]]()
-          var cur = scala.collection.mutable.ArrayBuffer[IcebergAvro.DataFileEntry]()
-          var curBytes = 0L
-          group.map(_._1).sortBy(-_.fileSizeBytes).foreach { e =>
-            if (curBytes + e.fileSizeBytes > maxBytes && cur.nonEmpty) {
-              bins += cur; cur = scala.collection.mutable.ArrayBuffer(); curBytes = 0L
-            }
-            cur += e; curBytes += e.fileSizeBytes
-          }
-          if (cur.nonEmpty) bins += cur
-          bins.foreach { bin =>
-            out += toPartition(out.length, bin.toSeq)
-            if (specs.nonEmpty) specsOut(bindOf(bin.head)) = specs
-          }
-        }
-      }
-    deleteSpecsByPartition = specsOut.toMap
-    posSpecsByPartition = posOut.toMap
-    out.toArray
-  }
-
-  private def buildEqSpecs(spark: SparkSession,
-      sig: Seq[String]): Seq[DeleteFilesSpec] = {
-    val byPath = deletes.map(_._1).map(e => e.filePath -> e).toMap
-    sig.map(byPath).groupBy(_.equalityIds).toSeq.map { case (eqIds, dfiles) =>
-      val eqCols = eqIds.flatMap(id =>
-        schemaAt.fields.find(_.id == id).map(_.name))
-      val keySchema = StructType(requiredSchema.fields
-        .filter(f => eqCols.contains(f.name)))
-      val part = GraftConnectorShim.filePartition(0, dfiles.map { e =>
-        GraftConnectorShim.partitionedFile(
-          TableIO.qualified(resolve(e.filePath)), e.fileSizeBytes, 0L)
-      })
-      DeleteFilesSpec(
-        keyIndexes = keySchema.fields.map(f => requiredSchema.fieldIndex(f.name)),
-        keyTypes = keySchema.fields.map(_.dataType),
-        // delete files written before a rename carry the old key name
-        // (right id) — id-carrying schema keeps the key resolving
-        factory = GraftConnectorShim.parquetReaderFactory(
-          spark, withFieldIds(keySchema), withFieldIds(keySchema), Array.empty),
-        part = part,
-        cacheKey = "ice-eq:" + dfiles.map(_.filePath).sorted.mkString(";"))
-    }
-  }
-
-  private def buildPosSpec(spark: SparkSession, sig: Seq[String]): PosDeleteSpec = {
-    val byPath = deletes.map(_._1).map(e => e.filePath -> e).toMap
-    val schema = StructType(Seq(
-      org.apache.spark.sql.types.StructField("file_path",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("pos",
-        org.apache.spark.sql.types.LongType)))
-    val part = GraftConnectorShim.filePartition(0, sig.map(byPath).map { e =>
-      GraftConnectorShim.partitionedFile(
-        TableIO.qualified(resolve(e.filePath)), e.fileSizeBytes, 0L)
-    })
-    PosDeleteSpec(
-      factory = GraftConnectorShim.parquetReaderFactory(
-        spark, schema, schema, Array.empty),
-      part = part,
-      cacheKey = "ice-pos:" + sig.sorted.mkString(";"))
-  }
-
-  /** Attach each column's Iceberg field id to the delegate's requested
-    * schema: the shim's parquet reader resolves id-carrying columns by
-    * ID (rename-safe — files written under an old name keep reading;
-    * widened types up-cast). Skipped for exported-from-legacy tables
-    * whose footers carry no ids. */
-  private def withFieldIds(s: StructType): StructType =
-    if (!table.fileIdResolution) s else schemaAt.withFieldIds(s)
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = sparkSession
-    // a row-id scan counts RAW stream indexes as positions, so the
-    // parquet reader must skip nothing (filters stay residual above);
-    // same rule when position deletes are live — and a row-level
-    // operation's scan must read candidate files WHOLE: non-matching
-    // rows are copied forward by the replacement projection, so
-    // dropping them here would lose data
-    val pushForDelegate =
-      if (rowIdCols.nonEmpty || capture.isDefined ||
-          deletes.exists(_._1.content == 1))
-        Array.empty[Filter]
-      else pushedFilters
-    val parquetFactory: PartitionReaderFactory = UnwrapKeyedFactory(
-      GraftConnectorShim.parquetReaderFactory(
-        spark, withFieldIds(schemaAt.toSpark), withFieldIds(requiredSchema),
-        pushForDelegate))
-    // _file/_pos append BELOW the MoR filter: positions must count
-    // every raw row of the file, including rows a live delete hides
-    val delegate =
-      if (rowIdCols.isEmpty) parquetFactory
-      else RowIdAppendFactory(parquetFactory, rowIdFileByPartition,
-        rowIdCols.map(_.name))
-    if (deletes.isEmpty) delegate
-    else MorReaderFactory(delegate, deleteSpecsByPartition, posSpecsByPartition)
-  }
 }

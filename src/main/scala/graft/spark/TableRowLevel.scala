@@ -169,7 +169,7 @@ final class GraftRowLevelTarget(val location: String) extends RowLevelTarget {
   def properties: Map[String, String] = meta.properties
   def defaultMode: String = RowLevelOperations.CopyOnWrite
   def scanBuilder(capture: Option[CopyOnWriteOperation]): ScanBuilder =
-    new GraftScanBuilder(location, None, None, capture)
+    new TableScanBuilder(new GraftScanSource(location), capture)
   def writerFactory(schema: StructType, staging: String): GraftWriterFactory =
     GraftWriterFactory.forTable(meta, schema, staging)
   override def distribution: Distribution = GraftWriteLayout.distribution(meta)
@@ -193,7 +193,7 @@ final class IcebergRowLevelTarget(val location: String) extends RowLevelTarget {
   def properties: Map[String, String] = meta.properties
   def defaultMode: String = RowLevelOperations.MergeOnRead
   def scanBuilder(capture: Option[CopyOnWriteOperation]): ScanBuilder =
-    new IcebergScanBuilder(location, None, capture = capture)
+    new TableScanBuilder(new IcebergScanSource(location), capture)
   def writerFactory(schema: StructType, staging: String): GraftWriterFactory =
     GraftWriterFactory.forIceberg(meta, schema, staging)
   def commitReplace(staging: Path, replaced: Set[String]): Unit =

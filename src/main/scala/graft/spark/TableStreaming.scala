@@ -379,24 +379,8 @@ final class GraftStreamTimeline(root: String, requiredSchema: StructType)
       f.nameMapping.map(ImportedGroup(_, f.specId, f.partitionValues))))
   }
 
-  def readerFactory(groups: Map[String, ImportedGroup]): PartitionReaderFactory = {
-    val spark = SparkSession.active
-    val default = UnwrapKeyedFactory(GraftConnectorShim.parquetReaderFactory(
-      spark, m.schema, requiredSchema, Array.empty))
-    if (groups.isEmpty) default
-    else {
-      val mapped = groups.values.map(_.mapping).toSet.map {
-        (mp: Map[String, String]) =>
-          mp -> (UnwrapKeyedFactory(GraftConnectorShim.parquetReaderFactory(
-            spark, Meta.importReadSchema(m.schema, mp),
-            Meta.importReadSchema(requiredSchema, mp),
-            Array.empty)): PartitionReaderFactory)
-      }.toMap
-      NameMapRoutingFactory(default, groups.map { case (i, g) =>
-        i -> (mapped(g.mapping), ImportedGroup.overrides(m, requiredSchema, g))
-      }, requiredSchema)
-    }
-  }
+  def readerFactory(groups: Map[String, ImportedGroup]): PartitionReaderFactory =
+    GraftScanSource.readerFactory(m, requiredSchema, Array.empty, groups)
 }
 
 /** A real-format Iceberg table's ancestry, of the `branch` ref's head
@@ -459,12 +443,8 @@ final class IcebergStreamTimeline(location: String,
   // field-id resolution, same as the batch scan: a stream replaying
   // from an early snapshot reads files written BEFORE a rename, and
   // name-based resolution would silently null-fill their columns
-  def readerFactory(groups: Map[String, ImportedGroup]): PartitionReaderFactory = {
-    def ids(s: StructType) = if (t.fileIdResolution) m.schema.withFieldIds(s) else s
-    UnwrapKeyedFactory(GraftConnectorShim.parquetReaderFactory(
-      SparkSession.active, ids(m.schema.toSpark), ids(requiredSchema),
-      Array.empty))
-  }
+  def readerFactory(groups: Map[String, ImportedGroup]): PartitionReaderFactory =
+    IcebergScanSource.readerFactory(t, m.schema, requiredSchema, Array.empty)
 }
 
 /** Structured Streaming sink for both table formats:

@@ -777,9 +777,11 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     }
   }
 
+  /** `m` is the table metadata to plan over: a scan passes the one it
+    * loaded, so every planning of it reads the same snapshot. */
   def plannedFiles(filters0: Seq[StatFilter], snapshotId: Option[Long] = None,
-      branch: Option[String] = None): Seq[Meta.DataFile] = {
-    val m = meta
+      branch: Option[String] = None,
+      m: Meta.TableMetadata = meta): Seq[Meta.DataFile] = {
     // columns retired from stats pruning (float->double promotion)
     // contribute no filters at all — sound, just unpruned
     val filters = filters0.filterNot(f => m.statsUnprunable.contains(f.column))
@@ -852,8 +854,8 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     * apply: the range set is already proportional to the delta, not
     * the table; per-file stat/partition pruning still does. */
   def plannedAppendedFiles(filters0: Seq[StatFilter], start: Option[Long],
-      end: Option[Long] = None): Seq[Meta.DataFile] = {
-    val m = meta
+      end: Option[Long] = None,
+      m: Meta.TableMetadata = meta): Seq[Meta.DataFile] = {
     val filters = filters0.filterNot(f => m.statsUnprunable.contains(f.column))
     val schema = m.schemas(end.flatMap(m.snapshot).map(_.schemaId)
       .getOrElse(m.currentSchemaId))

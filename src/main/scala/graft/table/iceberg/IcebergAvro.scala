@@ -34,7 +34,8 @@ object IcebergAvro {
   case class ManifestFile(path: String, length: Long, specId: Int,
       content: Int, sequenceNumber: Long, addedSnapshotId: Long,
       partitions: Option[Seq[FieldSummary]] = None,
-      addedFilesCount: Option[Int] = None)
+      addedFilesCount: Option[Int] = None,
+      existingFilesCount: Option[Int] = None)
 
   case class DataFileEntry(
       status: Int, // 0 existing, 1 added, 2 deleted
@@ -66,6 +67,10 @@ object IcebergAvro {
   private def optLong(r: GenericRecord, name: String): Option[Long] =
     if (r.getSchema.getField(name) == null) None
     else Option(r.get(name)).map(_.asInstanceOf[Long])
+
+  private def optInt(r: GenericRecord, name: String): Option[Int] =
+    if (r.getSchema.getField(name) == null) None
+    else Option(r.get(name)).map(_.asInstanceOf[Int])
 
   private def optBytes(v: Any): Option[Array[Byte]] = v match {
     case null => None
@@ -112,9 +117,8 @@ object IcebergAvro {
         sequenceNumber = optLong(r, "sequence_number").getOrElse(0L),
         addedSnapshotId = optLong(r, "added_snapshot_id").getOrElse(0L),
         partitions = readFieldSummaries(r),
-        addedFilesCount =
-          if (r.getSchema.getField("added_files_count") == null) None
-          else Option(r.get("added_files_count")).map(_.asInstanceOf[Int]))
+        addedFilesCount = optInt(r, "added_files_count"),
+        existingFilesCount = optInt(r, "existing_files_count"))
     }.toSeq
     finally reader.close()
   }

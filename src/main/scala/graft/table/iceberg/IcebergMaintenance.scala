@@ -195,7 +195,8 @@ object IcebergMaintenance {
       r.put("sequence_number", sq); r.put("min_sequence_number", sq)
       r.put("added_snapshot_id", snapId)
       r.put("added_files_count", mf.addedFilesCount.getOrElse(0))
-      r.put("existing_files_count", 0); r.put("deleted_files_count", 0)
+      r.put("existing_files_count", mf.existingFilesCount.getOrElse(0))
+      r.put("deleted_files_count", 0)
       r.put("added_rows_count", 0L)
       r.put("existing_rows_count", 0L); r.put("deleted_rows_count", 0L)
       IcebergAvro.putFieldSummaries(r, mf.partitions)

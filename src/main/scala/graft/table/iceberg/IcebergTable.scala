@@ -99,13 +99,24 @@ class IcebergTable private (val location: String, val spark: SparkSession,
     * manifest-list entry — Iceberg v2 sequence inheritance). */
   def plannedFiles(snapshotId: Option[Long] = None,
       filters: Seq[(String, String, String)] = Seq.empty)
-      : Seq[(IcebergAvro.DataFileEntry, Map[String, Meta.ColStats], Long)] = {
+      : Seq[(IcebergAvro.DataFileEntry, Map[String, Meta.ColStats], Long)] =
+    planScan(snapshotId, filters)._1.map { case (e, stats, seq, _) => (e, stats, seq) }
+
+  /** plannedFiles with each entry's partition spec id, plus the
+    * snapshot's live data-file count: the added and existing files of
+    * its data manifests, summed from the manifest list the planning
+    * reads anyway (pruned manifests are counted, never opened). */
+  def planScan(snapshotId: Option[Long],
+      filters: Seq[(String, String, String)])
+      : (Seq[(IcebergAvro.DataFileEntry, Map[String, Meta.ColStats], Long, Int)], Long) = {
     val m = meta
     val snap = snapshotId.flatMap(m.snapshot).orElse(m.currentSnapshot)
-      .getOrElse(return Seq.empty)
+      .getOrElse(return (Seq.empty, 0L))
     val schemaById = m.schemas.find(_.schemaId == snap.schemaId)
       .getOrElse(m.schema)
     val manifests = IcebergAvro.readManifestList(resolve(snap.manifestList))
+    val liveCount = manifests.filter(_.content == 0).map(mf =>
+      mf.addedFilesCount.getOrElse(0).toLong + mf.existingFilesCount.getOrElse(0)).sum
     def manifestSpec(id: Int): Seq[IcebergMetadata.IcePartitionField] =
       m.specs.find(_.specId == id).map(_.fields).getOrElse(Seq.empty)
     // MANIFEST-level pruning first: a manifest whose field summaries
@@ -144,7 +155,7 @@ class IcebergTable private (val location: String, val spark: SparkSession,
     }
     def specById(id: Int): Seq[IcebergMetadata.IcePartitionField] =
       m.specs.find(_.specId == id).map(_.fields).getOrElse(Seq.empty)
-    withStats.filter { case (e, stats, _, specId) =>
+    val planned = withStats.filter { case (e, stats, _, specId) =>
       filters.forall { case (c, op, value) =>
         val statsKeep = (stats.get(c), schemaById.fields.find(_.name == c)) match {
           case (Some(st), Some(f)) =>
@@ -161,7 +172,8 @@ class IcebergTable private (val location: String, val spark: SparkSession,
         }
         statsKeep && partitionKeep(e, specById(specId), schemaById, c, op, value)
       }
-    }.map { case (e, stats, seq, _) => (e, stats, seq) }
+    }
+    (planned, liveCount)
   }
 
   /** Transform-aware partition pruning: map the literal through each

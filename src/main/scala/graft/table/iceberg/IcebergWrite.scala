@@ -395,7 +395,7 @@ object IcebergWrite {
     def mfRecord(path: String, len: Long, content: Int, sq: Long,
         snapId: Long, added: Int, rows: Long,
         sums: Option[Seq[IcebergAvro.FieldSummary]],
-        specId: Int = m.defaultSpecId)
+        specId: Int = m.defaultSpecId, existing: Int = 0)
         : org.apache.avro.generic.GenericRecord = {
       val r = IcebergAvro.record(mlSchema)
       r.put("manifest_path", path)
@@ -411,7 +411,7 @@ object IcebergWrite {
       r.put("min_sequence_number", sq)
       r.put("added_snapshot_id", snapId)
       r.put("added_files_count", added)
-      r.put("existing_files_count", 0)
+      r.put("existing_files_count", existing)
       r.put("deleted_files_count", 0)
       r.put("added_rows_count", rows)
       r.put("existing_rows_count", 0L)
@@ -423,9 +423,12 @@ object IcebergWrite {
     val newEntry = mfRecord(TableIO.qualified(manifestPath), manifestLen, 0,
       seq, snapshotId, moved.size, totalRows,
       fieldSummariesFor(spec, schema, moved.map(_._3)))
+    // carried entries keep their file counts: planning sums them into
+    // the snapshot's live-file count
     val carried = prevManifests.map(mf => mfRecord(
       mf.path, mf.length, mf.content, mf.sequenceNumber,
-      mf.addedSnapshotId, 0, 0L, mf.partitions, specId = mf.specId))
+      mf.addedSnapshotId, mf.addedFilesCount.getOrElse(0), 0L, mf.partitions,
+      specId = mf.specId, existing = mf.existingFilesCount.getOrElse(0)))
     val mlPath = new HPath(metaDir, s"snap-$snapshotId-${UUID.randomUUID().toString.take(8)}.avro")
     IcebergAvro.writeManifestList(mlPath, newEntry +: carried, snapshotId, seq)
 
@@ -1574,14 +1577,15 @@ object IcebergWrite {
     val mlSchema = IcebergAvro.manifestListSchema
     def mfRecord(path: String, len: Long, ct: Int, sq: Long,
         snapId: Long, specId: Int,
-        sums: Option[Seq[IcebergAvro.FieldSummary]])
+        sums: Option[Seq[IcebergAvro.FieldSummary]],
+        added: Int, existing: Int)
         : org.apache.avro.generic.GenericRecord = {
       val r = IcebergAvro.record(mlSchema)
       r.put("manifest_path", path); r.put("manifest_length", len)
       r.put("partition_spec_id", specId); r.put("content", ct)
       r.put("sequence_number", sq); r.put("min_sequence_number", sq)
       r.put("added_snapshot_id", snapId)
-      r.put("added_files_count", 0); r.put("existing_files_count", 0)
+      r.put("added_files_count", added); r.put("existing_files_count", existing)
       r.put("deleted_files_count", 0)
       r.put("added_rows_count", 0L); r.put("existing_rows_count", 0L)
       r.put("deleted_rows_count", 0L)
@@ -1589,12 +1593,13 @@ object IcebergWrite {
       r
     }
     val newEntry = mfRecord(TableIO.qualified(manifestPath), manifestLen, 1,
-      seq, snapshotId, delSpecId, None)
+      seq, snapshotId, delSpecId, None, 0, 0)
     // carried entries keep their OWN spec ids (a mix of data and
-    // delete manifests across spec eras)
+    // delete manifests across spec eras) and file counts
     val carried = prevManifests.map(mf => mfRecord(
       mf.path, mf.length, mf.content, mf.sequenceNumber, mf.addedSnapshotId,
-      mf.specId, mf.partitions))
+      mf.specId, mf.partitions, mf.addedFilesCount.getOrElse(0),
+      mf.existingFilesCount.getOrElse(0)))
     val mlPath = new HPath(metaDir,
       s"snap-$snapshotId-${UUID.randomUUID().toString.take(8)}.avro")
     IcebergAvro.writeManifestList(mlPath, newEntry +: carried, snapshotId, seq)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.table.GraftTable
+import graft.table.iceberg.{IcebergTable, IcebergWrite}
 import java.nio.file.Files
 
 /** DataSource V2 connector: format("graft") reads with manifest
@@ -517,7 +518,7 @@ class ConnectorSpec extends AnyFunSuite {
     // approx_count_distinct is within a few percent at this scale
     assert(math.abs(ndv("c_mktsegment") - exactSeg) <= exactSeg / 10 + 1)
     // the scan reports the stats through the V2 Statistics surface
-    val scan = new graft.spark.GraftScanBuilder(root, None, None).build()
+    val scan = new graft.spark.TableScanBuilder(new graft.spark.GraftScanSource(root)).build()
     val stats = scan
       .asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
       .estimateStatistics()
@@ -533,19 +534,37 @@ class ConnectorSpec extends AnyFunSuite {
     assert(stats.numRows().getAsLong === c.count())
   }
 
-  test("scan reports planning metrics: live/planned/pruned files, deletes") {
+  // the Iceberg leg counts live files from the manifest list's
+  // added + existing file counts
+  for (format <- Seq("graft", "iceberg"))
+  test("scan reports planning metrics: live/planned/pruned files, deletes" +
+      (if (format == "iceberg") " [iceberg]" else "")) {
+    val spark0 = spark
+    import spark0.implicits._
     val li = Tables.lineitem(spark, sf)
     val root = tmp()
-    val t = GraftTable.create(spark, root, li.schema,
-      sortOrder = Seq("l_orderkey"))
+    val iceberg = format == "iceberg"
+    // key-range-clustered files, then a delete of key 1
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try t.append(li)
-    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert(t.filesDF.count() > 1)
-    t.deleteWhereMoR(col("l_orderkey") === 1L, Seq("l_orderkey"))
+    try {
+      if (iceberg)
+        IcebergWrite.create(spark, root, li.repartitionByRange(8, col("l_orderkey")))
+      else GraftTable.create(spark, root, li.schema,
+        sortOrder = Seq("l_orderkey")).append(li)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    def liveFiles(): Long =
+      if (iceberg) IcebergTable.load(spark, root).plannedFiles().size
+      else GraftTable.load(spark, root).meta.liveFiles(None).size
+    assert(liveFiles() > 1)
+    if (iceberg)
+      IcebergWrite.deleteEquality(spark, root, Seq(1L).toDF("l_orderkey"), Seq("l_orderkey"))
+    else GraftTable.load(spark, root)
+      .deleteWhereMoR(col("l_orderkey") === 1L, Seq("l_orderkey"))
     val mid = li.agg(percentile_approx(col("l_orderkey"), lit(0.5), lit(100)))
       .collect()(0).getLong(0)
-    val sb = new graft.spark.GraftScanBuilder(root, None, None)
+    val sb = new graft.spark.TableScanBuilder(
+      if (iceberg) new graft.spark.IcebergScanSource(root)
+      else new graft.spark.GraftScanSource(root))
     sb.pushFilters(Array(
       org.apache.spark.sql.sources.GreaterThan("l_orderkey", mid)))
     val scan = sb.build()
@@ -557,13 +576,55 @@ class ConnectorSpec extends AnyFunSuite {
     scan.toBatch.planInputPartitions()
     val m = scan.reportDriverMetrics()
       .map(tm => tm.name() -> tm.value()).toMap
-    assert(m("liveDataFiles") === t.meta.liveFiles(None).size.toLong)
+    assert(m("liveDataFiles") === liveFiles())
     assert(m("plannedDataFiles") > 0)
     assert(m("prunedDataFiles") > 0) // the sort-clustered bottom half
     assert(m("plannedDataFiles") + m("prunedDataFiles") ===
       m("liveDataFiles"))
     assert(m("plannedBytes") > 0)
     assert(m("deleteFilesApplied") === 1)
+  }
+
+  // k = 5 moves to a new file between building a scan and planning it:
+  // the scan must read the snapshot its builder loaded, never a mix
+  // of that snapshot's deletes and a later snapshot's files
+  for (format <- Seq("graft", "iceberg"))
+  test("a built scan plans against the metadata its builder loaded" +
+      (if (format == "iceberg") " [iceberg]" else "")) {
+    val spark0 = spark
+    import spark0.implicits._
+    val root = tmp()
+    val iceberg = format == "iceberg"
+    val rows = (1L to 100L).toDF("k").coalesce(1)
+    if (iceberg) IcebergWrite.create(spark, root, rows)
+    else GraftTable.create(spark, root, rows.schema).append(rows)
+    val table =
+      if (iceberg) new graft.spark.IcebergSparkTable(root)
+      else new graft.spark.GraftSparkTable(root)
+    val scan = table.newScanBuilder(
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()).build()
+    if (iceberg) {
+      IcebergWrite.deleteEquality(spark, root, Seq(5L).toDF("k"), Seq("k"))
+      IcebergWrite.append(spark, root, Seq(5L).toDF("k"))
+    } else {
+      val t = GraftTable.load(spark, root)
+      t.deleteWhereMoRPositional(col("k") === 5L)
+      t.append(Seq(5L).toDF("k"))
+    }
+    val parts = scan.toBatch.planInputPartitions()
+    val factory = scan.toBatch.createReaderFactory()
+    val read = parts.map { p =>
+      var n = 0L
+      if (factory.supportColumnarReads(p)) {
+        val r = factory.createColumnarReader(p)
+        try while (r.next()) n += r.get().numRows() finally r.close()
+      } else {
+        val r = factory.createReader(p)
+        try while (r.next()) n += 1 finally r.close()
+      }
+      n
+    }.sum
+    assert(read === 100L)
   }
 
   test("write reports rows/files task metrics") {

@@ -408,6 +408,41 @@ class RestCatalogSqlSpec extends AnyFunSuite {
     }
   }
 
+  test("bucket SPJ declines after partition-spec evolution: files of " +
+      "the older spec carry no bucket value") {
+    val spark0 = spark
+    import spark0.implicits._
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.spje")
+    spark.sql(s"CREATE TABLE $cat.spje.a (id BIGINT, va STRING)")
+    spark.sql(s"""CREATE TABLE $cat.spje.b (id BIGINT, vb STRING)
+        PARTITIONED BY (bucket(4, id))""")
+    (1L to 200L).map(i => (i, s"a$i")).toDF("id", "va")
+      .createOrReplaceTempView("rest_spje_a1")
+    (201L to 400L).map(i => (i, s"a$i")).toDF("id", "va")
+      .createOrReplaceTempView("rest_spje_a2")
+    (1L to 400L by 2).map(i => (i, s"b$i")).toDF("id", "vb")
+      .createOrReplaceTempView("rest_spje_b")
+    // a's first 200 rows land unpartitioned; bucket[4] then becomes
+    // its default spec and only the next 200 rows carry bucket values
+    spark.sql(s"INSERT INTO $cat.spje.a SELECT * FROM rest_spje_a1")
+    new graft.table.iceberg.IcebergTransaction(spark,
+      s"http://127.0.0.1:${env._1.port}")
+      .addPartitionSpec("spje", "a", Seq("id" -> "bucket[4]")).commit()
+    spark.sql(s"INSERT INTO $cat.spje.a SELECT * FROM rest_spje_a2")
+    spark.sql(s"INSERT INTO $cat.spje.b SELECT * FROM rest_spje_b")
+    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val joined = spark.table(s"$cat.spje.a")
+        .join(spark.table(s"$cat.spje.b"), "id")
+      assert(joined.count() === 200)
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
+  }
+
   test("CALL commit_transaction: two-table atomic append") {
     val spark0 = spark
     import spark0.implicits._
