@@ -64,9 +64,12 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     else new GraftSparkTable(p)
   }
 
-  /** Write path (V1 provider — Spark prefers it for `df.write` when
-    * both interfaces are present): append/overwrite become table
-    * snapshots; the table is created on first write. */
+  /** Write path for a root whose table cannot take a V2 batch write:
+    * `df.write` goes through the one V2 write (TableWriteBuilder)
+    * whenever the table supports BATCH_WRITE — appends and overwrites
+    * onto an existing graft or Iceberg table — so Spark calls this
+    * only for a path with no table yet, which the first write creates
+    * from the incoming schema. */
   override def createRelation(
       ctx: org.apache.spark.sql.SQLContext,
       mode: org.apache.spark.sql.SaveMode,
@@ -108,11 +111,11 @@ class GraftSparkTable(root: String,
 
   /** SQL UPDATE / MERGE INTO (and DELETEs SupportsDelete can't take):
     * copy-on-write by default, merge-on-read by table property — see
-    * GraftRowLevelTarget. */
+    * GraftWriteTarget. */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    RowLevelOperations.builder(info, () => new GraftRowLevelTarget(root))
+    RowLevelOperations.builder(info, () => new GraftWriteTarget(root))
 
   /** Row-address metadata columns, the delta row id (Iceberg exposes
     * the same pair as _file/_pos). Emitted by the scan on request via
@@ -190,8 +193,7 @@ class GraftSparkTable(root: String,
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new GraftWriteBuilder(root, info.schema(), info.queryId(),
-      Option(info.options.get("branch")).getOrElse("main"))
+    new TableWriteBuilder(new GraftWriteTarget(root), info)
 }
 
 object GraftSparkTable {
@@ -806,213 +808,6 @@ case class MorReaderFactory(
   // all partitions must agree on columnar vs row (Spark checks the
   // whole scan), so a scan with any live deletes reads row-based
   override def supportColumnarReads(p: InputPartition): Boolean = false
-}
-
-// ---- V2 write path ---------------------------------------------------
-
-/** How a V2 batch write lands: plain append, whole-table truncate,
-  * OverwriteByExpression (static `INSERT OVERWRITE ... PARTITION` /
-  * `REPLACE WHERE`), or dynamic partition overwrite. */
-private[spark] sealed trait GraftWriteMode
-private[spark] object GraftWriteMode {
-  case object Append extends GraftWriteMode
-  case object Truncate extends GraftWriteMode
-  final case class ByFilter(filters: Seq[Filter]) extends GraftWriteMode
-  case object DynamicPartitions extends GraftWriteMode
-}
-
-/** BatchWrite: executors stream InternalRows into per-task parquet
-  * files under a staging dir; the driver commit ingests them (footer
-  * stats job) and snapshots — append, truncate+overwrite, overwrite
-  * by filter (one snapshot: candidates rewritten minus matching rows
-  * + new data), or dynamic partition overwrite (touched partitions
-  * dropped whole). */
-class GraftWriteBuilder(root: String, schema: StructType,
-    queryId: String = "", branch: String = "main")
-  extends org.apache.spark.sql.connector.write.WriteBuilder
-    with org.apache.spark.sql.connector.write.SupportsOverwrite
-    with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite {
-  private var mode: GraftWriteMode = GraftWriteMode.Append
-  override def truncate(): org.apache.spark.sql.connector.write.WriteBuilder = {
-    mode = GraftWriteMode.Truncate; this
-  }
-  /** Untranslatable conditions fail the statement fast (Spark falls
-    * back to an error, never to a silent whole-table truncate) —
-    * same contract as canDeleteWhere. */
-  override def canOverwrite(filters: Array[Filter]): Boolean =
-    GraftSparkTable.translatable(filters)
-  override def overwrite(filters: Array[Filter])
-      : org.apache.spark.sql.connector.write.WriteBuilder = {
-    mode =
-      if (GraftSparkTable.selectsAll(filters)) GraftWriteMode.Truncate
-      else GraftWriteMode.ByFilter(filters.toSeq)
-    this
-  }
-  override def overwriteDynamicPartitions()
-      : org.apache.spark.sql.connector.write.WriteBuilder = {
-    mode = GraftWriteMode.DynamicPartitions; this
-  }
-  override def build(): org.apache.spark.sql.connector.write.Write =
-    new GraftWrite(root, Meta.load(root), schema, mode, queryId, branch)
-}
-
-/** Shared write-layout derivation: the table's partition spec and
-  * plain-column sort order expressed as a V2 distribution + ordering,
-  * so EVERY V2 write path (append/overwrite, replace, streaming)
-  * clusters rows on the executors and the commit ingests staged files
-  * in place — no driver-side re-read/re-write of the batch. */
-private[spark] object GraftWriteLayout {
-  import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
-  import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-  type V2Expr = org.apache.spark.sql.connector.expressions.Expression
-  type V2Sort = org.apache.spark.sql.connector.expressions.SortOrder
-
-  /** Plain-column sort-order entries, or empty when any entry is an
-    * expression (zorder) the V2 ordering can't express — those fall
-    * back to the driver-side re-cluster at commit. */
-  def sortRefs(m: Meta.TableMetadata): Seq[String] =
-    if (m.sortOrder.forall(e => !e.contains("(") && !e.contains(" ")))
-      m.sortOrder
-    else Seq.empty
-
-  // truncate has no catalog function to resolve against; cluster by
-  // the (finer) source column instead — still a valid routing
-  private def partExpr(pf: Meta.PartitionField): V2Expr =
-    if (pf.transform.startsWith("truncate["))
-      Expressions.identity(pf.sourceColumn)
-    else RowTransform.toV2(pf)
-
-  private def sortExprs(refs: Seq[String]): Seq[V2Sort] =
-    refs.map(c => Expressions.sort(
-      Expressions.identity(c): V2Expr, SortDirection.ASCENDING))
-
-  /** Partitioned: cluster on the transforms so each task writes few
-    * files per partition value. Sorted, unpartitioned: RANGE exchange
-    * on the sort key gives each task a disjoint slice. The
-    * `write.distribution-mode` table property overrides (Iceberg's
-    * none | hash | range): `none` skips the exchange entirely — tasks
-    * still sort locally, for pre-clustered ingest where a shuffle
-    * would only move already-placed rows. */
-  def distribution(m: Meta.TableMetadata): Distribution = {
-    val sp = m.spec
-    val so = sortRefs(m)
-    m.properties.getOrElse("write.distribution-mode", "") match {
-      case "none" => Distributions.unspecified()
-      case "hash" if sp.nonEmpty =>
-        Distributions.clustered(sp.map(partExpr).toArray)
-      case "range" if so.nonEmpty =>
-        Distributions.ordered(sortExprs(so).toArray)
-      case _ =>
-        if (sp.nonEmpty) Distributions.clustered(sp.map(partExpr).toArray)
-        else if (so.nonEmpty) Distributions.ordered(sortExprs(so).toArray)
-        else Distributions.unspecified()
-    }
-  }
-
-  /** In-task ordering: partition transforms first (keeps one file
-    * open per partition value in a routed writer), then the sort
-    * columns for tight per-file bounds. */
-  def ordering(m: Meta.TableMetadata): Array[V2Sort] = {
-    val so = sortRefs(m)
-    if (so.isEmpty) Array.empty
-    else (m.spec.map(pf =>
-      Expressions.sort(partExpr(pf), SortDirection.ASCENDING)) ++
-      sortExprs(so)).toArray
-  }
-
-  /** The executors applied the table's whole sort order, so the
-    * commit may ingest staged files as-is. */
-  def presorted(m: Meta.TableMetadata): Boolean = sortRefs(m).nonEmpty
-}
-
-/** A write into graft table `root`, laid out and staged by the table
-  * metadata `m` loaded when the write was built. */
-class GraftWrite(root: String, m: Meta.TableMetadata, schema: StructType,
-    mode: GraftWriteMode, queryId: String = "", branch: String = "main")
-  extends org.apache.spark.sql.connector.write.Write
-    with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-
-  override def requiredDistribution()
-      : org.apache.spark.sql.connector.distributions.Distribution =
-    GraftWriteLayout.distribution(m)
-
-  override def requiredOrdering()
-      : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    GraftWriteLayout.ordering(m)
-
-  private val presorted: Boolean = GraftWriteLayout.presorted(m)
-
-  override def supportedCustomMetrics()
-      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    GraftScanMetrics.writeMetrics
-
-  override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-    new GraftBatchWrite(root, GraftWriterFactory.forTable(m, schema, _), mode,
-      presorted, branch)
-
-  /** Complete mode (truncate) overwrites the target ref per epoch;
-    * the epoch's dedup predicate is re-evaluated inside the commit's
-    * conflict-retry loop (skipIf): a zombie run that loses the CAS race
-    * to a concurrent run of the same query must observe the winner's
-    * epoch and back off, not double-commit and regress the high-water
-    * on retry. */
-  override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-    val truncate = mode == GraftWriteMode.Truncate
-    new StagedStreamingWrite(root, truncate,
-      GraftWriterFactory.forTable(m, schema, _),
-      (dir, epochId) => {
-        val t = GraftTable.load(SparkSession.active, root)
-        val epoch = graft.table.StreamEpoch(queryId, epochId)
-        def replayed(m: Meta.TableMetadata): Boolean =
-          epoch.replayedIn(m.properties, m.snapshots.iterator.map(_.summary))
-        !replayed(t.meta) && graft.table.TableIO.exists(dir) && {
-          t.commitStagedWrite(dir, truncate, summaryExtra = epoch.summary,
-            // micro-batch planning honors RequiresDistributionAndOrdering,
-            // so sorted-table epochs arrive range-clustered like batch writes
-            presorted = presorted, branch = branch,
-            propsExtra = Map(epoch.highWater), skipIf = replayed)
-          true
-        }
-      })
-  }
-}
-
-class GraftBatchWrite(root: String, factory: String => GraftWriterFactory,
-    mode: GraftWriteMode, presorted: Boolean, branch: String)
-  extends org.apache.spark.sql.connector.write.BatchWrite {
-  private val staging =
-    graft.table.TableIO.path(root, s"stage-v2-${java.util.UUID.randomUUID().toString.take(8)}")
-
-  override def createBatchWriterFactory(
-      info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DataWriterFactory = {
-    graft.table.TableIO.mkdirs(staging)
-    factory(staging.toString)
-  }
-
-  override def commit(
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
-    val t = GraftTable.load(SparkSession.active, root)
-    mode match {
-      case GraftWriteMode.Append =>
-        t.commitStagedWrite(staging, overwrite = false,
-          presorted = presorted, branch = branch)
-      case GraftWriteMode.Truncate =>
-        t.commitStagedWrite(staging, overwrite = true,
-          presorted = presorted, branch = branch)
-      case GraftWriteMode.ByFilter(filters) =>
-        val (cond, triples, eqProofs) = GraftSparkTable.overwriteByFilter(filters)
-        t.commitStagedOverwrite(staging, cond,
-          triples.map(f => t.StatFilter(f._1, f._2, f._3)),
-          eqProofs = eqProofs, presorted = presorted)
-      case GraftWriteMode.DynamicPartitions =>
-        t.commitStagedDynamicOverwrite(staging, presorted = presorted)
-    }
-  }
-
-  override def abort(
-      messages: Array[org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit =
-    graft.table.TableIO.delete(staging, recursive = true)
 }
 
 case class GraftCommitMessage(path: String, rows: Long)

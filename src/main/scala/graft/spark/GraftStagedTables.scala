@@ -3,11 +3,9 @@ package graft.spark
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{Identifier, StagedTable,
   SupportsWrite, Table, TableCapability}
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.Expressions
+import org.apache.spark.sql.connector.distributions.Distribution
 import org.apache.spark.sql.connector.write.{BatchWrite, LogicalWriteInfo,
-  PhysicalWriteInfo, RequiresDistributionAndOrdering, Write, WriteBuilder,
-  WriterCommitMessage}
+  RequiresDistributionAndOrdering, Write, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.GraftConnectorShim
 import org.apache.spark.sql.types.StructType
 
@@ -120,34 +118,18 @@ class GraftStagedReplaceTable(root: String, ident: Identifier,
       override def truncate(): WriteBuilder = this
       override def build(): Write = new Write
         with RequiresDistributionAndOrdering {
-        // cluster on the NEW spec so each task writes few files per
-        // partition value (same layout contract as GraftWriteLayout,
-        // which reads the live meta and so can't serve a not-yet-
-        // committed spec)
-        override def requiredDistribution(): Distribution =
-          if (spec.isEmpty) Distributions.unspecified()
-          else Distributions.clustered(spec.map(pf =>
-            if (pf.transform.startsWith("truncate["))
-              Expressions.identity(pf.sourceColumn)
-                : org.apache.spark.sql.connector.expressions.Expression
-            else RowTransform.toV2(pf)).toArray)
+        // laid out by the NEW spec and properties (the replacement
+        // defines no sort order)
+        private val layout = GraftWriteLayout(spec, Seq.empty, props)
+        override def requiredDistribution(): Distribution = layout.distribution
         override def requiredOrdering()
             : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-          Array.empty
-        override def toBatch: BatchWrite = new BatchWrite {
-          override def createBatchWriterFactory(pinfo: PhysicalWriteInfo)
-              : org.apache.spark.sql.connector.write.DataWriterFactory = {
-            TableIO.mkdirs(staging)
-            GraftWriterFactory(staging.toString,
-              GraftConnectorShim.prepareParquetWriteConf(
-                SparkSession.active, schemaWithIds),
-              RowTransform.forSpec(spec, schemaWithIds))
-          }
-          override def commit(messages: Array[WriterCommitMessage]): Unit =
-            () // staging only — the swap is commitStagedChanges
-          override def abort(messages: Array[WriterCommitMessage]): Unit =
-            TableIO.delete(staging, recursive = true)
-        }
+          layout.ordering
+        override def toBatch: BatchWrite = new StagedBatchWrite(staging,
+          GraftWriterFactory(_, GraftConnectorShim.prepareParquetWriteConf(
+              SparkSession.active, schemaWithIds),
+            RowTransform.forSpec(spec, schemaWithIds)),
+          _ => ()) // staging only — the swap is commitStagedChanges
       }
     }
 

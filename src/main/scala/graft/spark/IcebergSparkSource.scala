@@ -141,7 +141,7 @@ class IcebergSparkTable(location: String,
       .getOrElse(ice.schema).toSpark
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE,
+      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
       TableCapability.OVERWRITE_BY_FILTER,
       TableCapability.MICRO_BATCH_READ,
       TableCapability.STREAMING_WRITE)
@@ -179,79 +179,28 @@ class IcebergSparkTable(location: String,
 
   /** SQL DELETE / UPDATE / MERGE on an adopted real-format table:
     * merge-on-read by default, copy-on-write by table property — see
-    * IcebergRowLevelTarget. */
+    * IcebergWriteTarget. */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    RowLevelOperations.builder(info, () => new IcebergRowLevelTarget(location))
+    RowLevelOperations.builder(info, () => new IcebergWriteTarget(location))
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     import scala.jdk.CollectionConverters._
     new TableScanBuilder(new IcebergScanSource(location,
-      Option(options.get("snapshot")).map(_.toLong).orElse(pinnedSnapshot)),
+      Option(options.get("snapshot")).map(_.toLong).orElse(pinnedSnapshot),
+      Option(options.get("branch"))),
       options = options.asCaseSensitiveMap().asScala.toMap)
   }
 
-  /** INSERT INTO a table some other engine created (reference:
-    * datafusion_iceberg/src/table.rs:216 insert_into). The V1 write
-    * bridge hands the planned DataFrame to the interop writer, which
-    * runs the distributed parquet write, computes transform partition
-    * values, and commits a real Iceberg snapshot (avro manifest +
-    * manifest list + next metadata.json). */
+  /** INSERT INTO / OVERWRITE and streaming writes on a table some other
+    * engine created (reference: datafusion_iceberg/src/table.rs:216
+    * insert_into): executors stage parquet laid out by the table's
+    * spec and sort order, and the commit lands a real Iceberg snapshot
+    * (avro manifest + manifest list + next metadata.json) — over a
+    * REST catalog through the update-table protocol. */
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder
-        with org.apache.spark.sql.connector.write.SupportsOverwrite {
-      private var overwriteAll = false
-      private var byFilter: Option[Seq[org.apache.spark.sql.sources.Filter]] = None
-      override def truncate(): org.apache.spark.sql.connector.write.WriteBuilder = {
-        overwriteAll = true; this
-      }
-      override def canOverwrite(
-          filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-        GraftSparkTable.translatable(filters)
-      override def overwrite(
-          filters: Array[org.apache.spark.sql.sources.Filter])
-          : org.apache.spark.sql.connector.write.WriteBuilder = {
-        if (GraftSparkTable.selectsAll(filters)) overwriteAll = true
-        else byFilter = Some(filters.toSeq)
-        this
-      }
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.V1Write {
-          // writeStream.toTable on an adopted/REST table: per-epoch
-          // executor-staged files, one stamped snapshot per epoch.
-          // Epochs skip the sort-order range-clustering batch writes
-          // apply (micro-batches are small by construction); CALL
-          // rewrite_data_files restores clustering.
-          override def toStreaming
-              : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-            new StagedStreamingWrite(location, overwriteAll,
-              GraftWriterFactory.forIceberg(
-                IcebergMetadata.load(location), info.schema(), _),
-              // over a REST catalog each epoch commit rides the
-              // update-table protocol
-              graft.table.iceberg.IcebergWrite.commitStreamEpoch(
-                SparkSession.active, location, _, info.queryId(), _,
-                overwriteAll))
-          override def toInsertableRelation
-              : org.apache.spark.sql.sources.InsertableRelation =
-            (data: org.apache.spark.sql.DataFrame, _: Boolean) => {
-              byFilter match {
-                case Some(filters) =>
-                  val (cond, triples, eqProofs) =
-                    GraftSparkTable.overwriteByFilter(filters)
-                  graft.table.iceberg.IcebergWrite.overwriteWhere(
-                    data.sparkSession, location, data, cond, triples, eqProofs)
-                case None if overwriteAll =>
-                  graft.table.iceberg.IcebergWrite.overwrite(
-                    data.sparkSession, location, data)
-                case None =>
-                  graft.table.iceberg.IcebergWrite.append(
-                    data.sparkSession, location, data)
-              }
-            }
-        }
-    }
+    new TableWriteBuilder(new IcebergWriteTarget(location), info)
 }

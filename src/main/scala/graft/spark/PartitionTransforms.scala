@@ -1,6 +1,7 @@
 package graft.spark
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast}
 import org.apache.spark.sql.types._
 import graft.table.Meta
 
@@ -16,7 +17,7 @@ import graft.table.Meta
   * every INSERT — the thing that does not survive 100 TB).
   */
 case class RowTransform(name: String, kind: String, param: Int,
-    srcIndex: Int, srcType: DataType) extends Serializable {
+    srcIndex: Int, srcType: DataType, timeZone: String) extends Serializable {
 
   private def utc(micros: Long): java.time.LocalDateTime =
     java.time.LocalDateTime.ofEpochSecond(
@@ -24,6 +25,11 @@ case class RowTransform(name: String, kind: String, param: Int,
 
   /** Dir-name-safe rendering of an identity string value. */
   private def sanitize(s: String): String = graft.table.PathCodec.escape(s)
+
+  /** Spark's own cast to string: the dir value a DataFrame
+    * `partitionBy` writes (timestamps in the session time zone). */
+  @transient private lazy val display =
+    Cast(BoundReference(srcIndex, srcType, nullable = true), StringType, Some(timeZone))
 
   def eval(row: InternalRow): String = {
     if (row.isNullAt(srcIndex)) return "__HIVE_DEFAULT_PARTITION__"
@@ -35,8 +41,7 @@ case class RowTransform(name: String, kind: String, param: Int,
         case StringType => sanitize(row.getUTF8String(srcIndex).toString)
         case DateType =>
           java.time.LocalDate.ofEpochDay(row.getInt(srcIndex).toLong).toString
-        case other =>
-          throw new UnsupportedOperationException(s"identity over $other")
+        case _ => sanitize(display.eval(row).toString)
       }
       case "bucket" => (srcType match {
         case LongType | TimestampType =>
@@ -45,10 +50,14 @@ case class RowTransform(name: String, kind: String, param: Int,
           graft.functions.IcebergHash.bucketLong(row.getInt(srcIndex).toLong, param)
         case StringType =>
           graft.functions.IcebergHash.bucketUtf8(row.getUTF8String(srcIndex), param)
+        case BinaryType =>
+          graft.functions.IcebergHash.bucketBytes(row.getBinary(srcIndex), param)
         case other =>
           throw new UnsupportedOperationException(s"bucket over $other")
       }).toString
       case "truncate" => srcType match {
+        case ShortType =>
+          val v = row.getShort(srcIndex).toInt; (v - (((v % param) + param) % param)).toString
         case IntegerType =>
           val v = row.getInt(srcIndex); (v - (((v % param) + param) % param)).toString
         case LongType =>
@@ -64,7 +73,7 @@ case class RowTransform(name: String, kind: String, param: Int,
             val ld = java.time.LocalDate.ofEpochDay(row.getInt(srcIndex).toLong)
             (ld.getYear, ld.getMonthValue, ld.toEpochDay,
               ld.toEpochDay * 24) // hour-of-date matches floor(unix/3600)
-          case TimestampType =>
+          case TimestampType | TimestampNTZType =>
             val micros = row.getLong(srcIndex)
             val dt = utc(micros)
             (dt.getYear, dt.getMonthValue,
@@ -107,8 +116,10 @@ object RowTransform {
     }
   }
 
-  /** Compile a partition spec against a write schema. */
-  def forSpec(spec: Seq[Meta.PartitionField], schema: StructType): Seq[RowTransform] =
+  /** Compile a partition spec against a write schema, rendering
+    * timestamps in the session time zone. */
+  def forSpec(spec: Seq[Meta.PartitionField], schema: StructType): Seq[RowTransform] = {
+    val timeZone = org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone
     spec.map { pf =>
       val idx = schema.fieldIndex(pf.sourceColumn)
       val (kind, param) = pf.transform match {
@@ -119,6 +130,7 @@ object RowTransform {
           ("truncate", t.stripPrefix("truncate[").stripSuffix("]").toInt)
         case other => (other, 0)
       }
-      RowTransform(pf.name, kind, param, idx, schema.fields(idx).dataType)
+      RowTransform(pf.name, kind, param, idx, schema.fields(idx).dataType, timeZone)
     }
+  }
 }

@@ -613,12 +613,20 @@ object GraftScanSource {
   }
 }
 
-/** A real-format Iceberg table at `snapshotId`, or current. Metadata
-  * aggregates are declined: foreign writers truncate string bounds, so
-  * manifest min/max is not the column's min/max. */
+/** A real-format Iceberg table at `snapshot`, or at `branch`'s
+  * head, or current. Metadata aggregates are declined: foreign writers
+  * truncate string bounds, so manifest min/max is not the column's
+  * min/max. */
 final class IcebergScanSource(val location: String,
-    snapshotId: Option[Long] = None) extends ScanSource {
+    snapshot: Option[Long] = None, branch: Option[String] = None)
+  extends ScanSource {
   private val m = IcebergMetadata.load(location)
+  // a write to a missing branch starts it empty, so reading one must
+  // not fall back to main's head
+  private val snapshotId = branch.flatMap(b => m.refs.get(b).orElse {
+    if (b == "main") None
+    else throw new IllegalArgumentException(s"no branch '$b' in table at $location")
+  }).orElse(snapshot)
   private val t = IcebergTable.fromMetadataAt(SparkSession.active, location, m)
   // a time-travel scan plans against the PINNED snapshot's schema:
   // era labels, era types, since-dropped columns included

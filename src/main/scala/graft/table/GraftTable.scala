@@ -375,23 +375,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     * at a higher one, so old deletes can never hide rewritten rows. */
   private[graft] def commitStagedReplace(staging: HPath,
       replaced: Seq[String], presorted: Boolean = false): Unit = {
-    val m = meta
-    val staged = TableIO.listFilesRecursive(staging)
-      .filter(_._1.getName.endsWith(".parquet"))
-    val routed = m.spec.isEmpty ||
-      staged.forall(f => TableIO.relativize(staging, f._1).contains("="))
-    val files =
-      if ((m.sortOrder.isEmpty || presorted) && routed)
-        ingestStaged(staging, m.schema, m.defaultSpecId)
-      else {
-        val stagedPaths = staged.map(_._1.toString)
-        val out =
-          if (stagedPaths.isEmpty) Seq.empty
-          else writeFiles(
-            idRead.schema(m.schema).parquet(stagedPaths: _*), m.schema)
-        TableIO.delete(staging, recursive = true)
-        out
-      }
+    val files = ingestStagedForCommit(staging, meta, presorted)
     // "replace", not "rewrite": a MERGE can INSERT brand-new rows, so
     // consumers that treat rewrites as row-preserving (the streaming
     // source, MV incremental refresh) must see this as content change.
@@ -446,7 +430,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       // The skipped commit's just-ingested files are reclaimed HERE —
       // they were staged for this commit only and nothing references
       // them — instead of lingering as orphans until
-      // remove_orphan_files (the Iceberg-path commitStreamEpoch does
+      // remove_orphan_files (the Iceberg-path commitStagedWrite does
       // the same in its replayedInside case)
       if (skipIf(m)) {
         // never reclaim a path the observed metadata references:

@@ -148,6 +148,14 @@ object IcebergMetadata {
       snapshots.find(_.snapshotId == id)
     def currentSnapshot: Option[IceSnapshot] =
       currentSnapshotId.flatMap(snapshot)
+    /** This metadata with `snap` committed as the head of branch `ref`
+      * (a main commit also moves the current snapshot). */
+    def withSnapshot(snap: IceSnapshot, ref: String = "main"): IceMetadata =
+      copy(lastSequenceNumber = snap.sequenceNumber,
+        currentSnapshotId =
+          if (ref == "main") Some(snap.snapshotId) else currentSnapshotId,
+        snapshots = snapshots :+ snap,
+        refs = refs + (ref -> snap.snapshotId))
     def defaultSpecFields: Seq[IcePartitionField] =
       specs.find(_.specId == defaultSpecId).map(_.fields).getOrElse(Seq.empty)
     /** The default spec as graft partition fields (source by name):

@@ -141,11 +141,7 @@ object IcebergWrite {
     IcebergMetadata.commitRetry(location) { m =>
       val snap0 = appendManifest(m, moved, stats)
       val snap = snap0.copy(summary = snap0.summary ++ summary)
-      m.copy(
-        lastSequenceNumber = snap.sequenceNumber,
-        currentSnapshotId = Some(snap.snapshotId),
-        snapshots = m.snapshots :+ snap,
-        refs = m.refs + ("main" -> snap.snapshotId))
+      m.withSnapshot(snap)
     }
     ()
   }
@@ -175,13 +171,6 @@ object IcebergWrite {
       case None => spark.conf.unset(key)
     }
   }
-
-  private val profile = java.lang.Boolean.getBoolean("graft.iceberg.profile")
-  @inline private def timed[T](label: String)(f: => T): T =
-    if (!profile) f else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[iceprof] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    }
 
   def prepareAppend(spark: SparkSession,
       m: IcebergMetadata.IceMetadata, df: DataFrame,
@@ -249,7 +238,7 @@ object IcebergWrite {
             d.repartitionByRange(n, sortCols: _*))
           .sortWithinPartitions(sortCols: _*)
       else d.sortWithinPartitions(sortCols: _*)
-    withMicrosTimestamps(spark) { timed("write-parquet") {
+    withMicrosTimestamps(spark) {
       if (spec.isEmpty) clustered(dfWithIds).write.parquet(staging.toString)
       else {
         import org.apache.spark.sql.functions.col
@@ -268,7 +257,7 @@ object IcebergWrite {
           .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
           .parquet(staging.toString)
       }
-    } }
+    }
     staging
   }
 
@@ -301,9 +290,9 @@ object IcebergWrite {
     // Renames run on a driver thread pool: a fine-grained partition
     // spec (month × bucket) yields hundreds of files and sequential
     // per-file metadata RPCs would dominate the commit.
-    val staged = timed("list-staging")(TableIO.listFilesRecursive(staging)
-      .filter(_._1.getName.endsWith(".parquet")))
-    val moved = timed("rename")(parallelOnDriver(staged) { case (src, sz, _) =>
+    val staged = TableIO.listFilesRecursive(staging)
+      .filter(_._1.getName.endsWith(".parquet"))
+    val moved = parallelOnDriver(staged) { case (src, sz, _) =>
         val rel = TableIO.relativize(staging, src)
         val dest = new HPath(dataDir,
           s"${UUID.randomUUID().toString.take(8)}-${src.getName}")
@@ -312,16 +301,16 @@ object IcebergWrite {
         val dirVals = rel.split("/").dropRight(1)
           .map(_.split("=", 2)).map(a => a(0).stripPrefix("_p_") -> a(1)).toMap
         (dest, sz, spec.map(pf => dirVals.getOrElse(pf.name, null)))
-      })
-    timed("delete-staging")(TableIO.delete(staging, recursive = true))
+      }
+    TableIO.delete(staging, recursive = true)
 
     // Per-file stats: above a handful of files the footer reads run as
     // a Spark job (the same shape as FooterStats.collect) — at commit
     // time only the small encoded stat maps cross back to the driver,
     // never file contents. Sequentially for tiny appends, where job
     // latency would exceed the work.
-    val statsByPath: Map[String, FileStats] = timed("footer-stats")(
-      collectFooterStats(spark, moved.map(_._1), sparkSchema, schema))
+    val statsByPath: Map[String, FileStats] =
+      collectFooterStats(spark, moved.map(_._1), sparkSchema, schema)
     (moved, statsByPath)
   }
 
@@ -385,8 +374,8 @@ object IcebergWrite {
     val metaDir = TableIO.path(location, "metadata")
     TableIO.mkdirs(metaDir)
     val manifestPath = new HPath(metaDir, s"manifest-$snapshotId-${UUID.randomUUID().toString.take(8)}.avro")
-    val manifestLen = timed("write-manifest")(IcebergAvro.writeManifest(
-      manifestPath, partRecordJson, manifestEntries, schemaJson, specJson))
+    val manifestLen = IcebergAvro.writeManifest(
+      manifestPath, partRecordJson, manifestEntries, schemaJson, specJson)
 
     // 3. manifest list: the ref head's manifests + the new one
     val prevManifests = baseSnap.map(s =>
@@ -485,11 +474,7 @@ object IcebergWrite {
         files.map { case (p, sz, _) => (p, sz, Seq.empty[String]) }, statsByPath)
       val snap = snap0.copy(summary = snap0.summary +
         ("added-files-imported" -> files.size.toString))
-      cur.copy(
-        lastSequenceNumber = snap.sequenceNumber,
-        currentSnapshotId = Some(snap.snapshotId),
-        snapshots = cur.snapshots :+ snap,
-        refs = cur.refs + ("main" -> snap.snapshotId),
+      cur.withSnapshot(snap).copy(
         properties = cur.properties +
           ("schema.name-mapping.default" -> mapping) +
           // imported footers carry no field ids: every read of this
@@ -500,13 +485,6 @@ object IcebergWrite {
     }
     (files.size, files.map(f => statsByPath(f._1.toString)._1).sum)
   }
-
-  /** Replace all table content (INSERT OVERWRITE): write the new data
-    * like an append, then publish a manifest list holding ONLY the new
-    * snapshot's own manifests — readers of the new snapshot see just
-    * the new content, older snapshots still time-travel. */
-  def overwrite(spark: SparkSession, location: String, df: DataFrame): Unit =
-    replaceContent(spark, location, df, "overwrite")
 
   /** Compaction on a REAL-format table (reference: the `rewrite`
     * transaction, iceberg-rust table/transaction/mod.rs): fold the
@@ -526,8 +504,25 @@ object IcebergWrite {
     // scan() materializes into the commit's private staging dir before
     // any metadata moves, so read-own-table is safe; numPartitions
     // carries n through the sort-order range shuffle (see clustered)
-    replaceContent(spark, location, t.scan().repartition(n), "replace",
-      numPartitions = Some(n))
+    val base = IcebergMetadata.load(location)
+    val (moved, stats) = stageData(spark, base, t.scan().repartition(n), Some(n))
+    var committedFiles = 0
+    IcebergMetadata.commitRetry(location) { m =>
+      // the replacement content was derived from `base`: committing it
+      // over a table that has since moved would DROP the interleaved
+      // commit — refuse, like the reference's rewrite validation
+      if (m.currentSnapshotId != base.currentSnapshotId)
+        throw new java.util.ConcurrentModificationException(
+          s"table at $location changed (snapshot " +
+            s"${base.currentSnapshotId.getOrElse(-1L)} -> " +
+            s"${m.currentSnapshotId.getOrElse(-1L)}) while a " +
+            "replace was computing its content; retry the operation")
+      val snap0 = appendManifest(m, moved, stats)
+      val (snap, nFiles) = soloManifestList(m, snap0, "replace")
+      committedFiles = nFiles
+      m.withSnapshot(snap)
+    }
+    committedFiles
   }
 
   /** Iceberg's rewrite_manifests on a REAL-format table, metadata-only:
@@ -702,11 +697,7 @@ object IcebergWrite {
             "manifests-replaced" -> dataMfs.size.toString,
             "manifests-created" -> newRecs.size.toString))
         result = (dataMfs.size, newRecs.size)
-        m.copy(
-          lastSequenceNumber = seq,
-          currentSnapshotId = Some(newSnap.snapshotId),
-          snapshots = m.snapshots :+ newSnap,
-          refs = m.refs + ("main" -> newSnap.snapshotId))
+        m.withSnapshot(newSnap)
         }
       }
     }
@@ -838,12 +829,7 @@ object IcebergWrite {
       if (moved.nonEmpty) requireSpecUnmoved(m, stagedSpecId, "append")
       val snap = appendManifest(m, moved, stats, ref)
       recordAttempt(snap)
-      m.copy(
-        lastSequenceNumber = snap.sequenceNumber,
-        currentSnapshotId =
-          if (ref == "main") Some(snap.snapshotId) else m.currentSnapshotId,
-        snapshots = m.snapshots :+ snap,
-        refs = m.refs + (ref -> snap.snapshotId))
+      m.withSnapshot(snap, ref)
     }
     private[iceberg] def cleanup(): Unit = {
       dropAttemptMeta(keepCommitted = false)
@@ -870,7 +856,7 @@ object IcebergWrite {
     * NOT rebase-safe: the replacement content may have been computed
     * FROM the table, so replaying it over a moved base would drop the
     * interleaved commit — the transaction refuses instead (same
-    * validation as the single-table replaceContent path). */
+    * validation as the single-table compaction path). */
   final class StagedOverwrite private[iceberg] (
       val location: String,
       moved: Seq[(HPath, Long, Seq[String])],
@@ -886,11 +872,7 @@ object IcebergWrite {
       // referenced by the solo list)
       recordStale(new HPath(snap0.manifestList))
       recordAttempt(snap)
-      m.copy(
-        lastSequenceNumber = snap.sequenceNumber,
-        currentSnapshotId = Some(snap.snapshotId),
-        snapshots = m.snapshots :+ snap,
-        refs = m.refs + ("main" -> snap.snapshotId))
+      m.withSnapshot(snap)
     }
     private[iceberg] def cleanup(): Unit = {
       dropAttemptMeta(keepCommitted = false)
@@ -1122,50 +1104,63 @@ object IcebergWrite {
       m.lastSequenceNumber, m.defaultSpecId, lineage)
   }
 
-  /** One streaming micro-batch epoch into a real-format table: ingest
-    * the executor-staged files under `epochDir` and commit ONE
-    * snapshot stamped with (query-id, epoch-id). Exactly-once across
-    * query restarts comes from the stamp: a replayed epoch whose id
-    * is already in the snapshot history commits nothing (the same
-    * dedup the graft-dialect streaming sink and Iceberg's own
-    * streaming writer use). `truncate` = Complete output mode: the
-    * epoch's snapshot carries a solo manifest list, replacing the
-    * table's live content. Over a REST-registered root the commit
-    * rides the update-table protocol like every other write. Returns
-    * whether a snapshot was committed. The dedup anchors are
-    * graft.table.StreamEpoch's. */
-  def commitStreamEpoch(spark: SparkSession, location: String,
-      epochDir: HPath, queryId: String, epochId: Long,
-      truncate: Boolean): Boolean = {
-    val epoch = graft.table.StreamEpoch(queryId, epochId)
-    def replayed(m: IcebergMetadata.IceMetadata): Boolean =
-      epoch.replayedIn(m.properties, m.snapshots.iterator.map(_.summary))
+  /** Executor-staged files under `staging` land in ONE snapshot of
+    * branch `ref`: appended, or (`truncate`) replacing the branch's
+    * live content through a solo manifest list — INSERT OVERWRITE, or a
+    * streaming epoch in Complete output mode. A branch that does not
+    * exist yet starts empty (table_metadata.rs:217-237). With an
+    * `epoch` (one streaming micro-batch) the snapshot is stamped with
+    * (query-id, epoch-id); exactly-once across query restarts comes
+    * from the stamp: a replayed epoch whose id is already in the
+    * snapshot history commits nothing (the same dedup the
+    * graft-dialect streaming sink and Iceberg's own streaming writer
+    * use). Over a REST-registered root the commit rides the
+    * update-table protocol like every other write. Returns whether a
+    * snapshot was committed. The dedup anchors are
+    * graft.table.StreamEpoch's. A batch truncate refuses when `ref`
+    * moved past its head in `builtOn`, the metadata the write was
+    * planned against: its content may derive from that head
+    * (`INSERT OVERWRITE t SELECT ... FROM t`), and committing over a
+    * newer one would drop the interleaved commit. A Complete-mode epoch
+    * rewrites its whole result each time, so it lands on the newest
+    * head. */
+  def commitStagedWrite(spark: SparkSession, location: String,
+      staging: HPath, truncate: Boolean, ref: String = "main",
+      epoch: Option[graft.table.StreamEpoch] = None,
+      builtOn: Option[IcebergMetadata.IceMetadata] = None): Boolean = {
+    def head(m: IcebergMetadata.IceMetadata): Option[Long] =
+      if (ref == "main") m.currentSnapshotId else m.refs.get(ref)
+    val builtHead = builtOn.map(head)
+    def replayed(m: IcebergMetadata.IceMetadata): Boolean = epoch.exists(
+      _.replayedIn(m.properties, m.snapshots.iterator.map(_.summary)))
     val base = IcebergMetadata.load(location)
     if (replayed(base)) {
-      TableIO.delete(epochDir, recursive = true)
+      TableIO.delete(staging, recursive = true)
       return false
     }
     val (moved, stats) =
-      if (TableIO.exists(epochDir)) ingestStagedFiles(spark, base, epochDir)
+      if (TableIO.exists(staging)) ingestStagedFiles(spark, base, staging)
       else (Seq.empty[(HPath, Long, Seq[String])], Map.empty[String, FileStats])
-    // a rowless append tick (watermark-only) commits nothing; an
-    // empty Complete-mode result must still truncate
+    // an append that staged no file (a watermark-only tick) commits
+    // nothing; an empty Complete-mode result must still truncate
     if (moved.isEmpty && !truncate) return false
     var replayedInside = false
     IcebergMetadata.commitRetry(location) { m =>
       if (replayed(m)) { replayedInside = true; m }
       else {
-        val snap0 = appendManifest(m, moved, stats)
+        if (truncate && epoch.isEmpty && builtHead.exists(_ != head(m)))
+          throw new java.util.ConcurrentModificationException(
+            s"branch '$ref' of $location moved (snapshot " +
+              s"${builtHead.flatten.getOrElse(-1L)} -> ${head(m).getOrElse(-1L)}) " +
+              "while an overwrite was computing its content; retry the operation")
+        val snap0 = appendManifest(m, moved, stats, ref)
         val snap1 =
           if (truncate) soloManifestList(m, snap0, "overwrite")._1
           else snap0
-        val snap = snap1.copy(summary = snap1.summary ++ epoch.summary)
-        m.copy(
-          lastSequenceNumber = snap.sequenceNumber,
-          currentSnapshotId = Some(snap.snapshotId),
-          snapshots = m.snapshots :+ snap,
-          refs = m.refs + ("main" -> snap.snapshotId),
-          properties = m.properties + epoch.highWater)
+        val snap = snap1.copy(
+          summary = snap1.summary ++ epoch.map(_.summary).getOrElse(Map.empty))
+        m.withSnapshot(snap, ref)
+          .copy(properties = m.properties ++ epoch.map(_.highWater))
       }
     }
     // a concurrent run of the SAME query won the epoch between our
@@ -1199,11 +1194,7 @@ object IcebergWrite {
         val mNew = install(m)
         val snap0 = appendManifest(mNew, moved, stats)
         val (snap, _) = soloManifestList(mNew, snap0, "replace")
-        mNew.copy(
-          lastSequenceNumber = snap.sequenceNumber,
-          currentSnapshotId = Some(snap.snapshotId),
-          snapshots = mNew.snapshots :+ snap,
-          refs = mNew.refs + ("main" -> snap.snapshotId))
+        mNew.withSnapshot(snap)
       }
       ()
     }
@@ -1258,14 +1249,14 @@ object IcebergWrite {
   }
 
   /** OverwriteByExpression on a REAL-format table (`INSERT OVERWRITE
-    * ... PARTITION` / `REPLACE WHERE` through the V1 write bridge):
-    * ONE commit — candidates manifest-pruned by the filter; files
-    * whose stats prove every row matches the all-equality filter
-    * (min = max = v, zero nulls) drop METADATA-ONLY with no read;
-    * partially-matching files rewrite keeping NULL-predicate rows
-    * (3VL, same as DELETE); the new data appends. Over a REST catalog
-    * the commit rides the update-table protocol. */
-  def overwriteWhere(spark: SparkSession, location: String, df: DataFrame,
+    * ... PARTITION` / `REPLACE WHERE`): the executor-staged new rows
+    * under `staging` land in ONE commit — candidates manifest-pruned by
+    * the filter; files whose stats prove every row matches the
+    * all-equality filter (min = max = v, zero nulls) drop METADATA-ONLY
+    * with no read; partially-matching files rewrite keeping
+    * NULL-predicate rows (3VL, same as DELETE). Over a REST catalog the
+    * commit rides the update-table protocol. */
+  def overwriteWhere(spark: SparkSession, location: String, staging: HPath,
       predicate: org.apache.spark.sql.Column,
       touched: Seq[(String, String, String)],
       eqProofs: Seq[(String, String)]): Unit = {
@@ -1284,43 +1275,13 @@ object IcebergWrite {
     // every visible row of a fully-matching file matches, and its
     // already-deleted rows are invisible either way
     val kept =
-      if (partial.isEmpty) df
-      else df.unionByName(
+      if (partial.isEmpty) Seq.empty
+      else Seq(writeStagedDir(spark, base,
         t.readVisible(base.schema, partial.map(c => (c._1, c._3)),
           t.deleteEntries(None))
-          .filter(!coalesce(predicate, lit(false))))
-    val staging = writeStagedDir(spark, base, kept, None)
-    commitReplaceFiles(spark, location, staging,
+          .filter(!coalesce(predicate, lit(false))), None))
+    commitReplaceFiles(spark, location, staging +: kept,
       (dropped ++ partial).map(_._1.filePath).toSet)
-  }
-
-  private def replaceContent(spark: SparkSession, location: String,
-      df: DataFrame, operation: String,
-      numPartitions: Option[Int] = None): Int = {
-    val base = IcebergMetadata.load(location)
-    val (moved, stats) = stageData(spark, base, df, numPartitions)
-    var committedFiles = 0
-    IcebergMetadata.commitRetry(location) { m =>
-      // the replacement content was derived from `base` (rewrite scans
-      // the table; overwrite/merge compute against it): committing it
-      // over a table that has since moved would DROP the interleaved
-      // commit — refuse, like the reference's rewrite validation
-      if (m.currentSnapshotId != base.currentSnapshotId)
-        throw new java.util.ConcurrentModificationException(
-          s"table at $location changed (snapshot " +
-            s"${base.currentSnapshotId.getOrElse(-1L)} -> " +
-            s"${m.currentSnapshotId.getOrElse(-1L)}) while a " +
-            s"$operation was computing its content; retry the operation")
-      val snap0 = appendManifest(m, moved, stats)
-      val (snap, nFiles) = soloManifestList(m, snap0, operation)
-      committedFiles = nFiles
-      m.copy(
-        lastSequenceNumber = snap.sequenceNumber,
-        currentSnapshotId = Some(snap.snapshotId),
-        snapshots = m.snapshots :+ snap,
-        refs = m.refs + ("main" -> snap.snapshotId))
-    }
-    committedFiles
   }
 
   /** Schema evolution (reference: transaction add_schema): register a
@@ -1613,11 +1574,7 @@ object IcebergWrite {
         "added-delete-files" -> moved.size.toString,
         (if (content == 1) "added-position-deletes"
          else "added-equality-deletes") -> deleteRows.toString))
-    m.copy(
-      lastSequenceNumber = seq,
-      currentSnapshotId = Some(snapshotId),
-      snapshots = m.snapshots :+ snap,
-      refs = m.refs + ("main" -> snapshotId))
+    m.withSnapshot(snap)
     }
     ()
   }
@@ -1912,48 +1869,28 @@ object IcebergWrite {
           (if (delContent == 1) "added-position-deletes"
            else "added-equality-deletes") ->
             movedDel.map(_._3).sum.toString))
-      m.copy(
-        lastSequenceNumber = seq,
-        currentSnapshotId = Some(snapshotId),
-        snapshots = m.snapshots :+ snap,
-        refs = m.refs + ("main" -> snapshotId))
+      m.withSnapshot(snap)
   }
 
   /** Commit a copy-on-write ROW-LEVEL operation on a REAL-format
     * table (SQL UPDATE / MERGE / DELETE under
-    * write.<op>.mode=copy-on-write): executor-staged replacement
-    * files swap exactly the candidate files the operation's scan
-    * planned, in ONE snapshot. Existing data manifests containing
-    * removed paths are rewritten with those entries dropped (raw
+    * write.<op>.mode=copy-on-write) or a filter overwrite: the files
+    * staged under the `staging` dirs swap exactly the candidate files
+    * the operation planned, in ONE snapshot. Existing data manifests
+    * containing removed paths are rewritten with those entries dropped (raw
     * round-trip preserves foreign stats columns; inherited
     * snapshot_id/sequence_number materialized before entries move to
     * a manifest with a different sequence, per the spec's
     * inheritance rules); untouched manifests and delete manifests
-    * carry forward verbatim. Like `replaceContent`, the commit
+    * carry forward verbatim. Like `rewrite`, the commit
     * refuses if the table moved under it — the replacement content
     * was computed against `base` and committing it over a newer
     * snapshot would drop the interleaved commit. */
   def commitReplaceFiles(spark: SparkSession, location: String,
-      staging: HPath, removedPaths: Set[String]): Unit = {
+      staging: Seq[HPath], removedPaths: Set[String]): Unit = {
     val base = IcebergMetadata.load(location)
-    val spec = base.defaultSpecFields
-    val sparkSchema = base.schema.toSpark
-    val dataDir = TableIO.path(location, "data")
-    TableIO.mkdirs(dataDir)
-    val stagedData = TableIO.listFilesRecursive(staging)
-      .filter(_._1.getName.endsWith(".parquet"))
-    val moved = parallelOnDriver(stagedData) { case (src, sz, _) =>
-      val rel = TableIO.relativize(staging, src)
-      val dest = new HPath(dataDir,
-        s"${UUID.randomUUID().toString.take(8)}-${src.getName}")
-      TableIO.rename(src, dest)
-      val dirVals = rel.split("/").dropRight(1)
-        .map(_.split("=", 2)).map(a => a(0).stripPrefix("_p_") -> a(1)).toMap
-      (dest, sz, spec.map(pf => dirVals.getOrElse(pf.name, null)))
-    }
-    TableIO.delete(staging, recursive = true)
-    val statsByPath: Map[String, FileStats] =
-      collectFooterStats(spark, moved.map(_._1), sparkSchema, base.schema)
+    val ingested = staging.map(ingestStagedFiles(spark, base, _))
+    val moved = ingested.flatMap(_._1)
     if (moved.isEmpty && removedPaths.isEmpty) return
 
     IcebergMetadata.commitRetry(location) { m =>
@@ -1963,7 +1900,8 @@ object IcebergWrite {
             s"${base.currentSnapshotId.getOrElse(-1L)} -> " +
             s"${m.currentSnapshotId.getOrElse(-1L)}) while a row-level " +
             "operation was computing its replacement; retry the operation")
-      replaceFilesMutation(location, moved, statsByPath, removedPaths, spec)(m)
+      replaceFilesMutation(location, moved, ingested.flatMap(_._2).toMap,
+        removedPaths, base.defaultSpecFields)(m)
     }
     ()
   }
@@ -2148,11 +2086,7 @@ object IcebergWrite {
           "added-files-size" -> moved.map(_._2).sum.toString,
           "deleted-data-files" -> removedPaths.size.toString,
           "removed-files" -> removedPaths.size.toString) ++ extraSummary)
-      m.copy(
-        lastSequenceNumber = seq,
-        currentSnapshotId = Some(snapshotId),
-        snapshots = m.snapshots :+ snap,
-        refs = m.refs + ("main" -> snapshotId))
+      m.withSnapshot(snap)
   }
 
   /** Copy one manifest-list entry onto OUR list schema, preserving
@@ -2352,11 +2286,7 @@ object IcebergWrite {
         summary = Map(
           "position-delete-files-replaced" -> posEntries.size.toString,
           "position-delete-files-created" -> moved.size.toString))
-      m.copy(
-        lastSequenceNumber = seq,
-        currentSnapshotId = Some(snapshotId),
-        snapshots = m.snapshots :+ snap,
-        refs = m.refs + ("main" -> snapshotId))
+      m.withSnapshot(snap)
     }
     (posEntries.size, moved.size)
   }
@@ -2614,11 +2544,7 @@ object IcebergWrite {
         summary = Map(
           "equality-delete-files-converted" -> eqEntries.size.toString,
           "position-delete-files-created" -> moved.size.toString))
-      m.copy(
-        lastSequenceNumber = seq,
-        currentSnapshotId = Some(snapshotId),
-        snapshots = m.snapshots :+ snap,
-        refs = m.refs + ("main" -> snapshotId))
+      m.withSnapshot(snap)
     }
     (eqEntries.size, moved.size)
   }

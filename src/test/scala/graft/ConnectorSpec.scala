@@ -173,41 +173,55 @@ class ConnectorSpec extends AnyFunSuite {
   test("branch write option: batch and streaming commits land on the branch") {
     val spark0 = spark
     import spark0.implicits._
-    val root = tmp()
     val df = (1L to 40L).map(i => (i, s"a$i")).toDF("k", "v")
-    GraftTable.create(spark, root, df.schema).append(df)
+    def leg(iceberg: Boolean): Unit = {
+      val root = tmp()
+      if (iceberg) {
+        IcebergWrite.create(spark, root, df)
+        // Iceberg starts a missing branch empty; graft forks it from main
+        graft.table.iceberg.IcebergMaintenance.setRef(root, "audit",
+          graft.table.iceberg.IcebergMetadata.load(root).currentSnapshotId.get)
+      } else GraftTable.create(spark, root, df.schema).append(df)
 
-    // write-audit-publish staging: the audit branch advances, main
-    // stays pinned
-    (41L to 60L).map(i => (i, s"b$i")).toDF("k", "v")
-      .write.format("graft").option("branch", "audit")
-      .mode("append").save(root)
-    assert(spark.read.format("graft").load(root).count() === 40L)
-    assert(spark.read.format("graft").option("branch", "audit")
-      .load(root).count() === 60L)
+      // write-audit-publish staging: the audit branch advances, main
+      // stays pinned
+      (41L to 60L).map(i => (i, s"b$i")).toDF("k", "v")
+        .write.format("graft").option("branch", "audit")
+        .mode("append").save(root)
+      assert(spark.read.format("graft").load(root).count() === 40L)
+      assert(spark.read.format("graft").option("branch", "audit")
+        .load(root).count() === 60L)
 
-    // a branch overwrite truncates the BRANCH, not main
-    (100L to 104L).map(i => (i, s"c$i")).toDF("k", "v")
-      .write.format("graft").option("branch", "audit")
-      .mode("overwrite").save(root)
-    assert(spark.read.format("graft").option("branch", "audit")
-      .load(root).count() === 5L)
-    assert(spark.read.format("graft").load(root).count() === 40L)
+      // a branch overwrite truncates the BRANCH, not main
+      (100L to 104L).map(i => (i, s"c$i")).toDF("k", "v")
+        .write.format("graft").option("branch", "audit")
+        .mode("overwrite").save(root)
+      assert(spark.read.format("graft").option("branch", "audit")
+        .load(root).count() === 5L)
+      assert(spark.read.format("graft").load(root).count() === 40L)
 
-    // streaming epochs can target a branch too
-    val srcRoot = tmp()
-    val s2 = GraftTable.create(spark, srcRoot, df.schema)
-    s2.append((200L to 219L).map(i => (i, s"d$i")).toDF("k", "v"))
-    val q = spark.readStream.format("graft").load(srcRoot)
-      .writeStream.outputMode("append").format("graft")
-      .option("path", root).option("branch", "audit")
-      .option("checkpointLocation", root + "-bckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
-    assert(spark.read.format("graft").option("branch", "audit")
-      .load(root).count() === 25L)
-    assert(spark.read.format("graft").load(root).count() === 40L)
+      // streaming epochs can target a branch too
+      val srcRoot = tmp()
+      val s2 = GraftTable.create(spark, srcRoot, df.schema)
+      s2.append((200L to 219L).map(i => (i, s"d$i")).toDF("k", "v"))
+      val q = spark.readStream.format("graft").load(srcRoot)
+        .writeStream.outputMode("append").format("graft")
+        .option("path", root).option("branch", "audit")
+        .option("checkpointLocation", root + "-bckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination(120000)
+      assert(spark.read.format("graft").option("branch", "audit")
+        .load(root).count() === 25L)
+      assert(spark.read.format("graft").load(root).count() === 40L)
+      // a missing Iceberg branch holds no rows: reading it is an error,
+      // not main's head
+      if (iceberg) intercept[IllegalArgumentException] {
+        spark.read.format("graft").option("branch", "no_such").load(root).count()
+      }
+    }
+    leg(iceberg = false)
+    leg(iceberg = true)
   }
 
   test("connector applies merge-on-read deletes at scan") {
@@ -631,23 +645,36 @@ class ConnectorSpec extends AnyFunSuite {
     val spark0 = spark
     import spark0.implicits._
     val df = Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)).toDF("k", "v")
-    val root = tmp()
-    GraftTable.create(spark, root, df.schema)
-    val write = new graft.spark.GraftWriteBuilder(root, df.schema).build()
-    assert(write.supportedCustomMetrics().map(_.name()).toSet ===
-      Set("rowsWritten", "filesWritten"))
-    val bw = write.toBatch
-    val factory = bw.createBatchWriterFactory(
-      new org.apache.spark.sql.connector.write.PhysicalWriteInfo {
-        override def numPartitions(): Int = 1
-      })
-    val w = factory.createWriter(0, 0L)
-    val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](7L, 7.5))
-    w.write(row); w.write(row)
-    val tm = w.currentMetricsValues().map(m => m.name() -> m.value()).toMap
-    assert(tm("rowsWritten") === 2L && tm("filesWritten") === 1L)
-    w.abort()
-    bw.abort(Array.empty)
+    val info = new org.apache.spark.sql.connector.write.LogicalWriteInfo {
+      override def queryId(): String = "metrics"
+      override def schema(): org.apache.spark.sql.types.StructType = df.schema
+      override def options() =
+        org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()
+    }
+    def leg(target: String => graft.spark.WriteTarget,
+        create: String => Unit): Unit = {
+      val root = tmp()
+      create(root)
+      val write = new graft.spark.TableWriteBuilder(target(root), info).build()
+      assert(write.supportedCustomMetrics().map(_.name()).toSet ===
+        Set("rowsWritten", "filesWritten"))
+      val bw = write.toBatch
+      val factory = bw.createBatchWriterFactory(
+        new org.apache.spark.sql.connector.write.PhysicalWriteInfo {
+          override def numPartitions(): Int = 1
+        })
+      val w = factory.createWriter(0, 0L)
+      val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        Array[Any](7L, 7.5))
+      w.write(row); w.write(row)
+      val tm = w.currentMetricsValues().map(m => m.name() -> m.value()).toMap
+      assert(tm("rowsWritten") === 2L && tm("filesWritten") === 1L)
+      w.abort()
+      bw.abort(Array.empty)
+    }
+    leg(new graft.spark.GraftWriteTarget(_),
+      GraftTable.create(spark, _, df.schema))
+    leg(new graft.spark.IcebergWriteTarget(_),
+      IcebergWrite.create(spark, _, df.limit(0)))
   }
 }

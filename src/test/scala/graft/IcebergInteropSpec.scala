@@ -1088,8 +1088,8 @@ class IcebergInteropSpec extends AnyFunSuite {
     q1.awaitTermination(120000)
     assert(spark.read.parquet(out).count() === 20L)
 
-    IcebergWrite.overwrite(spark, loc,
-      (100L to 110L).map(i => (i, s"z$i")).toDF("k", "v").coalesce(1))
+    (100L to 110L).map(i => (i, s"z$i")).toDF("k", "v").coalesce(1)
+      .write.format("graft").mode("overwrite").save(loc)
     val q2 = spark.readStream.format("graft").load(loc)
       .writeStream.outputMode("append")
       .format("parquet").option("path", out)
@@ -1410,8 +1410,8 @@ class IcebergInteropSpec extends AnyFunSuite {
       Seq((rewritten, 0L)).toDF("file_path", "pos"))
     val s5 = IcebergMetadata.load(loc).currentSnapshotId.get
     // CoW overwrite replaces the whole content
-    IcebergWrite.overwrite(spark, loc,
-      (100L to 104L).map(i => (i, s"c$i")).toDF("k", "v").coalesce(1))
+    (100L to 104L).map(i => (i, s"c$i")).toDF("k", "v").coalesce(1)
+      .write.format("graft").mode("overwrite").save(loc)
 
     val t = IcebergTable.load(spark, loc)
     val ch = t.changesBetween(None).collect()
@@ -3223,4 +3223,80 @@ class IcebergInteropSpec extends AnyFunSuite {
       .collect()(0).getString(0) === "a")
   }
 
+  test("SQL INSERT routes rows by identity(timestamp) and day(timestamp_ntz)") {
+    val spark0 = spark
+    import spark0.implicits._
+    val cat = s"tsp_${java.util.UUID.randomUUID().toString.take(6)}"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.spark.GraftTableCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse",
+      Files.createTempDirectory("graft-tspwh").toString)
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.m")
+    def register(name: String, loc: String): Unit =
+      spark.sql(s"CALL $cat.system.register_table(table => 'm.$name', " +
+        s"location => '$loc')")
+
+    // identity over a zoned timestamp: an inserted row at an existing
+    // value lands in that value's partition
+    val zoned = tmp()
+    IcebergWrite.createWithSpec(spark, zoned, Seq(
+      (1L, java.sql.Timestamp.valueOf("2024-03-01 10:00:00")),
+      (2L, java.sql.Timestamp.valueOf("2024-03-02 11:30:00"))).toDF("id", "ts"),
+      Seq("ts" -> "identity"))
+    register("zoned", zoned)
+    spark.sql(s"INSERT INTO $cat.m.zoned VALUES " +
+      "(3, TIMESTAMP '2024-03-01 10:00:00'), (4, TIMESTAMP '2024-03-05 08:15:30.5')")
+    val z = IcebergTable.load(spark, zoned)
+    assert(z.scan().count() === 4L)
+    assert(z.plannedFiles().map(_._1.partition("ts")).toSet.size === 3)
+    assert(z.plannedFiles(None, Seq(("ts", "=", "2024-03-01 10:00:00")))
+      .map(_._1.partition("ts")).toSet.size === 1)
+    assert(spark.sql(s"SELECT id FROM $cat.m.zoned " +
+      "WHERE ts = TIMESTAMP '2024-03-01 10:00:00' ORDER BY id")
+      .as[Long].collect().toSeq === Seq(1L, 3L))
+
+    // day over an Iceberg `timestamp` (no zone), which loads as
+    // timestamp_ntz: values are epoch days of the local date
+    val local = tmp()
+    IcebergWrite.createWithSpec(spark, local, Seq(
+      (1L, java.time.LocalDateTime.parse("2024-03-01T10:00:00")),
+      (2L, java.time.LocalDateTime.parse("2024-03-02T11:30:00"))).toDF("id", "ts"),
+      Seq("ts" -> "day"))
+    register("local", local)
+    spark.sql(s"INSERT INTO $cat.m.local VALUES " +
+      "(3, TIMESTAMP_NTZ '2024-03-01 23:59:59'), (4, TIMESTAMP_NTZ '2024-03-05 00:00:00')")
+    val l = IcebergTable.load(spark, local)
+    assert(l.scan().count() === 4L)
+    assert(l.plannedFiles().map(_._1.partition("ts_day"))
+      .map(String.valueOf(_).toInt).toSet ===
+      Set("2024-03-01", "2024-03-02", "2024-03-05")
+        .map(java.time.LocalDate.parse(_).toEpochDay.toInt))
+    assert(spark.sql(s"SELECT id FROM $cat.m.local " +
+      "WHERE ts < TIMESTAMP_NTZ '2024-03-02 00:00:00' ORDER BY id")
+      .as[Long].collect().toSeq === Seq(1L, 3L))
+  }
+
+  test("a batch overwrite refuses when its branch moved after planning") {
+    val spark0 = spark
+    import spark0.implicits._
+    val loc = tmp()
+    val df = (1L to 10L).map(i => (i, s"v$i")).toDF("k", "v")
+    IcebergWrite.create(spark, loc, df)
+    // stage one row the way the executors do, against the head the
+    // target loaded; `moved` lands a commit before the overwrite does
+    def overwrite(moved: Boolean): Unit = {
+      val target = new graft.spark.IcebergWriteTarget(loc)
+      val staging = TableIO.path(loc, s"stage-${java.util.UUID.randomUUID()}")
+      val w = target.writerFactory(df.schema, staging.toString).createWriter(0, 0L)
+      w.write(org.apache.spark.sql.catalyst.InternalRow(
+        100L, org.apache.spark.unsafe.types.UTF8String.fromString("x")))
+      w.commit()
+      if (moved) IcebergWrite.append(spark, loc, Seq((11L, "v11")).toDF("k", "v"))
+      target.commitWrite(staging, truncate = true, "main", None)
+    }
+    intercept[java.util.ConcurrentModificationException](overwrite(moved = true))
+    assert(IcebergTable.load(spark, loc).scan().count() === 11L)
+    overwrite(moved = false)
+    assert(IcebergTable.load(spark, loc).scan().select("k")
+      .as[Long].collect().toSeq === Seq(100L))
+  }
 }

@@ -149,7 +149,8 @@ class ModelCheckSpec extends AnyFunSuite {
           }
         case 5 => // overwrite with a fresh batch
           val rows = batch(3 + rnd.nextInt(5))
-          IcebergWrite.overwrite(spark, loc, rows.toDF("k", "v").coalesce(1))
+          rows.toDF("k", "v").coalesce(1)
+            .write.format("graft").mode("overwrite").save(loc)
           model = rows.toMap
           record()
         case 6 if model.nonEmpty => // positional delete of one live row

@@ -164,9 +164,9 @@ class OverwriteModesSpec extends AnyFunSuite {
       Seq((1L, "d1")).toDF("k", "day"), Seq(("day", "identity")))
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {
-      // dynamic overwrite needs a V2 batch write; the interop table
-      // writes through the V1 bridge — the statement must fail at
-      // analysis (no capability), never fall back to a full truncate
+      // the interop table's V2 batch write offers no dynamic
+      // overwrite — the statement must fail at analysis (no
+      // OVERWRITE_DYNAMIC capability), never fall back to a truncate
       val e = intercept[Exception] {
         spark.sql("INSERT OVERWRITE owm.db.ice_dyn VALUES (9, 'd9')")
       }
@@ -175,6 +175,40 @@ class OverwriteModesSpec extends AnyFunSuite {
       assert(spark.sql("SELECT k FROM owm.db.ice_dyn").collect()
         .map(_.getLong(0)).toSeq === Seq(1L), "table must be untouched")
     } finally spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+  }
+
+  test("filter and partition overwrites refuse a branch, both formats untouched") {
+    val spark0 = spark
+    import spark0.implicits._
+    val graftRoot = mkDays("brg")
+    val gt = graft.table.GraftTable.load(spark, graftRoot)
+    gt.setRef("audit", gt.meta.currentSnapshotId.get)
+    val iceRoot = s"$wh/db/bri"
+    graft.table.iceberg.IcebergWrite.createWithSpec(spark, iceRoot,
+      Seq((1L, "d1", 1.0), (2L, "d1", 2.0), (3L, "d2", 3.0))
+        .toDF("k", "day", "v"), Seq(("day", "identity")))
+    graft.table.iceberg.IcebergMaintenance.setRef(iceRoot, "audit",
+      graft.table.iceberg.IcebergMetadata.load(iceRoot).currentSnapshotId.get)
+    def ks(root: String, branch: String): Seq[Long] =
+      spark.read.format("graft").option("branch", branch).load(root)
+        .select("k").as[Long].collect().sorted.toSeq
+    for ((name, root) <- Seq("brg" -> graftRoot, "bri" -> iceRoot)) {
+      val before = Seq("main", "audit").map(ks(root, _))
+      val byFilter = intercept[Exception] {
+        Seq((9L, "d1", 9.0)).toDF("k", "day", "v").writeTo(s"owm.db.$name")
+          .option("branch", "audit").overwrite($"day" === "d1")
+      }
+      assert(byFilter.getMessage.contains("branch 'audit'"), byFilter.getMessage)
+      if (name == "brg") {
+        val dynamic = intercept[Exception] {
+          Seq((8L, "d2", 8.0)).toDF("k", "day", "v").writeTo(s"owm.db.$name")
+            .option("branch", "audit").overwritePartitions()
+        }
+        assert(dynamic.getMessage.contains("branch 'audit'"), dynamic.getMessage)
+      }
+      assert(Seq("main", "audit").map(ks(root, _)) === before,
+        s"$name: a refused overwrite changed a branch")
+    }
   }
 
   test("overwrite by filter is one snapshot: old or new, never a mix") {

@@ -1181,7 +1181,7 @@ class StreamingSpec extends AnyFunSuite {
       "a skipped commit must not apply its property updates")
     assert(t.scan().count() === 2L)
     // the epoch's just-ingested files are reclaimed immediately (the
-    // commitStreamEpoch replayedInside behavior), not left as orphans
+    // Iceberg commitStagedWrite's replayedInside behavior), not orphans
     // for remove_orphan_files
     assert(dataFiles() === filesBefore,
       "a skipped commit must reclaim the files it ingested")
@@ -1270,8 +1270,8 @@ class StreamingSpec extends AnyFunSuite {
       n += 1
       val dir = new org.apache.hadoop.fs.Path(base, s"stage$n")
       rows.toDF("k").coalesce(1).write.parquet(dir.toString)
-      IcebergWrite.commitStreamEpoch(spark, loc, dir, q, e,
-        truncate = false)
+      IcebergWrite.commitStagedWrite(spark, loc, dir, truncate = false,
+        epoch = Some(graft.table.StreamEpoch(q, e)))
     }
     def ks(): Seq[Long] = IcebergTable.load(spark, loc).scan()
       .select("k").as[Long].collect().sorted.toSeq
@@ -1283,7 +1283,7 @@ class StreamingSpec extends AnyFunSuite {
     // the overwrite — the documented checkpoint-reuse hazard: a query
     // resuming the old checkpoint (same query-id) cannot re-land
     // epochs <= the stale high-water
-    IcebergWrite.overwrite(spark, loc, Seq.empty[Long].toDF("k"))
+    Seq.empty[Long].toDF("k").write.format("graft").mode("overwrite").save(loc)
     assert(IcebergMetadata.load(loc).properties
       .get("graft.streaming.epoch.qA") === Some("1"))
     assert(!epoch("qA", 1, Seq(3L)),

@@ -1015,6 +1015,38 @@ class TableCatalogSpec extends AnyFunSuite {
       .meta.sortOrder === Seq("zorder(k, v)"))
   }
 
+  test("CALL set_sort_order clusters future SQL writes [iceberg]") {
+    wh
+    val spark0 = spark
+    import spark0.implicits._
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_wh.proc")
+    val loc = s"$wh/proc/iso"
+    graft.table.iceberg.IcebergWrite.create(spark, loc,
+      Seq.empty[(Long, String)].toDF("k", "v"))
+    spark.sql(
+      "CALL graft_wh.system.set_sort_order(table => 'proc.iso', order => 'k')")
+    // an INSERT after evolution range-clusters: files disjoint on k
+    val parts0 = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try spark.sql("INSERT INTO graft_wh.proc.iso " +
+      "SELECT (id * 2654435761) % 4096 AS k, cast(id AS STRING) AS v " +
+      "FROM range(4096)")
+    finally {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      spark.conf.set("spark.sql.shuffle.partitions", parts0)
+    }
+    val ranges = graft.table.iceberg.IcebergTable.load(spark, loc)
+      .plannedFiles().flatMap(_._2.get("k"))
+      .map(st => (st.min.toLong, st.max.toLong)).sortBy(_._1)
+    assert(ranges.size > 1, s"expected multiple files, got $ranges")
+    ranges.sliding(2).foreach {
+      case Seq((_, hi), (lo2, _)) =>
+        assert(hi < lo2, s"sorted-write bounds overlap: $ranges")
+      case _ =>
+    }
+  }
+
   test("CALL procedures: expire / vacuum / rewrite / rollback / branch / tag") {
     wh
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_wh.proc")
