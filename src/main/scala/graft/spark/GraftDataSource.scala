@@ -35,34 +35,14 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     p
   }
 
-  // graft and real Iceberg share the metadata/vN.metadata.json +
-  // version-hint convention, so `Meta.exists` is true for BOTH; the
-  // dialect is sniffed STRUCTURALLY (snake_case vs the spec's
-  // kebab-case keys) — a graft table with corrupt metadata throws its
-  // real parse error instead of silently rerouting to the binary
-  // real-format reader. Same routing as GraftTableCatalog.loadTable.
-  private def isGraftTable(r: String): Boolean =
-    Meta.exists(r) && Meta.isGraftDialect(r)
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val r = root(options)
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     // a write to a not-yet-created table resolves the provider before
     // createRelation runs — report an empty schema instead of failing
-    if (isGraftTable(r)) Meta.load(r).schema
-    // a path holding REAL Iceberg metadata serves as an interop table
-    // (batch + incremental streaming), same routing as the catalog
-    else if (graft.table.iceberg.IcebergTable.exists(r))
-      graft.table.iceberg.IcebergMetadata.load(r).schema.toSpark
-    else StructType(Nil)
-  }
+    TableFormat.resolve(root(options)).fold(StructType(Nil))(_.schemaAt(None))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table = {
-    val p = properties.get("path")
-    if (!isGraftTable(p) && graft.table.iceberg.IcebergTable.exists(p))
-      new IcebergSparkTable(p)
-    else new GraftSparkTable(p)
-  }
+      properties: JMap[String, String]): Table =
+    GraftSparkTable.at(properties.get("path"))
 
   /** Write path for a root whose table cannot take a V2 batch write:
     * `df.write` goes through the one V2 write (TableWriteBuilder)
@@ -78,13 +58,14 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     val path = parameters.getOrElse("path",
       throw new IllegalArgumentException("graft sink requires a path"))
     val spark = data.sparkSession
-    val t =
-      if (isGraftTable(path)) GraftTable.load(spark, path)
-      else if (graft.table.iceberg.IcebergTable.exists(path))
+    val t = TableFormat.resolve(path) match {
+      case Some(_: TableFormat.GraftFormat) => GraftTable.load(spark, path)
+      case Some(_) =>
         throw new IllegalStateException(
           s"$path holds a real-format Iceberg table; the graft writer " +
             "cannot commit to it — use IcebergWrite for foreign tables")
-      else GraftTable.create(spark, path, data.schema)
+      case None => GraftTable.create(spark, path, data.schema)
+    }
     mode match {
       case org.apache.spark.sql.SaveMode.Append => t.append(data)
       case org.apache.spark.sql.SaveMode.Overwrite => t.overwrite(data)
@@ -102,103 +83,81 @@ class GraftDataSource extends TableProvider with DataSourceRegister
   }
 }
 
-class GraftSparkTable(root: String,
+/** The one DSv2 table for both formats, over the `format` a resolver
+  * found at `root` (None: no table yet, which only a first write
+  * creates). Reads, writes, SQL DELETE / UPDATE / MERGE and streaming
+  * go through the shared scan, write and row-level layers; the format
+  * supplies only what differs. A `pinnedSnapshot` is a time-travel pin
+  * (`VERSION AS OF` / `TIMESTAMP AS OF`). */
+class GraftSparkTable(root: String, format: Option[TableFormat],
     pinnedSnapshot: Option[Long] = None) extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
 
-  /** SQL UPDATE / MERGE INTO (and DELETEs SupportsDelete can't take):
-    * copy-on-write by default, merge-on-read by table property — see
-    * GraftWriteTarget. */
-  override def newRowLevelOperationBuilder(
-      info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
-      : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    RowLevelOperations.builder(info, () => new GraftWriteTarget(root))
+  private def tableFormat: TableFormat =
+    format.getOrElse(throw new IllegalStateException(s"no table at $root"))
 
-  /** Row-address metadata columns, the delta row id (Iceberg exposes
-    * the same pair as _file/_pos). Emitted by the scan on request via
-    * single-file partitions + raw stream-index counting. */
-  override def metadataColumns()
-      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    Array(GraftSparkTable.FileMetaCol, GraftSparkTable.PosMetaCol)
-  private lazy val meta = Meta.load(root)
-
-  /** SQL `DELETE FROM <catalog table> WHERE ...`: the analyzer pushes
-    * the condition as data-source filters; every translatable filter
-    * routes to GraftTable's copy-on-write delete (which keeps
-    * NULL-predicate rows per three-valued SQL semantics and prunes
-    * rewrite candidates by manifest stats). Untranslatable conditions
-    * make canDeleteWhere return false and the statement fails fast —
-    * better than a silent wrong delete. */
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    GraftSparkTable.translatable(filters)
-
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    val (cond, touched, _) = GraftSparkTable.overwriteByFilter(filters.toSeq)
-    val t = GraftTable.load(SparkSession.active, root)
-    // write.delete.mode=merge-on-read (Iceberg's table property):
-    // point deletes commit a position-delete FILE instead of
-    // rewriting every candidate data file — at 100 TB, CoW rewrite is
-    // the wrong default for small deletes, and this is how a user
-    // opts out per table (reference: table properties driving
-    // operation.rs delete modes)
-    if (t.meta.properties.get("write.delete.mode").contains("merge-on-read"))
-      t.deleteWhereMoRPositional(cond)
-    else t.delete(cond, touched.map(f =>
-      t.StatFilter(f._1, f._2, f._3)))
-  }
-
-  override def name(): String = s"graft.`$root`"
+  override def name(): String = s"${format.fold("graft")(_.kind)}.`$root`"
   override def schema(): StructType =
-    if (!Meta.exists(root)) StructType(Nil)
-    else pinnedSnapshot.flatMap(meta.snapshot)
-      // a time-travel pin reads with the SNAPSHOT's schema: after
-      // DROP COLUMN the old snapshot must still show the column
-      .flatMap(sn => meta.schemas.get(sn.schemaId))
-      .getOrElse(meta.schema)
+    format.fold(StructType(Nil))(_.schemaAt(pinnedSnapshot))
 
   /** BATCH_WRITE only once the table exists — creation-on-first-write
     * goes through the V1 provider, which knows the incoming schema. */
   override def capabilities(): java.util.Set[TableCapability] =
-    if (Meta.exists(root))
-      java.util.EnumSet.of(TableCapability.BATCH_READ,
-        TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
-        TableCapability.OVERWRITE_BY_FILTER,
-        TableCapability.OVERWRITE_DYNAMIC,
-        TableCapability.MICRO_BATCH_READ, TableCapability.STREAMING_WRITE)
-    else java.util.EnumSet.of(TableCapability.BATCH_READ)
+    format.fold[java.util.Set[TableCapability]](
+      java.util.EnumSet.of(TableCapability.BATCH_READ))(_.capabilities)
 
-  /** The table's partition transforms, in V2 terms (analyzer metadata;
-    * the scan's KeyGroupedPartitioning is what actually drives SPJ). */
+  /** The default spec's transforms in V2 terms (analyzer metadata:
+    * what makes `INSERT OVERWRITE ... PARTITION (col=...)` resolve and
+    * DESCRIBE show the layout; the scan's KeyGroupedPartitioning is
+    * what drives SPJ). */
   override def partitioning(): Array[Transform] =
-    if (!Meta.exists(root)) Array.empty
-    else meta.spec.map(RowTransform.toV2).toArray
+    format.fold(Array.empty[Transform])(_.spec.flatMap(RowTransform.toV2).toArray)
 
+  /** Row-address metadata columns, the delta row id (Iceberg's own
+    * Spark integration exposes the same pair). Emitted by the scan on
+    * request via single-file partitions + raw stream-index counting. */
+  override def metadataColumns()
+      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
+    Array(GraftSparkTable.FileMetaCol, GraftSparkTable.PosMetaCol)
+
+  override def canDeleteWhere(filters: Array[Filter]): Boolean =
+    tableFormat.canDeleteWhere(filters)
+  override def deleteWhere(filters: Array[Filter]): Unit = tableFormat.deleteWhere(filters)
+
+  /** SQL UPDATE / MERGE INTO (and DELETEs SupportsDelete can't take):
+    * each format's default mode, overridden by `write.<op>.mode`. */
+  override def newRowLevelOperationBuilder(
+      info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
+      : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
+    RowLevelOperations.builder(info, () => tableFormat.writeTarget)
+
+  /** `end-snapshot-id` alone pins that snapshot; with
+    * `start-snapshot-id` only rows appended in (start, end ?? current]
+    * are read — IO scales with the delta, not the table. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    import scala.jdk.CollectionConverters._
-    // incremental batch read: only rows appended in
-    // (start-snapshot-id, end-snapshot-id ?? current] — IO scales
-    // with the delta, not the table (appends-only ranges enforced)
-    val endSnapshot = Option(options.get("end-snapshot-id")).map(_.toLong)
-    new TableScanBuilder(new GraftScanSource(root,
-      pinnedSnapshot.orElse(Option(options.get("snapshot")).map(_.toLong))
-        .orElse(endSnapshot),
-      Option(options.get("branch")),
-      Option(options.get("start-snapshot-id")).map(_.toLong)),
+    def opt(k: String) = Option(options.get(k))
+    new TableScanBuilder(tableFormat.scanSource(
+      pinnedSnapshot.orElse(opt("snapshot").map(_.toLong))
+        .orElse(opt("end-snapshot-id").map(_.toLong)),
+      opt("branch"), opt("start-snapshot-id").map(_.toLong)),
       options = options.asCaseSensitiveMap().asScala.toMap)
   }
 
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new TableWriteBuilder(new GraftWriteTarget(root), info)
+    new TableWriteBuilder(tableFormat.writeTarget, info)
 }
 
 object GraftSparkTable {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions.{col, lit}
+
+  /** The table at `root`, whichever format it is in. */
+  def at(root: String): GraftSparkTable = new GraftSparkTable(root, TableFormat.resolve(root))
 
   val FileColName = "_file"
   val PosColName = "_pos"

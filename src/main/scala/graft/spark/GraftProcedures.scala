@@ -109,20 +109,18 @@ object GraftProcedures {
           val name = input.getUTF8String(0).toString
           val loc = input.getUTF8String(1).toString
           // graft AND real-format tables both register: the catalog's
-          // loadTable follows the pointer and routes by dialect
-          val graftDialect = Meta.exists(loc) && Meta.isGraftDialect(loc)
-          require(graftDialect || IcebergTable.exists(loc),
-            s"no table metadata under $loc")
+          // loadTable follows the pointer and routes by format
+          val format = TableFormat.resolve(loc).getOrElse(
+            throw new IllegalArgumentException(s"no table metadata under $loc"))
+          val snap = format.currentSnapshotId.getOrElse(-1L)
           // REST mode: the registration belongs to the SERVER — the
           // spec's POST /namespaces/{ns}/register imports the current
           // metadata file; data stays at the original location
           restRegister.foreach { reg =>
-            require(!graftDialect,
+            require(!format.isInstanceOf[TableFormat.GraftFormat],
               "register_table over REST serves real-format tables " +
                 "(the protocol imports a metadata.json)")
             reg(name, loc)
-            val snap = IcebergMetadata.load(loc)
-              .currentSnapshotId.getOrElse(-1L)
             return result(StructType(Seq(
               StructField("registered", StringType),
               StructField("current_snapshot_id", LongType))),
@@ -139,9 +137,6 @@ object GraftProcedures {
           graft.table.TableIO.mkdirs(graft.table.TableIO.path(conv))
           graft.table.TableIO.writeString(graft.table.TableIO.path(
             conv + "/" + GraftTableCatalog.LocationPointer), loc)
-          val snap =
-            if (graftDialect) Meta.load(loc).currentSnapshotId.getOrElse(-1L)
-            else IcebergMetadata.load(loc).currentSnapshotId.getOrElse(-1L)
           result(outputSchema0, Seq(row(utf8(loc), snap)))
         }
         private val outputSchema0 = StructType(Seq(

@@ -6,7 +6,6 @@ import org.apache.spark.sql.connector.catalog.{Identifier, StagedTable,
 import org.apache.spark.sql.connector.distributions.Distribution
 import org.apache.spark.sql.connector.write.{BatchWrite, LogicalWriteInfo,
   RequiresDistributionAndOrdering, Write, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.GraftConnectorShim
 import org.apache.spark.sql.types.StructType
 
 import graft.table.{GraftTable, Meta, TableIO}
@@ -22,11 +21,11 @@ import graft.table.{GraftTable, Meta, TableIO}
   * final path: the rename IS the publish, so a failed or aborted CTAS
   * leaves no half-written table and a concurrent creator loses cleanly.
   *
-  * REPLACE TABLE [AS SELECT] keeps the table's identity and history:
-  * the staged output lands under the live root unreferenced, and ONE
-  * metadata commit (GraftTable.replaceTable) installs the new schema,
-  * spec, properties, and a "replace" snapshot — readers see the old
-  * table or the new one, never a mix, and pre-replace snapshots stay
+  * REPLACE TABLE [AS SELECT] keeps the table's identity and history,
+  * on both formats: the executors stage the new rows under the live
+  * root, and ONE metadata commit installs the new schema, spec,
+  * properties, and a "replace" snapshot — readers see the old table or
+  * the new one, never a mix, and pre-replace snapshots stay
   * time-travelable until expire_snapshots.
   *
   * Crash cleanup: replace staging dirs live under the table root as
@@ -38,7 +37,8 @@ import graft.table.{GraftTable, Meta, TableIO}
   * listing in the meantime, so leaking one costs only disk). */
 class GraftStagedCreateTable(stagingRoot: String, finalPath: String,
     ident: Identifier, orReplace: Boolean)
-  extends GraftSparkTable(stagingRoot) with StagedTable {
+  extends GraftSparkTable(stagingRoot, TableFormat.resolve(stagingRoot))
+    with StagedTable {
 
   override def name(): String = ident.toString
 
@@ -63,7 +63,7 @@ class GraftStagedCreateTable(stagingRoot: String, finalPath: String,
       // field ids the incumbent has never used. Views and foreign
       // tables still give way by delete-then-rename — a cross-
       // dialect swap is not expressible as a metadata commit.
-      if (Meta.exists(finalPath) && Meta.isGraftDialect(finalPath)) {
+      if (TableFormat.resolve(finalPath).exists(_.isInstanceOf[TableFormat.GraftFormat])) {
         val spark = SparkSession.active
         val sm = Meta.load(stagingRoot)
         val df = spark.read.format("graft").load(stagingRoot)
@@ -89,23 +89,27 @@ class GraftStagedCreateTable(stagingRoot: String, finalPath: String,
     TableIO.delete(TableIO.path(stagingRoot), recursive = true)
 }
 
-/** Staged REPLACE on an existing graft table: Spark writes the new
-  * rows through this handle into a stage dir under the LIVE root
-  * (written with the NEW schema's field ids — allocated above every
-  * retired id, so they land in the parquet footers exactly as the
-  * post-replace schema resolves them); the inner BatchWrite commit
-  * only finishes staging, and `commitStagedChanges` swaps the whole
-  * table state in one metadata commit. */
-class GraftStagedReplaceTable(root: String, ident: Identifier,
-    schemaWithIds: StructType, spec: Seq[Meta.PartitionField],
-    props: Map[String, String], baseMaxFieldId: Int)
+/** Staged REPLACE on an existing table of either format: Spark writes
+  * the new rows through this handle into a stage dir under the LIVE
+  * root, laid out by the NEW spec and properties (the replacement
+  * defines no sort order) and written with the NEW schema's field ids
+  * (allocated above every retired id, so they land in the parquet
+  * footers exactly as the post-replace schema resolves them). The inner
+  * BatchWrite commit only finishes staging, `commitStagedChanges` swaps
+  * the whole table state in one metadata commit — over a REST catalog
+  * one protocol commit, CAS'd server-side — and `abortStagedChanges`
+  * deletes the staged files, so a failure anywhere between the write
+  * and the swap leaves the table as it was. A REPLACE TABLE without
+  * AS SELECT never writes; the swap then installs empty content. */
+class StagedReplaceTable(root: String, ident: Identifier,
+    replacement: StagedReplacement)
   extends Table with StagedTable with SupportsWrite {
 
   private val staging = TableIO.path(root,
     s"stage-rtas-${java.util.UUID.randomUUID().toString.take(8)}")
 
   override def name(): String = ident.toString
-  override def schema(): StructType = schemaWithIds
+  override def schema(): StructType = replacement.schema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE)
@@ -118,83 +122,19 @@ class GraftStagedReplaceTable(root: String, ident: Identifier,
       override def truncate(): WriteBuilder = this
       override def build(): Write = new Write
         with RequiresDistributionAndOrdering {
-        // laid out by the NEW spec and properties (the replacement
-        // defines no sort order)
-        private val layout = GraftWriteLayout(spec, Seq.empty, props)
-        override def requiredDistribution(): Distribution = layout.distribution
+        override def requiredDistribution(): Distribution =
+          replacement.layout.distribution
         override def requiredOrdering()
             : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-          layout.ordering
+          replacement.layout.ordering
         override def toBatch: BatchWrite = new StagedBatchWrite(staging,
-          GraftWriterFactory(_, GraftConnectorShim.prepareParquetWriteConf(
-              SparkSession.active, schemaWithIds),
-            RowTransform.forSpec(spec, schemaWithIds)),
-          _ => ()) // staging only — the swap is commitStagedChanges
+          replacement.writerFactory(info.schema(), _), replacement.stage)
       }
     }
 
-  override def commitStagedChanges(): Unit =
-    GraftTable.load(SparkSession.active, root)
-      .replaceTable(staging, schemaWithIds, spec, props, baseMaxFieldId)
+  override def commitStagedChanges(): Unit = replacement.publish(staging)
 
-  override def abortStagedChanges(): Unit =
-    TableIO.delete(staging, recursive = true)
-}
-
-/** Staged REPLACE on a REAL-format Iceberg table (adopted warehouse
-  * tables and every REST-catalog table): the V1Write bridge STAGES
-  * the planned DataFrame's content — data files land in data/
-  * unreferenced, invisible to every reader — and only
-  * `commitStagedChanges` publishes schema + spec + properties +
-  * 'replace' snapshot in ONE metadata commit; over a REST catalog
-  * that commit rides the update-table protocol, so the swap is CAS'd
-  * server-side too. A failure anywhere between the write and the
-  * staged commit therefore rolls back: `abortStagedChanges` deletes
-  * the staged files and no protocol commit was ever issued. A
-  * REPLACE TABLE without AS SELECT never writes;
-  * commitStagedChanges then runs the same commit with empty
-  * content. */
-class IcebergStagedReplaceTable(location: String, ident: Identifier,
-    newSchema: StructType, partitions: Seq[(String, String)],
-    props: Map[String, String])
-  extends Table with StagedTable with SupportsWrite {
-
-  @volatile private var staged
-      : Option[graft.table.iceberg.IcebergWrite.StagedReplace] = None
-
-  override def name(): String = ident.toString
-  override def schema(): StructType = newSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.V1_BATCH_WRITE,
-      TableCapability.TRUNCATE)
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder
-      with org.apache.spark.sql.connector.write.SupportsTruncate {
-      override def truncate(): WriteBuilder = this
-      override def build(): Write =
-        new org.apache.spark.sql.connector.write.V1Write {
-          override def toInsertableRelation
-              : org.apache.spark.sql.sources.InsertableRelation =
-            (data: org.apache.spark.sql.DataFrame, _: Boolean) => {
-              staged = Some(graft.table.iceberg.IcebergWrite
-                .stageReplaceTable(
-                  data.sparkSession, location, data, partitions, props))
-            }
-        }
-    }
-
-  override def commitStagedChanges(): Unit = staged match {
-    case Some(s) => s.commit()
-    case None =>
-      val spark = SparkSession.active
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], newSchema)
-      graft.table.iceberg.IcebergWrite.replaceTable(
-        spark, location, empty, partitions, props)
-  }
-
-  override def abortStagedChanges(): Unit = staged.foreach(_.abort())
+  override def abortStagedChanges(): Unit = replacement.abort(staging)
 }
 
 /** REST staged create (the protocol's stage-create flag,
@@ -209,7 +149,8 @@ class IcebergStagedReplaceTable(location: String, ident: Identifier,
   * was ever visible. */
 class IcebergStagedCreateTable(stagedRoot: String, ident: Identifier,
     base: String, ns: String)
-  extends IcebergSparkTable(stagedRoot) with StagedTable {
+  extends GraftSparkTable(stagedRoot, TableFormat.resolve(stagedRoot))
+    with StagedTable {
 
   override def name(): String = ident.toString
 

@@ -186,15 +186,15 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
         case None =>
           resolveRoot((warehouse +: parts).mkString("/"))
       }
-      // same dialect routing as loadTable: graft metadata parses →
-      // graft table; otherwise a real-format metadata dir is an
-      // ADOPTED foreign table and maintenance routes to the
+      // same format routing as loadTable: a graft table, or an
+      // ADOPTED real-format table whose maintenance routes to the
       // IcebergMaintenance / IcebergWrite machinery
-      if (Meta.exists(root) && Meta.isGraftDialect(root))
-        Right(GraftTable.load(SparkSession.active, root))
-      else if (graft.table.iceberg.IcebergTable.exists(root))
-        Left(root)
-      else throw missing
+      TableFormat.resolve(root) match {
+        case Some(_: TableFormat.GraftFormat) =>
+          Right(GraftTable.load(SparkSession.active, root))
+        case Some(_) => Left(root)
+        case None => throw missing
+      }
     }, restBase = restBase, restRegister = restBase.map { base => (tableName, loc) =>
       val parts = tableName.split('.')
       require(parts.length == 2,
@@ -314,7 +314,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
     if (restBase.isDefined) {
       val base = restBase.get
       restRootOf(ident) match {
-        case Some(r) => return new IcebergSparkTable(r)
+        case Some(r) => return GraftSparkTable.at(r)
         case None =>
           // a MATERIALIZED view's identifier serves its storage table
           // (reads cost O(materialization)); plain views resolve via
@@ -326,7 +326,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
                 val (_, storage, _, _, _) = IcebergRestClient
                   .loadMaterializedView(base, restNs(ident.namespace()),
                     ident.name())
-                return new GraftSparkTable(storage)
+                return GraftSparkTable.at(storage)
               case _ =>
             }
           }
@@ -363,21 +363,16 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
       }
     }
     val root = tableRoot(ident)
-    // graft and real Iceberg share the metadata/vN.metadata.json +
-    // version-hint convention; the metadata dialect tells them apart
-    if (Meta.exists(root) && Meta.isGraftDialect(root))
-      new GraftSparkTable(root)
-    // a directory holding REAL Iceberg metadata serves as a full
-    // interop table: standard SQL over any engine's Iceberg output —
-    // reads (manifest-pruned MoR scans), INSERT INTO / OVERWRITE
-    // (IcebergWrite commits real snapshots), and row-level
-    // DELETE / UPDATE / MERGE (merge-on-read delta writes)
-    else if (graft.table.iceberg.IcebergTable.exists(root))
-      new IcebergSparkTable(root)
+    // a graft table, or a directory holding REAL Iceberg metadata,
+    // which serves as a full interop table: standard SQL over any
+    // engine's Iceberg output — reads, INSERT INTO / OVERWRITE and
+    // row-level DELETE / UPDATE / MERGE
+    val format = TableFormat.resolve(root)
+    if (format.isDefined) new GraftSparkTable(root, format)
     // a MATERIALIZED view's identifier serves its storage table;
     // plain views resolve via the GraftViewRead rule instead
     else if (graft.table.Views.mvExists(root))
-      new GraftSparkTable(graft.table.Views.mvStorageRoot(root))
+      GraftSparkTable.at(graft.table.Views.mvStorageRoot(root))
     else {
       // metadata tables (Spark-Iceberg UX): `SELECT * FROM cat.ns.t.files
       // / .snapshots / .history` — the trailing name selects the
@@ -402,136 +397,45 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
             kind == "position_deletes")) {
         val parentRoot =
           resolveRoot((warehouse +: ident.namespace().toSeq).mkString("/"))
-        if (Meta.exists(parentRoot) && Meta.isGraftDialect(parentRoot))
-          return if (kind == "position_deletes")
-            new GraftPositionDeletesTable(parentRoot)
-          else new GraftMetadataSparkTable(parentRoot, kind)
         // adopted real-format tables serve the same metadata views
         // (rendered from their manifest lists; schemas identical) —
         // including the data-scale position_deletes content table
-        if (graft.table.iceberg.IcebergTable.exists(parentRoot))
-          return if (kind == "position_deletes")
-            new GraftPositionDeletesTable(parentRoot,
-              GraftPositionDeletesTable.icebergFiles)
-          else new GraftMetadataSparkTable(parentRoot, kind,
-            IcebergMetadataRows.rowsOf)
+        TableFormat.resolve(parentRoot).foreach {
+          case _: TableFormat.GraftFormat =>
+            return if (kind == "position_deletes")
+              new GraftPositionDeletesTable(parentRoot)
+            else new GraftMetadataSparkTable(parentRoot, kind)
+          case _ =>
+            return if (kind == "position_deletes")
+              new GraftPositionDeletesTable(parentRoot,
+                GraftPositionDeletesTable.icebergFiles)
+            else new GraftMetadataSparkTable(parentRoot, kind,
+              IcebergMetadataRows.rowsOf)
+        }
       }
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
     }
   }
 
+  private def loadFormat(ident: Identifier): TableFormat =
+    TableFormat.resolve(tableRoot(ident)).getOrElse(
+      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident))
+
   /** SQL time travel: `SELECT ... FROM cat.ns.t VERSION AS OF <id>` —
     * or a branch/tag NAME, which pins that ref's current snapshot
-    * (Iceberg's VERSION AS OF 'branch'). */
+    * (Iceberg's VERSION AS OF 'branch'). Both formats. */
   override def loadTable(ident: Identifier, version: String): Table = {
-    val root = tableRoot(ident)
-    // graft and real Iceberg share the version-hint convention; the
-    // metadata dialect tells them apart (same check as loadTable(ident))
-    val graftMeta =
-      if (Meta.exists(root) && Meta.isGraftDialect(root))
-        Some(Meta.load(root)) else None
-    graftMeta match {
-      case Some(meta) =>
-        val snapId = version.toLongOption.getOrElse(
-          meta.refs.getOrElse(version,
-            throw new IllegalArgumentException(
-              s"'$version' is neither a snapshot id nor a ref of $ident")))
-        require(meta.snapshot(snapId).isDefined,
-          s"no snapshot $snapId of $ident (expired?)")
-        new GraftSparkTable(root, pinnedSnapshot = Some(snapId))
-      // time travel works on FOREIGN Iceberg interop tables too:
-      // snapshot id or a ref (branch/tag) name from their metadata
-      case None if graft.table.iceberg.IcebergTable.exists(root) =>
-        val ice = graft.table.iceberg.IcebergMetadata.load(root)
-        val snapId = version.toLongOption.getOrElse(
-          ice.refs.getOrElse(version,
-            throw new IllegalArgumentException(
-              s"'$version' is neither a snapshot id nor a ref of $ident")))
-        require(ice.snapshot(snapId).isDefined,
-          s"no snapshot $snapId of $ident (expired?)")
-        new IcebergSparkTable(root, pinnedSnapshot = Some(snapId))
-      case None =>
-        throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
-    }
+    val format = loadFormat(ident)
+    new GraftSparkTable(format.root, Some(format),
+      Some(format.versionSnapshot(version, ident.toString)))
   }
 
-  /** SQL time travel by time: `... TIMESTAMP AS OF '2024-01-01 ...'`.
-    * Resolves to the latest snapshot committed at or before the
-    * timestamp (micros since epoch, per the V2 contract). */
+  /** SQL time travel by time: `... TIMESTAMP AS OF '2024-01-01 ...'`,
+    * resolved by the format's rule (see TableFormat.snapshotAt). */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
-    val root = tableRoot(ident)
-    val tsMs = timestampMicros / 1000L
-    val graftMeta =
-      if (Meta.exists(root) && Meta.isGraftDialect(root))
-        Some(Meta.load(root)) else None
-    graftMeta match {
-      case Some(meta) =>
-        val snap = meta.snapshots
-          .filter(_.timestampMs <= tsMs)
-          .sortBy(_.timestampMs).lastOption.getOrElse(
-            throw new IllegalArgumentException(
-              s"no snapshot of $ident at or before timestamp $tsMs"))
-        new GraftSparkTable(root, pinnedSnapshot = Some(snap.snapshotId))
-      case None if graft.table.iceberg.IcebergTable.exists(root) =>
-        val im = graft.table.iceberg.IcebergMetadata.load(root)
-        // spec semantics: resolve through the snapshot-log — the
-        // snapshot that was CURRENT at that instant (after a rollback
-        // the latest-committed and the then-current snapshot differ,
-        // and the log is the record the spec says to consult);
-        // log-less adopted tables fall back to commit timestamps
-        val snapId =
-          if (im.snapshotLog.nonEmpty)
-            im.snapshotLog.filter(_.timestampMs <= tsMs)
-              .lastOption.map(_.snapshotId)
-          else im.snapshots.filter(_.timestampMs <= tsMs)
-            .sortBy(_.timestampMs).lastOption.map(_.snapshotId)
-        new IcebergSparkTable(root, pinnedSnapshot = Some(snapId.getOrElse(
-          throw new IllegalArgumentException(
-            s"no snapshot of $ident at or before timestamp $tsMs"))))
-      case None =>
-        throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
-    }
-  }
-
-  private def toPartitionField(t: Transform): Meta.PartitionField = {
-    val c = t.references()(0).fieldNames().mkString(".")
-    t.name() match {
-      case "identity" => Meta.PartitionField(c, "identity", s"_p_$c")
-      case "bucket" =>
-        val n = t.arguments().collectFirst {
-          case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-            l.value().toString.toInt
-        }.getOrElse(throw new IllegalArgumentException("bucket needs a count"))
-        Meta.PartitionField(c, s"bucket[$n]", s"_p_${c}_bucket")
-      case "years" => Meta.PartitionField(c, "year", s"_p_${c}_year")
-      case "months" => Meta.PartitionField(c, "month", s"_p_${c}_month")
-      case "days" => Meta.PartitionField(c, "day", s"_p_${c}_day")
-      case "hours" => Meta.PartitionField(c, "hour", s"_p_${c}_hour")
-      case other =>
-        throw new UnsupportedOperationException(s"unsupported transform $other")
-    }
-  }
-
-  /** A Spark V2 transform as the Iceberg transform string the REST
-    * create request carries (spec/partition.rs transform names). */
-  private def toIceTransform(t: Transform): (String, String) = {
-    val c = t.references()(0).fieldNames().mkString(".")
-    def intArg: Int = t.arguments().collectFirst {
-      case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-        l.value().toString.toInt
-    }.getOrElse(throw new IllegalArgumentException(
-      s"${t.name()} needs an integer argument"))
-    t.name() match {
-      case "identity" => (c, "identity")
-      case "bucket" => (c, s"bucket[$intArg]")
-      case "truncate" => (c, s"truncate[$intArg]")
-      case "years" => (c, "year")
-      case "months" => (c, "month")
-      case "days" => (c, "day")
-      case "hours" => (c, "hour")
-      case other =>
-        throw new UnsupportedOperationException(s"unsupported transform $other")
-    }
+    val format = loadFormat(ident)
+    new GraftSparkTable(format.root, Some(format),
+      Some(format.timestampSnapshot(timestampMicros, ident.toString)))
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -546,7 +450,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
           throw new org.apache.spark.sql.catalyst.analysis
             .TableAlreadyExistsException(ident)
         IcebergRestClient.createTable(base, ns, ident.name(), schema,
-          partitions.toSeq.map(toIceTransform),
+          partitions.toSeq.map(TableFormat.toIceTransform),
           properties.asScala.toMap - "owner" - "provider")
         return loadTable(ident)
       case None =>
@@ -555,9 +459,9 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
     if (Meta.exists(root) || graft.table.Views.viewExists(root))
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
     GraftTable.create(SparkSession.active, root, schema,
-      spec = partitions.toSeq.map(toPartitionField),
+      spec = partitions.toSeq.map(TableFormat.toPartitionField),
       properties = properties.asScala.toMap - "owner" - "provider")
-    new GraftSparkTable(root)
+    GraftSparkTable.at(root)
   }
 
   // ---- staged CTAS / RTAS (StagingTableCatalog) ------------------------
@@ -578,7 +482,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
           .TableAlreadyExistsException(ident)
       new IcebergStagedCreateTable(
         IcebergRestClient.createTableStaged(base, ns, ident.name(), schema,
-          partitions.toSeq.map(toIceTransform),
+          partitions.toSeq.map(TableFormat.toIceTransform),
           properties.asScala.toMap - "owner" - "provider"),
         ident, base, ns)
     case None =>
@@ -592,52 +496,32 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
 
   override def stageReplace(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: JMap[String, String])
-      : org.apache.spark.sql.connector.catalog.StagedTable = restBase match {
-    case Some(base) =>
-      // the replace commit rides the update-table protocol through the
-      // registered route (restRootOf), so the server CAS arbitrates it
-      val root = restRootOf(ident).getOrElse(
-        throw new org.apache.spark.sql.catalyst.analysis
-          .NoSuchTableException(ident))
-      new IcebergStagedReplaceTable(root, ident, schema,
-        partitions.toSeq.map(toIceTransform),
-        properties.asScala.toMap - "owner" - "provider")
-    case None =>
-      val root = tableRoot(ident)
-      if (!Meta.exists(root) &&
-          !graft.table.iceberg.IcebergTable.exists(root))
-        throw new org.apache.spark.sql.catalyst.analysis
-          .NoSuchTableException(ident)
-      stagedReplace(ident, schema, partitions, properties)
-  }
+      : org.apache.spark.sql.connector.catalog.StagedTable =
+    // over REST the replace commit rides the update-table protocol
+    // through the registered route (restRootOf), so the server CAS
+    // arbitrates it
+    stagedReplace(ident, loadFormat(ident), schema, partitions, properties)
 
   override def stageCreateOrReplace(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: JMap[String, String])
-      : org.apache.spark.sql.connector.catalog.StagedTable = restBase match {
-    case Some(base) =>
-      restRootOf(ident) match {
-        case Some(root) =>
-          new IcebergStagedReplaceTable(root, ident, schema,
-            partitions.toSeq.map(toIceTransform),
-            properties.asScala.toMap - "owner" - "provider")
-        case None =>
+      : org.apache.spark.sql.connector.catalog.StagedTable = {
+    val root =
+      if (restBase.isDefined) restRootOf(ident)
+      else Some(resolveRoot(conventionalPath(ident)))
+    root.flatMap(TableFormat.resolve) match {
+      case Some(format) => stagedReplace(ident, format, schema, partitions, properties)
+      case None => restBase match {
+        case Some(base) =>
           val ns = restNs(ident.namespace())
           new IcebergStagedCreateTable(
             IcebergRestClient.createTableStaged(base, ns, ident.name(),
-              schema, partitions.toSeq.map(toIceTransform),
+              schema, partitions.toSeq.map(TableFormat.toIceTransform),
               properties.asScala.toMap - "owner" - "provider"),
             ident, base, ns)
+        case None =>
+          stagedCreate(ident, schema, partitions, properties, orReplace = true)
       }
-    case None =>
-      val root = resolveRoot(conventionalPath(ident))
-      if (Meta.exists(root) && Meta.isGraftDialect(root))
-        stagedReplace(ident, schema, partitions, properties)
-      else if (graft.table.iceberg.IcebergTable.exists(root))
-        new IcebergStagedReplaceTable(root, ident, schema,
-          partitions.toSeq.map(toIceTransform),
-          properties.asScala.toMap - "owner" - "provider")
-      else
-        stagedCreate(ident, schema, partitions, properties, orReplace = true)
+    }
   }
 
   private def stagedCreate(ident: Identifier, schema: StructType,
@@ -651,93 +535,27 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
       s".stage-${ident.name()}-${java.util.UUID.randomUUID().toString.take(8)}")
       .mkString("/")
     GraftTable.create(SparkSession.active, stagingRoot, schema,
-      spec = partitions.toSeq.map(toPartitionField),
+      spec = partitions.toSeq.map(TableFormat.toPartitionField),
       properties = properties.asScala.toMap - "owner" - "provider")
     new GraftStagedCreateTable(stagingRoot, conventionalPath(ident), ident,
       orReplace)
   }
 
-  private def stagedReplace(ident: Identifier, schema: StructType,
-      partitions: Array[Transform], properties: JMap[String, String])
-      : org.apache.spark.sql.connector.catalog.StagedTable = {
-    val root = tableRoot(ident)
-    // ADOPTED real-format tables replace through the interop writer
-    // (one commitRetry metadata commit, history retained)
-    if (!(Meta.exists(root) && Meta.isGraftDialect(root)))
-      return new IcebergStagedReplaceTable(root, ident, schema,
-        partitions.toSeq.map(toIceTransform),
-        properties.asScala.toMap - "owner" - "provider")
-    val m = Meta.load(root)
-    // ids for the replacement schema allocate above every id any
-    // schema version ever used — the staged parquet carries them, and
-    // the commit refuses if a concurrent DDL moved the watermark
-    val base = Meta.maxFieldId(m.schemas.values)
-    new GraftStagedReplaceTable(root, ident,
-      Meta.withFieldIds(Meta.stripFieldIds(schema), base + 1),
-      partitions.toSeq.map(toPartitionField),
-      properties.asScala.toMap - "owner" - "provider", base)
-  }
+  private def stagedReplace(ident: Identifier, format: TableFormat,
+      schema: StructType, partitions: Array[Transform],
+      properties: JMap[String, String])
+      : org.apache.spark.sql.connector.catalog.StagedTable =
+    new StagedReplaceTable(format.root, ident, format.stageReplace(schema,
+      partitions.toSeq, properties.asScala.toMap - "owner" - "provider"))
 
+  /** ALTER TABLE on either format: ADD / DROP / RENAME COLUMN, ALTER
+    * COLUMN TYPE and SET / UNSET TBLPROPERTIES (how a user opts a table
+    * into another row-level mode). New columns get new ids; old
+    * snapshots keep their shape and scans null-fill older files. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
-    val root = tableRoot(ident)
-    // ADOPTED real-format tables: ALTER routes to the interop
-    // machinery — ADD COLUMN registers an evolved schema (new ids,
-    // old snapshots keep their shape, scans null-fill older files;
-    // reference: transaction add_schema) and SET/UNSET TBLPROPERTIES
-    // commit property updates (update_properties) — this is also how
-    // a user opts an adopted table into copy-on-write row-level mode
-    if (!(Meta.exists(root) && Meta.isGraftDialect(root)) &&
-        graft.table.iceberg.IcebergTable.exists(root)) {
-      changes.foreach {
-        case a: TableChange.AddColumn if a.fieldNames().length == 1 =>
-          // a REQUIRED new column is unsatisfiable for existing rows
-          // (older files null-fill it) — refuse rather than silently
-          // registering it as optional, like Iceberg's add-column rule
-          if (!a.isNullable)
-            throw new UnsupportedOperationException(
-              s"cannot add NOT NULL column ${a.fieldNames()(0)}: " +
-                "existing rows have no value for it; add it nullable")
-          graft.table.iceberg.IcebergWrite.addColumns(root,
-            StructType(Seq(org.apache.spark.sql.types.StructField(
-              a.fieldNames()(0), a.dataType()))))
-        case d: TableChange.DeleteColumn if d.fieldNames().length == 1 =>
-          graft.table.iceberg.IcebergWrite.dropColumn(root, d.fieldNames()(0))
-        case r: TableChange.RenameColumn if r.fieldNames().length == 1 =>
-          graft.table.iceberg.IcebergWrite.renameColumn(
-            root, r.fieldNames()(0), r.newName())
-        case u: TableChange.UpdateColumnType if u.fieldNames().length == 1 =>
-          graft.table.iceberg.IcebergWrite.updateColumnType(
-            root, u.fieldNames()(0), u.newDataType())
-        case p: TableChange.SetProperty =>
-          graft.table.iceberg.IcebergMetadata.commitRetry(root)(m =>
-            m.copy(properties = m.properties + (p.property() -> p.value())))
-        case p: TableChange.RemoveProperty =>
-          graft.table.iceberg.IcebergMetadata.commitRetry(root)(m =>
-            m.copy(properties = m.properties - p.property()))
-        case other => throw new UnsupportedOperationException(
-          s"unsupported change on a real-format Iceberg table: $other")
-      }
-      return new IcebergSparkTable(root)
-    }
-    val t = GraftTable.load(SparkSession.active, root)
-    changes.foreach {
-      case a: TableChange.AddColumn if a.fieldNames().length == 1 =>
-        t.addColumns(StructType(Seq(
-          org.apache.spark.sql.types.StructField(a.fieldNames()(0), a.dataType()))))
-      case d: TableChange.DeleteColumn if d.fieldNames().length == 1 =>
-        t.dropColumn(d.fieldNames()(0))
-      case r: TableChange.RenameColumn if r.fieldNames().length == 1 =>
-        t.renameColumn(r.fieldNames()(0), r.newName())
-      case u: TableChange.UpdateColumnType if u.fieldNames().length == 1 =>
-        t.updateColumnType(u.fieldNames()(0), u.newDataType())
-      case p: TableChange.SetProperty =>
-        t.updateProperties(Map(p.property() -> p.value()))
-      case p: TableChange.RemoveProperty =>
-        t.removeProperties(Seq(p.property()))
-      case other =>
-        throw new UnsupportedOperationException(s"unsupported change $other")
-    }
-    new GraftSparkTable(root)
+    val format = loadFormat(ident)
+    format.alter(changes)
+    GraftSparkTable.at(format.root)
   }
 
   override def dropTable(ident: Identifier): Boolean = {

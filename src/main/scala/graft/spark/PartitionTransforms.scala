@@ -97,22 +97,23 @@ case class RowTransform(name: String, kind: String, param: Int,
 object RowTransform {
 
   /** One Meta transform string -> V2 Transform expression mapping,
-    * shared by Table.partitioning() and the write distribution. */
+    * shared by Table.partitioning() and the write distribution. An
+    * unknown or void transform has none. */
   def toV2(pf: Meta.PartitionField)
-      : org.apache.spark.sql.connector.expressions.Transform = {
+      : Option[org.apache.spark.sql.connector.expressions.Transform] = {
     import org.apache.spark.sql.connector.expressions.Expressions
     pf.transform match {
-      case "identity" => Expressions.identity(pf.sourceColumn)
-      case t if t.startsWith("bucket[") => Expressions.bucket(
-        t.stripPrefix("bucket[").stripSuffix("]").toInt, pf.sourceColumn)
-      case t if t.startsWith("truncate[") => Expressions.apply("truncate",
+      case "identity" => Some(Expressions.identity(pf.sourceColumn))
+      case t if t.startsWith("bucket[") => Some(Expressions.bucket(
+        t.stripPrefix("bucket[").stripSuffix("]").toInt, pf.sourceColumn))
+      case t if t.startsWith("truncate[") => Some(Expressions.apply("truncate",
         Expressions.literal(t.stripPrefix("truncate[").stripSuffix("]").toInt),
-        Expressions.column(pf.sourceColumn))
-      case "year" => Expressions.years(pf.sourceColumn)
-      case "month" => Expressions.months(pf.sourceColumn)
-      case "day" => Expressions.days(pf.sourceColumn)
-      case "hour" => Expressions.hours(pf.sourceColumn)
-      case _ => Expressions.identity(pf.sourceColumn)
+        Expressions.column(pf.sourceColumn)))
+      case "year" => Some(Expressions.years(pf.sourceColumn))
+      case "month" => Some(Expressions.months(pf.sourceColumn))
+      case "day" => Some(Expressions.days(pf.sourceColumn))
+      case "hour" => Some(Expressions.hours(pf.sourceColumn))
+      case _ => None
     }
   }
 

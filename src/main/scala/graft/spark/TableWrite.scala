@@ -213,11 +213,11 @@ object GraftWriteLayout {
       m.properties)
 
   // truncate has no catalog function to resolve against; cluster by
-  // the (finer) source column instead — still a valid routing
+  // the (finer) source column instead — still a valid routing, as it is
+  // for a transform V2 cannot express
   private def partExpr(pf: Meta.PartitionField): V2Expr =
-    if (pf.transform.startsWith("truncate["))
-      Expressions.identity(pf.sourceColumn)
-    else RowTransform.toV2(pf)
+    if (pf.transform.startsWith("truncate[")) Expressions.identity(pf.sourceColumn)
+    else RowTransform.toV2(pf).getOrElse(Expressions.identity(pf.sourceColumn))
 }
 
 /** A graft table: copy-on-write by default (`write.<op>.mode` =

@@ -2397,19 +2397,16 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       requireLive = referenced.toSeq.map(p => manifestPath.getOrElse(p, p)))
   }
 
-  def updateProperties(entries: Map[String, String]): GraftTable = this.synchronized {
+  /** Set `entries` and remove `removals` in one metadata commit (the
+    * reference's update_properties handles both in one transaction op). */
+  def updateProperties(entries: Map[String, String],
+      removals: Seq[String] = Nil): GraftTable = this.synchronized {
     val m = meta
-    Meta.write(root, m.copy(properties = m.properties ++ entries))
+    Meta.write(root, m.copy(properties = m.properties ++ entries -- removals))
     this
   }
 
-  /** Remove table properties (the reference's update_properties handles
-    * both sets and removals in one transaction op). */
-  def removeProperties(keys: Seq[String]): GraftTable = this.synchronized {
-    val m = meta
-    Meta.write(root, m.copy(properties = m.properties -- keys))
-    this
-  }
+  def removeProperties(keys: Seq[String]): GraftTable = updateProperties(Map.empty, keys)
 
   // ---- metadata tables ------------------------------------------------
 

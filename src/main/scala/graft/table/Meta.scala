@@ -545,8 +545,9 @@ object Meta {
     nameMapping = Option(n.get("name_mapping")).map(_.properties().asScala
       .map(e => e.getKey -> e.getValue.asText()).toMap))
 
-  def fromJson(json: String): TableMetadata = {
-    val root = mapper.readTree(json)
+  def fromJson(json: String): TableMetadata = fromTree(mapper.readTree(json))
+
+  def fromTree(root: JsonNode): TableMetadata = {
     val schemas = root.get("schemas").properties().asScala.map { e =>
       e.getKey.toInt -> org.apache.spark.sql.types.DataType
         .fromJson(e.getValue.asText()).asInstanceOf[StructType]
@@ -793,29 +794,30 @@ object Meta {
       (TableIO.exists(dir) && currentVersion(dir).isDefined)
   }
 
-  /** The metadata dialect at `root`: Some("graft") for graft's
-    * snake_case metadata, Some("iceberg") for the spec's kebab-case
-    * real format, None when no metadata version exists. The two
-    * formats share the metadata/vN.metadata.json + version-hint
-    * convention, so existence alone cannot tell them apart — and a
-    * full parse attempt must not either: corrupt GRAFT metadata has
-    * to surface its own parse error, not silently reroute the table
-    * to the real-format reader. Structurally unrecognizable metadata
-    * therefore THROWS instead of answering. */
-  def dialect(root: String): Option[String] = {
+  /** The current metadata file under `root`, parsed to a JSON tree;
+    * None when no metadata version exists. Both dialects share the
+    * metadata/vN.metadata.json + version-hint convention, so this one
+    * read serves either parser. */
+  def currentTree(root: String): Option[JsonNode] = {
     val dir = metadataDir(root)
-    currentVersion(dir).map { v =>
-      val n = mapper.readTree(TableIO.readString(
-        new org.apache.hadoop.fs.Path(dir, s"v$v.metadata.json")))
-      if (n.has("format-version")) "iceberg"
-      else if (n.has("format_version")) "graft"
-      else throw new IllegalStateException(
-        s"metadata v$v under $root matches neither the graft nor the " +
-          "Iceberg dialect (corrupt table?)")
-    }
+    currentVersion(dir).map(v => mapper.readTree(TableIO.readString(
+      new org.apache.hadoop.fs.Path(dir, s"v$v.metadata.json"))))
   }
 
-  /** True when `root` holds graft-dialect metadata (see `dialect`). */
+  /** True for graft's snake_case metadata, false for the spec's
+    * kebab-case real format. Existence cannot tell them apart, and a
+    * full parse attempt must not either: corrupt GRAFT metadata has to
+    * surface its own parse error, not silently reroute the table to the
+    * real-format reader. Structurally unrecognizable metadata therefore
+    * THROWS instead of answering. */
+  def isGraftDialect(n: JsonNode, root: String): Boolean =
+    if (n.has("format_version")) true
+    else if (n.has("format-version")) false
+    else throw new IllegalStateException(
+      s"metadata under $root matches neither the graft nor the " +
+        "Iceberg dialect (corrupt table?)")
+
+  /** True when `root` holds graft-dialect metadata. */
   def isGraftDialect(root: String): Boolean =
-    dialect(root).contains("graft")
+    currentTree(root).exists(isGraftDialect(_, root))
 }

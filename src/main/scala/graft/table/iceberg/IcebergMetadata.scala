@@ -373,8 +373,9 @@ object IcebergMetadata {
 
   // ---- JSON read -----------------------------------------------------
 
-  def fromJson(json: String): IceMetadata = {
-    val r = mapper.readTree(json)
+  def fromJson(json: String): IceMetadata = fromTree(mapper.readTree(json))
+
+  def fromTree(r: JsonNode): IceMetadata = {
     def arr(n: JsonNode): Seq[JsonNode] =
       Option(n).map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
 

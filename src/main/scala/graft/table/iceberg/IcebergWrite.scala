@@ -741,22 +741,6 @@ object IcebergWrite {
       manifestList = TableIO.qualified(mlPath)), committedFiles)
   }
 
-  /** Atomic REPLACE TABLE [AS SELECT] on a REAL-format table (the
-    * staged-catalog path; reference: create.rs:59 stage_create — the
-    * protocol's two-phase create exists for exactly this shape): ONE
-    * metadata commit installs a new schema with ids allocated above
-    * `lastColumnId` (a retired id is never reused), a new default
-    * spec, the REPLACED properties, and a 'replace' snapshot whose
-    * manifest list carries only the new content — readers see the old
-    * table or the new one, never a mix, and pre-replace snapshots
-    * stay time-travelable until expire_snapshots. Over a REST catalog
-    * the commit rides the update-table protocol (commitRetry routes
-    * it), so the swap is CAS'd server-side too. */
-  def replaceTable(spark: SparkSession, location: String, df: DataFrame,
-      partitions: Seq[(String, String)],
-      props: Map[String, String]): Unit =
-    stageReplaceTable(spark, location, df, partitions, props).commit()
-
   /** An append staged but not committed: data files sit in data/
     * unreferenced. `applyTo` assembles the snapshot over a given base
     * (re-runnable — commit retries rebase the cheap manifest assembly
@@ -1169,19 +1153,38 @@ object IcebergWrite {
     !replayedInside
   }
 
-  /** A REPLACE TABLE staged but not yet published: the new content
-    * sits in data/ unreferenced (invisible to every reader), and the
-    * one metadata commit that swaps schema + spec + properties +
-    * content is deferred until `commit()`. `abort()` deletes the
-    * staged files and publishes nothing — this is what lets Spark's
-    * StagingTableCatalog contract hold for adopted/REST tables: a
-    * failure between the write and commitStagedChanges rolls back. */
+  /** Atomic REPLACE TABLE [AS SELECT] on a REAL-format table (the
+    * staged-catalog path; reference: create.rs:59 stage_create — the
+    * protocol's two-phase create exists for exactly this shape),
+    * staged but not yet published. `metadata` is the table as the
+    * replace leaves it: a new schema with ids allocated above
+    * `lastColumnId` (a retired id is never reused), a new default spec
+    * and the REPLACED properties; the executors write the new rows
+    * under it. `ingest` moves their staged files into data/
+    * unreferenced (invisible to every reader), and `commit()` runs ONE
+    * metadata commit that installs the schema, spec, properties and a
+    * 'replace' snapshot whose manifest list carries only the new
+    * content — readers see the old table or the new one, never a mix,
+    * and pre-replace snapshots stay time-travelable until
+    * expire_snapshots. Over a REST catalog the commit rides the
+    * update-table protocol (commitRetry routes it), so the swap is
+    * CAS'd server-side too. `abort()` deletes the ingested files and
+    * publishes nothing — this is what lets Spark's StagingTableCatalog
+    * contract hold for adopted/REST tables. A REPLACE TABLE without
+    * AS SELECT ingests nothing and commits empty content. */
   final class StagedReplace private[iceberg] (
       val location: String,
       base: IcebergMetadata.IceMetadata,
-      install: IcebergMetadata.IceMetadata => IcebergMetadata.IceMetadata,
-      moved: Seq[(HPath, Long, Seq[String])],
-      stats: Map[String, FileStats]) {
+      install: IcebergMetadata.IceMetadata => IcebergMetadata.IceMetadata) {
+    val metadata: IcebergMetadata.IceMetadata = install(base)
+    private var moved = Seq.empty[(HPath, Long, Seq[String])]
+    private var stats = Map.empty[String, FileStats]
+
+    def ingest(spark: SparkSession, staging: HPath): Unit =
+      if (TableIO.exists(staging)) {
+        val (m, s) = ingestStagedFiles(spark, metadata, staging)
+        moved = m; stats = s
+      }
 
     def commit(): Unit = {
       IcebergMetadata.commitRetry(location) { m =>
@@ -1202,12 +1205,10 @@ object IcebergWrite {
     def abort(): Unit = moved.foreach(f => TableIO.delete(f._1))
   }
 
-  /** Stage a REPLACE TABLE AS SELECT without publishing: computes the
-    * replacement schema/spec/properties, writes the new content under
-    * data/ unreferenced, and returns the handle whose `commit()` runs
-    * the single swap commit (CAS'd locally, or riding the update-table
-    * protocol for REST-managed roots). */
-  def stageReplaceTable(spark: SparkSession, location: String, df: DataFrame,
+  /** Stage a REPLACE TABLE of `location` by a table of `newSchema`,
+    * partitioned by `partitions` ((column, transform) pairs), with
+    * properties `props`. */
+  def stageReplaceTable(location: String, newSchema: StructType,
       partitions: Seq[(String, String)],
       props: Map[String, String]): StagedReplace = {
     val base = IcebergMetadata.load(location)
@@ -1215,9 +1216,9 @@ object IcebergWrite {
     // fresh ids: strip anything the query's output schema inherited
     // from a table read, then allocate above the watermark
     val stamped = graft.table.Meta.withFieldIds(
-      graft.table.Meta.stripFieldIds(df.schema), base.lastColumnId + 1)
+      graft.table.Meta.stripFieldIds(newSchema), base.lastColumnId + 1)
     val schema = IcebergMetadata.schemaFromSpark(stamped, newSchemaId,
-      nestedIdsFrom = Some(base.lastColumnId + df.schema.size + 1))
+      nestedIdsFrom = Some(base.lastColumnId + newSchema.size + 1))
     val specFields = partitions.zipWithIndex.map { case ((c, t), i) =>
       val srcId = schema.fieldId(c).getOrElse(
         throw new IllegalArgumentException(s"no column $c to partition by"))
@@ -1241,11 +1242,7 @@ object IcebergWrite {
         // is re-added by the metadata writer
         sortOrders = Seq.empty,
         defaultSortOrderId = 0)
-    // the staged data is written under the NEW schema/spec (ids in the
-    // footers, routing by the new transforms) but stays unreferenced
-    // until the handle's commit() lands
-    val (moved, stats) = stageData(spark, install(base), df, None)
-    new StagedReplace(location, base, install, moved, stats)
+    new StagedReplace(location, base, install)
   }
 
   /** OverwriteByExpression on a REAL-format table (`INSERT OVERWRITE
@@ -1539,7 +1536,7 @@ object IcebergWrite {
     def mfRecord(path: String, len: Long, ct: Int, sq: Long,
         snapId: Long, specId: Int,
         sums: Option[Seq[IcebergAvro.FieldSummary]],
-        added: Int, existing: Int)
+        added: Int, existing: Int, addedRows: Long = 0L)
         : org.apache.avro.generic.GenericRecord = {
       val r = IcebergAvro.record(mlSchema)
       r.put("manifest_path", path); r.put("manifest_length", len)
@@ -1548,13 +1545,13 @@ object IcebergWrite {
       r.put("added_snapshot_id", snapId)
       r.put("added_files_count", added); r.put("existing_files_count", existing)
       r.put("deleted_files_count", 0)
-      r.put("added_rows_count", 0L); r.put("existing_rows_count", 0L)
+      r.put("added_rows_count", addedRows); r.put("existing_rows_count", 0L)
       r.put("deleted_rows_count", 0L)
       IcebergAvro.putFieldSummaries(r, sums)
       r
     }
     val newEntry = mfRecord(TableIO.qualified(manifestPath), manifestLen, 1,
-      seq, snapshotId, delSpecId, None, 0, 0)
+      seq, snapshotId, delSpecId, None, moved.size, 0, deleteRows)
     // carried entries keep their OWN spec ids (a mix of data and
     // delete manifests across spec eras) and file counts
     val carried = prevManifests.map(mf => mfRecord(

@@ -479,6 +479,41 @@ class ConnectorSpec extends AnyFunSuite {
       .option("end-snapshot-id", s2.toString).load(root).count() === want.count())
   }
 
+  // end-snapshot-id alone pins that snapshot on both formats; a range
+  // start reads only later appends on graft and is refused on Iceberg,
+  // never silently answered with the whole table
+  for (format <- Seq("graft", "iceberg"))
+  test("end-snapshot-id pins a snapshot; start-snapshot-id reads or refuses" +
+      (if (format == "iceberg") " [iceberg]" else "")) {
+    val spark0 = spark
+    import spark0.implicits._
+    val root = tmp()
+    val iceberg = format == "iceberg"
+    val first = (1L to 10L).toDF("k")
+    if (iceberg) IcebergWrite.create(spark, root, first)
+    else GraftTable.create(spark, root, first.schema).append(first)
+    def head = graft.spark.TableFormat.resolve(root).get.currentSnapshotId.get
+    val s1 = head
+    val more = (11L to 15L).toDF("k")
+    if (iceberg) IcebergWrite.append(spark, root, more)
+    else GraftTable.load(spark, root).append(more)
+    assert(head !== s1)
+    def read = spark.read.format("graft")
+    assert(read.load(root).count() === 15)
+    assert(read.option("end-snapshot-id", s1.toString).load(root).count() === 10)
+    if (iceberg) {
+      val ex = intercept[Exception] {
+        read.option("start-snapshot-id", s1.toString).load(root).count()
+      }
+      def causes(t: Throwable): Seq[Throwable] =
+        if (t == null) Seq.empty else t +: causes(t.getCause)
+      assert(causes(ex).exists(c => c.getMessage != null &&
+        c.getMessage.contains("start-snapshot-id")), s"got: ${ex.getMessage}")
+    } else
+      assert(read.option("start-snapshot-id", s1.toString).load(root)
+        .as[Long].collect().sorted.toSeq === (11L to 15L))
+  }
+
   test("bloom-filter table property builds blooms on both write paths") {
     def bloomCols(root: String): Set[String] = {
       import scala.jdk.CollectionConverters._
@@ -612,9 +647,7 @@ class ConnectorSpec extends AnyFunSuite {
     val rows = (1L to 100L).toDF("k").coalesce(1)
     if (iceberg) IcebergWrite.create(spark, root, rows)
     else GraftTable.create(spark, root, rows.schema).append(rows)
-    val table =
-      if (iceberg) new graft.spark.IcebergSparkTable(root)
-      else new graft.spark.GraftSparkTable(root)
+    val table = graft.spark.GraftSparkTable.at(root)
     val scan = table.newScanBuilder(
       org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()).build()
     if (iceberg) {

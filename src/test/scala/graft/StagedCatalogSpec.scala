@@ -439,6 +439,24 @@ class StagedCatalogSpec extends AnyFunSuite {
         org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()
     }
 
+  /** Drive a staged table's DSv2 batch write on the driver, as Spark's
+    * RTAS exec would: one task writes `rows` into the one LONG column of
+    * `s`, then the batch write commits. */
+  private def stagedWrite(st: org.apache.spark.sql.connector.catalog.StagedTable,
+      s: org.apache.spark.sql.types.StructType, rows: Seq[Long]): Unit = {
+    val batch = st.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsWrite]
+      .newWriteBuilder(writeInfo(s)).build().toBatch
+    val factory = batch.createBatchWriterFactory(
+      new org.apache.spark.sql.connector.write.PhysicalWriteInfo {
+        override def numPartitions(): Int = 1
+      })
+    val w = factory.createWriter(0, 0L)
+    rows.foreach(r => w.write(org.apache.spark.sql.catalyst.InternalRow(r)))
+    val msg = w.commit()
+    w.close()
+    batch.commit(Array(msg))
+  }
+
   test("adopted RTAS: abort between write and publish rolls back fully") {
     wh
     val spark0 = spark
@@ -462,14 +480,9 @@ class StagedCatalogSpec extends AnyFunSuite {
       .add("cents", org.apache.spark.sql.types.LongType)
     val st = cat.stageReplace(ident, newSchema, Array.empty,
       new java.util.HashMap[String, String]())
-    // drive the V1 staged write: content lands in data/ UNREFERENCED,
-    // no metadata commit yet
-    val rel = st.asInstanceOf[org.apache.spark.sql.connector.catalog
-        .SupportsWrite]
-      .newWriteBuilder(writeInfo(newSchema)).build()
-      .asInstanceOf[org.apache.spark.sql.connector.write.V1Write]
-      .toInsertableRelation
-    rel.insert(spark.range(5).select($"id".as("cents")).toDF(), false)
+    // drive the staged batch write: content lands in data/
+    // UNREFERENCED, no metadata commit yet
+    stagedWrite(st, newSchema, 0L until 5L)
     assert(java.util.Arrays.equals(preBytes, java.nio.file.Files
         .readAllBytes(java.nio.file.Paths.get(metaFile.toUri.getPath))),
       "the staged write must not publish before commitStagedChanges")
@@ -507,14 +520,7 @@ class StagedCatalogSpec extends AnyFunSuite {
         .add("z", org.apache.spark.sql.types.LongType)
       val st = cat.stageReplace(ident, newSchema, Array.empty,
         new java.util.HashMap[String, String]())
-      val rel = st.asInstanceOf[org.apache.spark.sql.connector.catalog
-          .SupportsWrite]
-        .newWriteBuilder(writeInfo(newSchema)).build()
-        .asInstanceOf[org.apache.spark.sql.connector.write.V1Write]
-        .toInsertableRelation
-      val spark0 = spark
-      import spark0.implicits._
-      rel.insert(spark.range(4).select($"id".as("z")).toDF(), false)
+      stagedWrite(st, newSchema, 0L until 4L)
       // server-side state untouched by the write; abort never commits
       val mid = graft.table.iceberg.IcebergMetadata.load(loc)
       assert(mid.currentSnapshotId === pre.currentSnapshotId,

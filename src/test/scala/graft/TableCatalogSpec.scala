@@ -621,6 +621,68 @@ class TableCatalogSpec extends AnyFunSuite {
     assert(asOf === 1)
   }
 
+  // the time-travel rules each format's table handle owns: a ref name
+  // pins; an unknown ref, an unknown or expired snapshot id, and a time
+  // before the first snapshot each fail with their message
+  for (format <- Seq("graft", "iceberg"))
+  test("time travel: a ref pins; unknown refs, snapshots and times fail" +
+      (if (format == "iceberg") " [iceberg]" else "")) {
+    wh
+    val spark0 = spark
+    import spark0.implicits._
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_wh.tt")
+    val t = s"graft_wh.tt.rules_$format"
+    val root = s"$wh/tt/rules_$format"
+    if (format == "iceberg")
+      graft.table.iceberg.IcebergWrite.create(spark, root, (1L to 3L).toDF("k"))
+    else {
+      spark.sql(s"CREATE TABLE $t (k BIGINT)")
+      spark.sql(s"INSERT INTO $t SELECT id FROM range(1, 4)")
+    }
+    def head = graft.spark.TableFormat.resolve(root).get.currentSnapshotId.get
+    val s1 = head
+    spark.sql(s"INSERT INTO $t SELECT id FROM range(4, 6)")
+    spark.sql(s"CALL graft_wh.system.expire_snapshots(table => 'tt.rules_$format', keep_last => 1)")
+    val s2 = head
+    spark.sql(s"INSERT INTO $t SELECT id FROM range(6, 8)")
+    spark.sql(s"CALL graft_wh.system.create_tag(table => 'tt.rules_$format', " +
+      s"tag => 'second', snapshot_id => $s2)")
+    def count(q: String) = spark.sql(s"SELECT count(*) FROM $t $q").collect()(0).getLong(0)
+    assert(count("") === 7)
+    assert(count("VERSION AS OF 'second'") === 5)
+    assert(count(s"VERSION AS OF $s2") === 5)
+    def fails(q: String, msg: String): Unit = {
+      val ex = intercept[Exception](count(q))
+      def causes(e: Throwable): Seq[Throwable] =
+        if (e == null) Seq.empty else e +: causes(e.getCause)
+      assert(causes(ex).exists(c => c.getMessage != null && c.getMessage.contains(msg)),
+        s"$q: got ${ex.getMessage}")
+    }
+    fails("VERSION AS OF 'nope'", "'nope' is neither a snapshot id nor a ref of")
+    fails(s"VERSION AS OF ${Long.MaxValue}", s"no snapshot ${Long.MaxValue} of")
+    fails(s"VERSION AS OF $s1", s"no snapshot $s1 of")
+    fails("TIMESTAMP AS OF '2000-01-01 00:00:00'", "at or before timestamp")
+  }
+
+  test("a metadata-only SQL DELETE records its delete file on the manifest list [iceberg]") {
+    wh
+    val spark0 = spark
+    import spark0.implicits._
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_wh.eqd")
+    val loc = s"$wh/eqd/t"
+    graft.table.iceberg.IcebergWrite.create(spark, loc, (1L to 20L).toDF("k"))
+    spark.sql("DELETE FROM graft_wh.eqd.t WHERE k = 5")
+    val snap = graft.table.iceberg.IcebergMetadata.load(loc).currentSnapshot.get
+    // the equality path: one key tuple, no data file rewritten
+    assert(snap.operation === "delete")
+    assert(snap.summary.get("added-equality-deletes").contains("1"))
+    val entries = graft.table.iceberg.IcebergAvro
+      .readManifestList(new org.apache.hadoop.fs.Path(snap.manifestList))
+      .filter(mf => mf.content == 1 && mf.addedSnapshotId == snap.snapshotId)
+    assert(entries.map(_.addedFilesCount) === Seq(Some(1)))
+    assert(spark.table("graft_wh.eqd.t").count() === 19)
+  }
+
   test("standard SQL reads a REAL (foreign-format) Iceberg table with deletes") {
     wh
     val spark0 = spark
@@ -969,19 +1031,37 @@ class TableCatalogSpec extends AnyFunSuite {
     assert(err.getMessage.contains("nope"))
   }
 
-  test("SET / UNSET TBLPROPERTIES round-trip through ALTER TABLE") {
+  // one ALTER TABLE statement is one metadata commit, on both formats
+  for (format <- Seq("graft", "iceberg"))
+  test("SET / UNSET TBLPROPERTIES round-trip through ALTER TABLE" +
+      (if (format == "iceberg") " [iceberg]" else "")) {
     wh
+    val spark0 = spark
+    import spark0.implicits._
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_wh.proc")
-    spark.sql("CREATE TABLE graft_wh.proc.props (k BIGINT)")
-    spark.sql("ALTER TABLE graft_wh.proc.props " +
-      "SET TBLPROPERTIES ('team'='graft', 'retention'='7d')")
-    val t = graft.table.GraftTable.load(spark, s"$wh/proc/props")
-    assert(t.meta.properties.get("team").contains("graft"))
-    assert(t.meta.properties.get("retention").contains("7d"))
-    spark.sql("ALTER TABLE graft_wh.proc.props UNSET TBLPROPERTIES ('retention')")
-    val t2 = graft.table.GraftTable.load(spark, s"$wh/proc/props")
-    assert(!t2.meta.properties.contains("retention"))
-    assert(t2.meta.properties.get("team").contains("graft"))
+    val name = if (format == "iceberg") "props_ice" else "props"
+    val root = s"$wh/proc/$name"
+    if (format == "iceberg")
+      graft.table.iceberg.IcebergWrite.create(spark, root, Seq.empty[Long].toDF("k"))
+    else spark.sql(s"CREATE TABLE graft_wh.proc.$name (k BIGINT)")
+    def props =
+      if (format == "iceberg") graft.table.iceberg.IcebergMetadata.load(root).properties
+      else graft.table.GraftTable.load(spark, root).meta.properties
+    def version = new java.io.File(s"$root/metadata").list().toSeq
+      .collect { case s"v$n.metadata.json" => n.toInt }.max
+    val v0 = version
+    spark.sql(s"ALTER TABLE graft_wh.proc.$name " +
+      "SET TBLPROPERTIES ('team'='graft', 'retention'='7d', 'tier'='gold')")
+    assert(version === v0 + 1, "SET TBLPROPERTIES took more than one commit")
+    assert(props.get("team").contains("graft"))
+    assert(props.get("retention").contains("7d"))
+    spark.sql(s"ALTER TABLE graft_wh.proc.$name UNSET TBLPROPERTIES ('retention', 'tier')")
+    assert(version === v0 + 2, "UNSET TBLPROPERTIES took more than one commit")
+    assert(!props.contains("retention") && !props.contains("tier"))
+    assert(props.get("team").contains("graft"))
+    spark.sql(s"ALTER TABLE graft_wh.proc.$name ADD COLUMNS (a INT, b STRING)")
+    assert(version === v0 + 3, "ADD COLUMNS took more than one commit")
+    assert(spark.table(s"graft_wh.proc.$name").columns.toSeq === Seq("k", "a", "b"))
   }
 
   test("CALL set_sort_order clusters future SQL writes") {
