@@ -118,7 +118,8 @@ class GraftSparkTable(root: String, format: Option[TableFormat],
 
   /** Row-address metadata columns, the delta row id (Iceberg's own
     * Spark integration exposes the same pair). Emitted by the scan on
-    * request via single-file partitions + raw stream-index counting. */
+    * request: bins are read one file at a time, counting raw stream
+    * indexes (RowIdAppendFactory). */
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
     Array(GraftSparkTable.FileMetaCol, GraftSparkTable.PosMetaCol)
@@ -380,14 +381,15 @@ case class ReplaceRowAdapterFactory(
     }
 }
 
-/** Stable per-partition binding key: the FIRST file's normalized URI
-  * path. Partition INDEXES are not stable — Spark may plan a scan
-  * once for supportsColumnar/outputPartitioning and AGAIN after
-  * runtime filtering re-indexes the surviving subset, while the
-  * reader factory keeps the first planning's bindings — so delete
-  * specs, name-mapping routes, and row-id files bind by FILE
-  * identity instead. Sound because every file lands in exactly one
-  * partition per planning (single-file and bin-packed alike). */
+/** Stable binding key: a file's normalized URI path. Partition
+  * INDEXES are not stable — Spark may plan a scan once for
+  * supportsColumnar/outputPartitioning and AGAIN after runtime
+  * filtering re-packs the surviving subset, while the reader factory
+  * keeps the first planning's bindings — so delete specs, name-mapping
+  * routes and row-id files bind by FILE identity, each keyed by every
+  * file of its bin. `of` answers a partition's first file: any file of
+  * a bin finds the bin's binding, and a single-file partition its
+  * own. */
 object PartitionBindKey {
   def ofPath(path: String): String =
     new org.apache.hadoop.fs.Path(path).toUri.getPath
@@ -400,48 +402,84 @@ object PartitionBindKey {
   }
 }
 
-/** Appends the row-address metadata columns (_file, _pos) to each row
-  * of a SINGLE-FILE partition: the raw stream index is the row's
-  * position within the file. Wraps BELOW any MoR filtering so hidden
-  * rows still advance the position counter. */
+/** Reads a bin one file at a time: `open` gets a single-file partition
+  * per file, and each inner reader is closed before the next opens.
+  * An inner reader that pushes no filter then counts every raw row of
+  * its file, so its stream index is the row's position in that file —
+  * what position deletes and row ids need, inside multi-file bins. */
+object PerFileReader {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.execution.datasources.FilePartition
+
+  def apply(p: InputPartition)(open: FilePartition => PartitionReader[InternalRow])
+      : PartitionReader[InternalRow] = files(p) match {
+    case Seq(one) => open(one)
+    case parts => new PartitionReader[InternalRow] {
+      private val rest = parts.iterator
+      private var cur: PartitionReader[InternalRow] = null
+      override def next(): Boolean = {
+        while (cur != null || rest.hasNext) {
+          if (cur == null) cur = open(rest.next())
+          if (cur.next()) return true
+          cur.close(); cur = null
+        }
+        false
+      }
+      override def get(): InternalRow = cur.get()
+      override def close(): Unit = if (cur != null) { cur.close(); cur = null }
+    }
+  }
+
+  private def files(p: InputPartition): Seq[FilePartition] = p match {
+    case f: FilePartition => f.files.toSeq.map(pf => FilePartition(f.index, Array(pf)))
+    case k: KeyedFilePartition => files(k.inner)
+    case other => throw new IllegalArgumentException(s"not a file partition: $other")
+  }
+}
+
+/** Appends the row-address metadata columns (_file, _pos) to each row,
+  * reading the bin one file at a time (PerFileReader): `_pos` is the
+  * row's position within its file, `_file` that file's URI. Wraps
+  * BELOW any MoR filtering so hidden rows still advance the position
+  * counter. */
 case class RowIdAppendFactory(
     delegate: PartitionReaderFactory,
-    fileByPartition: Map[String, String],
+    fileByPath: Map[String, String],
     colOrder: Seq[String])
   extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
-    val inner = delegate.createReader(partition)
-    val file = fileByPartition.getOrElse(PartitionBindKey.of(partition),
-      throw new IllegalStateException(
-        s"row-id scan partition ${PartitionBindKey.of(partition)} " +
-          "has no file binding"))
-    new PartitionReader[org.apache.spark.sql.catalyst.InternalRow] {
-      private val fileUtf8 =
-        org.apache.spark.unsafe.types.UTF8String.fromString(file)
-      private val meta =
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          colOrder.length)
-      private val joined =
-        new org.apache.spark.sql.catalyst.expressions.JoinedRow()
-      private var pos = -1L
-      override def next(): Boolean = {
-        val has = inner.next()
-        if (has) pos += 1
-        has
-      }
-      override def get(): org.apache.spark.sql.catalyst.InternalRow = {
-        // column order follows the REQUESTED schema tail
-        colOrder.zipWithIndex.foreach { case (name, i) =>
-          meta.update(i,
-            if (name == GraftSparkTable.FileColName) fileUtf8 else pos)
+      : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
+    PerFileReader(partition) { part =>
+      val file = fileByPath.getOrElse(PartitionBindKey.of(part),
+        throw new IllegalStateException(
+          s"row-id scan file ${PartitionBindKey.of(part)} has no binding"))
+      val inner = delegate.createReader(part)
+      new PartitionReader[org.apache.spark.sql.catalyst.InternalRow] {
+        private val fileUtf8 =
+          org.apache.spark.unsafe.types.UTF8String.fromString(file)
+        private val meta =
+          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+            colOrder.length)
+        private val joined =
+          new org.apache.spark.sql.catalyst.expressions.JoinedRow()
+        private var pos = -1L
+        override def next(): Boolean = {
+          val has = inner.next()
+          if (has) pos += 1
+          has
         }
-        joined(inner.get(), meta)
+        override def get(): org.apache.spark.sql.catalyst.InternalRow = {
+          // column order follows the REQUESTED schema tail
+          colOrder.zipWithIndex.foreach { case (name, i) =>
+            meta.update(i,
+              if (name == GraftSparkTable.FileColName) fileUtf8 else pos)
+          }
+          joined(inner.get(), meta)
+        }
+        override def close(): Unit = inner.close()
       }
-      override def close(): Unit = inner.close()
     }
-  }
 
   override def supportColumnarReads(p: InputPartition): Boolean = false
 }
@@ -712,57 +750,57 @@ object DeleteKeyCache {
   }
 }
 
-/** Wraps the parquet reader factory to drop rows whose equality key is
-  * deleted. Partitions were bound to their applicable delete groups at
-  * planning time (sequence-scoped: files appended AFTER a delete are
-  * not filtered by it). */
+/** Wraps the parquet reader factory to drop deleted rows, reading the
+  * bin one file at a time (PerFileReader). Files were bound to their
+  * applicable delete groups at planning time (sequence-scoped: files
+  * appended AFTER a delete are not filtered by it): equality groups
+  * drop rows by key, a position group by the row's position in its
+  * own file. */
 case class MorReaderFactory(
     delegate: PartitionReaderFactory,
-    specsByPartition: Map[String, Seq[DeleteFilesSpec]],
-    posByPartition: Map[String, (PosDeleteSpec, String)] = Map.empty,
+    specsByFile: Map[String, Seq[DeleteFilesSpec]],
+    posByFile: Map[String, PosDeleteSpec] = Map.empty,
     rawDelegate: Option[PartitionReaderFactory] = None)
   extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
-    val bind = PartitionBindKey.of(partition)
-    val specs = specsByPartition.getOrElse(bind, Seq.empty)
-    val pos = posByPartition.get(bind)
-    // position-deleted partitions must count every raw row — use the
-    // unpushed reader for them when one was built
-    val inner = (if (pos.isDefined) rawDelegate.getOrElse(delegate)
-      else delegate).createReader(partition)
-    if (specs.isEmpty && pos.isEmpty) inner
-    else new PartitionReader[org.apache.spark.sql.catalyst.InternalRow] {
-      private val groups = specs.map(s => (s, DeleteKeyCache.get(s)))
-      // positional deletes: this partition is a single whole file, so
-      // the stream index IS the row index within the file
-      private val deadPositions: Set[Long] = pos match {
-        case Some((spec, filePath)) =>
-          DeleteKeyCache.getPositions(spec).getOrElse(filePath, Set.empty)
-        case None => Set.empty
-      }
-      private var rowIdx = -1L
-      private var current: org.apache.spark.sql.catalyst.InternalRow = _
-      private def deleted(row: org.apache.spark.sql.catalyst.InternalRow): Boolean =
-        deadPositions.contains(rowIdx) ||
-          groups.exists { case (s, keys) =>
-            val key = (0 until s.keyIndexes.length).map(i =>
-              row.get(s.keyIndexes(i), s.keyTypes(i))).toVector
-            keys.contains(key)
+      : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
+    PerFileReader(partition) { part =>
+      val file = PartitionBindKey.of(part)
+      val specs = specsByFile.getOrElse(file, Seq.empty)
+      val pos = posByFile.get(file)
+      // position-bound files must count every raw row — use the
+      // unpushed reader for them when one was built
+      val inner = (if (pos.isDefined) rawDelegate.getOrElse(delegate)
+        else delegate).createReader(part)
+      if (specs.isEmpty && pos.isEmpty) inner
+      else new PartitionReader[org.apache.spark.sql.catalyst.InternalRow] {
+        private val groups = specs.map(s => (s, DeleteKeyCache.get(s)))
+        // the inner reader reads this one file whole, so its stream
+        // index IS the row index within the file
+        private val deadPositions: Set[Long] = pos.fold(Set.empty[Long])(
+          DeleteKeyCache.getPositions(_).getOrElse(file, Set.empty))
+        private var rowIdx = -1L
+        private var current: org.apache.spark.sql.catalyst.InternalRow = _
+        private def deleted(row: org.apache.spark.sql.catalyst.InternalRow): Boolean =
+          deadPositions.contains(rowIdx) ||
+            groups.exists { case (s, keys) =>
+              val key = (0 until s.keyIndexes.length).map(i =>
+                row.get(s.keyIndexes(i), s.keyTypes(i))).toVector
+              keys.contains(key)
+            }
+        override def next(): Boolean = {
+          while (inner.next()) {
+            rowIdx += 1
+            val r = inner.get()
+            if (!deleted(r)) { current = r; return true }
           }
-      override def next(): Boolean = {
-        while (inner.next()) {
-          rowIdx += 1
-          val r = inner.get()
-          if (!deleted(r)) { current = r; return true }
+          false
         }
-        false
+        override def get(): org.apache.spark.sql.catalyst.InternalRow = current
+        override def close(): Unit = inner.close()
       }
-      override def get(): org.apache.spark.sql.catalyst.InternalRow = current
-      override def close(): Unit = inner.close()
     }
-  }
 
   // all partitions must agree on columnar vs row (Spark checks the
   // whole scan), so a scan with any live deletes reads row-based

@@ -102,9 +102,9 @@ object TableFormat {
     * version exists. The two formats share the metadata/vN.metadata.json
     * + version-hint convention; the metadata dialect tells them apart. */
   def resolve(root: String): Option[TableFormat] =
-    Meta.currentTree(root).map { n =>
-      if (Meta.isGraftDialect(n, root)) new GraftFormat(root, Meta.fromTree(n))
-      else new IcebergFormat(root, IcebergMetadata.fromTree(n))
+    Meta.currentMetadata(root).map {
+      case Left(m) => new GraftFormat(root, m)
+      case Right(m) => new IcebergFormat(root, m)
     }
 
   private val baseCapabilities: Seq[TableCapability] = Seq(

@@ -49,8 +49,8 @@ trait ScanSource {
     * data-file count */
   def plan(statFilters: Seq[(String, String, String)]): (Seq[ScanFile], Long)
   /** reads the table's files into `required`, pushing `filters` to the
-    * parquet reader; `groups` binds import-group bins (by
-    * PartitionBindKey) to the group they read */
+    * parquet reader; `groups` binds each file of an import-group bin
+    * (by PartitionBindKey) to the group it reads */
   def readerFactory(required: StructType, filters: Array[Filter],
       groups: Map[String, ImportedGroup]): PartitionReaderFactory
   def microBatchStream(required: StructType,
@@ -222,7 +222,7 @@ class TableScan(source: ScanSource, requiredSchema: StructType,
     * spark.sql.sources.v2.bucketing.enabled; bucket resolves through
     * the catalog's FunctionCatalog). Declined for row-id scans (they
     * feed a write, not a join) and while deletes are live (one
-    * partition per key cannot also honor per-file delete bins). Every
+    * partition per key cannot also keep delete signatures apart). Every
     * planned file must be written under the default spec — after spec
     * evolution older files carry no value for its fields — and carry
     * no name mapping, which needs its own reader. Decided on the static
@@ -256,8 +256,8 @@ class TableScan(source: ScanSource, requiredSchema: StructType,
     * builder, so runtime narrowing of just the main scan would
     * desynchronize the sets (files removed whose rows were never
     * rewritten). Copy-on-write scans therefore decline runtime
-    * filtering, and so do row-id scans: their single-file partition
-    * maps must not be re-planned under an existing reader factory. */
+    * filtering. Row-id scans decline it too, so a delta write reads
+    * exactly the statically planned files. */
   override def filterAttributes(): Array[NamedReference] =
     if (capture.isDefined || rowIdCols.nonEmpty) Array.empty
     else requiredSchema.fieldNames.map(Expressions.column)
@@ -289,15 +289,18 @@ class TableScan(source: ScanSource, requiredSchema: StructType,
   }
 
   // ---- input partitions and delete binding ---------------------------
+  // Every binding is keyed by each file of its bin (PartitionBindKey),
+  // so a bin is found by any of its files and a reader that splits a
+  // bin per file finds each file's own binding.
 
-  /** bind key → the bin's equality-delete groups */
-  @volatile private var deleteSpecsByPartition: Map[String, Seq[DeleteFilesSpec]] = Map.empty
-  /** bind key → (position-delete group, the bin's one data file) */
-  @volatile private var posSpecsByPartition: Map[String, (PosDeleteSpec, String)] = Map.empty
-  /** bind key → data-file URI, for row-id scans (the reader appends _file/_pos) */
-  @volatile private var rowIdFileByPartition: Map[String, String] = Map.empty
-  /** bind key → the import group an add_files bin reads */
-  @volatile private var groupByPartition: Map[String, ImportedGroup] = Map.empty
+  /** file → the equality-delete groups of its bin */
+  @volatile private var deleteSpecsByFile: Map[String, Seq[DeleteFilesSpec]] = Map.empty
+  /** file → the position-delete group that may name its rows */
+  @volatile private var posSpecsByFile: Map[String, PosDeleteSpec] = Map.empty
+  /** file → its URI, for row-id scans (the reader appends _file/_pos) */
+  @volatile private var rowIdFileByFile: Map[String, String] = Map.empty
+  /** file → the import group its add_files bin reads */
+  @volatile private var groupByFile: Map[String, ImportedGroup] = Map.empty
 
   override def planInputPartitions(): Array[InputPartition] = {
     val (files, live) = planned
@@ -322,52 +325,39 @@ class TableScan(source: ScanSource, requiredSchema: StructType,
   }
 
   /** Bins never mix delete signatures or import groups: one task, one
-    * delete set, one schema shape. Files under position deletes, and
-    * every file of a row-id scan, get single-file bins — the reader's
-    * raw stream index is then the row position within the file. */
+    * delete set, one schema shape. Each group packs by Spark's rule
+    * (GraftConnectorShim.packFiles), toward one target over the whole
+    * scan. Position deletes and row ids stay exact in multi-file bins
+    * because their readers open one inner reader per file
+    * (PerFileReader). */
   private def binned(files: Seq[ScanFile]): Array[InputPartition] = {
-    val maxBytes = SparkSession.active.sessionState.conf.filesMaxPartitionBytes
+    val spark = SparkSession.active
+    val target = GraftConnectorShim.maxSplitBytes(spark, files.map(_.sizeBytes))
     val out = mutable.ArrayBuffer[InputPartition]()
     val specsOut = mutable.Map[String, Seq[DeleteFilesSpec]]()
-    val posOut = mutable.Map[String, (PosDeleteSpec, String)]()
+    val posOut = mutable.Map[String, PosDeleteSpec]()
     val fileOut = mutable.Map[String, String]()
     val groupOut = mutable.Map[String, ImportedGroup]()
     files.groupBy(f => (deleteSig(f), f.group)).toSeq.sortBy { case (k, _) => sigKey(k) }
       .foreach { case (((eqSig, posSig), group), fs) =>
         val specs = if (eqSig.isEmpty) Seq.empty else eqDeleteSpecs(eqSig)
         val posSpec = if (posSig.isEmpty) None else Some(posDeleteSpec(posSig))
-        val bins =
-          if (posSig.nonEmpty || rowIdCols.nonEmpty) fs.map(Seq(_))
-          else pack(fs, maxBytes)
-        bins.foreach { bin =>
+        GraftConnectorShim.packFiles(spark, fs, target)(_.uri, _.sizeBytes).foreach { bin =>
           out += filePartition(out.length, bin)
-          val bind = PartitionBindKey.ofPath(bin.head.uri)
-          if (specs.nonEmpty) specsOut(bind) = specs
-          posSpec.foreach(spec => posOut(bind) = (spec, bind))
-          if (rowIdCols.nonEmpty) fileOut(bind) = bin.head.uri
-          group.foreach(groupOut(bind) = _)
+          bin.foreach { f =>
+            val bind = PartitionBindKey.ofPath(f.uri)
+            if (specs.nonEmpty) specsOut(bind) = specs
+            posSpec.foreach(posOut(bind) = _)
+            if (rowIdCols.nonEmpty) fileOut(bind) = f.uri
+            group.foreach(groupOut(bind) = _)
+          }
         }
       }
-    deleteSpecsByPartition = specsOut.toMap
-    posSpecsByPartition = posOut.toMap
-    rowIdFileByPartition = fileOut.toMap
-    groupByPartition = groupOut.toMap
+    deleteSpecsByFile = specsOut.toMap
+    posSpecsByFile = posOut.toMap
+    rowIdFileByFile = fileOut.toMap
+    groupByFile = groupOut.toMap
     out.toArray
-  }
-
-  /** Bin-pack files into tasks toward maxPartitionBytes. */
-  private def pack(fs: Seq[ScanFile], maxBytes: Long): Seq[Seq[ScanFile]] = {
-    val bins = mutable.ArrayBuffer[Seq[ScanFile]]()
-    var cur = Vector.empty[ScanFile]
-    var curBytes = 0L
-    fs.sortBy(-_.sizeBytes).foreach { f =>
-      if (curBytes + f.sizeBytes > maxBytes && cur.nonEmpty) {
-        bins += cur; cur = Vector.empty; curBytes = 0L
-      }
-      cur :+= f; curBytes += f.sizeBytes
-    }
-    if (cur.nonEmpty) bins += cur
-    bins.toSeq
   }
 
   /** deterministic ordering for bin signatures (Map.toString isn't) */
@@ -456,23 +446,23 @@ class TableScan(source: ScanSource, requiredSchema: StructType,
     val pushForDelegate =
       if (capture.isDefined || rowIdCols.nonEmpty) Array.empty[Filter]
       else pushedFilters
-    val factory = source.readerFactory(requiredSchema, pushForDelegate, groupByPartition)
-    // ONLY the partitions bound to a position delete read raw (their
-    // stream index must equal the file row index, so the reader may
-    // skip nothing); eq-only and delete-free partitions keep the
-    // pushed filters — equality filtering matches row CONTENT, so
-    // row-group skipping stays sound for them
+    val factory = source.readerFactory(requiredSchema, pushForDelegate, groupByFile)
+    // ONLY the files bound to a position delete read raw (their stream
+    // index must equal the file row index, so the reader may skip
+    // nothing); eq-only and delete-free files keep the pushed filters —
+    // equality filtering matches row CONTENT, so row-group skipping
+    // stays sound for them
     val rawFactory =
-      if (pushForDelegate.nonEmpty && posSpecsByPartition.nonEmpty)
-        source.readerFactory(requiredSchema, Array.empty, groupByPartition)
+      if (pushForDelegate.nonEmpty && posSpecsByFile.nonEmpty)
+        source.readerFactory(requiredSchema, Array.empty, groupByFile)
       else factory
     // _file/_pos append BELOW the MoR filter: positions must count
     // every raw row of the file, including rows a live delete hides
     val delegate =
       if (rowIdCols.isEmpty) factory
-      else RowIdAppendFactory(factory, rowIdFileByPartition, rowIdCols.map(_.name))
+      else RowIdAppendFactory(factory, rowIdFileByFile, rowIdCols.map(_.name))
     if (deletes.isEmpty) delegate
-    else MorReaderFactory(delegate, deleteSpecsByPartition, posSpecsByPartition,
+    else MorReaderFactory(delegate, deleteSpecsByFile, posSpecsByFile,
       rawDelegate = if (rowIdCols.isEmpty) Some(rawFactory) else None)
   }
 }

@@ -45,8 +45,8 @@ trait StreamTimeline {
   def chain: IndexedSeq[StreamSnapshot]
   /** the data files snapshot `id` added, in a stable order */
   def addedFiles(id: Long): Seq[AddedFile]
-  /** the batch's reader factory; `groups` binds each import-group
-    * bin's first file (PartitionBindKey) to its group */
+  /** the batch's reader factory; `groups` binds each file of an
+    * import-group bin (PartitionBindKey) to its group */
   def readerFactory(groups: Map[String, ImportedGroup]): PartitionReaderFactory
 }
 
@@ -275,12 +275,17 @@ class TableMicroBatchStream(timeline: () => StreamTimeline,
     // bins never mix import groups: imported (id-less) files read
     // through a renamed-schema factory with identity-constant fill,
     // routed per bin
+    val spark = SparkSession.active
+    val target = GraftConnectorShim.maxSplitBytes(spark, batch.map(_.sizeBytes))
     val bins = batch.groupBy(_.group).toSeq
       .sortBy(_._1.fold("")(g => g.mapping.toSeq.sorted.mkString(",") + "|" +
         g.specId + "|" + g.partitionValues.toSeq.sorted.mkString(",")))
-      .flatMap { case (group, fs) => pack(fs).map(group -> _) }
-    groupsByPartition = bins.collect {
-      case (Some(g), bin) => PartitionBindKey.ofPath(bin.head.uri) -> g
+      .flatMap { case (group, fs) =>
+        GraftConnectorShim.packFiles(spark, fs, target)(_.uri, _.sizeBytes).map(group -> _)
+      }
+    groupsByFile = bins.flatMap {
+      case (Some(g), bin) => bin.map(f => PartitionBindKey.ofPath(f.uri) -> g)
+      case _ => Seq.empty
     }.toMap
     bins.zipWithIndex.map { case ((_, bin), i) =>
       GraftConnectorShim.filePartition(i, bin.map(f =>
@@ -288,12 +293,12 @@ class TableMicroBatchStream(timeline: () => StreamTimeline,
     }.toArray
   }
 
-  /** first-file binding key → import group for the CURRENT batch
-    * (same stable file-identity binding the batch scan uses). */
-  @volatile private var groupsByPartition: Map[String, ImportedGroup] = Map.empty
+  /** file binding key → import group for the CURRENT batch (same
+    * stable file-identity binding the batch scan uses). */
+  @volatile private var groupsByFile: Map[String, ImportedGroup] = Map.empty
 
   override def createReaderFactory(): PartitionReaderFactory =
-    timeline().readerFactory(groupsByPartition)
+    timeline().readerFactory(groupsByFile)
 
   /** Drop the memoized lists of snapshots consumed at or before `end`. */
   override def commit(end: Offset): Unit = {
@@ -307,25 +312,8 @@ class TableMicroBatchStream(timeline: () => StreamTimeline,
 }
 
 object TableMicroBatchStream {
-  /** Micro-batches of ~128 MB. */
-  private val TargetBinBytes = 128L * 1024 * 1024
-
   private def opt(options: Map[String, String], name: String): Option[String] =
     options.collectFirst { case (k, v) if k.equalsIgnoreCase(name) => v }
-
-  private def pack(fs: Seq[AddedFile]): Seq[Seq[AddedFile]] = {
-    val bins = scala.collection.mutable.ArrayBuffer[Seq[AddedFile]]()
-    var cur = Vector.empty[AddedFile]
-    var curBytes = 0L
-    fs.foreach { f =>
-      if (curBytes + f.sizeBytes > TargetBinBytes && cur.nonEmpty) {
-        bins += cur; cur = Vector.empty; curBytes = 0L
-      }
-      cur :+= f; curBytes += f.sizeBytes
-    }
-    if (cur.nonEmpty) bins += cur
-    bins.toSeq
-  }
 
   def graft(root: String, requiredSchema: StructType,
       options: Map[String, String] = Map.empty): TableMicroBatchStream =

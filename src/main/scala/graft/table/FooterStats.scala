@@ -44,6 +44,16 @@ object FooterStats {
     else base + "." + f"$frac%06d".reverse.dropWhile(_ == '0').reverse
   }
 
+  /** Whether `n` footers read on a driver pool: footer reads are
+    * metadata-only (~1 ms each locally), so up to
+    * spark.graft.stats.driverFooterThreshold (default 64) files
+    * job-scheduling latency exceeds the IO. Above it, distribute — at
+    * 100 TB a write produces thousands of files and the driver must
+    * not serialize on them. The one rule for both table formats. */
+  def onDriver(spark: SparkSession, n: Int): Boolean =
+    n <= spark.conf.getOption("spark.graft.stats.driverFooterThreshold")
+      .flatMap(_.toIntOption).getOrElse(64)
+
   def collect(spark: SparkSession, paths: Seq[String],
       prunable: Set[String]): Seq[FileStats] = {
     if (paths.isEmpty) return Seq.empty
@@ -54,26 +64,9 @@ object FooterStats {
     // TableIO.conf caches the clone per session (newHadoopConf() per
     // ingest was a measurable driver tax).
     val hconf = TableIO.conf
-    val threshold = spark.conf
-      .getOption("spark.graft.stats.driverFooterThreshold")
-      .flatMap(_.toIntOption).getOrElse(64)
-    if (paths.size <= threshold) {
-      // footer reads are metadata-only (~1 ms each locally): below the
-      // threshold, job-scheduling latency exceeds the IO, so read from
-      // a driver pool. Above it, distribute — at 100 TB a write
-      // produces thousands of files and the driver must not serialize
-      // on them.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(paths.size, 16))
-      try {
-        val futs = paths.map { p =>
-          pool.submit(new java.util.concurrent.Callable[FileStats] {
-            override def call(): FileStats = readFooter(p, hconf, prunable)
-          })
-        }
-        futs.map(_.get())
-      } finally pool.shutdown()
-    } else {
+    if (onDriver(spark, paths.size))
+      TableIO.parallelOnDriver(paths)(readFooter(_, hconf, prunable))
+    else {
       val prunableB = spark.sparkContext.broadcast(prunable)
       // session-cached broadcast: one conf serialization per session,
       // not one per ingest

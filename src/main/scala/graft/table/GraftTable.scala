@@ -1093,12 +1093,12 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     * files (merge-on-read) are applied as a broadcastable anti-join. */
   def scan(filters: Seq[StatFilter] = Seq.empty,
       snapshotId: Option[Long] = None,
-      branch: Option[String] = None): DataFrame = {
-    val m = meta
+      branch: Option[String] = None,
+      m: Meta.TableMetadata = meta): DataFrame = {
     val snapId = branch.flatMap(m.refs.get).orElse(snapshotId)
     val schema = m.schemas(snapId.flatMap(m.snapshot).map(_.schemaId)
       .getOrElse(m.currentSchemaId))
-    val files = plannedFiles(filters, snapshotId, branch)
+    val files = plannedFiles(filters, snapshotId, branch, m)
     val seqByPath = m.liveFilesWithSeq(snapId).map { case (f, q) => f.path -> q }.toMap
     readWithDeletes(files.map(f => (f, seqByPath(f.path))),
       m.liveDeleteFilesWithSeq(snapId), schema)
@@ -1370,8 +1370,8 @@ class GraftTable private (val root: String, val spark: SparkSession) {
 
   /** True iff every snapshot after `since` on the main chain is a pure
     * append — the precondition for incremental consumers. */
-  def appendsOnlySince(since: Option[Long]): Boolean = {
-    val m = meta
+  def appendsOnlySince(since: Option[Long],
+      m: Meta.TableMetadata = meta): Boolean = {
     var cur = m.currentSnapshotId.flatMap(m.snapshot)
     var ok = true
     while (cur.isDefined && since != cur.map(_.snapshotId)) {
@@ -1384,8 +1384,8 @@ class GraftTable private (val root: String, val spark: SparkSession) {
   /** Scan only the files added after snapshot `since` (append delta) —
     * the incremental-refresh read path: IO is proportional to new
     * data, not table size. */
-  def scanAppendedSince(since: Option[Long]): DataFrame = {
-    val m = meta
+  def scanAppendedSince(since: Option[Long],
+      m: Meta.TableMetadata = meta): DataFrame = {
     val baseline = since.map(id => m.liveFiles(Some(id)).map(_.path).toSet)
       .getOrElse(Set.empty)
     val delta = m.liveFiles(None).filterNot(f => baseline.contains(f.path))
@@ -2499,4 +2499,9 @@ object GraftTable {
     require(Meta.exists(root), s"no table at $root")
     new GraftTable(root, spark)
   }
+
+  /** A handle on `root` whose metadata the caller has just read, so
+    * its existence needs no second listing. */
+  private[table] def loaded(spark: SparkSession, root: String): GraftTable =
+    new GraftTable(root, spark)
 }

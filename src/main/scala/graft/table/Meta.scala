@@ -820,4 +820,14 @@ object Meta {
   /** True when `root` holds graft-dialect metadata. */
   def isGraftDialect(root: String): Boolean =
     currentTree(root).exists(isGraftDialect(_, root))
+
+  /** The current metadata under `root` from ONE read of its current
+    * file, parsed by dialect: Left for graft metadata, Right for
+    * real-format Iceberg; None when no metadata version exists. */
+  def currentMetadata(root: String)
+      : Option[Either[TableMetadata, graft.table.iceberg.IcebergMetadata.IceMetadata]] =
+    currentTree(root).map { n =>
+      if (isGraftDialect(n, root)) Left(fromTree(n))
+      else Right(graft.table.iceberg.IcebergMetadata.fromTree(n))
+    }
 }

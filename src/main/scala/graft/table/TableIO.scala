@@ -197,6 +197,23 @@ object TableIO {
     * PartitionedFile want). */
   def qualified(p: HPath): String =
     fs(p).makeQualified(p).toUri.toString
+
+  /** Map `xs` on a bounded driver thread pool — for per-file metadata
+    * operations (renames, footer reads) whose latency is per-RPC, not
+    * per-byte. */
+  def parallelOnDriver[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+    if (xs.size <= 4) xs.map(f)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(16, xs.size))
+      try {
+        import scala.jdk.CollectionConverters._
+        val tasks = xs.map(x => new java.util.concurrent.Callable[B] {
+          override def call(): B = f(x)
+        })
+        pool.invokeAll(tasks.asJava).asScala.map(_.get()).toSeq
+      } finally pool.shutdown()
+    }
 }
 
 /** Hive-style %XX escaping for partition-dir values (compatible with

@@ -2,6 +2,7 @@ package graft.table
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import com.fasterxml.jackson.databind.ObjectMapper
+import graft.table.iceberg.{IcebergMetadata, IcebergTable}
 import scala.jdk.CollectionConverters._
 
 /** Views and materialized views over GraftTables (reference:
@@ -236,15 +237,15 @@ object Views {
     * lineage. That is the shape plugin-created MVs use. */
   def queryView(spark: SparkSession, root: String): DataFrame = {
     val d = loadView(root)
-    d.sources.foreach { case (alias, tableRoot) =>
-      if (!alias.contains('.')) {
-        val scan =
-          if (Meta.exists(tableRoot) && Meta.isGraftDialect(tableRoot))
-            GraftTable.load(spark, tableRoot).scan()
-          else graft.table.iceberg.IcebergTable.load(spark, tableRoot).scan()
-        scan.createOrReplaceTempView(alias)
-      }
-    }
+    query(spark, d, d.sources.filterNot(_._1.contains('.')).map {
+      case (alias, tableRoot) => alias -> new Source(spark, tableRoot)
+    })
+  }
+
+  /** `d`'s SQL over `plain` registered as temp views of their aliases. */
+  private def query(spark: SparkSession, d: ViewDef,
+      plain: Map[String, Source]): DataFrame = {
+    plain.foreach { case (alias, src) => src.scan().createOrReplaceTempView(alias) }
     spark.sql(d.sqlFor("spark").getOrElse(d.sql))
   }
 
@@ -253,12 +254,39 @@ object Views {
     * sources), or 0 for an empty/missing root — so MV freshness works
     * over both table formats. */
   private[graft] def sourceSnapshotOf(troot: String): Long =
-    if (Meta.exists(troot) && Meta.isGraftDialect(troot))
-      Meta.load(troot).currentSnapshotId.getOrElse(0L)
-    else if (graft.table.iceberg.IcebergTable.exists(troot))
-      graft.table.iceberg.IcebergMetadata.load(troot)
-        .currentSnapshotId.getOrElse(0L)
-    else 0L
+    snapshotOf(Meta.currentMetadata(troot))
+
+  private def snapshotOf(
+      current: Option[Either[Meta.TableMetadata, IcebergMetadata.IceMetadata]]): Long =
+    current.flatMap(_.fold(_.currentSnapshotId, _.currentSnapshotId)).getOrElse(0L)
+
+  /** A view's source table as of ONE read of its current metadata
+    * (Meta.currentMetadata), graft or real-format Iceberg: a refresh's
+    * scans, append checks and lineage stamp all see that snapshot. */
+  private final class Source(spark: SparkSession, root: String) {
+    private val current = Meta.currentMetadata(root)
+    def snapshotId: Long = snapshotOf(current)
+    private def graftTable = GraftTable.loaded(spark, root)
+    private def iceberg(m: IcebergMetadata.IceMetadata) =
+      IcebergTable.fromMetadataAt(spark, root, m)
+    private def missing = throw new IllegalStateException(s"no table at $root")
+
+    def scan(): DataFrame = current match {
+      case Some(Left(m)) => graftTable.scan(m = m)
+      case Some(Right(m)) => iceberg(m).scan()
+      case None => missing
+    }
+    def appendsOnlySince(since: Option[Long]): Boolean = current match {
+      case Some(Left(m)) => graftTable.appendsOnlySince(since, m)
+      case Some(Right(m)) => iceberg(m).appendsOnlySince(since)
+      case None => false
+    }
+    def scanAppendedSince(since: Option[Long]): DataFrame = current match {
+      case Some(Left(m)) => graftTable.scanAppendedSince(since, m)
+      case Some(Right(m)) => iceberg(m).scanAppendedSince(since)
+      case None => missing
+    }
+  }
 
   // ---- materialized view ---------------------------------------------
 
@@ -270,6 +298,12 @@ object Views {
       view.sources.map { case (alias, tableRoot) =>
         alias -> sourceSnapshotOf(tableRoot)
       }
+
+    private def sourcesOf(d: ViewDef): Map[String, Source] =
+      d.sources.map { case (alias, tableRoot) => alias -> new Source(spark, tableRoot) }
+
+    private def lineageOf(sources: Map[String, Source]): Map[String, Long] =
+      sources.map { case (alias, src) => alias -> src.snapshotId }
 
     /** Lineage recorded by the last refresh (empty → never refreshed). */
     def recordedLineage: Map[String, Long] = {
@@ -284,10 +318,16 @@ object Views {
       * the source snapshot lineage (reference: materialized_view.rs
       * full refresh + rewrite_with_lineage). */
     def refresh(): MaterializedView = {
-      val result = queryView(spark, root)
-      storage.overwrite(result, lineage = currentSourceSnapshots)
+      val d = view
+      refreshFull(d, sourcesOf(d))
       this
     }
+
+    /** Full refresh over sources read once: the scans and the lineage
+      * stamp see the same snapshots. */
+    private def refreshFull(d: ViewDef, sources: Map[String, Source]): Unit =
+      storage.overwrite(query(spark, d, sources.filterNot(_._1.contains('.'))),
+        lineage = lineageOf(sources))
 
     /** Incremental refresh (the reference's roadmap feature): valid
       * when every source moved by pure appends and the view's
@@ -321,36 +361,23 @@ object Views {
       // through the interop incremental scan — a row-changing snapshot
       // (delete/overwrite/compaction) on either falls back to full
       // refresh honestly
-      def appendsOnly(tableRoot: String, since: Option[Long]): Boolean =
-        if (Meta.exists(tableRoot) && Meta.isGraftDialect(tableRoot))
-          GraftTable.load(spark, tableRoot).appendsOnlySince(since)
-        else graft.table.iceberg.IcebergTable.exists(tableRoot) &&
-          graft.table.iceberg.IcebergTable.load(spark, tableRoot)
-            .appendsOnlySince(since)
-      def appendDelta(tableRoot: String, since: Option[Long]): DataFrame =
-        if (Meta.exists(tableRoot) && Meta.isGraftDialect(tableRoot))
-          GraftTable.load(spark, tableRoot).scanAppendedSince(since)
-        else graft.table.iceberg.IcebergTable.load(spark, tableRoot)
-          .scanAppendedSince(since)
+      val sources = sourcesOf(d)
+      def appendDelta(alias: String): DataFrame =
+        sources(alias).scanAppendedSince(lineage.get(alias))
       val incrementalOk = foldSql.nonEmpty && lineage.nonEmpty &&
-        d.sources.forall { case (alias, tableRoot) =>
-          appendsOnly(tableRoot, lineage.get(alias))
+        sources.forall { case (alias, src) =>
+          src.appendsOnlySince(lineage.get(alias))
         }
-      if (!incrementalOk) { refresh(); return false }
+      if (!incrementalOk) { refreshFull(d, sources); return false }
       val (dotted, plain) = d.sources.partition(_._1.contains('.'))
-      plain.foreach { case (alias, tableRoot) =>
-        appendDelta(tableRoot, lineage.get(alias))
-          .createOrReplaceTempView(alias)
-      }
+      plain.keys.foreach(alias => appendDelta(alias).createOrReplaceTempView(alias))
       val delta =
         if (dotted.isEmpty) spark.sql(d.sql)
         else {
           def norm(p: String): String =
             TableIO.path(p).toUri.getPath.stripSuffix("/")
           val deltaPlans = dotted.map { case (alias, tableRoot) =>
-            norm(tableRoot) -> (alias,
-              appendDelta(tableRoot, lineage.get(alias))
-                .queryExecution.logical)
+            norm(tableRoot) -> (alias, appendDelta(alias).queryExecution.logical)
           }.toMap
           // a relation substitutes ONLY when the resolver maps its
           // name to exactly a source's storage root
@@ -374,7 +401,7 @@ object Views {
             // read the FULL source as its own "delta" and fold every
             // pre-existing row twice; full refresh is the only honest
             // answer
-            refresh()
+            refreshFull(d, sources)
             return false
           }
           org.apache.spark.sql.GraftShim.ofRows(spark, substituted)
@@ -382,7 +409,7 @@ object Views {
       storage.scan().unionByName(delta)
         .createOrReplaceTempView("mv_delta_union")
       val folded = spark.sql(foldSql.get)
-      storage.overwrite(folded, lineage = currentSourceSnapshots)
+      storage.overwrite(folded, lineage = lineageOf(sources))
       true
     }
 

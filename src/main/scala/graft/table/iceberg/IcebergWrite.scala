@@ -10,7 +10,7 @@ import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, StringLogicalTypeAnnotation, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
-import graft.table.TableIO
+import graft.table.{FooterStats, TableIO}
 import java.nio.ByteBuffer
 import java.util.UUID
 import scala.jdk.CollectionConverters._
@@ -37,36 +37,21 @@ object IcebergWrite {
 
   /** (record count, lower bounds, upper bounds, null counts) keyed by
     * Iceberg field id, values in single-value binary encoding. */
-  private type FileStats =
+  private[graft] type FileStats =
     (Long, Map[Int, Array[Byte]], Map[Int, Array[Byte]], Map[Int, Long])
 
-  /** Map `xs` on a bounded driver thread pool — for per-file metadata
-    * operations (renames) whose latency is per-RPC, not per-byte. */
-  private def parallelOnDriver[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
-    if (xs.size <= 4) xs.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, xs.size))
-      try {
-        import scala.jdk.CollectionConverters._
-        val tasks = xs.map(x => new java.util.concurrent.Callable[B] {
-          override def call(): B = f(x)
-        })
-        pool.invokeAll(tasks.asJava).asScala.map(_.get()).toSeq
-      } finally pool.shutdown()
-    }
-  }
-
-  /** Footer stats for many files: sequential for a handful (job
-    * latency would exceed the work), a Spark job above that — at
-    * commit time only the small encoded stat maps cross back to the
-    * driver, never file contents. Shared by every commit path that
-    * ingests staged files (append, delta, replace). */
-  private def collectFooterStats(spark: SparkSession, paths: Seq[HPath],
+  /** Footer stats for many files by FooterStats' one rule: on a
+    * driver pool up to its threshold (job latency would exceed the
+    * work), a Spark job above it — at commit time only the small
+    * encoded stat maps cross back to the driver, never file contents.
+    * Shared by every commit path that ingests staged files (append,
+    * delta, replace). */
+  private[graft] def collectFooterStats(spark: SparkSession, paths: Seq[HPath],
       sparkSchema: StructType,
       ice: IcebergMetadata.IceSchema): Map[String, FileStats] =
-    if (paths.size <= 8)
-      paths.map(p => p.toString -> footerBounds(p, sparkSchema, ice)).toMap
+    if (FooterStats.onDriver(spark, paths.size))
+      TableIO.parallelOnDriver(paths)(p =>
+        p.toString -> footerBounds(p, sparkSchema, ice)).toMap
     else {
       val ps = paths.map(_.toString)
       val slices = math.min(ps.size, spark.sparkContext.defaultParallelism)
@@ -292,7 +277,7 @@ object IcebergWrite {
     // per-file metadata RPCs would dominate the commit.
     val staged = TableIO.listFilesRecursive(staging)
       .filter(_._1.getName.endsWith(".parquet"))
-    val moved = parallelOnDriver(staged) { case (src, sz, _) =>
+    val moved = TableIO.parallelOnDriver(staged) { case (src, sz, _) =>
         val rel = TableIO.relativize(staging, src)
         val dest = new HPath(dataDir,
           s"${UUID.randomUUID().toString.take(8)}-${src.getName}")
@@ -304,11 +289,8 @@ object IcebergWrite {
       }
     TableIO.delete(staging, recursive = true)
 
-    // Per-file stats: above a handful of files the footer reads run as
-    // a Spark job (the same shape as FooterStats.collect) — at commit
-    // time only the small encoded stat maps cross back to the driver,
-    // never file contents. Sequentially for tiny appends, where job
-    // latency would exceed the work.
+    // Per-file stats, on the driver pool or a Spark job by
+    // FooterStats' threshold
     val statsByPath: Map[String, FileStats] =
       collectFooterStats(spark, moved.map(_._1), sparkSchema, schema)
     (moved, statsByPath)
@@ -1607,7 +1589,7 @@ object IcebergWrite {
 
     val stagedData = TableIO.listFilesRecursive(dataStaging)
       .filter(_._1.getName.endsWith(".parquet"))
-    val moved = parallelOnDriver(stagedData) { case (src, sz, _) =>
+    val moved = TableIO.parallelOnDriver(stagedData) { case (src, sz, _) =>
       val rel = TableIO.relativize(dataStaging, src)
       val dest = new HPath(dataDir,
         s"${UUID.randomUUID().toString.take(8)}-${src.getName}")

@@ -34,6 +34,31 @@ object GraftConnectorShim {
   def filePartition(index: Int, files: Seq[PartitionedFile]): FilePartition =
     FilePartition(index, files.toArray)
 
+  /** Spark's own split target for files of `sizes` bytes
+    * (FilePartition.maxSplitBytes): min(maxPartitionBytes,
+    * max(openCostInBytes, total / parallelism)), where each file weighs
+    * its size plus openCostInBytes and parallelism is
+    * spark.sql.files.minPartitionNum or the default parallelism. */
+  def maxSplitBytes(spark: org.apache.spark.sql.SparkSession, sizes: Seq[Long]): Long = {
+    val classic = spark.asInstanceOf[SparkSession]
+    val openCost = classic.sessionState.conf.filesOpenCostInBytes
+    FilePartition.maxSplitBytes(classic, sizes.map(_ + openCost).sum)
+  }
+
+  /** Spark's own packing of whole files into bins
+    * (FilePartition.getFilePartitions): largest file first, each
+    * weighing its size plus openCostInBytes, a bin closing before a
+    * file would take it past `maxSplitBytes`. Each bin lists its files
+    * by path, so a task that writes rows in read order (a merge-on-read
+    * DELETE's position deletes) writes them sorted by file path. */
+  def packFiles[A](spark: org.apache.spark.sql.SparkSession, files: Seq[A],
+      maxSplitBytes: Long)(path: A => String, size: A => Long): Seq[Seq[A]] = {
+    val byPath = files.map(f => SparkPath.fromPathString(path(f)) -> f).toMap
+    val largestFirst = files.sortBy(f => -size(f)).map(f => partitionedFile(path(f), size(f), 0L))
+    FilePartition.getFilePartitions(spark.asInstanceOf[SparkSession], largestFirst, maxSplitBytes)
+      .map(_.files.toSeq.map(pf => byPath(pf.filePath)).sortBy(path))
+  }
+
   /** Driver-side: hadoop conf prepared the way ParquetFileFormat.
     * prepareWrite does, serialized for shipping to write tasks. */
   def prepareParquetWriteConf(

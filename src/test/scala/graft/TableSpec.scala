@@ -25,38 +25,60 @@ class TableSpec extends AnyFunSuite {
     assert(math.abs(a - b) < 1e-6)
   }
 
-  test("footer stats agree between the driver-pool and distributed paths") {
-    // collect() reads footers on a driver pool at or below
-    // spark.graft.stats.driverFooterThreshold and through a no-shuffle
-    // sc.parallelize job above it — same stats either way
+  // each format reads footers on a driver pool at or below
+  // spark.graft.stats.driverFooterThreshold and through a no-shuffle
+  // sc.parallelize job above it — same stats either way
+  for (format <- Seq("graft", "iceberg"))
+  test("footer stats agree between the driver-pool and distributed paths" +
+      (if (format == "iceberg") " [iceberg]" else "")) {
     val dir = Files.createTempDirectory("graft-footers").toString + "/files"
-    li.limit(3000).repartition(3, col("l_orderkey"))
-      .write.parquet(dir)
+    val rows = li.limit(3000)
+    rows.repartition(3, col("l_orderkey")).write.parquet(dir)
     val paths = graft.table.TableIO.listFilesRecursive(
         new org.apache.hadoop.fs.Path(dir))
       .map(_._1.toString).filter(_.endsWith(".parquet"))
     assert(paths.size === 3)
-    val prunable = Set("l_orderkey", "l_shipdate", "l_quantity")
-    def byPath(th: String) = {
+    def withThreshold[A](th: String)(f: => A): A = {
       val prev = spark.conf.getOption("spark.graft.stats.driverFooterThreshold")
       spark.conf.set("spark.graft.stats.driverFooterThreshold", th)
-      try graft.table.FooterStats.collect(spark, paths, prunable)
-        .map(f => f.path -> f).toMap
+      try f
       finally prev match {
         case Some(v) => spark.conf.set("spark.graft.stats.driverFooterThreshold", v)
         case None => spark.conf.unset("spark.graft.stats.driverFooterThreshold")
       }
     }
-    val pooled = byPath("64")      // 3 <= 64: driver pool
-    val jobbed = byPath("1")       // 3 > 1: distributed branch
-    assert(pooled.keySet === jobbed.keySet)
-    pooled.foreach { case (p, f) =>
-      assert(f.records === jobbed(p).records)
-      assert(f.stats === jobbed(p).stats)
-      assert(f.stats.keySet === prunable) // every prunable column got bounds
-      assert(f.columns === jobbed(p).columns)
+    if (format == "graft") {
+      val prunable = Set("l_orderkey", "l_shipdate", "l_quantity")
+      def byPath(th: String) = withThreshold(th)(graft.table.FooterStats
+        .collect(spark, paths, prunable).map(f => f.path -> f).toMap)
+      val pooled = byPath("64")      // 3 <= 64: driver pool
+      val jobbed = byPath("1")       // 3 > 1: distributed branch
+      assert(pooled.keySet === jobbed.keySet)
+      pooled.foreach { case (p, f) =>
+        assert(f.records === jobbed(p).records)
+        assert(f.stats === jobbed(p).stats)
+        assert(f.stats.keySet === prunable) // every prunable column got bounds
+        assert(f.columns === jobbed(p).columns)
+      }
+      assert(pooled.values.map(_.records).sum === 3000L)
+    } else {
+      val ice = graft.table.iceberg.IcebergMetadata.schemaFromSpark(rows.schema)
+      // (records, lower, upper, nulls) with the encoded bounds as lists
+      // so the two sides compare by value
+      def byPath(th: String) = withThreshold(th)(graft.table.iceberg.IcebergWrite
+        .collectFooterStats(spark, paths.map(new org.apache.hadoop.fs.Path(_)),
+          rows.schema, ice)).map { case (p, (n, lo, hi, nulls)) =>
+            p -> (n, lo.map(e => e._1 -> e._2.toList), hi.map(e => e._1 -> e._2.toList),
+              nulls)
+          }
+      val pooled = byPath("64")
+      val jobbed = byPath("1")
+      assert(pooled === jobbed)
+      assert(pooled.size === 3)
+      assert(pooled.values.map(_._1).sum === 3000L)
+      // every column got bounds
+      pooled.values.foreach(f => assert(f._2.keySet === ice.fields.map(_.id).toSet))
     }
-    assert(pooled.values.map(_.records).sum === 3000L)
   }
 
   test("manifest-known scans expose the commit timestamp as file mtime") {
