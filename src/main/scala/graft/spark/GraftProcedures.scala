@@ -8,7 +8,7 @@ import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, Proced
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.table.{GraftTable, Meta, TableIO}
+import graft.table.{Meta, TableIO}
 
 /** SQL stored procedures for table maintenance — `CALL cat.system.X(...)`
   * on Spark 4's ProcedureCatalog API. This is how every engine exposes
@@ -34,66 +34,81 @@ object GraftProcedures {
   private def row(values: Any*): InternalRow =
     new GenericInternalRow(values.toArray)
 
-  private def result(schema: StructType, rows: Seq[InternalRow])
-      : java.util.Iterator[Scan] =
-    java.util.Collections.singletonList(
-      ResultScan(schema, rows.toArray): Scan).iterator()
-
-  /** A maintenance procedure: fixed parameter list, fixed output
-    * schema, body over the resolved table. Binding is trivial —
-    * Spark aligns/coerces/defaults the CALL arguments against
-    * `parameters()`, so `bind` just returns the bound form.
-    *
-    * Resolution yields either a graft table (`Right`) or the location
-    * of an adopted REAL-format Iceberg table (`Left`) — the catalog
-    * lists both, and register_table / add_files invite foreign tables
-    * in, so maintenance must reach them too (the reference applies
-    * the same transaction surface to its tables,
-    * table/transaction/mod.rs:33-97). Procedures that support foreign
-    * tables override `foreignBody`; the rest fail with a clear
-    * message instead of a metadata parse error. */
-  abstract class GraftProcedure(val procName: String,
-      description: String,
+  /** A procedure: fixed parameter list, fixed output schema, and the
+    * rows one CALL returns. Binding is trivial — Spark aligns, coerces
+    * and defaults the CALL arguments against `parameters()`, so `bind`
+    * just returns the bound form. */
+  abstract class CatalogProcedure(val procName: String,
+      procDescription: String,
       params: Array[ProcedureParameter],
-      outputSchema: StructType,
-      resolve: String => Either[String, GraftTable])
+      outputSchema: StructType)
       extends UnboundProcedure with BoundProcedure {
     override def name(): String = procName
+    override def description(): String = procDescription
     override def bind(inputType: StructType): BoundProcedure = this
     override def parameters(): Array[ProcedureParameter] = params
     override def isDeterministic: Boolean = false
     override def call(input: InternalRow): java.util.Iterator[Scan] =
-      resolve(input.getUTF8String(0).toString) match {
-        case Right(t) => result(outputSchema, body(t, input))
-        case Left(loc) => result(outputSchema, foreignBody(loc, input))
-      }
-    protected def body(t: GraftTable, input: InternalRow): Seq[InternalRow]
-    protected def foreignBody(location: String,
-        input: InternalRow): Seq[InternalRow] =
-      throw new UnsupportedOperationException(
-        s"CALL $procName: $location holds a real-format Iceberg table, " +
-          "which this procedure does not support (every other " +
-          "maintenance procedure runs on adopted real-format tables)")
+      java.util.Collections.singletonList(
+        ResultScan(outputSchema, rows(input).toArray): Scan).iterator()
+    protected def rows(input: InternalRow): Seq[InternalRow]
+  }
+
+  /** A maintenance procedure over the table its first argument names.
+    * The catalog resolves that name to the table's format handle — a
+    * graft table or an adopted real-format Iceberg table, since the
+    * catalog lists both and register_table / add_files invite foreign
+    * tables in — and the one body runs through it, as the reference
+    * applies one transaction surface to every table
+    * (table/transaction/mod.rs:33-97). A refusal that depends on the
+    * format comes from the handle. `params` follow `table`, so their
+    * arguments start at index 1. */
+  abstract class GraftProcedure(procName: String,
+      procDescription: String,
+      params: Array[ProcedureParameter],
+      outputSchema: StructType,
+      loadFormat: Identifier => TableFormat)
+      extends CatalogProcedure(procName, procDescription,
+        TableParam +: params, outputSchema) {
+    protected final def rows(in: InternalRow): Seq[InternalRow] =
+      body(loadFormat(identifier(in.getUTF8String(0).toString)), in)
+    protected def body(format: TableFormat, in: InternalRow): Seq[InternalRow]
   }
 
   private val TableParam =
     ProcedureParameter.in("table", StringType)
       .comment("table identifier, e.g. 'db.t'").build()
 
-  def all(warehouse: String,
-      loadTable: String => Either[String, GraftTable],
-      restRegister: Option[(String, String) => Unit] = None,
-      restBase: Option[String] = None)
-      : Map[String, UnboundProcedure] = {
-    import graft.table.iceberg.{IcebergMaintenance, IcebergMetadata,
-      IcebergTable, IcebergWrite}
-    val procs = Seq[GraftProcedure](
+  /** A dotted table name ('db.t', 'a.b.t') as a catalog identifier. */
+  private def identifier(name: String): Identifier = {
+    val parts = name.split('.')
+    Identifier.of(parts.init, parts.last)
+  }
 
-      // register_table (catalog/mod.rs:95): adopt an EXISTING graft
-      // table living OUTSIDE the warehouse under a catalog name.
+  private def opt[T](in: InternalRow, i: Int, get: Int => T): Option[T] =
+    if (in.isNullAt(i)) None else Some(get(i))
+
+  /** `snapshot_id` at `i`, NULL meaning the current snapshot. */
+  private def snapshotOrCurrent(format: TableFormat, in: InternalRow, i: Int): Long =
+    opt(in, i, in.getLong).orElse(format.currentSnapshotId).getOrElse(
+      throw new IllegalArgumentException("table has no snapshot"))
+
+  private def commaList(s: String): Seq[String] =
+    s.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+
+  def all(catalog: GraftTableCatalog): Map[String, UnboundProcedure] = {
+    import graft.table.iceberg.{IcebergMaintenance, IcebergMetadata,
+      IcebergRestClient}
+    def warehouse = catalog.warehouse
+    def restBase = catalog.restBase
+    val loadFormat: Identifier => TableFormat = catalog.loadFormat
+    val procs = Seq[CatalogProcedure](
+
+      // register_table (catalog/mod.rs:95): adopt an EXISTING table
+      // living OUTSIDE the warehouse under a catalog name.
       // Metadata-only — a pointer file at the conventional path; DROP
       // deregisters without touching the external table.
-      new GraftProcedure("register_table",
+      new CatalogProcedure("register_table",
         "Register an existing graft table at an external location " +
           "under a catalog name. Writes only a location pointer; the " +
           "table's data and metadata stay where they are. DROP TABLE " +
@@ -103,54 +118,47 @@ object GraftProcedures {
             .comment("existing table root directory").build()),
         StructType(Seq(
           StructField("registered", StringType),
-          StructField("current_snapshot_id", LongType))),
-        loadTable) {
-        override def call(input: InternalRow): java.util.Iterator[Scan] = {
-          val name = input.getUTF8String(0).toString
-          val loc = input.getUTF8String(1).toString
+          StructField("current_snapshot_id", LongType)))) {
+        protected def rows(in: InternalRow): Seq[InternalRow] = {
+          val name = in.getUTF8String(0).toString
+          val loc = in.getUTF8String(1).toString
           // graft AND real-format tables both register: the catalog's
           // loadTable follows the pointer and routes by format
           val format = TableFormat.resolve(loc).getOrElse(
             throw new IllegalArgumentException(s"no table metadata under $loc"))
-          val snap = format.currentSnapshotId.getOrElse(-1L)
-          // REST mode: the registration belongs to the SERVER — the
-          // spec's POST /namespaces/{ns}/register imports the current
-          // metadata file; data stays at the original location
-          restRegister.foreach { reg =>
-            require(!format.isInstanceOf[TableFormat.GraftFormat],
-              "register_table over REST serves real-format tables " +
-                "(the protocol imports a metadata.json)")
-            reg(name, loc)
-            return result(StructType(Seq(
-              StructField("registered", StringType),
-              StructField("current_snapshot_id", LongType))),
-              Seq(row(utf8(loc), snap)))
+          restBase match {
+            // REST mode: the registration belongs to the SERVER — the
+            // spec's POST /namespaces/{ns}/register imports the current
+            // metadata file; data stays at the original location
+            case Some(base) =>
+              require(format.kind != "graft",
+                "register_table over REST serves real-format tables " +
+                  "(the protocol imports a metadata.json)")
+              val ident = identifier(name)
+              IcebergRestClient.registerTable(base,
+                catalog.restNs(ident.namespace()), ident.name(),
+                IcebergMetadata.currentMetadataFile(loc).toString)
+            case None =>
+              require(warehouse != null,
+                "register_table needs a filesystem warehouse or a REST " +
+                  "catalog server")
+              val conv = (warehouse +: name.split('.').toSeq).mkString("/")
+              val pointer = TableIO.path(
+                conv + "/" + GraftTableCatalog.LocationPointer)
+              require(!Meta.exists(conv) && !TableIO.exists(pointer),
+                s"table $name already exists")
+              TableIO.mkdirs(TableIO.path(conv))
+              TableIO.writeString(pointer, loc)
           }
-          require(warehouse != null,
-            "register_table needs a filesystem warehouse or a REST " +
-              "catalog server")
-          val conv = (warehouse +: name.split('.').toSeq).mkString("/")
-          require(!Meta.exists(conv) && !graft.table.TableIO.exists(
-            graft.table.TableIO.path(
-              conv + "/" + GraftTableCatalog.LocationPointer)),
-            s"table $name already exists")
-          graft.table.TableIO.mkdirs(graft.table.TableIO.path(conv))
-          graft.table.TableIO.writeString(graft.table.TableIO.path(
-            conv + "/" + GraftTableCatalog.LocationPointer), loc)
-          result(outputSchema0, Seq(row(utf8(loc), snap)))
+          Seq(row(utf8(loc), format.currentSnapshotId.getOrElse(-1L)))
         }
-        private val outputSchema0 = StructType(Seq(
-          StructField("registered", StringType),
-          StructField("current_snapshot_id", LongType)))
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] =
-          Seq.empty // unused: call() is overridden
       },
 
       new GraftProcedure("expire_snapshots",
         "Expire history older than the newest keep_last snapshots; " +
           "older_than_ms additionally keeps everything younger than " +
           "the bound (ref retention policies override both)",
-        Array(TableParam,
+        Array(
           ProcedureParameter.in("keep_last", IntegerType)
             .defaultValue("1").build(),
           ProcedureParameter.in("older_than_ms", LongType)
@@ -158,34 +166,23 @@ object GraftProcedures {
         StructType(Seq(
           StructField("snapshots_before", IntegerType),
           StructField("snapshots_after", IntegerType))),
-        loadTable) {
-        private def bound(in: InternalRow): Option[Long] =
-          if (in.isNullAt(2)) None else Some(in.getLong(2))
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] = {
-          val before = t.meta.snapshots.size
-          t.expireSnapshots(keepLast = in.getInt(1),
-            maxAgeMs = bound(in))
-          Seq(row(before, t.meta.snapshots.size))
-        }
-        override def foreignBody(loc: String, in: InternalRow): Seq[InternalRow] = {
-          val (before, after) = IcebergMaintenance.expireSnapshots(
-            loc, in.getInt(1), maxAgeMs = bound(in))
+        loadFormat) {
+        def body(format: TableFormat, in: InternalRow): Seq[InternalRow] = {
+          val (before, after) =
+            format.expireSnapshots(in.getInt(1), opt(in, 2, in.getLong))
           Seq(row(before, after))
         }
       },
 
       new GraftProcedure("vacuum",
         "Delete unreferenced data/delete files older than older_than_ms",
-        Array(TableParam,
+        Array(
           ProcedureParameter.in("older_than_ms", LongType)
             .defaultValue("3600000").build()),
         StructType(Seq(StructField("removed_files", IntegerType))),
-        loadTable) {
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] =
-          Seq(row(t.vacuum(in.getLong(1)).size))
-        override def foreignBody(loc: String, in: InternalRow): Seq[InternalRow] =
-          Seq(row(IcebergMaintenance.vacuum(
-            SparkSession.active, loc, in.getLong(1)).size))
+        loadFormat) {
+        def body(format: TableFormat, in: InternalRow): Seq[InternalRow] =
+          Seq(row(format.vacuum(in.getLong(1))))
       },
 
       new GraftProcedure("remove_orphan_files",
@@ -194,7 +191,7 @@ object GraftProcedures {
           "also drops retired graft.streaming.epoch.* high-water " +
           "properties (queries with no stamped snapshot left in a " +
           "history spanning the window)",
-        Array(TableParam,
+        Array(
           ProcedureParameter.in("older_than_ms", LongType)
             .defaultValue("3600000").build(),
           ProcedureParameter.in("dry_run", BooleanType)
@@ -202,14 +199,9 @@ object GraftProcedures {
           ProcedureParameter.in("prune_stream_props", BooleanType)
             .defaultValue("false").build()),
         StructType(Seq(StructField("orphan_path", StringType))),
-        loadTable) {
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] =
-          t.removeOrphanFiles(in.getLong(1), in.getBoolean(2),
-            pruneStreamProps = in.getBoolean(3))
-            .map(p => row(utf8(p)))
-        override def foreignBody(loc: String, in: InternalRow): Seq[InternalRow] =
-          IcebergMaintenance.removeOrphanFiles(
-            SparkSession.active, loc, in.getLong(1), in.getBoolean(2),
+        loadFormat) {
+        def body(format: TableFormat, in: InternalRow): Seq[InternalRow] =
+          format.removeOrphanFiles(in.getLong(1), in.getBoolean(2),
             pruneStreamProps = in.getBoolean(3))
             .map(p => row(utf8(p)))
       },
@@ -220,7 +212,7 @@ object GraftProcedures {
       // the REST protocol's stage-create, create.rs:59) — invisible
       // to listings, owned by no table, so the sweep is scoped by
       // namespace rather than table.
-      new GraftProcedure("remove_orphan_staging",
+      new CatalogProcedure("remove_orphan_staging",
         "List (dry_run) or delete abandoned namespace-level .stage-* " +
           "staging dirs left by a crashed CTAS, once every file in " +
           "them is older than older_than_ms. Staging dirs a live " +
@@ -233,11 +225,8 @@ object GraftProcedures {
             .defaultValue("3600000").build(),
           ProcedureParameter.in("dry_run", BooleanType)
             .defaultValue("false").build()),
-        StructType(Seq(StructField("orphan_dir", StringType))),
-        loadTable) {
-        private val out =
-          StructType(Seq(StructField("orphan_dir", StringType)))
-        override def call(in: InternalRow): java.util.Iterator[Scan] = {
+        StructType(Seq(StructField("orphan_dir", StringType)))) {
+        protected def rows(in: InternalRow): Seq[InternalRow] = {
           val parts = in.getUTF8String(0).toString
             .split('.').toSeq.filter(_.nonEmpty)
           require(parts.nonEmpty, "namespace required")
@@ -249,14 +238,10 @@ object GraftProcedures {
               // field points at the staged dir) — resolve every table
               // in the namespace and protect root AND location
               val ns = parts.mkString("\u001F")
-              val roots0 = graft.table.iceberg.IcebergRestClient
-                .listTables(base, ns)
-                .flatMap(t => graft.table.iceberg.IcebergRestClient
-                  .tableRootOf(base, ns, t))
+              val roots0 = IcebergRestClient.listTables(base, ns)
+                .flatMap(t => IcebergRestClient.tableRootOf(base, ns, t))
               val roots = roots0 ++ roots0.flatMap(r =>
-                scala.util.Try(
-                  graft.table.iceberg.IcebergMetadata.load(r).location)
-                  .toOption)
+                scala.util.Try(IcebergMetadata.load(r).location).toOption)
               val dir =
                 if (warehouse != null && warehouse.nonEmpty)
                   (warehouse +: parts).mkString("/")
@@ -274,12 +259,10 @@ object GraftProcedures {
               // under the namespace is never a live table location
               ((warehouse +: parts).mkString("/"), Set.empty[String])
           }
-          result(out, IcebergMaintenance.sweepStagedDirs(
+          IcebergMaintenance.sweepStagedDirs(
               nsDir, live, in.getLong(1), in.getBoolean(2))
-            .map(p => row(utf8(p))))
+            .map(p => row(utf8(p)))
         }
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] =
-          Seq.empty // unused: call() is overridden
       },
 
       new GraftProcedure("add_files",
@@ -288,20 +271,14 @@ object GraftProcedures {
           "a pinned per-file name mapping (the files carry no field " +
           "ids). Identity-partitioned tables derive partition values " +
           "from Hive-style col=value directories.",
-        Array(TableParam,
-          ProcedureParameter.in("source_dir", StringType).build()),
+        Array(ProcedureParameter.in("source_dir", StringType).build()),
         StructType(Seq(
           StructField("added_files_count", LongType),
           StructField("added_rows_count", LongType))),
-        loadTable) {
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] = {
-          val added = t.addFiles(in.getUTF8String(1).toString)
-          Seq(row(added.size.toLong, added.map(_.recordCount).sum))
-        }
-        override def foreignBody(loc: String, in: InternalRow): Seq[InternalRow] = {
-          val (n, rows) =
-            IcebergWrite.addFiles(loc, in.getUTF8String(1).toString)
-          Seq(row(n.toLong, rows))
+        loadFormat) {
+        def body(format: TableFormat, in: InternalRow): Seq[InternalRow] = {
+          val (files, rows) = format.addFiles(in.getUTF8String(1).toString)
+          Seq(row(files, rows))
         }
       },
 
@@ -313,7 +290,7 @@ object GraftProcedures {
           "live files clustered on the Morton interleave of " +
           "sort_columns (comma-separated), without changing the " +
           "table's sort order. Outstanding deletes fold in.",
-        Array(TableParam,
+        Array(
           ProcedureParameter.in("target_file_size_bytes", LongType)
             .defaultValue((128L * 1024 * 1024).toString).build(),
           ProcedureParameter.in("strategy", StringType)
@@ -323,55 +300,23 @@ object GraftProcedures {
         StructType(Seq(
           StructField("rewritten_data_files", IntegerType),
           StructField("added_data_files", IntegerType))),
-        loadTable) {
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] = {
-          val before = t.meta.liveFiles(None).map(_.path).toSet
-          in.getUTF8String(2).toString match {
-            case "binpack" => t.compact(in.getLong(1))
-            case "sort" => t.rewriteSort(in.getLong(1))
-            case "zorder" =>
-              val cols = in.getUTF8String(3).toString.split(',')
-                .map(_.trim).filter(_.nonEmpty).toSeq
-              t.rewriteZOrder(cols, in.getLong(1))
-            case other => throw new IllegalArgumentException(
-              s"unknown rewrite strategy '$other' (binpack | sort | zorder)")
-          }
-          val after = t.meta.liveFiles(None).map(_.path).toSet
-          Seq(row((before -- after).size, (after -- before).size))
-        }
-        // foreign tables: IcebergWrite.rewrite folds the current
-        // content (MoR deletes applied) into target-sized files; a
-        // default table sort order range-clusters the rewrite, so
-        // 'sort' and 'binpack' share the one full-rewrite path
-        override def foreignBody(loc: String, in: InternalRow): Seq[InternalRow] = {
-          in.getUTF8String(2).toString match {
-            case "binpack" | "sort" =>
-            case other => throw new IllegalArgumentException(
-              s"rewrite strategy '$other' is not supported on " +
-                "real-format Iceberg tables (binpack | sort)")
-          }
-          val s = SparkSession.active
-          val before = IcebergTable.load(s, loc).plannedFiles().size
-          val added = IcebergWrite.rewrite(s, loc, in.getLong(1))
-          Seq(row(before, added))
+        loadFormat) {
+        def body(format: TableFormat, in: InternalRow): Seq[InternalRow] = {
+          val (rewritten, added) = format.rewriteDataFiles(
+            in.getUTF8String(2).toString,
+            commaList(in.getUTF8String(3).toString), in.getLong(1))
+          Seq(row(rewritten, added))
         }
       },
 
       new GraftProcedure("rewrite_manifests",
         "Re-spill fat single-file manifests into sorted multi-group " +
           "form (metadata-only; group-granular planning)",
-        Array(TableParam),
+        Array(),
         StructType(Seq(StructField("rewritten_manifests", IntegerType))),
-        loadTable) {
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] =
-          Seq(row(t.rewriteManifests()))
-        // real-format tables: consolidate the current snapshot's data
-        // manifests (metadata-only 'replace' commit; delete manifests
-        // carried); report how many source manifests were replaced
-        override def foreignBody(loc: String, in: InternalRow): Seq[InternalRow] = {
-          val (before, after) = IcebergWrite.rewriteManifests(loc)
-          Seq(row(if (after < before) before else 0))
-        }
+        loadFormat) {
+        def body(format: TableFormat, in: InternalRow): Seq[InternalRow] =
+          Seq(row(format.rewriteManifests()))
       },
 
       new GraftProcedure("rewrite_delete_files",
@@ -380,40 +325,18 @@ object GraftProcedures {
           "EQUALITY deletes as position-delete slots and drop the " +
           "equality files — data files untouched, scans stop paying " +
           "the per-row key-set probe",
-        Array(TableParam,
+        Array(
           ProcedureParameter.in("mode", StringType)
             .defaultValue("'fold'").build()),
         StructType(Seq(StructField("removed_delete_files", IntegerType))),
-        loadTable) {
-        private def mode(in: InternalRow): String = {
-          val m = in.getUTF8String(1).toString
-          require(m == "fold" || m == "convert",
-            s"rewrite_delete_files: unknown mode '$m' (fold | convert)")
-          m
-        }
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] =
-          mode(in) match {
-            case "convert" =>
-              val (converted, _) = t.convertEqualityDeletes()
-              Seq(row(converted))
-            case _ =>
-              val before = t.meta.liveDeleteFiles(None).size
-              t.applyDeletes()
-              Seq(row(before - t.meta.liveDeleteFiles(None).size))
+        loadFormat) {
+        def body(format: TableFormat, in: InternalRow): Seq[InternalRow] =
+          in.getUTF8String(1).toString match {
+            case "fold" => Seq(row(format.foldDeletes()))
+            case "convert" => Seq(row(format.convertEqualityDeletes()))
+            case m => throw new IllegalArgumentException(
+              s"rewrite_delete_files: unknown mode '$m' (fold | convert)")
           }
-        override def foreignBody(loc: String, in: InternalRow): Seq[InternalRow] = {
-          val s = SparkSession.active
-          mode(in) match {
-            case "convert" =>
-              val (converted, _) = IcebergWrite.convertEqualityDeletes(s, loc)
-              Seq(row(converted))
-            case _ =>
-              val before = IcebergTable.load(s, loc).deleteEntries().size
-              if (before > 0) IcebergWrite.rewrite(s, loc)
-              val after = IcebergTable.load(s, loc).deleteEntries().size
-              Seq(row(before - after))
-          }
-        }
       },
 
       new GraftProcedure("update_by_key",
@@ -423,45 +346,26 @@ object GraftProcedures {
           "candidate files never rewritten. key_values is a SQL literal " +
           "list (e.g. \"1, 2, 3\" or \"'a','b'\"), assignments a SQL " +
           "SET list (e.g. \"w = w * 2, v = 'x'\")",
-        Array(TableParam,
+        Array(
           ProcedureParameter.in("key_column", StringType).build(),
           ProcedureParameter.in("key_values", StringType).build(),
           ProcedureParameter.in("assignments", StringType).build()),
         StructType(Seq(StructField("updated_rows", LongType))),
-        loadTable) {
-        private def parseSets(s: String): Seq[(String, org.apache.spark.sql.Column)] =
-          GraftProcedures.splitTopLevel(s).map { a =>
+        loadFormat) {
+        def body(format: TableFormat, in: InternalRow): Seq[InternalRow] = {
+          val keyCol = in.getUTF8String(1).toString
+          val dt = format.schemaAt(None).fields.find(_.name == keyCol)
+            .getOrElse(throw new IllegalArgumentException(
+              s"no column $keyCol")).dataType
+          val keys = SparkSession.active.sql(
+            s"SELECT CAST(v AS ${dt.sql}) AS `$keyCol` " +
+              s"FROM (SELECT explode(array(${in.getUTF8String(2)})) AS v)")
+          val sets = splitTopLevel(in.getUTF8String(3).toString).map { a =>
             val i = a.indexOf('=')
             require(i > 0, s"malformed assignment '$a' (want col = expr)")
-            a.take(i).trim ->
-              org.apache.spark.sql.functions.expr(a.drop(i + 1))
+            a.take(i).trim -> org.apache.spark.sql.functions.expr(a.drop(i + 1))
           }
-        private def keysDf(s: SparkSession, dt: org.apache.spark.sql.types.DataType,
-            keyCol: String, vals: String): org.apache.spark.sql.DataFrame =
-          s.sql(s"SELECT CAST(v AS ${dt.sql}) AS `$keyCol` " +
-            s"FROM (SELECT explode(array($vals)) AS v)")
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] = {
-          val s = SparkSession.active
-          val keyCol = in.getUTF8String(1).toString
-          val dt = t.meta.schema.fields.find(_.name == keyCol)
-            .getOrElse(throw new IllegalArgumentException(
-              s"no column $keyCol")).dataType
-          val n = t.updateByKey(
-            keysDf(s, dt, keyCol, in.getUTF8String(2).toString),
-            Seq(keyCol), parseSets(in.getUTF8String(3).toString))
-          Seq(row(n))
-        }
-        override def foreignBody(loc: String, in: InternalRow): Seq[InternalRow] = {
-          val s = SparkSession.active
-          val keyCol = in.getUTF8String(1).toString
-          val ice = graft.table.iceberg.IcebergMetadata.load(loc)
-          val dt = ice.schema.toSpark.fields.find(_.name == keyCol)
-            .getOrElse(throw new IllegalArgumentException(
-              s"no column $keyCol")).dataType
-          val n = IcebergWrite.updateByKey(s, loc,
-            keysDf(s, dt, keyCol, in.getUTF8String(2).toString),
-            Seq(keyCol), parseSets(in.getUTF8String(3).toString))
-          Seq(row(n))
+          Seq(row(format.updateByKey(keys, Seq(keyCol), sets)))
         }
       },
 
@@ -469,43 +373,29 @@ object GraftProcedures {
         "Consolidate merge-on-read POSITION delete files into one " +
           "(distinct slots, dangling rows dropped) — metadata+delete-" +
           "scale, data files untouched; equality deletes unaffected",
-        Array(TableParam),
+        Array(),
         StructType(Seq(
           StructField("rewritten_delete_files", IntegerType),
           StructField("added_delete_files", IntegerType))),
-        loadTable) {
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] = {
-          val (before, after) = t.rewritePositionDeletes()
-          Seq(row(if (after < before) before else 0,
-            if (after < before) after else 0))
-        }
-        override def foreignBody(loc: String, in: InternalRow): Seq[InternalRow] = {
-          val (before, after) = IcebergWrite.rewritePositionDeletes(
-            SparkSession.active, loc)
-          Seq(row(if (after < before) before else 0,
-            if (after < before) after else 0))
+        loadFormat) {
+        def body(format: TableFormat, in: InternalRow): Seq[InternalRow] = {
+          val (before, after) = format.rewritePositionDeletes()
+          Seq(if (after < before) row(before, after) else row(0, 0))
         }
       },
 
       new GraftProcedure("rollback_to_snapshot",
         "Make an earlier snapshot current (reversible until expired)",
-        Array(TableParam,
-          ProcedureParameter.in("snapshot_id", LongType).build()),
+        Array(ProcedureParameter.in("snapshot_id", LongType).build()),
         StructType(Seq(
           StructField("previous_snapshot_id", LongType),
           StructField("current_snapshot_id", LongType))),
-        loadTable) {
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] = {
-          val prev = t.meta.currentSnapshotId.getOrElse(-1L)
+        loadFormat) {
+        def body(format: TableFormat, in: InternalRow): Seq[InternalRow] = {
+          val previous = format.currentSnapshotId.getOrElse(-1L)
           val target = in.getLong(1)
-          t.rollbackTo(target)
-          Seq(row(prev, target))
-        }
-        override def foreignBody(loc: String, in: InternalRow): Seq[InternalRow] = {
-          val prev = IcebergMetadata.load(loc).currentSnapshotId.getOrElse(-1L)
-          val target = in.getLong(1)
-          IcebergMaintenance.rollbackTo(loc, target)
-          Seq(row(prev, target))
+          format.rollbackTo(target)
+          Seq(row(previous, target))
         }
       },
 
@@ -513,7 +403,7 @@ object GraftProcedures {
         "Create or repoint a branch at snapshot_id (NULL = current), " +
           "optionally with a SnapshotRetention policy honored by " +
           "expire_snapshots",
-        Array(TableParam,
+        Array(
           ProcedureParameter.in("branch", StringType).build(),
           ProcedureParameter.in("snapshot_id", LongType)
             .defaultValue("CAST(NULL AS BIGINT)").build(),
@@ -526,33 +416,14 @@ object GraftProcedures {
         StructType(Seq(
           StructField("branch", StringType),
           StructField("snapshot_id", LongType))),
-        loadTable) {
-        private def opt[T](in: InternalRow, i: Int, get: Int => T)
-            : Option[T] = if (in.isNullAt(i)) None else Some(get(i))
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] = {
-          val snap =
-            if (in.isNullAt(2)) t.meta.currentSnapshotId.getOrElse(
-              throw new IllegalArgumentException("table has no snapshot"))
-            else in.getLong(2)
+        loadFormat) {
+        def body(format: TableFormat, in: InternalRow): Seq[InternalRow] = {
+          val snap = snapshotOrCurrent(format, in, 2)
           val branch = in.getUTF8String(1).toString
-          t.setRef(branch, snap, Some(Meta.RefRetention("branch",
+          format.setRef(branch, snap, Meta.RefRetention("branch",
             maxRefAgeMs = opt(in, 5, in.getLong),
             minSnapshotsToKeep = opt(in, 3, in.getInt),
-            maxSnapshotAgeMs = opt(in, 4, in.getLong))))
-          Seq(row(utf8(branch), snap))
-        }
-        override def foreignBody(loc: String, in: InternalRow): Seq[InternalRow] = {
-          val m = IcebergMetadata.load(loc)
-          val snap =
-            if (in.isNullAt(2)) m.currentSnapshotId.getOrElse(
-              throw new IllegalArgumentException("table has no snapshot"))
-            else in.getLong(2)
-          val branch = in.getUTF8String(1).toString
-          IcebergMaintenance.setRef(loc, branch, snap,
-            retention = Some(IcebergMetadata.IceRefRetention(
-              minSnapshotsToKeep = opt(in, 3, in.getInt),
-              maxSnapshotAgeMs = opt(in, 4, in.getLong),
-              maxRefAgeMs = opt(in, 5, in.getLong))))
+            maxSnapshotAgeMs = opt(in, 4, in.getLong)))
           Seq(row(utf8(branch), snap))
         }
       },
@@ -560,40 +431,17 @@ object GraftProcedures {
       new GraftProcedure("analyze_table",
         "Compute approx per-column NDV (one distributed pass) and " +
           "persist as table stats for the cost-based optimizer",
-        Array(TableParam,
+        Array(
           ProcedureParameter.in("columns", StringType)
             .defaultValue("''")
             .comment("comma-separated; empty = all simple columns").build()),
         StructType(Seq(
           StructField("column", StringType),
           StructField("ndv", LongType))),
-        loadTable) {
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] = {
-          val cols = in.getUTF8String(1).toString.split(',')
-            .map(_.trim).filter(_.nonEmpty).toSeq
-          t.analyze(cols).toSeq.sortBy(_._1)
-            .map { case (c, n) => row(utf8(c), n) }
-        }
-        // foreign tables: the same one-pass approx-NDV over the
-        // real-format scan (results returned, not persisted — the
-        // real format has no graft stats slot; Puffin is out of scope)
-        override def foreignBody(loc: String, in: InternalRow): Seq[InternalRow] = {
-          import org.apache.spark.sql.functions.{approx_count_distinct, col}
-          val s = SparkSession.active
-          val t = graft.table.iceberg.IcebergTable.load(s, loc)
-          val asked = in.getUTF8String(1).toString.split(',')
-            .map(_.trim).filter(_.nonEmpty).toSeq
-          val cols =
-            if (asked.nonEmpty) asked
-            else t.schema.fields.filter(_.dataType match {
-              case _: ArrayType | _: MapType | _: StructType => false
-              case _ => true
-            }).map(_.name).toSeq
-          val agg = t.scan()
-            .select(cols.map(c => approx_count_distinct(col(c)).as(c)): _*)
-            .collect()(0)
-          cols.sorted.map(c => row(utf8(c), agg.getAs[Long](c)))
-        }
+        loadFormat) {
+        def body(format: TableFormat, in: InternalRow): Seq[InternalRow] =
+          format.analyze(commaList(in.getUTF8String(1).toString))
+            .sortBy(_._1).map { case (c, n) => row(utf8(c), n) }
       },
 
       new GraftProcedure("create_changelog_view",
@@ -601,7 +449,7 @@ object GraftProcedures {
           "(start_snapshot_id, end_snapshot_id], rows tagged " +
           "_change_type/_commit_snapshot_id (Iceberg's " +
           "create_changelog_view shape)",
-        Array(TableParam,
+        Array(
           ProcedureParameter.in("view_name", StringType).build(),
           ProcedureParameter.in("start_snapshot_id", LongType)
             .defaultValue("CAST(NULL AS BIGINT)").build(),
@@ -610,21 +458,11 @@ object GraftProcedures {
         StructType(Seq(
           StructField("view_name", StringType),
           StructField("change_count", LongType))),
-        loadTable) {
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] = {
-          val start = if (in.isNullAt(2)) None else Some(in.getLong(2))
-          val end = if (in.isNullAt(3)) None else Some(in.getLong(3))
+        loadFormat) {
+        def body(format: TableFormat, in: InternalRow): Seq[InternalRow] = {
           val name = in.getUTF8String(1).toString
-          val df = t.changesBetween(start, end)
-          df.createOrReplaceTempView(name)
-          Seq(row(utf8(name), df.count()))
-        }
-        override def foreignBody(loc: String, in: InternalRow): Seq[InternalRow] = {
-          val start = if (in.isNullAt(2)) None else Some(in.getLong(2))
-          val end = if (in.isNullAt(3)) None else Some(in.getLong(3))
-          val name = in.getUTF8String(1).toString
-          val df = IcebergTable.load(SparkSession.active, loc)
-            .changesBetween(start, end)
+          val df = format.changesBetween(opt(in, 2, in.getLong),
+            opt(in, 3, in.getLong))
           df.createOrReplaceTempView(name)
           Seq(row(utf8(name), df.count()))
         }
@@ -633,40 +471,29 @@ object GraftProcedures {
       new GraftProcedure("cherrypick_snapshot",
         "Apply an append snapshot (e.g. staged on an audit branch) " +
           "onto main as a new commit — metadata-only",
-        Array(TableParam,
-          ProcedureParameter.in("snapshot_id", LongType).build()),
+        Array(ProcedureParameter.in("snapshot_id", LongType).build()),
         StructType(Seq(
           StructField("source_snapshot_id", LongType),
           StructField("current_snapshot_id", LongType))),
-        loadTable) {
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] = {
+        loadFormat) {
+        def body(format: TableFormat, in: InternalRow): Seq[InternalRow] = {
           val src = in.getLong(1)
-          t.cherrypick(src)
-          Seq(row(src, t.meta.currentSnapshotId.getOrElse(-1L)))
-        }
-        override def foreignBody(loc: String, in: InternalRow): Seq[InternalRow] = {
-          val src = in.getLong(1)
-          Seq(row(src, IcebergMaintenance.cherrypick(loc, src)))
+          Seq(row(src, format.cherrypick(src)))
         }
       },
 
       new GraftProcedure("fast_forward",
         "Fast-forward a branch to another ref's tip (the publish step " +
           "of write-audit-publish); refuses divergent moves",
-        Array(TableParam,
+        Array(
           ProcedureParameter.in("branch", StringType).build(),
           ProcedureParameter.in("to", StringType).build()),
         StructType(Seq(
           StructField("previous_ref", LongType),
           StructField("updated_ref", LongType))),
-        loadTable) {
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] = {
-          val (prev, now) = t.fastForward(
-            in.getUTF8String(1).toString, in.getUTF8String(2).toString)
-          Seq(row(prev, now))
-        }
-        override def foreignBody(loc: String, in: InternalRow): Seq[InternalRow] = {
-          val (prev, now) = IcebergMaintenance.fastForward(loc,
+        loadFormat) {
+        def body(format: TableFormat, in: InternalRow): Seq[InternalRow] = {
+          val (prev, now) = format.fastForward(
             in.getUTF8String(1).toString, in.getUTF8String(2).toString)
           Seq(row(prev, now))
         }
@@ -681,48 +508,25 @@ object GraftProcedures {
       new GraftProcedure("set_sort_order",
         "Set the table sort order (comma-separated columns or zorder(...)); " +
           "clusters future writes",
-        Array(TableParam,
-          ProcedureParameter.in("order", StringType).build()),
+        Array(ProcedureParameter.in("order", StringType).build()),
         StructType(Seq(
           StructField("sort_order", StringType))),
-        loadTable) {
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] = {
+        loadFormat) {
+        def body(format: TableFormat, in: InternalRow): Seq[InternalRow] = {
           val raw = in.getUTF8String(1).toString.trim
           val entries =
             if (raw.toLowerCase(java.util.Locale.ROOT).startsWith("zorder"))
               Seq(raw)
-            else raw.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-          t.setSortOrder(entries)
+            else commaList(raw)
+          format.setSortOrder(entries)
           Seq(row(utf8(entries.mkString(", "))))
-        }
-        // foreign tables: the same sort-order evolution the REST
-        // client commits, as a local metadata edit — IcebergWrite's
-        // append/rewrite paths cluster by it (zorder has no spec form)
-        override def foreignBody(loc: String, in: InternalRow): Seq[InternalRow] = {
-          val raw = in.getUTF8String(1).toString.trim
-          require(!raw.toLowerCase(java.util.Locale.ROOT).startsWith("zorder"),
-            "zorder sort orders have no real-format Iceberg spec form")
-          val cols = raw.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-          IcebergMetadata.commitRetry(loc) { m =>
-            val fields = cols.map { c =>
-              val f = m.schema.fields.find(_.name == c).getOrElse(
-                throw new IllegalArgumentException(s"no column $c"))
-              IcebergMetadata.IceSortField(f.id, "identity", "asc", "nulls-first")
-            }
-            val orderId = m.sortOrders.map(_.orderId).maxOption.getOrElse(0) + 1
-            m.copy(
-              sortOrders = m.sortOrders :+
-                IcebergMetadata.IceSortOrder(orderId, fields),
-              defaultSortOrderId = orderId)
-          }
-          Seq(row(utf8(cols.mkString(", "))))
         }
       },
 
       new GraftProcedure("create_tag",
         "Pin a tag to snapshot_id (NULL = current); max_ref_age_ms " +
           "expires the tag itself at expire_snapshots time",
-        Array(TableParam,
+        Array(
           ProcedureParameter.in("tag", StringType).build(),
           ProcedureParameter.in("snapshot_id", LongType)
             .defaultValue("CAST(NULL AS BIGINT)").build(),
@@ -731,29 +535,12 @@ object GraftProcedures {
         StructType(Seq(
           StructField("tag", StringType),
           StructField("snapshot_id", LongType))),
-        loadTable) {
-        private def age(in: InternalRow): Option[Long] =
-          if (in.isNullAt(3)) None else Some(in.getLong(3))
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] = {
-          val snap =
-            if (in.isNullAt(2)) t.meta.currentSnapshotId.getOrElse(
-              throw new IllegalArgumentException("table has no snapshot"))
-            else in.getLong(2)
+        loadFormat) {
+        def body(format: TableFormat, in: InternalRow): Seq[InternalRow] = {
+          val snap = snapshotOrCurrent(format, in, 2)
           val tag = in.getUTF8String(1).toString
-          t.setRef(tag, snap,
-            Some(Meta.RefRetention("tag", maxRefAgeMs = age(in))))
-          Seq(row(utf8(tag), snap))
-        }
-        override def foreignBody(loc: String, in: InternalRow): Seq[InternalRow] = {
-          val m = IcebergMetadata.load(loc)
-          val snap =
-            if (in.isNullAt(2)) m.currentSnapshotId.getOrElse(
-              throw new IllegalArgumentException("table has no snapshot"))
-            else in.getLong(2)
-          val tag = in.getUTF8String(1).toString
-          IcebergMaintenance.setRef(loc, tag, snap, refType = "tag",
-            retention = Some(IcebergMetadata.IceRefRetention(
-              maxRefAgeMs = age(in))))
+          format.setRef(tag, snap,
+            Meta.RefRetention("tag", maxRefAgeMs = opt(in, 3, in.getLong)))
           Seq(row(utf8(tag), snap))
         }
       },
@@ -764,7 +551,7 @@ object GraftProcedures {
       // one all-or-nothing protocol commit; richer transactions
       // (property changes mixed in) use the Scala builder,
       // graft.table.iceberg.IcebergTransaction.
-      new GraftProcedure("commit_transaction",
+      new CatalogProcedure("commit_transaction",
         "Atomically write multiple tables: 'appends' and 'overwrites' " +
           "are comma-separated ns.table=source lists, where source is " +
           "a table or temp view — its rows append into (or replace " +
@@ -821,13 +608,9 @@ object GraftProcedures {
             .build()),
         StructType(Seq(
           StructField("table", StringType),
-          StructField("snapshot_id", LongType))),
-        loadTable) {
-        private val out = StructType(Seq(
-          StructField("table", StringType),
-          StructField("snapshot_id", LongType)))
+          StructField("snapshot_id", LongType)))) {
         private def parse(arg: String, what: String): Seq[(String, String, String)] =
-          arg.split(',').map(_.trim).filter(_.nonEmpty).toSeq.map { e =>
+          commaList(arg).map { e =>
             val halves = e.split("=", 2)
             require(halves.length == 2,
               s"$what entries are ns.table=source; got $e")
@@ -846,7 +629,7 @@ object GraftProcedures {
           (e._1, e._2, halves(0).trim,
             halves(1).split('+').map(_.trim).filter(_.nonEmpty).toSeq)
         }
-        override def call(in: InternalRow): java.util.Iterator[Scan] = {
+        protected def rows(in: InternalRow): Seq[InternalRow] = {
           val base = restBase.getOrElse(throw new UnsupportedOperationException(
             "CALL commit_transaction: multi-table atomic commits ride " +
               "the REST catalog protocol; this catalog has no 'uri'"))
@@ -905,7 +688,7 @@ object GraftProcedures {
             tx.dropSnapshotRef(ns, t, ref)
           }
           tx.commit()
-          result(out, (appends ++ overwrites ++
+          (appends ++ overwrites ++
               deletes.map(d => (d._1, d._2, d._3)) ++
               upserts.map(u => (u._1, u._2, u._3)) ++
               branchAppends.map(b => (b._1, b._2, b._3)) ++
@@ -913,14 +696,11 @@ object GraftProcedures {
               dropRefs)
             .map { case (ns, t, _) => (ns, t) }.distinct
             .map { case (ns, t) =>
-              val root = graft.table.iceberg.IcebergRestClient
-                .tableRootOf(base, ns, t).get
+              val root = IcebergRestClient.tableRootOf(base, ns, t).get
               row(utf8(s"$ns.$t"), IcebergMetadata.load(root)
                 .currentSnapshotId.getOrElse(-1L))
-            })
+            }
         }
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] =
-          Seq.empty // unused: call() is overridden
       },
 
       // ---- materialized views as catalog objects (reference:
@@ -930,7 +710,7 @@ object GraftProcedures {
       // ProcedureCatalog: create_mat_view + refresh_mat_view; reads go
       // through the MV identifier (loadTable serves the storage
       // table) and staleness through <mv>.refresh_state.
-      new GraftProcedure("create_mat_view",
+      new CatalogProcedure("create_mat_view",
         "Create a materialized view: stores the view SQL + an empty " +
           "storage table shaped like the query output. `sources` is a " +
           "comma-separated list of the catalog tables the SQL reads " +
@@ -948,28 +728,21 @@ object GraftProcedures {
             .defaultValue("''").build()),
         StructType(Seq(
           StructField("view", StringType),
-          StructField("storage_location", StringType))),
-        loadTable) {
-        private val out = StructType(Seq(
-          StructField("view", StringType),
-          StructField("storage_location", StringType)))
-        override def call(in: InternalRow): java.util.Iterator[Scan] = {
+          StructField("storage_location", StringType)))) {
+        protected def rows(in: InternalRow): Seq[InternalRow] = {
           val viewName = in.getUTF8String(0).toString
           val sql = in.getUTF8String(1).toString
-          val srcNames = in.getUTF8String(2).toString.split(',')
-            .map(_.trim).filter(_.nonEmpty).toSeq
+          val srcNames = commaList(in.getUTF8String(2).toString)
           val fold = Option(in.getUTF8String(3)).map(_.toString)
             .filter(_.nonEmpty)
           val storage = GraftMatViews.create(SparkSession.active,
             warehouse, restBase, viewName.split('.').toSeq, sql,
             srcNames, fold)
-          result(out, Seq(row(utf8(viewName), utf8(storage))))
+          Seq(row(utf8(viewName), utf8(storage)))
         }
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] =
-          Seq.empty // unused: call() is overridden
       },
 
-      new GraftProcedure("refresh_mat_view",
+      new CatalogProcedure("refresh_mat_view",
         "Refresh a materialized view: mode 'full' recomputes and " +
           "overwrites storage; 'auto'/'incremental' folds only " +
           "appended source data when valid (falls back to full). " +
@@ -981,12 +754,8 @@ object GraftProcedures {
             .defaultValue("'auto'").build()),
         StructType(Seq(
           StructField("mode", StringType),
-          StructField("row_count", LongType))),
-        loadTable) {
-        private val out = StructType(Seq(
-          StructField("mode", StringType),
-          StructField("row_count", LongType)))
-        override def call(in: InternalRow): java.util.Iterator[Scan] = {
+          StructField("row_count", LongType)))) {
+        protected def rows(in: InternalRow): Seq[InternalRow] = {
           val viewName = in.getUTF8String(0).toString
           val mode = in.getUTF8String(1).toString
           // the server names the storage table; its parent is the
@@ -997,10 +766,8 @@ object GraftProcedures {
             viewName.split('.').toSeq)
           val (effective, n) = GraftMatViews.refresh(
             SparkSession.active, warehouse, restBase, root, mode)
-          result(out, Seq(row(utf8(effective), n)))
+          Seq(row(utf8(effective), n))
         }
-        override def body(t: GraftTable, in: InternalRow): Seq[InternalRow] =
-          Seq.empty // unused: call() is overridden
       }
     )
     procs.map(p => p.procName -> (p: UnboundProcedure)).toMap

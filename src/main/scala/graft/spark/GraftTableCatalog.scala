@@ -163,46 +163,13 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
     }
 
   // ---- ProcedureCatalog: CALL cat.system.expire_snapshots('db.t', 1)
-  // etc. — the reference's maintenance transactions as SQL procedures
+  // etc. — the reference's maintenance transactions as SQL procedures.
+  // Their tables resolve through loadFormat, like every other statement:
+  // over REST that registers the commit route, so maintenance commits
+  // ride the update-table protocol too
   private lazy val procedures: Map[String,
       org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure] =
-    GraftProcedures.all(warehouse, { tableName =>
-      val parts = tableName.split('.').toSeq
-      def missing = new org.apache.spark.sql.catalyst.analysis
-        .NoSuchTableException(
-          Identifier.of(parts.dropRight(1).toArray, parts.last))
-      val root = restBase match {
-        // REST mode: resolve through the protocol and register the
-        // commit route — maintenance commits (expire, compaction,
-        // update_by_key, …) then ride the update-table protocol too
-        case Some(base) =>
-          require(parts.length == 2,
-            s"REST table names are ns.table; got $tableName")
-          IcebergRestClient.tableRootOf(base, parts(0), parts(1)).map { r =>
-            IcebergRestCommit.register(r,
-              IcebergRestCommit.Route(base, parts(0), parts(1)))
-            r
-          }.getOrElse(throw missing)
-        case None =>
-          resolveRoot((warehouse +: parts).mkString("/"))
-      }
-      // same format routing as loadTable: a graft table, or an
-      // ADOPTED real-format table whose maintenance routes to the
-      // IcebergMaintenance / IcebergWrite machinery
-      TableFormat.resolve(root) match {
-        case Some(_: TableFormat.GraftFormat) =>
-          Right(GraftTable.load(SparkSession.active, root))
-        case Some(_) => Left(root)
-        case None => throw missing
-      }
-    }, restBase = restBase, restRegister = restBase.map { base => (tableName, loc) =>
-      val parts = tableName.split('.')
-      require(parts.length == 2,
-        s"REST table names are ns.table; got $tableName")
-      IcebergRestClient.registerTable(base, parts(0), parts(1),
-        graft.table.iceberg.IcebergMetadata
-          .currentMetadataFile(loc).toString)
-    })
+    GraftProcedures.all(this)
 
   override def loadProcedure(ident: Identifier)
       : org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure = {
@@ -417,7 +384,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
     }
   }
 
-  private def loadFormat(ident: Identifier): TableFormat =
+  private[spark] def loadFormat(ident: Identifier): TableFormat =
     TableFormat.resolve(tableRoot(ident)).getOrElse(
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident))
 

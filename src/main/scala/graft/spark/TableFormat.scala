@@ -1,14 +1,14 @@
 package graft.spark
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog.{TableCapability, TableChange}
 import org.apache.spark.sql.connector.expressions.{Literal, Transform}
 import org.apache.spark.sql.execution.datasources.GraftConnectorShim
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{StructField, StructType}
 import graft.table.{GraftTable, Meta, TableIO}
-import graft.table.iceberg.{IcebergMetadata, IcebergWrite}
+import graft.table.iceberg.{IcebergMaintenance, IcebergMetadata, IcebergTable, IcebergWrite}
 
 /** One table format's side of the one DSv2 table (GraftSparkTable),
   * over one metadata load: only what differs by format. Scans and
@@ -36,6 +36,46 @@ sealed trait TableFormat {
   /** a REPLACE TABLE of this table by `newSchema`, staged but unpublished */
   def stageReplace(newSchema: StructType, partitions: Seq[Transform],
       props: Map[String, String]): StagedReplacement
+
+  // ---- maintenance: one operation per CALL procedure, each returning
+  // what its CALL reports (GraftProcedures)
+
+  /** (snapshots before, snapshots after) */
+  def expireSnapshots(keepLast: Int, maxAgeMs: Option[Long]): (Int, Int)
+  /** the number of unreferenced files deleted */
+  def vacuum(olderThanMs: Long): Int
+  /** the orphan paths, relative to the root */
+  def removeOrphanFiles(olderThanMs: Long, dryRun: Boolean,
+      pruneStreamProps: Boolean): Seq[String]
+  /** (files, rows) imported in place from `sourceDir` */
+  def addFiles(sourceDir: String): (Long, Long)
+  /** (data files rewritten, data files added) */
+  def rewriteDataFiles(strategy: String, sortColumns: Seq[String],
+      targetFileBytes: Long): (Int, Int)
+  /** the number of manifests replaced; 0 when none needed it */
+  def rewriteManifests(): Int
+  /** folds outstanding deletes into the data files; the number of
+    * delete files removed */
+  def foldDeletes(): Int
+  /** equality deletes materialized as position slots; the number of
+    * equality delete files converted */
+  def convertEqualityDeletes(): Int
+  /** the number of rows updated */
+  def updateByKey(keys: DataFrame, keyColumns: Seq[String],
+      sets: Seq[(String, Column)]): Long
+  /** (position-delete files before, after) */
+  def rewritePositionDeletes(): (Int, Int)
+  def rollbackTo(snapshotId: Long): Unit
+  /** points the branch or tag `name` (by `retention.refType`) at `snapshotId` */
+  def setRef(name: String, snapshotId: Long, retention: Meta.RefRetention): Unit
+  /** approximate NDV per column; every simple column when `columns` is empty */
+  def analyze(columns: Seq[String]): Seq[(String, Long)]
+  def changesBetween(start: Option[Long], end: Option[Long]): DataFrame
+  /** the new current snapshot */
+  def cherrypick(snapshotId: Long): Long
+  /** (previous tip or -1, new tip) */
+  def fastForward(branch: String, to: String): (Long, Long)
+  def setSortOrder(entries: Seq[String]): Unit
 
   protected def refs: Map[String, Long]
   protected def hasSnapshot(id: Long): Boolean
@@ -166,7 +206,7 @@ object TableFormat {
     def scanSource(snapshot: Option[Long], branch: Option[String],
         start: Option[Long]): ScanSource = new GraftScanSource(root, snapshot, branch, start)
     def writeTarget: WriteTarget = new GraftWriteTarget(root)
-    private def table = GraftTable.load(SparkSession.active, root)
+    private def table = GraftTable.loaded(SparkSession.active, root)
 
     /** Every translatable filter routes to GraftTable's copy-on-write
       * delete (which keeps NULL-predicate rows per three-valued SQL
@@ -226,6 +266,48 @@ object TableFormat {
     }
     protected def updateProperties(sets: Map[String, String], removes: Set[String]): Unit =
       table.updateProperties(sets, removes.toSeq)
+
+    def expireSnapshots(keepLast: Int, maxAgeMs: Option[Long]): (Int, Int) =
+      (meta.snapshots.size,
+        table.expireSnapshots(keepLast, maxAgeMs = maxAgeMs).meta.snapshots.size)
+    def vacuum(olderThanMs: Long): Int = table.vacuum(olderThanMs).size
+    def removeOrphanFiles(olderThanMs: Long, dryRun: Boolean,
+        pruneStreamProps: Boolean): Seq[String] =
+      table.removeOrphanFiles(olderThanMs, dryRun, pruneStreamProps)
+    def addFiles(sourceDir: String): (Long, Long) = {
+      val added = table.addFiles(sourceDir)
+      (added.size.toLong, added.map(_.recordCount).sum)
+    }
+    def rewriteDataFiles(strategy: String, sortColumns: Seq[String],
+        targetFileBytes: Long): (Int, Int) = strategy match {
+      case "binpack" => table.compact(targetFileBytes)
+      case "sort" => table.rewriteSort(targetFileBytes)
+      case "zorder" => table.rewriteZOrder(sortColumns, targetFileBytes)
+      case other => throw new IllegalArgumentException(
+        s"unknown rewrite strategy '$other' (binpack | sort | zorder)")
+    }
+    def rewriteManifests(): Int = table.rewriteManifests()
+    // the fold drops every delete file live when it starts
+    def foldDeletes(): Int = {
+      val live = meta.liveDeleteFiles(None).size
+      table.applyDeletes()
+      live
+    }
+    def convertEqualityDeletes(): Int = table.convertEqualityDeletes()._1
+    def updateByKey(keys: DataFrame, keyColumns: Seq[String],
+        sets: Seq[(String, Column)]): Long = table.updateByKey(keys, keyColumns, sets)
+    def rewritePositionDeletes(): (Int, Int) = table.rewritePositionDeletes()
+    def rollbackTo(snapshotId: Long): Unit = table.rollbackTo(snapshotId)
+    def setRef(name: String, snapshotId: Long, retention: Meta.RefRetention): Unit =
+      table.setRef(name, snapshotId, Some(retention))
+    /** also persists the NDVs as table stats for the cost-based optimizer */
+    def analyze(columns: Seq[String]): Seq[(String, Long)] = table.analyze(columns).toSeq
+    def changesBetween(start: Option[Long], end: Option[Long]): DataFrame =
+      table.changesBetween(start, end)
+    def cherrypick(snapshotId: Long): Long =
+      table.cherrypick(snapshotId).meta.currentSnapshotId.getOrElse(-1L)
+    def fastForward(branch: String, to: String): (Long, Long) = table.fastForward(branch, to)
+    def setSortOrder(entries: Seq[String]): Unit = table.setSortOrder(entries)
   }
 
   /** A real-format Iceberg table (adopted warehouse tables and every
@@ -411,6 +493,94 @@ object TableFormat {
     protected def updateProperties(sets: Map[String, String], removes: Set[String]): Unit = {
       IcebergMetadata.commitRetry(root)(m =>
         m.copy(properties = m.properties ++ sets -- removes))
+      ()
+    }
+
+    /** reads over the metadata this handle loaded */
+    private def table = IcebergTable.fromMetadataAt(SparkSession.active, root, meta)
+
+    def expireSnapshots(keepLast: Int, maxAgeMs: Option[Long]): (Int, Int) =
+      IcebergMaintenance.expireSnapshots(root, keepLast, maxAgeMs = maxAgeMs)
+    def vacuum(olderThanMs: Long): Int =
+      IcebergMaintenance.vacuum(SparkSession.active, root, olderThanMs).size
+    def removeOrphanFiles(olderThanMs: Long, dryRun: Boolean,
+        pruneStreamProps: Boolean): Seq[String] =
+      IcebergMaintenance.removeOrphanFiles(SparkSession.active, root, olderThanMs,
+        dryRun, pruneStreamProps = pruneStreamProps)
+    def addFiles(sourceDir: String): (Long, Long) = {
+      val (files, rows) = IcebergWrite.addFiles(root, sourceDir)
+      (files.toLong, rows)
+    }
+    /** One full rewrite with deletes folded in; a default table sort
+      * order range-clusters it, so 'sort' and 'binpack' share it. */
+    def rewriteDataFiles(strategy: String, sortColumns: Seq[String],
+        targetFileBytes: Long): (Int, Int) = strategy match {
+      case "binpack" | "sort" =>
+        IcebergWrite.rewrite(SparkSession.active, root, targetFileBytes)
+      case other => throw new IllegalArgumentException(
+        s"rewrite strategy '$other' is not supported on " +
+          "real-format Iceberg tables (binpack | sort)")
+    }
+    /** a metadata-only 'replace' commit consolidating the current
+      * snapshot's data manifests; delete manifests carried */
+    def rewriteManifests(): Int = {
+      val (before, after) = IcebergWrite.rewriteManifests(root)
+      if (after < before) before else 0
+    }
+    // the rewrite's manifest list carries no delete manifest
+    def foldDeletes(): Int = {
+      val live = table.deleteEntries().size
+      if (live > 0) IcebergWrite.rewrite(SparkSession.active, root)
+      live
+    }
+    def convertEqualityDeletes(): Int =
+      IcebergWrite.convertEqualityDeletes(SparkSession.active, root)._1
+    def updateByKey(keys: DataFrame, keyColumns: Seq[String],
+        sets: Seq[(String, Column)]): Long =
+      IcebergWrite.updateByKey(SparkSession.active, root, keys, keyColumns, sets)
+    def rewritePositionDeletes(): (Int, Int) =
+      IcebergWrite.rewritePositionDeletes(SparkSession.active, root)
+    def rollbackTo(snapshotId: Long): Unit = IcebergMaintenance.rollbackTo(root, snapshotId)
+    def setRef(name: String, snapshotId: Long, retention: Meta.RefRetention): Unit =
+      IcebergMaintenance.setRef(root, name, snapshotId, refType = retention.refType,
+        retention = Some(IcebergMetadata.IceRefRetention(retention.minSnapshotsToKeep,
+          retention.maxSnapshotAgeMs, retention.maxRefAgeMs)))
+    /** The NDVs are returned, not persisted: the real format has no
+      * graft stats slot (Puffin is out of scope). */
+    def analyze(columns: Seq[String]): Seq[(String, Long)] = {
+      import org.apache.spark.sql.functions.{approx_count_distinct, col}
+      import org.apache.spark.sql.types.{ArrayType, MapType}
+      val cols =
+        if (columns.nonEmpty) columns
+        else schemaAt(None).fields.filter(_.dataType match {
+          case _: ArrayType | _: MapType | _: StructType => false
+          case _ => true
+        }).map(_.name).toSeq
+      val ndv = table.scan()
+        .select(cols.map(c => approx_count_distinct(col(c)).as(c)): _*)
+        .collect()(0)
+      cols.map(c => c -> ndv.getAs[Long](c))
+    }
+    def changesBetween(start: Option[Long], end: Option[Long]): DataFrame =
+      table.changesBetween(start, end)
+    def cherrypick(snapshotId: Long): Long = IcebergMaintenance.cherrypick(root, snapshotId)
+    def fastForward(branch: String, to: String): (Long, Long) =
+      IcebergMaintenance.fastForward(root, branch, to)
+    /** the same sort-order evolution the REST client commits, as a
+      * metadata edit; the append and rewrite paths cluster by it */
+    def setSortOrder(entries: Seq[String]): Unit = {
+      require(!entries.exists(_.toLowerCase(java.util.Locale.ROOT).startsWith("zorder")),
+        "zorder sort orders have no real-format Iceberg spec form")
+      IcebergMetadata.commitRetry(root) { m =>
+        val fields = entries.map { c =>
+          val f = m.schema.fields.find(_.name == c).getOrElse(
+            throw new IllegalArgumentException(s"no column $c"))
+          IcebergMetadata.IceSortField(f.id, "identity", "asc", "nulls-first")
+        }
+        val orderId = m.sortOrders.map(_.orderId).maxOption.getOrElse(0) + 1
+        m.copy(sortOrders = m.sortOrders :+ IcebergMetadata.IceSortOrder(orderId, fields),
+          defaultSortOrderId = orderId)
+      }
       ()
     }
   }

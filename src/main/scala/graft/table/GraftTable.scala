@@ -1486,8 +1486,9 @@ class GraftTable private (val root: String, val spark: SparkSession) {
   /** Bin-packing compaction (transaction/mod.rs:76 `rewrite`): group
     * live files below the size threshold into target-sized bins per
     * partition, rewrite each bin with one job. Rows are preserved
-    * exactly; only file boundaries change. */
-  def compact(targetFileBytes: Long = 128L * 1024 * 1024): GraftTable = {
+    * exactly; only file boundaries change. Returns (data files
+    * rewritten, data files added). */
+  def compact(targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     val m = meta
     val live = m.liveFiles(None)
     val byPartition = live.groupBy(_.partitionValues)
@@ -1495,7 +1496,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       val small = files.filter(_.fileSizeBytes < targetFileBytes)
       if (small.size > 1) Some(small) else None
     }
-    if (toRewrite.isEmpty) return this
+    if (toRewrite.isEmpty) return (0, 0)
     val allSmall = toRewrite.flatten
     val totalBytes = allSmall.map(_.fileSizeBytes).sum
     val targetN = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
@@ -1516,7 +1517,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     val op = if (m.liveDeleteFilesWithSeq(None).nonEmpty) "rewrite-fold"
              else "rewrite"
     commit(op, files, allSmall.map(_.path))
-    this
+    (allSmall.size, files.size)
   }
 
   /** Manifest rewrite (Iceberg's rewrite_manifests): re-spill
@@ -1545,13 +1546,13 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     * interleaved appends destroyed. setSortOrder only clusters FUTURE
     * writes; this applies it to history so manifest min/max pruning
     * bites again. Outstanding equality deletes fold in (rewrite-fold,
-    * as compact). */
-  def rewriteSort(targetFileBytes: Long = 128L * 1024 * 1024): GraftTable = {
+    * as compact). Returns (data files rewritten, data files added). */
+  def rewriteSort(targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     val m = meta
     require(m.sortOrder.nonEmpty,
       "rewriteSort needs a table sort order (setSortOrder first)")
     val live = m.liveFiles(None)
-    if (live.isEmpty) return this
+    if (live.isEmpty) return (0, 0)
     val targetN = math.max(1,
       math.ceil(live.map(_.fileSizeBytes).sum.toDouble / targetFileBytes).toInt)
     val seqByPath = m.liveFilesWithSeq(None).map { case (f, q) => f.path -> q }.toMap
@@ -1562,7 +1563,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
              else "rewrite"
     commit(op, files, live.map(_.path),
       removedDeletes = m.liveDeleteFiles(None).map(_.path))
-    this
+    (live.size, files.size)
   }
 
   /** Z-order rewrite (Iceberg's rewriteDataFiles().zOrder(cols)):
@@ -1570,15 +1571,16 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     * interleave of `cols`, WITHOUT changing the table's declared sort
     * order — a one-shot layout optimization so manifest min/max
     * pruning bites on predicates over ANY of the clustered columns.
-    * Outstanding deletes fold in, as compact. */
+    * Outstanding deletes fold in, as compact. Returns (data files
+    * rewritten, data files added). */
   def rewriteZOrder(cols: Seq[String],
-      targetFileBytes: Long = 128L * 1024 * 1024): GraftTable = {
+      targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     val m = meta
     require(cols.size >= 2, s"zorder needs >=2 columns, got $cols")
     cols.foreach(c => require(m.schema.fieldNames.contains(c),
       s"zorder column '$c' is not in the schema"))
     val live = m.liveFiles(None)
-    if (live.isEmpty) return this
+    if (live.isEmpty) return (0, 0)
     val targetN = math.max(1,
       math.ceil(live.map(_.fileSizeBytes).sum.toDouble / targetFileBytes).toInt)
     val seqByPath = m.liveFilesWithSeq(None).map { case (f, q) => f.path -> q }.toMap
@@ -1590,7 +1592,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
              else "rewrite"
     commit(op, files, live.map(_.path),
       removedDeletes = m.liveDeleteFiles(None).map(_.path))
-    this
+    (live.size, files.size)
   }
 
   /** Expire snapshots older than the newest `keepLast`, keeping every
@@ -2502,6 +2504,6 @@ object GraftTable {
 
   /** A handle on `root` whose metadata the caller has just read, so
     * its existence needs no second listing. */
-  private[table] def loaded(spark: SparkSession, root: String): GraftTable =
+  private[graft] def loaded(spark: SparkSession, root: String): GraftTable =
     new GraftTable(root, spark)
 }

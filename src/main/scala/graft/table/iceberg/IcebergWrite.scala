@@ -475,19 +475,24 @@ object IcebergWrite {
     * 'replace' snapshot. The new manifest list carries ONLY the
     * rewritten manifests, so outstanding delete files are absorbed;
     * older snapshots still time-travel through their own manifest
-    * lists. Returns the committed rewritten file count (derived from
-    * the new snapshot's manifests, not the pre-computed target). */
+    * lists. Plans the table once; returns (data files rewritten,
+    * data files committed), the latter derived from the new snapshot's
+    * manifests, not the pre-computed target. */
   def rewrite(spark: SparkSession, location: String,
-      targetFileSizeBytes: Long = 128L << 20): Int = {
-    val t = IcebergTable.load(spark, location)
-    val totalBytes = t.plannedFiles().map(_._1.fileSizeBytes).sum
+      targetFileSizeBytes: Long = 128L << 20): (Int, Int) = {
+    val base = IcebergMetadata.load(location)
+    val t = IcebergTable.fromMetadataAt(spark, location, base)
+    val files = t.plannedFiles()
+    val totalBytes = files.map(_._1.fileSizeBytes).sum
     val n = math.max(1,
       math.ceil(totalBytes.toDouble / targetFileSizeBytes).toInt)
-    // scan() materializes into the commit's private staging dir before
-    // any metadata moves, so read-own-table is safe; numPartitions
-    // carries n through the sort-order range shuffle (see clustered)
-    val base = IcebergMetadata.load(location)
-    val (moved, stats) = stageData(spark, base, t.scan().repartition(n), Some(n))
+    // the read materializes into the commit's private staging dir
+    // before any metadata moves, so read-own-table is safe;
+    // numPartitions carries n through the sort-order range shuffle
+    // (see clustered)
+    val visible = t.readVisible(base.schema,
+      files.map { case (e, _, seq) => (e, seq) }, t.deleteEntries())
+    val (moved, stats) = stageData(spark, base, visible.repartition(n), Some(n))
     var committedFiles = 0
     IcebergMetadata.commitRetry(location) { m =>
       // the replacement content was derived from `base`: committing it
@@ -504,7 +509,7 @@ object IcebergWrite {
       committedFiles = nFiles
       m.withSnapshot(snap)
     }
-    committedFiles
+    (files.size, committedFiles)
   }
 
   /** Iceberg's rewrite_manifests on a REAL-format table, metadata-only:

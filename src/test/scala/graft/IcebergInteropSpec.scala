@@ -1123,7 +1123,7 @@ class IcebergInteropSpec extends AnyFunSuite {
     assert(want === 798L)
     assert(t0.plannedFiles().size === 12)
 
-    val n = IcebergWrite.rewrite(spark, loc)
+    val (_, n) = IcebergWrite.rewrite(spark, loc)
     val t = IcebergTable.load(spark, loc)
     // row-preserving: same content, far fewer files
     assert(t.scan().count() === want)
@@ -2196,7 +2196,7 @@ class IcebergInteropSpec extends AnyFunSuite {
     val n = try {
       val total = IcebergTable.load(spark, loc)
         .plannedFiles().map(_._1.fileSizeBytes).sum
-      IcebergWrite.rewrite(spark, loc, targetFileSizeBytes = total / 3)
+      IcebergWrite.rewrite(spark, loc, targetFileSizeBytes = total / 3)._2
     } finally prior match {
       case Some(v) => spark.conf.set(coalesceKey, v)
       case None => spark.conf.unset(coalesceKey)

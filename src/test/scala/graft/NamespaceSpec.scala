@@ -110,6 +110,15 @@ class NamespaceSpec extends AnyFunSuite {
       // metadata table through the multi-level parent
       assert(spark.sql(s"SELECT count(*) FROM $cat.a.b.t.snapshots")
         .collect().head.getLong(0) >= 2L)
+      // maintenance CALLs resolve the nested name like every statement
+      val rw = spark.sql(
+        s"CALL $cat.system.rewrite_data_files(table => 'a.b.t')").collect().head
+      assert(rw.getInt(1) === 1, s"compaction should commit one file: $rw")
+      val ex = spark.sql(s"CALL $cat.system.expire_snapshots(" +
+        "table => 'a.b.t', keep_last => 1)").collect().head
+      assert(ex.getInt(1) === 1 && ex.getInt(0) > 1, s"expire: $ex")
+      assert(spark.sql(s"SELECT k, v FROM $cat.a.b.t").collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq === Seq((2L, 2.0)))
       // drop protection: parent with a child namespace is non-empty
       intercept[Exception](spark.sql(s"DROP NAMESPACE $cat.a"))
       spark.sql(s"DROP TABLE $cat.a.b.t")

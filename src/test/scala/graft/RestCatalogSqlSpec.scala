@@ -165,6 +165,19 @@ class RestCatalogSqlSpec extends AnyFunSuite {
     assert(after.snapshots.size <= 2 && before > 2,
       s"expire over REST must drop history: $before -> ${after.snapshots.size}")
     assert(spark.sql(s"SELECT * FROM $cat.mt.t").count() === 4)
+    // a CALL reuses the route the catalog resolved for the SELECT:
+    // no further table GET
+    import scala.jdk.CollectionConverters._
+    def tableGets = IcebergRestClient.requestsByEndpoint.asScala.collect {
+      case (ep, n) if ep.startsWith("GET ") && ep.endsWith("/tables/{t}") => n.get
+    }.sum
+    val gets = tableGets
+    (1 to 2).foreach { _ =>
+      val ndv = spark.sql(s"CALL $cat.system.analyze_table(table => 'mt.t')")
+        .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+      assert(ndv === Map("k" -> 4L, "v" -> 4L))
+    }
+    assert(tableGets === gets, "CALL analyze_table re-fetched the table")
   }
 
   test("commits really ride the wire: server down => DML fails, data intact") {

@@ -1031,6 +1031,107 @@ class TableCatalogSpec extends AnyFunSuite {
     assert(err.getMessage.contains("nope"))
   }
 
+  // procedures otherwise CALLed only on real-format tables, on both
+  // formats: result rows and table contents against a model
+  for (format <- Seq("graft", "iceberg"))
+  test("CALL rewrite_position_deletes, rewrite_manifests, analyze_table " +
+      "and update_by_key against a model" +
+      (if (format == "iceberg") " [iceberg]" else "")) {
+    wh
+    val spark0 = spark
+    import spark0.implicits._
+    import graft.table.iceberg.{IcebergAvro, IcebergMetadata, IcebergWrite}
+    val iceberg = format == "iceberg"
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_wh.proc")
+    val name = if (iceberg) "legs_ice" else "legs"
+    val table = s"graft_wh.proc.$name"
+    val root = s"$wh/proc/$name"
+    def call(proc: String, args: String = ""): Array[org.apache.spark.sql.Row] =
+      spark.sql(s"CALL graft_wh.system.$proc(table => 'proc.$name'$args)").collect()
+    def rows = spark.table(table).collect()
+      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+    def posDeleteFiles = spark.sql(
+      s"SELECT count(*) FROM $table.delete_files WHERE content = 1")
+      .collect()(0).getLong(0)
+    def dataManifests = IcebergAvro.readManifestList(new org.apache.hadoop.fs.Path(
+      IcebergMetadata.load(root).currentSnapshot.get.manifestList)).count(_.content == 0)
+    if (iceberg) IcebergWrite.create(spark, root, Seq.empty[(Long, String)].toDF("k", "v"))
+    else spark.sql(s"CREATE TABLE $table (k BIGINT, v STRING)")
+    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
+      "('write.delete.mode'='merge-on-read')")
+    val model = scala.collection.mutable.Map[Long, String]()
+    for (b <- 0 until 3) {
+      val batch = (1L to 100L).map(i => (b * 100L + i, s"v${i % 7}"))
+      batch.toDF("k", "v").createOrReplaceTempView("legs_src")
+      spark.sql(s"INSERT INTO $table SELECT * FROM legs_src")
+      model ++= batch
+    }
+    // two merge-on-read DELETEs, each leaving position-delete files
+    Seq(1, 3).foreach { r =>
+      spark.sql(s"DELETE FROM $table WHERE k % 10 = $r")
+      model --= model.keys.filter(_ % 10 == r).toSeq
+    }
+    assert(rows === model.toSeq.sorted)
+
+    val pos = posDeleteFiles
+    assert(pos >= 2, s"expected a position-delete file per DELETE, got $pos")
+    val consolidated = call("rewrite_position_deletes").head
+    assert((consolidated.getInt(0), consolidated.getInt(1)) === ((pos.toInt, 1)))
+    assert(posDeleteFiles === 1L)
+    assert(rows === model.toSeq.sorted)
+    val again = call("rewrite_position_deletes").head
+    assert((again.getInt(0), again.getInt(1)) === ((0, 0)))
+
+    // graft tables write multi-group manifests, so only legacy
+    // single-file ones need re-spilling; the real format consolidates
+    // the current snapshot's data manifests into one
+    val fat =
+      if (iceberg) dataManifests
+      else graft.table.GraftTable.load(spark, root).meta.snapshots
+        .count(_.manifestPath.isDefined)
+    val rewritten = call("rewrite_manifests").head.getInt(0)
+    if (iceberg) {
+      assert(fat > 1 && rewritten === fat)
+      assert(dataManifests === 1)
+    } else assert(rewritten === fat)
+    assert(rows === model.toSeq.sorted)
+
+    // NDVs per column in name order; only graft tables persist them
+    val ndv = call("analyze_table").map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(ndv.map(_._1) === Seq("k", "v"))
+    assert(math.abs(ndv(0)._2 - model.size) <= model.size / 10, s"ndv $ndv")
+    assert(ndv(1)._2 === model.values.toSet.size.toLong)
+    val props =
+      if (iceberg) IcebergMetadata.load(root).properties
+      else graft.table.GraftTable.load(spark, root).meta.properties
+    assert(props.contains("stats.ndv.k") === !iceberg)
+
+    // keys 2 and 4 are live, 11 was deleted: two rows change
+    val updated = call("update_by_key", ", key_column => 'k', " +
+      "key_values => '2, 4, 11', assignments => \"v = concat(v, '!')\"")
+      .head.getLong(0)
+    val hit = Seq(2L, 4L, 11L).filter(model.contains)
+    hit.foreach(k => model(k) = model(k) + "!")
+    assert(hit.size === 2 && updated === 2L)
+    assert(rows === model.toSeq.sorted)
+
+    if (iceberg) {
+      // z-order has no real-format form: both procedures refuse
+      def refusal(proc: String, args: String): String = {
+        val e = intercept[Exception](call(proc, args))
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .flatMap(c => Option(c.getMessage)).mkString("\n")
+      }
+      assert(refusal("rewrite_data_files",
+        ", strategy => 'zorder', sort_columns => 'k, v'").contains(
+        "rewrite strategy 'zorder' is not supported on real-format " +
+          "Iceberg tables (binpack | sort)"))
+      assert(refusal("set_sort_order", ", order => 'zorder(k, v)'").contains(
+        "zorder sort orders have no real-format Iceberg spec form"))
+      assert(rows === model.toSeq.sorted)
+    }
+  }
+
   // one ALTER TABLE statement is one metadata commit, on both formats
   for (format <- Seq("graft", "iceberg"))
   test("SET / UNSET TBLPROPERTIES round-trip through ALTER TABLE" +
