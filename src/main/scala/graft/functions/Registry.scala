@@ -1,8 +1,11 @@
 package graft.functions
 
+import org.apache.spark.SparkEnv
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** SQL registration for the graft expressions, so `spark.sql` users get
   * the same kernels as the Column API:
@@ -63,9 +66,12 @@ object Registry {
   * overlap joins become bucket equi-joins instead of nested loops —
   * and the V2 view SQL surface (injectParser rewrites view DDL aimed
   * at graft catalogs; injectResolutionRule inlines view reads), since
-  * Spark 4.1 ships the ViewCatalog SPI with no built-in wiring. */
+  * Spark 4.1 ships the ViewCatalog SPI with no built-in wiring. It
+  * also sizes Spark's generated-class cache to graft's working set
+  * (`GraftExtensions.sizeCodegenCache`). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftExtensions.sizeCodegenCache()
     Registry.functions.foreach { case (name, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),
@@ -76,5 +82,49 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectParser((session, delegate) =>
       new graft.spark.GraftSqlParser(session, delegate))
     ext.injectResolutionRule(session => graft.spark.GraftViewRead(session))
+  }
+}
+
+object GraftExtensions {
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+  private val warned = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Entries of Spark's generated-class cache in a graft session.
+    *
+    * Spark compiles every whole-stage and expression class through one
+    * JVM-wide LRU cache of `spark.sql.codegen.cache.maxEntries` entries
+    * (default 100). Measured at local[4] with AQE:
+    *  - the six `llm_pipeline` keys (dd_minhash_dedup, dd_ngram_jaccard,
+    *    dd_semantic, ann_ivf_topk, ta_bm25, pipeline_decontaminate) use
+    *    189 distinct classes at sf0.001. At 100 entries each is evicted
+    *    before its next use, so every call recompiles 17-43 of them
+    *    (186 per pass of the chain); at 1,000 a repeated pass compiles
+    *    none.
+    *  - one pass of all 134 `SparkEntry.queries` keys at sf0.01 (the
+    *    oracle check) uses 1,537 distinct classes: 2,084 compiles at
+    *    100 entries, 1,536 at 1,000, since no class is evicted before
+    *    a later key reuses it.
+    *  - each resident class keeps about 28 KB of live heap (143.7 MB at
+    *    1,000 against 118.2 MB at 100 after the same pass), so a full
+    *    cache costs about 25 MB over Spark's default.
+    * 1,000 holds the chain five times over and stays bounded. */
+  val CodegenCacheEntries = 1000
+
+  /** Sets `spark.sql.codegen.cache.maxEntries` on the running
+    * SparkContext's conf unless the deployer set it. Spark reads this
+    * static conf once per JVM, when `CodeGenerator` first initialises,
+    * which in a fresh JVM happens after the session's extensions are
+    * applied; if code was already compiled in this JVM the cache keeps
+    * the size it was built with, and this says so once. */
+  private[graft] def sizeCodegenCache(): Unit = Option(SparkEnv.get).foreach { env =>
+    val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+    if (!env.conf.contains(key)) {
+      if (CodegenMetrics.METRIC_COMPILATION_TIME.getCount == 0)
+        env.conf.set(key, CodegenCacheEntries.toString)
+      else if (warned.compareAndSet(false, true))
+        log.warn(s"code was generated in this JVM before graft's session extension " +
+          s"applied, so Spark's generated-class cache keeps its default size; set " +
+          s"$key=$CodegenCacheEntries on the first session to size it for graft")
+    }
   }
 }

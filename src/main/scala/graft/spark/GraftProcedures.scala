@@ -609,15 +609,19 @@ object GraftProcedures {
         StructType(Seq(
           StructField("table", StringType),
           StructField("snapshot_id", LongType)))) {
+        // ns.table=source; a nested namespace's levels join with the
+        // unit separator the REST client encodes (a.b.t -> "a\u001Fb", t)
         private def parse(arg: String, what: String): Seq[(String, String, String)] =
           commaList(arg).map { e =>
             val halves = e.split("=", 2)
-            require(halves.length == 2,
+            val id = halves(0).trim
+            val dot = id.lastIndexOf('.')
+            require(halves.length == 2 && dot > 0 && dot < id.length - 1,
               s"$what entries are ns.table=source; got $e")
-            val tp = halves(0).trim.split('.').toSeq
-            require(tp.length == 2, s"$what entries are ns.table=source; got $e")
-            (tp(0), tp(1), halves(1).trim)
+            (id.take(dot).split('.').mkString("\u001F"), id.drop(dot + 1),
+              halves(1).trim)
           }
+        private def label(ns: String, t: String) = s"${ns.replace('\u001F', '.')}.$t"
         // delta entries carry their key columns after ':' — split
         // them off the source spec
         private def keyed(e: (String, String, String), what: String)
@@ -625,7 +629,7 @@ object GraftProcedures {
           val halves = e._3.split(":", 2)
           require(halves.length == 2 && halves(1).trim.nonEmpty,
             s"$what entries are ns.table=source:key1+key2; got " +
-              s"${e._1}.${e._2}=${e._3}")
+              s"${label(e._1, e._2)}=${e._3}")
           (e._1, e._2, halves(0).trim,
             halves(1).split('+').map(_.trim).filter(_.nonEmpty).toSeq)
         }
@@ -646,7 +650,7 @@ object GraftProcedures {
             require(halves.length == 2 && halves(0).trim.nonEmpty &&
                 halves(1).trim.nonEmpty,
               s"branch_appends entries are ns.t=src@branch; got " +
-                s"${e._1}.${e._2}=${e._3}")
+                s"${label(e._1, e._2)}=${e._3}")
             (e._1, e._2, halves(0).trim, halves(1).trim)
           }
           val fastForwards = parse(arg(5), "fast_forwards").map { e =>
@@ -654,7 +658,7 @@ object GraftProcedures {
             require(halves.length == 2 && halves(0).trim.nonEmpty &&
                 halves(1).trim.nonEmpty,
               s"fast_forwards entries are ns.t=toRef<fromRef; got " +
-                s"${e._1}.${e._2}=${e._3}")
+                s"${label(e._1, e._2)}=${e._3}")
             (e._1, e._2, halves(0).trim, halves(1).trim)
           }
           val dropRefs = parse(arg(6), "drop_refs")
@@ -687,7 +691,7 @@ object GraftProcedures {
           dropRefs.foreach { case (ns, t, ref) =>
             tx.dropSnapshotRef(ns, t, ref)
           }
-          tx.commit()
+          val committed = tx.commit()
           (appends ++ overwrites ++
               deletes.map(d => (d._1, d._2, d._3)) ++
               upserts.map(u => (u._1, u._2, u._3)) ++
@@ -696,9 +700,8 @@ object GraftProcedures {
               dropRefs)
             .map { case (ns, t, _) => (ns, t) }.distinct
             .map { case (ns, t) =>
-              val root = IcebergRestClient.tableRootOf(base, ns, t).get
-              row(utf8(s"$ns.$t"), IcebergMetadata.load(root)
-                .currentSnapshotId.getOrElse(-1L))
+              row(utf8(label(ns, t)),
+                committed((ns, t)).currentSnapshotId.getOrElse(-1L))
             }
         }
       },

@@ -269,7 +269,7 @@ object TableFormat {
 
     def expireSnapshots(keepLast: Int, maxAgeMs: Option[Long]): (Int, Int) =
       (meta.snapshots.size,
-        table.expireSnapshots(keepLast, maxAgeMs = maxAgeMs).meta.snapshots.size)
+        table.expireSnapshots(keepLast, maxAgeMs = maxAgeMs, current = meta).snapshots.size)
     def vacuum(olderThanMs: Long): Int = table.vacuum(olderThanMs).size
     def removeOrphanFiles(olderThanMs: Long, dryRun: Boolean,
         pruneStreamProps: Boolean): Seq[String] =
@@ -305,7 +305,7 @@ object TableFormat {
     def changesBetween(start: Option[Long], end: Option[Long]): DataFrame =
       table.changesBetween(start, end)
     def cherrypick(snapshotId: Long): Long =
-      table.cherrypick(snapshotId).meta.currentSnapshotId.getOrElse(-1L)
+      table.cherrypick(snapshotId, meta).currentSnapshotId.getOrElse(-1L)
     def fastForward(branch: String, to: String): (Long, Long) = table.fastForward(branch, to)
     def setSortOrder(entries: Seq[String]): Unit = table.setSortOrder(entries)
   }

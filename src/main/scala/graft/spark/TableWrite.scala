@@ -131,7 +131,10 @@ class TableWrite(t: WriteTarget, info: LogicalWriteInfo, mode: TableWrite.Mode,
 }
 
 /** Executors stage rows under `staging`; the driver commit hands the
-  * dir to `onCommit`, an abort deletes it. */
+  * dir to `onCommit`, an abort deletes it. A job fails as soon as one
+  * task fails, while its other tasks may still be writing, and a late
+  * writer would re-create the deleted dir; so the abort first waits,
+  * for at most `AbortDrainMs`, until no task is running. */
 class StagedBatchWrite(staging: Path, factory: String => DataWriterFactory,
     onCommit: Path => Unit) extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
@@ -139,8 +142,18 @@ class StagedBatchWrite(staging: Path, factory: String => DataWriterFactory,
     factory(staging.toString)
   }
   override def commit(messages: Array[WriterCommitMessage]): Unit = onCommit(staging)
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
+  override def abort(messages: Array[WriterCommitMessage]): Unit = {
+    val tracker = SparkSession.active.sparkContext.statusTracker
+    val deadline = System.currentTimeMillis() + StagedBatchWrite.AbortDrainMs
+    while (tracker.getExecutorInfos.exists(_.numRunningTasks > 0) &&
+        System.currentTimeMillis() < deadline)
+      Thread.sleep(10)
     TableIO.delete(staging, recursive = true)
+  }
+}
+
+object StagedBatchWrite {
+  val AbortDrainMs = 5000L
 }
 
 /** One table's write layout: its partition spec and sort order as a

@@ -418,10 +418,12 @@ class GraftTable private (val root: String, val spark: SparkSession) {
       requireLive: Seq[String] = Seq.empty,
       requireSnapshot: Option[Option[Long]] = None,
       propsExtra: Map[String, String] = Map.empty,
-      skipIf: Meta.TableMetadata => Boolean = _ => false): Meta.TableMetadata = this.synchronized {
+      skipIf: Meta.TableMetadata => Boolean = _ => false,
+      base: Option[Meta.TableMetadata] = None): Meta.TableMetadata = this.synchronized {
     var attempts = 0
     while (true) {
-      val m = meta
+      // the caller's just-read metadata serves the first attempt only
+      val m = base.filter(_ => attempts == 0).getOrElse(meta)
       // idempotence guard re-evaluated against EVERY retry base (the
       // streaming sink's replay dedup: a zombie run's epoch that lost
       // a conflict race must observe the winner's commit and back off,
@@ -1601,11 +1603,15 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     * `maxAgeMs` (the procedure's older_than_ms) additionally keeps
     * every snapshot younger than the bound beyond the keepLast floor —
     * the standard "expire older than a week, retain at least N" call;
-    * a ref's own declared max-snapshot-age-ms overrides it. */
+    * a ref's own declared max-snapshot-age-ms overrides it. A caller
+    * that has just read the current metadata passes it as `current`.
+    * Returns the metadata this wrote, or `current` when nothing
+    * expires. */
   def expireSnapshots(keepLast: Int,
       nowMs: Long = System.currentTimeMillis(),
-      maxAgeMs: Option[Long] = None): GraftTable = this.synchronized {
-    val m = meta
+      maxAgeMs: Option[Long] = None,
+      current: Meta.TableMetadata = meta): Meta.TableMetadata = this.synchronized {
+    val m = current
     // ref expiry first: a ref whose target snapshot is older than its
     // maxRefAgeMs disappears (never main) and stops pinning ancestry
     val expiredRefs = m.refs.keySet.filter { name =>
@@ -1639,7 +1645,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
         n += 1
       }
     }
-    if (keepIds.size == m.snapshots.size && expiredRefs.isEmpty) return this
+    if (keepIds.size == m.snapshots.size && expiredRefs.isEmpty) return m
     // squash: for each kept snapshot whose parent is expired, rebase it
     // onto a base snapshot holding the expired prefix's live file set
     val kept = m.snapshots.filter(s => keepIds.contains(s.snapshotId))
@@ -1680,7 +1686,6 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     }
     Meta.write(root, m.copy(snapshots = rebased, refs = liveRefs,
       refRetention = m.refRetention -- expiredRefs))
-    this
   }
 
   /** Delete data files no snapshot references (post-expire GC). Only
@@ -2261,9 +2266,11 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     * data files — metadata-only, no data movement (the write-audit-
     * publish flow; Iceberg's cherrypick_snapshot). Only appends are
     * pickable: a row-changing snapshot's removals are relative to ITS
-    * parent and replaying them on a diverged main would be wrong. */
-  def cherrypick(snapshotId: Long): GraftTable = this.synchronized {
-    val m = meta
+    * parent and replaying them on a diverged main would be wrong.
+    * Returns the metadata committed; `current` as in expireSnapshots. */
+  def cherrypick(snapshotId: Long,
+      current: Meta.TableMetadata = meta): Meta.TableMetadata = this.synchronized {
+    val m = current
     val s = m.snapshot(snapshotId).getOrElse(
       throw new IllegalArgumentException(s"no snapshot $snapshotId"))
     require(s.operation == "append",
@@ -2271,8 +2278,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
         s"$snapshotId is '${s.operation}'")
     require(!m.chainSnapshots(None).exists(_.snapshotId == snapshotId),
       s"snapshot $snapshotId is already on the main chain")
-    commit("append", s.files, Seq.empty)
-    this
+    commit("append", s.files, Seq.empty, base = Some(m))
   }
 
   /** Fast-forward a branch to another ref's tip — the publish step of

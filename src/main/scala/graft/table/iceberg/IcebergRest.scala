@@ -2187,7 +2187,9 @@ object IcebergRestClient {
     changes.foreach { ch =>
       val n = arr.addObject()
       val id = n.putObject("identifier")
-      id.putArray("namespace").add(ch.ns); id.put("name", ch.name)
+      val levels = id.putArray("namespace")
+      ch.ns.split('\u001F').foreach(levels.add)
+      id.put("name", ch.name)
       val reqs = n.putArray("requirements")
       ch.requirements.foreach(reqs.add)
       val ups = n.putArray("updates")

@@ -418,8 +418,10 @@ class IcebergTransaction(spark: SparkSession, base: String) {
   }
 
   /** Commit everything atomically. Retries rebase onto fresh server
-    * state (staged data files are reused; manifests reassemble). */
-  def commit(maxAttempts: Int = 5): Unit = {
+    * state (staged data files are reused; manifests reassemble).
+    * Returns each table's metadata as this commit published it. */
+  def commit(maxAttempts: Int = 5)
+      : Map[(String, String), IcebergMetadata.IceMetadata] = {
     require(!done, "transaction already committed or aborted")
     require(ops.nonEmpty, "empty transaction")
     var attempts = 0
@@ -451,20 +453,20 @@ class IcebergTransaction(spark: SparkSession, base: String) {
           .map { case ((ns, n), tableOps) =>
             val b = bases((ns, n))
             val next = tableOps.foldLeft(b)((m, op) => op.mutate(m))
-            TableChange(ns, n,
+            (TableChange(ns, n,
               nodes(IcebergRestCommit.requirements(b, next)),
-              nodes(IcebergRestCommit.updates(b, next)))
+              nodes(IcebergRestCommit.updates(b, next))), next)
           }
       } catch {
         case e: Throwable => abort(); throw e
       }
-      val status = IcebergRestClient.commitTransaction(base, changes)
+      val status = IcebergRestClient.commitTransaction(base, changes.map(_._1))
       if (status == 204) {
         committed = true
         // drop metadata written by superseded rebase attempts — the
         // published snapshots reference only the final attempt's
         ops.foreach(_.finish())
-        return
+        return changes.map { case (c, next) => (c.ns, c.name) -> next }.toMap
       }
       if (status != 409) {
         abort()

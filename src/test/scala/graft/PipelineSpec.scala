@@ -582,4 +582,41 @@ class PipelineSpec extends AnyFunSuite {
     assert(again.map(r => (r.getLong(0), r.getInt(2))).sorted.toSeq ===
       rows.map(r => (r.getLong(0), r.getInt(2))).sorted.toSeq)
   }
+
+  test("the llm_pipeline chain compiles no generated class on its second pass") {
+    // the graft extension sized Spark's generated-class cache for the
+    // chain: at Spark's default of 100 entries the chain's 189 classes
+    // evict each other and every call recompiles 17-43 of them
+    assert(spark.sparkContext.getConf.get("spark.sql.codegen.cache.maxEntries") ===
+      functions.GraftExtensions.CodegenCacheEntries.toString)
+    val keys = Seq("dd_minhash_dedup", "dd_ngram_jaccard", "dd_semantic",
+      "ann_ivf_topk", "ta_bm25", "pipeline_decontaminate")
+    val out = java.nio.file.Files.createTempDirectory("graft-chain").toString
+    def pass(): Unit = keys.foreach(k =>
+      SparkEntry.queries(k)(spark, sf).write.mode("overwrite").parquet(s"$out/$k"))
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    pass()
+    val first = compiles.getCount
+    pass()
+    assert(compiles.getCount - first === 0,
+      "second pass of the chain recompiled generated classes")
+  }
+
+  test("codegen cache sizing keeps a deployer's value and never claims " +
+      "a size the JVM's cache was not built with") {
+    spark.range(3).selectExpr("id + 1").collect()
+    val conf = org.apache.spark.SparkEnv.get.conf
+    val key = "spark.sql.codegen.cache.maxEntries"
+    val was = conf.getOption(key)
+    try {
+      conf.set(key, "77")
+      functions.GraftExtensions.sizeCodegenCache()
+      assert(conf.get(key) === "77")
+      // code has been compiled in this JVM: the cache's size is fixed,
+      // so the conf stays unset rather than report a size it lacks
+      conf.remove(key)
+      functions.GraftExtensions.sizeCodegenCache()
+      assert(!conf.contains(key))
+    } finally was.foreach(conf.set(key, _))
+  }
 }

@@ -29,6 +29,14 @@ class RestCatalogSqlSpec extends AnyFunSuite {
   private def cat: String = env._2
   private def wh: String = env._3
 
+  /** Table GETs any REST client in this JVM has sent so far. */
+  private def tableGets: Long = {
+    import scala.jdk.CollectionConverters._
+    IcebergRestClient.requestsByEndpoint.asScala.collect {
+      case (ep, n) if ep.startsWith("GET ") && ep.endsWith("/tables/{t}") => n.get
+    }.sum
+  }
+
   test("CREATE / INSERT / SELECT / row-level DML over a live REST server") {
     val spark0 = spark
     import spark0.implicits._
@@ -167,10 +175,6 @@ class RestCatalogSqlSpec extends AnyFunSuite {
     assert(spark.sql(s"SELECT * FROM $cat.mt.t").count() === 4)
     // a CALL reuses the route the catalog resolved for the SELECT:
     // no further table GET
-    import scala.jdk.CollectionConverters._
-    def tableGets = IcebergRestClient.requestsByEndpoint.asScala.collect {
-      case (ep, n) if ep.startsWith("GET ") && ep.endsWith("/tables/{t}") => n.get
-    }.sum
     val gets = tableGets
     (1 to 2).foreach { _ =>
       val ndv = spark.sql(s"CALL $cat.system.analyze_table(table => 'mt.t')")
@@ -499,6 +503,27 @@ class RestCatalogSqlSpec extends AnyFunSuite {
       .collect().head.getLong(0) === 4L)
     assert(spark.sql(s"SELECT grp FROM $cat.txn.summary")
       .collect().map(_.getString(0)).toSeq === Seq("z"))
+  }
+
+  test("CALL commit_transaction into a nested namespace reports the " +
+      "committed snapshot without re-fetching the table") {
+    val spark0 = spark
+    import spark0.implicits._
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.txa")
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.txa.b")
+    spark.sql(s"CREATE TABLE $cat.txa.b.t (k BIGINT, v DOUBLE)")
+    Seq((1L, 1.5), (2L, 2.5)).toDF("k", "v").createOrReplaceTempView("txa_src")
+    val gets = tableGets
+    val out = spark.sql(s"CALL $cat.system.commit_transaction('txa.b.t=txa_src')")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    // one GET stages the append against the served base; the snapshot
+    // reported is the one the commit published, not a second GET
+    assert(tableGets - gets === 1, "commit_transaction re-fetched the table")
+    val served = IcebergMetadata.load(s"$wh/txa/b/t").currentSnapshotId
+    assert(served.isDefined)
+    assert(out === Seq(("txa.b.t", served.get)))
+    assert(spark.sql(s"SELECT count(*) FROM $cat.txa.b.t")
+      .collect().head.getLong(0) === 2L)
   }
 
   test("commit_transaction: a racing commit 409s the WHOLE transaction") {

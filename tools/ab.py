@@ -14,6 +14,10 @@ alike. Both sides build from their own sources on their first run.
 Per workload and side it prints the median and quartiles of the bounded
 end-to-end metrics of BENCHMARK.json, how many pairs the change wins on
 each (by the metric's `better` direction), and failed/attempted counts.
+It then prints, per op kind, the median wall time of that side's correct
+ops over all its runs, read from each run's record in
+`.bench_build/results/<workload>-seed<i>-trace0.json` of that side's tree,
+so a change in ops_per_s can be attributed to op kinds.
 It exits 1 if any run is incorrect (a failed op or check, or a run that
 did not finish), else 0. Nothing under perfbench/ is changed.
 """
@@ -48,6 +52,16 @@ def run_once(cwd, workload, seed, seconds):
     return json.loads(lines[-1])
 
 
+def op_ms(cwd, workload, seed):
+    """(kind, ms) of every correct op of the run's record in `cwd`."""
+    path = os.path.join(cwd, ".bench_build", "results", f"{workload}-seed{seed}-trace0.json")
+    try:
+        ops = json.load(open(path))["ops"]
+    except (OSError, ValueError, KeyError):
+        return []
+    return [(o["kind"], o["ms"]) for o in ops if o["ok"]]
+
+
 def quartiles(xs):
     if len(xs) < 2:
         return (xs[0], xs[0], xs[0]) if xs else (float("nan"),) * 3
@@ -77,6 +91,7 @@ def main():
     sides = {"base": base, "change": os.getcwd()}
 
     runs = {w: {"base": [], "change": []} for w in workloads}
+    kind_ms = {w: {"base": {}, "change": {}} for w in workloads}
     incorrect = 0
     for w in workloads:
         for seed in range(1, a.pairs + 1):
@@ -86,6 +101,9 @@ def main():
                 ok = res is not None and res["correct"]
                 incorrect += 0 if ok else 1
                 runs[w][side].append(res)
+                if res:
+                    for kind, ms in op_ms(sides[side], w, seed):
+                        kind_ms[w][side].setdefault(kind, []).append(ms)
                 shown = ("  ".join(f"{n}={res['metrics'][n]['value']:.3f}" for n, _ in metrics)
                          if res else "no result")
                 print(f"# {w} seed={seed} {side:6s} {'ok' if ok else 'INCORRECT'}  {shown}",
@@ -114,6 +132,14 @@ def main():
                      if b is not None and c is not None]
             wins = sum((c < b) if better == "lower" else (c > b) for b, c in pairs)
             print(line + f"  change wins {wins}/{len(pairs)}")
+        print("  op ms, median over the side's correct ops (count)")
+        for kind in sorted(set(kind_ms[w]["base"]) | set(kind_ms[w]["change"])):
+            line = f"    {kind:26s}"
+            for side in ("base", "change"):
+                xs = kind_ms[w][side].get(kind, [])
+                med = statistics.median(xs) if xs else float("nan")
+                line += f"  {side} {med:9.1f} ({len(xs)})"
+            print(line)
     return 1 if incorrect else 0
 
 
