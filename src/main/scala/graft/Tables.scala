@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.GraftConnectorShim
 import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
@@ -15,12 +16,14 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Schema cache, keyed per (session, path): a bare
-    * spark.read.parquet re-INFERS the schema on every call (a driver
-    * footer read plus a mergeSchemasInParallel job — visible in every
-    * key's profile), but these tables' schemas are static metadata a
-    * production deployment would carry in its catalog/manifests, not
-    * re-derive per query. No DATA is cached — only the StructType; the
-    * scan itself recomputes from parquet on every invocation. */
+    * spark.read.parquet re-INFERS the schema on every call (a listing,
+    * a footer read and a one-task Spark job), but these tables' schemas
+    * are static metadata a production deployment would carry in its
+    * catalog/manifests, not re-derive per query. A path not seen before
+    * gets the same schema from one footer read on the driver, with no
+    * job (`GraftConnectorShim.inferParquetSchema`). No DATA is cached —
+    * only the StructType; the scan itself recomputes from parquet on
+    * every invocation. */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[(Int, String),
       org.apache.spark.sql.types.StructType]()
@@ -29,7 +32,8 @@ object Tables {
     val path = s"$dir/$name.parquet"
     val key = (System.identityHashCode(spark), path)
     val schema = schemaCache.computeIfAbsent(key,
-      _ => spark.read.parquet(path).schema)
+      _ => GraftConnectorShim.inferParquetSchema(spark, path)
+        .getOrElse(spark.read.parquet(path).schema))
     spark.read.schema(schema).parquet(path)
   }
 

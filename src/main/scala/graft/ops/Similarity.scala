@@ -11,8 +11,9 @@ import graft.Tables
   *
   * Scale design: brute force only ever runs against a bounded,
   * broadcast query set; the approximate variants turn the search into
-  * equi-joins on bucket keys. Centroid computation is a distributed
-  * posexplode/groupBy — dimension-bounded, never collects vectors.
+  * equi-joins on bucket keys. Centroid computation is one partial
+  * aggregate into a one-row codebook — dimension-bounded, never
+  * collects vectors.
   */
 object Similarity {
   type Q = (SparkSession, String) => DataFrame
@@ -270,54 +271,37 @@ object Similarity {
 
   private val NProbe = 2
 
-  /** Coarse centroids: mean vector per label cluster. One
-    * whole-stage-codegen aggregation with Dim declarative `avg`
-    * buffers per group — partial (map-side) aggregation collapses
-    * each input partition to |clusters| rows of 64 sums before the
-    * shuffle. The previous shape (posexplode → groupBy(cluster, dim)
-    * avg → collect_list rebuild) exploded 64× the row count into the
-    * first shuffle and paid a second shuffle + sort to reassemble the
-    * array (guide §2.3/§2.4: aggregate before you shuffle, and don't
-    * shuffle twice for one grouping). Same multiset of addends per
-    * (cluster, dim), so the means are unchanged. */
-  private def centroids(v: DataFrame): DataFrame = {
-    val avgs = (0 until Dim).map(i => avg(col("emb").getItem(i)).as(s"_c$i"))
-    v.groupBy(col("label").as("cluster"))
-      .agg(avgs.head, avgs.tail: _*)
-      .select(col("cluster"),
-        array((0 until Dim).map(i => col(s"_c$i")): _*).as("cemb"))
-  }
+  /** Coarse centroids: the mean vector of each label cluster, as a
+    * one-row codebook `book` (array<struct<cluster, centroid>>, sorted
+    * by cluster). One `CentroidCodebook` aggregate with no grouping
+    * key: each partition folds its rows into per-cluster sums, the
+    * partial buffers meet in one task, and every centroid dimension
+    * equals `avg(emb[i])` of its cluster. Callers broadcast the row and
+    * cross it with each vector, so assignment needs no shuffle. */
+  private def centroids(v: DataFrame): DataFrame =
+    v.agg(graft.functions.ArrayKernels.centroidCodebook(col("label"), col("emb"), Dim)
+      .as("book"))
 
   /** IVF top-k: assign every vector to its nearest centroid, probe the
     * nProbe nearest centroids per query, search only those inverted
-    * lists. All equi-joins on cluster id. Rows-only; recall asserted
-    * in SimilaritySpec. */
+    * lists. Assignment and probes are per-row kernels over the
+    * broadcast codebook; the lists meet the probes in an equi-join on
+    * cluster id. Rows-only; recall asserted in SimilaritySpec. */
   val annIvfTopk: Q = (s, d) => {
-    val v = vectors(s, d).select(col("vec_id"), col("emb"), norm(col("emb")).as("nrm"))
-    val cents = broadcast(centroids(vectors(s, d))
-      .select(col("cluster"), col("cemb"), norm(col("cemb")).as("cnrm")))
+    val v = vectors(s, d)
+    val book = broadcast(centroids(vectors(s, d)))
 
-    // nearest centroid per vector (inverted-list assignment): argmax
-    // via max_by in one aggregation — no per-vector window shuffle
-    val assigned = v.join(cents)
-      .select(col("vec_id"), col("emb"), col("nrm"), col("cluster"),
-        graft.functions.ArrayKernels.cosineSim(col("emb"), col("cemb")).as("csim"))
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("cluster"), col("emb"), col("nrm")), col("csim")).as("best"))
-      .select(col("vec_id"), col("best.emb").as("emb"),
-        col("best.nrm").as("nrm"), col("best.cluster").as("cluster"))
+    // nearest centroid per vector (inverted-list assignment): highest
+    // raw cosine, ties to the lowest cluster
+    val assigned = v.crossJoin(book)
+      .select(col("vec_id"), col("emb"),
+        graft.functions.ArrayKernels.nearestCentroid(col("emb"), col("book")).as("cluster"))
 
-    // nProbe nearest centroids per query
-    val q = v.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("emb").as("qe"), col("nrm").as("qn"))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("qsim").desc, col("cluster"))
-    val probes = q.join(cents)
-      .select(col("q_id"), col("qe"), col("qn"), col("cluster"),
-        graft.functions.ArrayKernels.cosineSim(col("qe"), col("cemb")).as("qsim"))
-      .withColumn("prank", row_number().over(wProbe))
-      .filter(col("prank") <= NProbe)
-      .select(col("q_id"), col("qe"), col("qn"), col("cluster"))
+    // nProbe nearest centroids per query, by (cosine desc, cluster)
+    val probes = v.filter(col("vec_id") < 5).crossJoin(book)
+      .select(col("vec_id").as("q_id"), col("emb").as("qe"),
+        explode(graft.functions.ArrayKernels.topCentroids(col("emb"), col("book"), NProbe))
+          .as("cluster"))
 
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos_raw").desc, col("vec_id"))
@@ -612,20 +596,13 @@ WHERE r.rank <= 10 ORDER BY q_id, rank"""
     * centroid broadcast on the sub-plan that actually executes it
     * (after the checkpoint the final plan is just Scan ExistingRDD). */
   private[graft] def ddSemanticAssignment(s: SparkSession, d: String): DataFrame = {
-    val v = vectors(s, d).select(col("vec_id"), col("emb"))
-    val cents = broadcast(centroids(vectors(s, d))
-      .select(col("cluster"), col("cemb")))
-    // deterministic nearest-centroid: lexicographic min over
-    // (-rounded_sim, cluster) == highest sim, lowest cluster on ties
-    v.join(cents)
-      .select(col("vec_id"), col("emb"), col("cluster"),
-        round(graft.functions.ArrayKernels.cosineSim(col("emb"), col("cemb")), 6)
-          .as("csim"))
-      .groupBy(col("vec_id"))
-      .agg(min(struct((-col("csim")).as("neg"), col("cluster"), col("emb")))
-        .as("best"))
-      .select(col("vec_id"), col("best.cluster").as("cluster"),
-        col("best.emb").as("emb"))
+    val book = broadcast(centroids(vectors(s, d)))
+    // deterministic nearest centroid: highest round(cosine, 6), ties to
+    // the lowest cluster
+    vectors(s, d).crossJoin(book)
+      .select(col("vec_id"),
+        graft.functions.ArrayKernels.nearestCentroid(col("emb"), col("book"), 6).as("cluster"),
+        col("emb"))
   }
 
   val ddSemantic: Q = (s, d) => {

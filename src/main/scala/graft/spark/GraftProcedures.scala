@@ -238,10 +238,10 @@ object GraftProcedures {
               // field points at the staged dir) — resolve every table
               // in the namespace and protect root AND location
               val ns = parts.mkString("\u001F")
-              val roots0 = IcebergRestClient.listTables(base, ns)
-                .flatMap(t => IcebergRestClient.tableRootOf(base, ns, t))
-              val roots = roots0 ++ roots0.flatMap(r =>
-                scala.util.Try(IcebergMetadata.load(r).location).toOption)
+              val tables = IcebergRestClient.listTables(base, ns)
+                .flatMap(t => IcebergRestClient.tableRootAndLocationOf(base, ns, t))
+              val roots0 = tables.map(_._1)
+              val roots = roots0 ++ tables.flatMap(_._2)
               val dir =
                 if (warehouse != null && warehouse.nonEmpty)
                   (warehouse +: parts).mkString("/")

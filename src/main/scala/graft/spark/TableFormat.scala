@@ -278,15 +278,16 @@ object TableFormat {
       val added = table.addFiles(sourceDir)
       (added.size.toLong, added.map(_.recordCount).sum)
     }
+    // the handle's metadata serves each rewrite's first commit attempt
     def rewriteDataFiles(strategy: String, sortColumns: Seq[String],
         targetFileBytes: Long): (Int, Int) = strategy match {
-      case "binpack" => table.compact(targetFileBytes)
-      case "sort" => table.rewriteSort(targetFileBytes)
-      case "zorder" => table.rewriteZOrder(sortColumns, targetFileBytes)
+      case "binpack" => table.compact(targetFileBytes, current = meta)
+      case "sort" => table.rewriteSort(targetFileBytes, current = meta)
+      case "zorder" => table.rewriteZOrder(sortColumns, targetFileBytes, current = meta)
       case other => throw new IllegalArgumentException(
         s"unknown rewrite strategy '$other' (binpack | sort | zorder)")
     }
-    def rewriteManifests(): Int = table.rewriteManifests()
+    def rewriteManifests(): Int = table.rewriteManifests(current = meta)
     // the fold drops every delete file live when it starts
     def foldDeletes(): Int = {
       val live = meta.liveDeleteFiles(None).size

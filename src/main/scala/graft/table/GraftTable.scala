@@ -1488,10 +1488,13 @@ class GraftTable private (val root: String, val spark: SparkSession) {
   /** Bin-packing compaction (transaction/mod.rs:76 `rewrite`): group
     * live files below the size threshold into target-sized bins per
     * partition, rewrite each bin with one job. Rows are preserved
-    * exactly; only file boundaries change. Returns (data files
+    * exactly; only file boundaries change. A caller that has just read
+    * the current metadata passes it as `current`; it serves the commit's
+    * first attempt, and a conflict retry reloads. Returns (data files
     * rewritten, data files added). */
-  def compact(targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val m = meta
+  def compact(targetFileBytes: Long = 128L * 1024 * 1024,
+      current: Meta.TableMetadata = meta): (Int, Int) = {
+    val m = current
     val live = m.liveFiles(None)
     val byPartition = live.groupBy(_.partitionValues)
     val toRewrite = byPartition.toSeq.flatMap { case (_, files) =>
@@ -1518,7 +1521,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     // bin-pack is the row-preserving "rewrite" streams may skip
     val op = if (m.liveDeleteFilesWithSeq(None).nonEmpty) "rewrite-fold"
              else "rewrite"
-    commit(op, files, allSmall.map(_.path))
+    commit(op, files, allSmall.map(_.path), base = Some(m))
     (allSmall.size, files.size)
   }
 
@@ -1527,19 +1530,23 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     * so planning prunes and loads metadata group by group instead of
     * reading one fat manifest whole. Metadata-only — no data files
     * move; new snapshots and expire-squashed bases already spill
-    * multi-group on write. Returns re-spilled snapshot count. */
-  def rewriteManifests(): Int = this.synchronized {
-    val m = meta
-    val fat = m.snapshots.filter(_.manifestPath.isDefined)
+    * multi-group on write. `current` as in compact; a conflict
+    * reloads and retries. Returns re-spilled snapshot count. */
+  def rewriteManifests(current: Meta.TableMetadata = meta): Int = this.synchronized {
+    val fat = current.snapshots.filter(_.manifestPath.isDefined)
     if (fat.isEmpty) return 0
-    val snaps = m.snapshots.map { s =>
+    val snaps = current.snapshots.map { s =>
       if (s.manifestPath.isEmpty) s
       else s.copy(addedFiles = s.files, manifestPath = None,
         manifestStats = Map.empty)
     }
     // Meta.write re-spills any oversize inline list into sorted groups
-    Meta.write(root, m.copy(snapshots = snaps))
-    fat.size
+    try {
+      Meta.write(root, current.copy(snapshots = snaps))
+      fat.size
+    } catch {
+      case _: Meta.CommitConflict => rewriteManifests(meta)
+    }
   }
 
   /** Sort-strategy rewrite (Iceberg's rewrite_data_files strategy =>
@@ -1548,9 +1555,11 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     * interleaved appends destroyed. setSortOrder only clusters FUTURE
     * writes; this applies it to history so manifest min/max pruning
     * bites again. Outstanding equality deletes fold in (rewrite-fold,
-    * as compact). Returns (data files rewritten, data files added). */
-  def rewriteSort(targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val m = meta
+    * as compact). `current` as in compact. Returns (data files
+    * rewritten, data files added). */
+  def rewriteSort(targetFileBytes: Long = 128L * 1024 * 1024,
+      current: Meta.TableMetadata = meta): (Int, Int) = {
+    val m = current
     require(m.sortOrder.nonEmpty,
       "rewriteSort needs a table sort order (setSortOrder first)")
     val live = m.liveFiles(None)
@@ -1564,7 +1573,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     val op = if (m.liveDeleteFilesWithSeq(None).nonEmpty) "rewrite-fold"
              else "rewrite"
     commit(op, files, live.map(_.path),
-      removedDeletes = m.liveDeleteFiles(None).map(_.path))
+      removedDeletes = m.liveDeleteFiles(None).map(_.path), base = Some(m))
     (live.size, files.size)
   }
 
@@ -1573,11 +1582,12 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     * interleave of `cols`, WITHOUT changing the table's declared sort
     * order — a one-shot layout optimization so manifest min/max
     * pruning bites on predicates over ANY of the clustered columns.
-    * Outstanding deletes fold in, as compact. Returns (data files
-    * rewritten, data files added). */
+    * Outstanding deletes fold in, as compact. `current` as in compact.
+    * Returns (data files rewritten, data files added). */
   def rewriteZOrder(cols: Seq[String],
-      targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val m = meta
+      targetFileBytes: Long = 128L * 1024 * 1024,
+      current: Meta.TableMetadata = meta): (Int, Int) = {
+    val m = current
     require(cols.size >= 2, s"zorder needs >=2 columns, got $cols")
     cols.foreach(c => require(m.schema.fieldNames.contains(c),
       s"zorder column '$c' is not in the schema"))
@@ -1593,7 +1603,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     val op = if (m.liveDeleteFilesWithSeq(None).nonEmpty) "rewrite-fold"
              else "rewrite"
     commit(op, files, live.map(_.path),
-      removedDeletes = m.liveDeleteFiles(None).map(_.path))
+      removedDeletes = m.liveDeleteFiles(None).map(_.path), base = Some(m))
     (live.size, files.size)
   }
 

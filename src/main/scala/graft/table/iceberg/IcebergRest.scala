@@ -1631,15 +1631,24 @@ object IcebergRestClient {
     * one level under the root); None when the table does not exist.
     * The root anchors the engine's direct data/manifest IO on shared
     * storage while metadata commits stay on the protocol. */
-  def tableRootOf(base: String, ns: String, table: String): Option[String] = {
+  def tableRootOf(base: String, ns: String, table: String): Option[String] =
+    tableRootAndLocationOf(base, ns, table).map(_._1)
+
+  /** The table's root (as `tableRootOf`) and the `location` its served
+    * metadata records, from one GET; None when the table does not exist.
+    * The two differ for a published staged create, whose data stays at
+    * the staged dir. */
+  def tableRootAndLocationOf(base: String, ns: String,
+      table: String): Option[(String, Option[String])] = {
     val resp = sendAuth("GET", s"${nsUrl(base, ns)}/tables/$table")
     if (resp.statusCode() == 404) None
     else {
       require(resp.statusCode() == 200,
         s"loadTable $ns.$table -> ${resp.statusCode()}")
-      val mLoc = new org.apache.hadoop.fs.Path(
-        mapper.readTree(resp.body()).get("metadata-location").asText())
-      Some(rootDirOf(mLoc))
+      val n = mapper.readTree(resp.body())
+      val mLoc = new org.apache.hadoop.fs.Path(n.get("metadata-location").asText())
+      Some((rootDirOf(mLoc),
+        Option(n.get("metadata")).flatMap(m => Option(m.get("location"))).map(_.asText())))
     }
   }
 

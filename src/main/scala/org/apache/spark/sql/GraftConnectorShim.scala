@@ -59,6 +59,34 @@ object GraftConnectorShim {
       .map(_.files.toSeq.map(pf => byPath(pf.filePath)).sortBy(path))
   }
 
+  /** The schema `spark.read.parquet(path)` infers, read on the driver.
+    * With schema merging off and no summary file, Spark's inference
+    * reads the footer of the first data file by path under `path`, but
+    * in a one-task Spark job; this reads the same footer here and
+    * converts it with the same session settings. None where that rule
+    * does not apply (schema merging on, summary files, subdirectories
+    * that may carry partition columns) or no file qualifies: the caller
+    * then asks Spark. */
+  def inferParquetSchema(spark: org.apache.spark.sql.SparkSession,
+      path: String): Option[StructType] = {
+    val classic = spark.asInstanceOf[SparkSession]
+    if (classic.sessionState.conf.isParquetSchemaMergingEnabled) return None
+    val conf = classic.sessionState.newHadoopConf()
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(conf)
+    val status = fs.getFileStatus(p)
+    val children = if (status.isDirectory) fs.listStatus(p).toSeq else Seq(status)
+    def name(f: org.apache.hadoop.fs.FileStatus) = f.getPath.getName
+    if (children.exists(f => f.isDirectory ||
+        name(f).startsWith("_metadata") || name(f).startsWith("_common_metadata"))) return None
+    // Spark's listing skips hidden names inside a directory
+    children.filterNot(f => status.isDirectory && (name(f).startsWith("_") ||
+        name(f).startsWith(".") || name(f).endsWith("._COPYING_")))
+      .sortBy(_.getPath.toString).headOption
+      .flatMap(parquet.GraftParquetFooters.schemaOf(classic, conf, _))
+      .map(_.asNullable)
+  }
+
   /** Driver-side: hadoop conf prepared the way ParquetFileFormat.
     * prepareWrite does, serialized for shipping to write tasks. */
   def prepareParquetWriteConf(

@@ -90,3 +90,14 @@ object GraftParquetFileFormat {
       case _ => pruned
     }
 }
+
+/** Footer schema reads for `GraftConnectorShim.inferParquetSchema`:
+  * Spark keeps these helpers private to this package. */
+object GraftParquetFooters {
+  /** The Spark schema of one parquet file's footer, converted with the
+    * session's parquet settings as Spark's schema inference does. */
+  def schemaOf(spark: org.apache.spark.sql.classic.SparkSession, conf: Configuration,
+      file: org.apache.hadoop.fs.FileStatus): Option[StructType] =
+    ParquetFileFormat.readSchema(ParquetFileFormat.readParquetFootersInParallel(
+      conf, Seq(file), spark.sessionState.conf.ignoreCorruptFiles), spark)
+}

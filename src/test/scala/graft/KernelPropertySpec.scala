@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.{ArrayKernels, IcebergHash, TextHash}
 import scala.util.Random
@@ -255,5 +256,117 @@ class KernelPropertySpec extends AnyFunSuite {
     val agreeFar = bands(base).zip(bands(far)).count { case (x, y) => x == y }
     assert(agreeNear > agreeFar)
     assert(agreeFar === 0)
+  }
+
+  // ---- codebook kernels, against the declarative forms they replace --
+
+  private def vecs(n: Int, dim: Int): Seq[Array[Double]] =
+    Seq.fill(n)(Array.fill(dim)(rnd.nextGaussian() * math.pow(10, rnd.nextInt(7) - 3)))
+
+  /** Codebook rows (cluster, centroid) with exact ties: cluster 4 repeats
+    * cluster 1's centroid, cluster 6 is cluster 2's scaled by 3 (equal up
+    * to rounding error), and cluster 7 repeats cluster 5's. */
+  private def tiedCodebook(dim: Int): Seq[(Int, Array[Double])] = {
+    val base = vecs(6, dim)
+    Seq(0 -> base(0), 1 -> base(1), 2 -> base(2), 3 -> base(3), 4 -> base(1).clone,
+      5 -> base(4), 6 -> base(2).map(_ * 3), 7 -> base(4).clone)
+  }
+
+  test("nearest and top-k centroids equal the declarative argmax and window") {
+    import SparkTestSession.spark
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.functions.{NearestCentroid, TopCentroids}
+    val s = spark
+    import s.implicits._
+    val dim = 8
+    val book = tiedCodebook(dim)
+    // queries include the centroids themselves, so exact ties occur
+    val qs = (vecs(150, dim) ++ book.map(_._2)).zipWithIndex
+      .map { case (v, i) => (i.toLong, v.toSeq) }
+    val q = qs.toDF("vec_id", "emb")
+    val cents = book.map { case (c, v) => (c, v.toSeq) }.toDF("cluster", "cemb")
+    val codebook = cents.agg(sort_array(collect_list(struct(col("cluster"), col("cemb"))))
+      .as("book"))
+    val pairs = q.crossJoin(cents)
+      .withColumn("cos", ArrayKernels.cosineSim(col("emb"), col("cemb")))
+    val byRank = Window.partitionBy(col("vec_id")).orderBy(col("cos").desc, col("cluster"))
+    val ranked = pairs.withColumn("r", row_number().over(byRank))
+    val argmax = ranked.filter(col("r") === 1)
+      .select(col("vec_id"), col("cluster")).as[(Long, Int)].collect().toMap
+    val rounded = pairs.groupBy(col("vec_id"))
+      .agg(min(struct((-round(col("cos"), 6)).as("neg"), col("cluster"))).as("best"))
+      .select(col("vec_id"), col("best.cluster")).as[(Long, Int)].collect().toMap
+    val top3 = ranked.filter(col("r") <= 3).groupBy(col("vec_id"))
+      .agg(sort_array(collect_list(struct(col("r"), col("cluster")))).as("t"))
+      .select(col("vec_id"), col("t.cluster")).as[(Long, Seq[Int])].collect().toMap
+    val got = q.crossJoin(codebook).select(col("vec_id"),
+        ArrayKernels.nearestCentroid(col("emb"), col("book")),
+        ArrayKernels.nearestCentroid(col("emb"), col("book"), 6),
+        ArrayKernels.topCentroids(col("emb"), col("book"), 3),
+        ArrayKernels.topCentroids(col("emb"), col("book"), 20))
+      .as[(Long, Int, Int, Seq[Int], Seq[Int])].collect()
+    assert(got.length === qs.size)
+    val bookValue = codebook.queryExecution.toRdd.first().getArray(0).copy()
+    got.foreach { case (id, near, near6, t3, t20) =>
+      assert(near === argmax(id), s"raw argmax of vector $id")
+      assert(near6 === rounded(id), s"rounded argmin of vector $id")
+      assert(t3 === top3(id), s"top-3 window of vector $id")
+      assert(t20.size === book.size && t20.take(3) === t3)
+      // the interpreted path agrees with the generated code
+      val v = Literal.create(qs(id.toInt)._2.toArray, ArrayType(DoubleType))
+      val b = Literal(bookValue, codebook.schema("book").dataType)
+      assert(NearestCentroid(v, b, -1).eval() === near)
+      assert(NearestCentroid(v, b, 6).eval() === near6)
+      assert(TopCentroids(v, b, 3).eval().asInstanceOf[ArrayData].toIntArray().toSeq === t3)
+    }
+    // the duplicated centroids tie exactly, and ties go to the lower cluster
+    assert(got.exists(_._2 == 1) && !got.exists(_._2 == 4))
+    assert(got.exists(_._2 == 5) && !got.exists(_._2 == 7))
+    // a null vector matches nothing raw, takes the first entry rounded and
+    // the first k entries in the window
+    val nul = Literal.create(null, ArrayType(DoubleType))
+    val b = Literal(bookValue, codebook.schema("book").dataType)
+    assert(NearestCentroid(nul, b, -1).eval() === null)
+    assert(NearestCentroid(nul, b, 6).eval() === 0)
+    assert(TopCentroids(nul, b, 2).eval().asInstanceOf[ArrayData].toIntArray().toSeq === Seq(0, 1))
+  }
+
+  test("centroid codebook equals the per-dimension avg bit for bit, skipping nulls") {
+    import SparkTestSession.spark
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions._
+    val dim = 6
+    val schema = StructType(Seq(StructField("label", IntegerType),
+      StructField("emb", ArrayType(DoubleType, containsNull = true))))
+    val rows = vecs(400, dim).map { v =>
+      val label = rnd.nextInt(5)
+      if (rnd.nextInt(20) == 0) Row(label, null) // a null embedding
+      else if (rnd.nextInt(20) == 0) Row(label, v.toSeq.updated(rnd.nextInt(dim), null))
+      else Row(label, v.toSeq)
+    } ++ Seq.fill(3)(Row(9, null)) // a cluster of null embeddings only
+    // several input partitions, so partial buffers merge
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+    val avgs = (0 until dim).map(i => avg(col("emb").getItem(i)))
+    val expected = df.groupBy(col("label")).agg(avgs.head, avgs.tail: _*)
+      .collect().map(r => r.getInt(0) -> (1 to dim).map(i => r.get(i))).toMap
+    val book = df.agg(ArrayKernels.centroidCodebook(col("label"), col("emb"), dim).as("book"))
+      .collect().head.getSeq[Row](0)
+    assert(book.map(_.getInt(0)) === expected.keys.toSeq.sorted)
+    book.foreach { e =>
+      val means = e.getSeq[Any](1)
+      expected(e.getInt(0)).zip(means).foreach {
+        case (a: Double, b: Double) =>
+          assert(java.lang.Double.doubleToRawLongBits(a) ===
+            java.lang.Double.doubleToRawLongBits(b), s"cluster ${e.getInt(0)}: $a != $b")
+        case (a, b) => assert(a === b)
+      }
+    }
+    assert(book.last.getSeq[Any](1) === Seq.fill(dim)(null))
+    // an empty input is an empty codebook
+    assert(df.filter(lit(false))
+      .agg(ArrayKernels.centroidCodebook(col("label"), col("emb"), dim))
+      .collect().head.getSeq[Row](0).isEmpty)
   }
 }

@@ -65,6 +65,17 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  /** Centroid assignment is a per-row kernel over the broadcast
+    * codebook: no per-vector shuffle, no sort-based argmax. */
+  private def assertNoPerVectorAggregate(what: String, p: String): Unit = {
+    assert(!p.contains("SortAggregate"), s"$what plans a SortAggregate:\n$p")
+    assert(!p.contains("hashpartitioning(vec_id"), s"$what shuffles by vec_id:\n$p")
+  }
+
+  test("ann_ivf_topk assigns and probes without a per-vector shuffle") {
+    assertNoPerVectorAggregate("ann_ivf_topk", phys("ann_ivf_topk"))
+  }
+
   test("dd_substring: window-key equi-joins only, never a text product") {
     val p = phys("dd_substring")
     assert(!p.contains("CartesianProduct") &&
@@ -84,6 +95,7 @@ class PlanShapeSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(a.contains("BroadcastHashJoin") || a.contains("BroadcastExchange"),
       s"centroid table is not broadcast in the assignment sub-plan:\n$a")
+    assertNoPerVectorAggregate("dd_semantic's assignment", a)
     val p = phys("dd_semantic")
     assert(!p.contains("CartesianProduct"),
       s"within-cluster pairing planned as a cartesian product:\n$p")

@@ -59,6 +59,34 @@ class RelationalSpec extends AnyFunSuite {
     assert(os.subsetOf(qs), s"oracle-only keys: ${os.diff(qs)}")
   }
 
+  test("a new input path's schema is read on the driver, as Spark infers it") {
+    import org.apache.spark.sql.execution.datasources.GraftConnectorShim
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // a directory as Spark writes one: part files beside _SUCCESS
+    val written = java.nio.file.Files.createTempDirectory("graft-footer").toString +
+      "/documents.parquet"
+    spark.range(5).selectExpr("id AS doc_id", "cast(id AS string) AS text")
+      .repartition(2).write.parquet(written)
+    val testdata = new java.io.File(sf).getParent
+    val paths = Seq("sf0.001", "sf0.01", "sf0.1").flatMap(f =>
+      Tables.names.map(t => s"$testdata/$f/$t.parquet")) :+ written
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      paths.foreach { p =>
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+        jobs.set(0)
+        val mine = GraftConnectorShim.inferParquetSchema(spark, p)
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+        assert(jobs.get === 0, s"$p: reading the schema ran a job")
+        assert(mine === Some(spark.read.parquet(p).schema), p)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("q04 plan broadcasts the part dim") {
     val plan = ops.Relational.q04BroadcastJoin(spark, sf)
       .queryExecution.executedPlan.toString

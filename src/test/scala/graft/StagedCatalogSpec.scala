@@ -400,11 +400,21 @@ class StagedCatalogSpec extends AnyFunSuite {
       ageDir(new java.io.File(winRoot), 7200000L)
       ageDir(new java.io.File(lostRoot), 7200000L)
 
+      def tableGets: Long = {
+        import scala.jdk.CollectionConverters._
+        C.requestsByEndpoint.asScala.collect {
+          case (ep, n) if ep.startsWith("GET ") && ep.endsWith("/tables/{t}") => n.get
+        }.sum
+      }
+      val getsBefore = tableGets
       val swept = spark.sql(
         "CALL stgsw.system.remove_orphan_staging('db', 3600000, false)")
         .collect().map(_.getString(0)).toSeq
       assert(swept === Seq(new java.io.File(lostRoot).getName),
         s"expected only the crashed staged dir, got $swept")
+      // one table GET per table (anchor, pub) yields both its root and
+      // the location its metadata records
+      assert(tableGets - getsBefore === 2)
       assert(!new java.io.File(lostRoot).exists())
       assert(new java.io.File(winRoot).exists(),
         "sweep deleted a PUBLISHED staged-create table's storage")

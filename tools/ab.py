@@ -14,6 +14,8 @@ alike. Both sides build from their own sources on their first run.
 Per workload and side it prints the median and quartiles of the bounded
 end-to-end metrics of BENCHMARK.json, how many pairs the change wins on
 each (by the metric's `better` direction), and failed/attempted counts.
+Each metric gets a verdict (see `verdict`): `gain`, `worse`,
+`unresolved` or `within bound`.
 It then prints, per op kind, the median wall time of that side's correct
 ops over all its runs, read from each run's record in
 `.bench_build/results/<workload>-seed<i>-trace0.json` of that side's tree,
@@ -69,6 +71,41 @@ def quartiles(xs):
     return q1, q2, q3
 
 
+def verdict(base, change, better, bound):
+    """The A/B verdict on one metric of one workload, from the values of
+    the two sides (pair i of each is the same seed) and BENCHMARK.json's
+    relative `bound`:
+
+    - `gain`: the change wins at least 9/10 of the pairs (ties count for
+      neither side) and its median beats the parent's by more than the
+      parent's interquartile spread;
+    - `worse`: the change's median is worse than the parent's by more
+      than `bound` times the parent's median;
+    - `unresolved`: the parent's interquartile spread exceeds `bound`
+      times its median, so a change within the bound cannot be told
+      from noise, unless every run of the change beats every parent run;
+    - `within bound` otherwise.
+    """
+    pairs = [(b, c) for b, c in zip(base, change) if b is not None and c is not None]
+    b_vals = [b for b in base if b is not None]
+    c_vals = [c for c in change if c is not None]
+    if not pairs or not b_vals or not c_vals:
+        return "unresolved"
+    sign = -1.0 if better == "lower" else 1.0  # a positive gap is better
+    q1, b_med, q3 = quartiles(b_vals)
+    c_med = statistics.median(c_vals)
+    gap = sign * (c_med - b_med)
+    wins = sum(sign * (c - b) > 0 for b, c in pairs)
+    if wins >= 0.9 * len(pairs) and gap > q3 - q1:
+        return "gain"
+    if -gap > bound * abs(b_med):
+        return "worse"
+    all_better = min(sign * c for c in c_vals) > max(sign * b for b in b_vals)
+    if q3 - q1 > bound * abs(b_med) and not all_better:
+        return "unresolved"
+    return "within bound"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--rev", default="HEAD")
@@ -83,6 +120,7 @@ def main():
     workloads = a.workloads.split(",") if a.workloads else [w["name"] for w in cfg["workloads"]]
     seconds = cfg["run_seconds"]
     metrics = [(m["name"], m["better"]) for m in cfg["end_to_end"]]
+    bounds = {m["name"]: m["bound"] for m in cfg["end_to_end"]}
 
     base = tempfile.mkdtemp(prefix="graft-ab-")
     atexit.register(shutil.rmtree, base, True)
@@ -131,7 +169,8 @@ def main():
             pairs = [(b, c) for b, c in zip(vals["base"], vals["change"])
                      if b is not None and c is not None]
             wins = sum((c < b) if better == "lower" else (c > b) for b, c in pairs)
-            print(line + f"  change wins {wins}/{len(pairs)}")
+            v = verdict(vals["base"], vals["change"], better, bounds[name])
+            print(line + f"  change wins {wins}/{len(pairs)}  {v}")
         print("  op ms, median over the side's correct ops (count)")
         for kind in sorted(set(kind_ms[w]["base"]) | set(kind_ms[w]["change"])):
             line = f"    {kind:26s}"
