@@ -336,20 +336,17 @@ object Similarity {
     * comparison. */
   val annPqTopk: Q = (s, d) => {
     val v = vectors(s, d).select(col("vec_id"), col("emb"))
-    // codebook: mean subvector per (subspace m, codeword c). One
-    // codegen aggregation per codeword with Dim `avg` buffers (partial
-    // map-side agg), then the TINY aggregated frame (PqK rows) is
-    // exploded into (m, c, cw) — the old posexplode shape pushed a
-    // 64×N-row explode into the first shuffle and re-assembled with a
-    // second shuffle + sort (guide §2.3: aggregate before you
-    // shuffle). Means are the same multiset of addends per (m, c,
-    // dim), so codewords are unchanged.
-    val cbAvgs = (0 until Dim).map(i => avg(col("emb").getItem(i)).as(s"_a$i"))
+    // codebook: mean subvector per (subspace m, codeword c). The
+    // CentroidCodebook aggregate builds every codeword group's mean
+    // vector as one row (each dimension equal to `avg(emb[i])` of the
+    // group, as IVF's centroids); the TINY book (PqK entries) is then
+    // exploded and each centroid sliced into its PqM subvectors
     val cb = broadcast(
-      v.groupBy((col("vec_id") % PqK).cast("int").as("c"))
-        .agg(cbAvgs.head, cbAvgs.tail: _*)
-        .select(col("c"), posexplode(array((0 until PqM).map(m =>
-            array((0 until PqSub).map(j => col(s"_a${m * PqSub + j}")): _*)): _*))
+      v.agg(graft.functions.ArrayKernels.centroidCodebook(
+          (col("vec_id") % PqK).cast("int"), col("emb"), Dim).as("book"))
+        .select(explode(col("book")).as("e"))
+        .select(col("e.cluster").as("c"), posexplode(array((0 until PqM).map(m =>
+            slice(col("e.centroid"), m * PqSub + 1, PqSub)): _*))
           .as(Seq("m", "cw"))))
     val subs = v.select(col("vec_id"),
       posexplode(array((0 until PqM).map(m =>

@@ -206,9 +206,10 @@ object TableOps {
     // a KEYLESS repartition pays a local sort of the input first
     // (SPARK-23207) — measured at ~0.4 s of this key's append
     t.append(li.repartition(40, col("l_orderkey")))
-    val before = (t.filesDF.count(), t.scan().count())
+    def liveFiles = t.meta.liveFiles(None).size.toLong
+    val before = (liveFiles, t.scan().count())
     t.compact(targetFileBytes = 512L * 1024 * 1024)
-    val after = (t.filesDF.count(), t.scan().count())
+    val after = (liveFiles, t.scan().count())
     Seq(("before", before._1, before._2), ("after", after._1, after._2))
       .toDF("phase", "n_files", "n_rows").orderBy(col("phase"))
   }
@@ -398,13 +399,17 @@ object TableOps {
           ELSE 0 END)::BIGINT AS n
        FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"""
 
-  /** metadata tables: per-file and per-snapshot listings as queryable
-    * DataFrames (rows-only; file counts are layout-dependent but the
-    * row-count sum must equal the data). */
+  /** metadata tables: the catalog's `files` and `snapshots` tables
+    * over a warehouse table, read with SQL (rows-only; file counts are
+    * layout-dependent but the row-count sum must equal the data). */
   val tfMetadataTables: Q = (s, d) => {
     import s.implicits._
     val li = Tables.lineitem(s, d)
-    val t = GraftTable.create(s, scratch(), li.schema)
+    // catalog names are session-cached by NAME, so each run gets a
+    // fresh one over a fresh warehouse
+    val wh = Files.createTempDirectory("graft-metawh").toString
+    val cat = s"wmeta_${java.util.UUID.randomUUID().toString.take(8)}"
+    val t = GraftTable.create(s, s"$wh/db/t", li.schema)
     // one file per append regardless of the INPUT's partition count,
     // so n_files is scale-invariant (at sf1 the raw read plans several
     // splits and an uncoalesced append writes one file per task).
@@ -414,11 +419,19 @@ object TableOps {
       col("l_orderkey")))
     t.append(Tables.oneFile(s, li.filter(col("l_linenumber") > 3),
       col("l_orderkey")))
-    val files = t.filesDF.agg(count(lit(1)).as("n_files"),
-      sum(col("records")).as("n_records")).collect()(0)
-    val snaps = t.snapshotsDF.count()
-    Seq((files.getLong(0), files.getLong(1), snaps, t.scan().count()))
-      .toDF("n_files", "n_records", "n_snapshots", "n_rows")
+    s.conf.set(s"spark.sql.catalog.$cat", "graft.spark.GraftTableCatalog")
+    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    try {
+      val files = s.sql(s"SELECT count(*), sum(records) FROM $cat.db.t.files")
+        .collect()(0)
+      val snaps = s.sql(s"SELECT count(*) FROM $cat.db.t.snapshots")
+        .collect()(0).getLong(0)
+      Seq((files.getLong(0), files.getLong(1), snaps, t.scan().count()))
+        .toDF("n_files", "n_records", "n_snapshots", "n_rows")
+    } finally {
+      s.conf.unset(s"spark.sql.catalog.$cat")
+      s.conf.unset(s"spark.sql.catalog.$cat.warehouse")
+    }
   }
 
   /** Coalesced single-partition appends → one file per append; record

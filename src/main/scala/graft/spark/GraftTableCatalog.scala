@@ -298,8 +298,8 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
             }
           }
           // metadata tables over REST: cat.ns.t.files etc. — resolve
-          // the PARENT through the protocol, render from its manifests
-          // (namespace may itself be multi-level: cat.a.b.t.files)
+          // the PARENT through the protocol (namespace may itself be
+          // multi-level: cat.a.b.t.files)
           val kind = ident.name().toLowerCase(java.util.Locale.ROOT)
           if (ident.namespace().length >= 2 &&
               (GraftMetadataSparkTable.Kinds.contains(kind) ||
@@ -313,17 +313,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
                   .loadMaterializedView(base, ns, parent.name())
                 return GraftMvRefreshState.table(recorded, current, ver)
               }
-            }
-            restRootOf(parent).foreach { parentRoot =>
-              return if (kind == "position_deletes")
-                new GraftPositionDeletesTable(parentRoot,
-                  GraftPositionDeletesTable.icebergFiles)
-              else if (kind == "refresh_state")
-                throw new org.apache.spark.sql.catalyst.analysis
-                  .NoSuchTableException(ident)
-              else new GraftMetadataSparkTable(parentRoot, kind,
-                IcebergMetadataRows.rowsOf)
-            }
+            } else restRootOf(parent).foreach(r => return metadataTable(r, kind))
           }
           throw new org.apache.spark.sql.catalyst.analysis
             .NoSuchTableException(ident)
@@ -364,25 +354,18 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces
             kind == "position_deletes")) {
         val parentRoot =
           resolveRoot((warehouse +: ident.namespace().toSeq).mkString("/"))
-        // adopted real-format tables serve the same metadata views
-        // (rendered from their manifest lists; schemas identical) —
-        // including the data-scale position_deletes content table
-        TableFormat.resolve(parentRoot).foreach {
-          case _: TableFormat.GraftFormat =>
-            return if (kind == "position_deletes")
-              new GraftPositionDeletesTable(parentRoot)
-            else new GraftMetadataSparkTable(parentRoot, kind)
-          case _ =>
-            return if (kind == "position_deletes")
-              new GraftPositionDeletesTable(parentRoot,
-                GraftPositionDeletesTable.icebergFiles)
-            else new GraftMetadataSparkTable(parentRoot, kind,
-              IcebergMetadataRows.rowsOf)
-        }
+        if (Meta.exists(parentRoot)) return metadataTable(parentRoot, kind)
       }
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
     }
   }
+
+  /** `cat.ns.t.<kind>` over the table at `parentRoot`, either format:
+    * the metadata tables and the data-scale position_deletes content
+    * table render from the format handle their scan resolves. */
+  private def metadataTable(parentRoot: String, kind: String): Table =
+    if (kind == "position_deletes") new GraftPositionDeletesTable(parentRoot)
+    else new GraftMetadataSparkTable(parentRoot, kind)
 
   private[spark] def loadFormat(ident: Identifier): TableFormat =
     TableFormat.resolve(tableRoot(ident)).getOrElse(
@@ -833,120 +816,76 @@ object GraftMetadataSparkTable {
       StructField("latest_snapshot_id", LongType)))
   }
 
-  private def partString(f: Meta.DataFile): String =
-    f.partitionValues.toSeq.sorted.map(kv => s"${kv._1}=${kv._2}")
-      .mkString("/")
+  /** The format of the table at `root`, read now. */
+  private[spark] def formatAt(root: String): TableFormat =
+    TableFormat.resolve(root).getOrElse(
+      throw new IllegalStateException(s"no table at $root"))
 
-  def rowsOf(root: String, kind: String): Seq[Seq[Any]] = {
-    val m = Meta.load(root)
+  /** The rows of `kind` over the facts `format` gives. */
+  def rowsOf(format: TableFormat, kind: String): Seq[Seq[Any]] = {
+    def fileRow(f: TableFormat.MetaFile): Seq[Any] =
+      Seq(f.path, f.partition, f.specId, f.content, f.records, f.bytes)
     kind match {
-      case "files" =>
-        (m.liveFiles(None) ++ m.liveDeleteFiles(None)).map(f => Seq(
-          f.path,
-          f.partitionValues.toSeq.sorted.map(kv => s"${kv._1}=${kv._2}")
-            .mkString("/"),
-          f.specId, f.content, f.recordCount, f.fileSizeBytes))
-      case "snapshots" =>
-        m.snapshots.map(s => Seq(
-          s.snapshotId, s.parentId.getOrElse(-1L), s.sequenceNumber,
-          new java.sql.Timestamp(s.timestampMs), s.operation,
-          // summary first: counting via s.files would resolve every
-          // spilled manifest group just to size a metadata row
-          s.summary.get("added-files").map(_.toInt)
-            .getOrElse(if (s.manifestPath.isEmpty && s.manifestGroups.isEmpty)
-              s.addedFiles.size else s.files.size),
-          s.removedPaths.size))
+      case "files" => format.liveMetaFiles.map(fileRow)
+      case "snapshots" => format.snapshotCounts.map { case (s, added, removed) =>
+        Seq(s.id, s.parentId.getOrElse(-1L), s.sequence,
+          new java.sql.Timestamp(s.timestampMs), s.operation, added, removed)
+      }
       case "history" =>
-        val onChain = m.chainSnapshots(None).map(_.snapshotId).toSet
-        m.snapshots.map(s => Seq(
-          new java.sql.Timestamp(s.timestampMs), s.snapshotId,
-          s.parentId.getOrElse(-1L), onChain.contains(s.snapshotId)))
+        val snaps = format.snapshotList
+        val byId = snaps.map(s => s.id -> s).toMap
+        val ancestry = Iterator.iterate(format.currentSnapshotId.flatMap(byId.get))(
+          _.flatMap(_.parentId).flatMap(byId.get)).takeWhile(_.isDefined)
+          .map(_.get.id).toSet
+        snaps.map(s => Seq(new java.sql.Timestamp(s.timestampMs), s.id,
+          s.parentId.getOrElse(-1L), ancestry.contains(s.id)))
       case "partitions" =>
-        m.liveFiles(None)
-          .groupBy(f => (f.specId, f.partitionValues.toSeq.sorted
-            .map(kv => s"${kv._1}=${kv._2}").mkString("/")))
-          .toSeq.sortBy(_._1._2)
-          .map { case ((specId, part), files) => Seq(
-            part, specId, files.size.toLong,
-            files.map(_.recordCount).sum, files.map(_.fileSizeBytes).sum)
+        format.liveMetaFiles.filter(_.content == 0)
+          .groupBy(f => (f.specId, f.partition)).toSeq.sortBy(_._1._2)
+          .map { case ((specId, part), files) => Seq(part, specId,
+            files.size.toLong, files.map(_.records).sum, files.map(_.bytes).sum)
           }
-      case "refs" =>
-        m.refs.toSeq.sortBy(_._1).map { case (name, snapId) =>
-          val r = m.refRetention.get(name)
-          Seq(name,
-            r.map(_.refType).getOrElse("branch"), snapId,
-            r.flatMap(_.maxRefAgeMs).map(Long.box).orNull,
-            r.flatMap(_.minSnapshotsToKeep).map(Int.box).orNull,
-            r.flatMap(_.maxSnapshotAgeMs).map(Long.box).orNull)
-        }
-      case "manifests" =>
-        m.snapshots.flatMap { s =>
-          if (s.manifestGroups.nonEmpty)
-            s.manifestGroups.map(g =>
-              Seq(s.snapshotId, g.path, "group", g.stats.size))
-          else s.manifestPath match {
-            case Some(p) => Seq(Seq(s.snapshotId, p, "spilled",
-              s.manifestStats.size))
-            case None =>
-              Seq(Seq(s.snapshotId, "(inline)", "inline",
-                s.addedFiles.flatMap(_.stats.keys).distinct.size))
-          }
-        }
+      case "refs" => format.refsRows
+      case "manifests" => format.manifestsRows
       case "entries" =>
-        // the Iceberg entries table: one row per manifest entry, both
-        // lifecycle edges. Removed entries carry only paths in the
-        // snapshot, so their shape resolves through the entry that
-        // ADDED them (path → file across the whole history).
-        lazy val byPath: Map[String, Meta.DataFile] =
-          m.snapshots.flatMap(s => s.files ++ s.addedDeleteFiles)
-            .map(f => f.path -> f).toMap
-        m.snapshots.flatMap { s =>
-          val added = (s.files ++ s.addedDeleteFiles).map(f => Seq(
-            1, s.snapshotId, f.dataSequence.getOrElse(s.sequenceNumber),
-            f.content, f.path, partString(f), f.recordCount,
-            f.fileSizeBytes))
-          val removed = (s.removedPaths ++ s.removedDeletePaths)
-            .map { p =>
+        // removed entries carry only paths: their shape resolves
+        // through the entry that listed the file (path → file across
+        // the whole history)
+        val changes = format.snapshotFiles
+        lazy val byPath = changes.flatMap(c => c.added ++ c.carried)
+          .map(f => f.path -> f).toMap
+        changes.flatMap { c =>
+          val s = c.snapshot
+          c.added.map(f => Seq(1, s.id, f.sequence, f.content, f.path,
+            f.partition, f.records, f.bytes)) ++
+            c.removed.map { p =>
               val f = byPath.get(p)
-              Seq(2, s.snapshotId, s.sequenceNumber,
-                f.map(_.content).getOrElse(0), p,
-                f.map(partString).getOrElse(""),
-                f.map(_.recordCount).getOrElse(-1L),
-                f.map(_.fileSizeBytes).getOrElse(-1L))
+              Seq(2, s.id, s.sequence, f.map(_.content).getOrElse(0), p,
+                f.map(_.partition).getOrElse(""), f.map(_.records).getOrElse(-1L),
+                f.map(_.bytes).getOrElse(-1L))
             }
-          added ++ removed
         }
       case "delete_files" =>
-        m.liveDeleteFilesWithSeq(None).map { case (f, seq) => Seq(
-          f.path, partString(f), f.specId, f.content, f.recordCount,
-          f.fileSizeBytes, f.equalityColumns.mkString(","), seq)
-        }
+        format.liveMetaFiles.filter(_.content != 0).map(f =>
+          fileRow(f) ++ Seq(f.equalityColumns, f.sequence))
       case "all_files" =>
-        // every file any snapshot ever added (the Iceberg all_files
-        // union across valid snapshots), flagged live/not-live
-        val live = (m.liveFiles(None) ++ m.liveDeleteFiles(None))
-          .map(_.path).toSet
-        m.snapshots.flatMap(s => s.files ++ s.addedDeleteFiles)
+        // every file the history lists (the spec's union across valid
+        // snapshots), flagged live or not
+        val live = format.liveMetaFiles.map(_.path).toSet
+        format.snapshotFiles.flatMap(c => c.added ++ c.carried)
           .groupBy(_.path).toSeq.sortBy(_._1)
-          .map { case (p, fs) =>
-            val f = fs.head
-            Seq(p, partString(f), f.specId, f.content, f.recordCount,
-              f.fileSizeBytes, live.contains(p))
-          }
+          .map { case (p, fs) => fileRow(fs.head) :+ live.contains(p) }
       case "metadata_log_entries" =>
         val VersionFile = """v(\d+)\.metadata\.json""".r
-        val dir = Meta.metadataDir(root)
-        TableIO.listFilesRecursive(dir).flatMap {
+        TableIO.listFilesRecursive(Meta.metadataDir(format.root)).flatMap {
           case (p, _, mtime) => p.getName match {
             case VersionFile(n) => Some((n.toInt, p, mtime))
             case _ => None
           }
         }.sortBy(_._1).map { case (v, p, mtime) =>
-          val snap = scala.util.Try(
-            Meta.fromJson(TableIO.readString(p)).currentSnapshotId)
+          val snap = scala.util.Try(format.currentSnapshotOf(TableIO.readString(p)))
             .toOption.flatten
-          Seq(new java.sql.Timestamp(mtime), p.toString, v,
-            snap.map(Long.box).orNull)
+          Seq(new java.sql.Timestamp(mtime), p.toString, v, snap.map(Long.box).orNull)
         }
     }
   }
@@ -956,36 +895,10 @@ object GraftMetadataSparkTable {
   * delete files — (file_path, pos, delete_file) — unlike the other
   * metadata tables this is data-scale, so it reads DISTRIBUTED: one
   * input partition per delete file, parquet pages decoded on the
-  * executors, delete rows never pass through the driver. The default
-  * file lister serves the graft dialect; the catalog passes
-  * `GraftPositionDeletesTable.icebergFiles` for ADOPTED real-format
-  * tables (same schema, delete files listed from the manifest tree). */
-object GraftPositionDeletesTable {
-  /** (qualified delete-file URI, size bytes, display name). */
-  type DeleteFileRef = (String, Long, String)
-
-  def graftFiles(root: String): Seq[DeleteFileRef] = {
-    val m = graft.table.Meta.load(root)
-    val dataDir = TableIO.path(root, "data")
-    m.liveDeleteFiles(None).filter(_.content == 1).sortBy(_.path).map(f =>
-      (TableIO.qualified(new org.apache.hadoop.fs.Path(dataDir, f.path)),
-        f.fileSizeBytes, f.path))
-  }
-
-  def icebergFiles(root: String): Seq[DeleteFileRef] = {
-    val t = graft.table.iceberg.IcebergTable.load(
-      SparkSession.active, root)
-    t.deleteEntries().map(_._1).filter(_.content == 1)
-      .sortBy(_.filePath).map(e =>
-        (TableIO.qualified(t.resolvePath(e.filePath)),
-          e.fileSizeBytes, e.filePath))
-  }
-}
-
-class GraftPositionDeletesTable(root: String,
-    filesFn: String => Seq[GraftPositionDeletesTable.DeleteFileRef] =
-      GraftPositionDeletesTable.graftFiles)
-  extends Table with SupportsRead {
+  * executors, delete rows never pass through the driver. The files
+  * come from the table's format handle, resolved when the scan is
+  * built. */
+class GraftPositionDeletesTable(root: String) extends Table with SupportsRead {
   import org.apache.spark.sql.connector.read._
   import org.apache.spark.sql.types.{LongType, StringType, StructField}
   import org.apache.spark.sql.execution.datasources.GraftConnectorShim
@@ -1002,35 +915,31 @@ class GraftPositionDeletesTable(root: String,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
-      override def build(): Scan = new Scan with Batch {
-        override def readSchema(): StructType = schema()
-        override def toBatch: Batch = this
-        @volatile private var fileByPartition = Map.empty[Int, String]
-        override def planInputPartitions(): Array[InputPartition] = {
-          val files = filesFn(root)
-          fileByPartition =
-            files.zipWithIndex.map { case (f, i) => i -> f._3 }.toMap
-          files.zipWithIndex.map { case ((uri, sz, _), i) =>
-            GraftConnectorShim.filePartition(i, Seq(
-              GraftConnectorShim.partitionedFile(uri, sz, 0L)))
-              : InputPartition
-          }.toArray
+      override def build(): Scan = {
+        val files = GraftMetadataSparkTable.formatAt(root).positionDeleteFiles
+        new Scan with Batch {
+          override def readSchema(): StructType = schema()
+          override def toBatch: Batch = this
+          override def planInputPartitions(): Array[InputPartition] =
+            files.zipWithIndex.map { case ((uri, sz, _), i) =>
+              GraftConnectorShim.filePartition(i, Seq(
+                GraftConnectorShim.partitionedFile(uri, sz, 0L))): InputPartition
+            }.toArray
+          override def createReaderFactory(): PartitionReaderFactory =
+            AppendConstStringFactory(
+              GraftConnectorShim.parquetReaderFactory(
+                SparkSession.active, posSchema, posSchema, Array.empty),
+              files.zipWithIndex.map { case (f, i) => i -> f._3 }.toMap, posSchema)
         }
-        override def createReaderFactory(): PartitionReaderFactory =
-          AppendConstStringFactory(
-            GraftConnectorShim.parquetReaderFactory(
-              SparkSession.active, posSchema, posSchema, Array.empty),
-            fileByPartition, posSchema)
       }
     }
 }
 
-/** Metadata tables for both dialects: the default `rowsFn` renders
-  * graft metadata; the catalog passes `IcebergMetadataRows.rowsOf`
-  * for adopted real-format tables (same schemas either way). */
-class GraftMetadataSparkTable(root: String, kind: String,
-    rowsFn: (String, String) => Seq[Seq[Any]] =
-      GraftMetadataSparkTable.rowsOf)
+/** The metadata tables of both formats: one renderer
+  * (`GraftMetadataSparkTable.rowsOf`) over the facts of the table's
+  * format handle, resolved when the scan is built, so a reused
+  * DataFrame sees later commits. */
+class GraftMetadataSparkTable(root: String, kind: String)
   extends Table with SupportsRead {
   import org.apache.spark.sql.connector.read._
 
@@ -1041,13 +950,17 @@ class GraftMetadataSparkTable(root: String, kind: String,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
-      override def build(): Scan = new Scan with Batch {
-        override def readSchema(): StructType = schema()
-        override def toBatch: Batch = this
-        override def planInputPartitions(): Array[InputPartition] =
-          Array(MetadataRowsPartition(rowsFn(root, kind)))
-        override def createReaderFactory(): PartitionReaderFactory =
-          MetadataRowsReaderFactory(schema())
+      override def build(): Scan = {
+        val rows = GraftMetadataSparkTable.rowsOf(
+          GraftMetadataSparkTable.formatAt(root), kind)
+        new Scan with Batch {
+          override def readSchema(): StructType = schema()
+          override def toBatch: Batch = this
+          override def planInputPartitions(): Array[InputPartition] =
+            Array(MetadataRowsPartition(rows))
+          override def createReaderFactory(): PartitionReaderFactory =
+            MetadataRowsReaderFactory(schema())
+        }
       }
     }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.datasources.GraftConnectorShim
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{StructField, StructType}
 import graft.table.{GraftTable, Meta, TableIO}
-import graft.table.iceberg.{IcebergMaintenance, IcebergMetadata, IcebergTable, IcebergWrite}
+import graft.table.iceberg.{IcebergAvro, IcebergMaintenance, IcebergMetadata, IcebergTable, IcebergWrite}
 
 /** One table format's side of the one DSv2 table (GraftSparkTable),
   * over one metadata load: only what differs by format. Scans and
@@ -76,6 +76,27 @@ sealed trait TableFormat {
   /** (previous tip or -1, new tip) */
   def fastForward(branch: String, to: String): (Long, Long)
   def setSortOrder(entries: Seq[String]): Unit
+
+  // ---- what the metadata tables render (GraftMetadataSparkTable)
+
+  /** every snapshot, in commit order */
+  def snapshotList: Seq[TableFormat.MetaSnapshot]
+  /** every snapshot with its (files added, files removed), counted by
+    * the format's rule: graft counts data files, Iceberg every entry */
+  def snapshotCounts: Seq[(TableFormat.MetaSnapshot, Int, Int)]
+  /** the current snapshot's live data and delete files */
+  def liveMetaFiles: Seq[TableFormat.MetaFile]
+  /** every snapshot, in commit order, with the files it changed */
+  def snapshotFiles: Seq[TableFormat.SnapshotFiles]
+  /** the refs table: name, type, snapshot and retention of each ref */
+  def refsRows: Seq[Seq[Any]]
+  /** the manifests table: the manifests each snapshot wrote */
+  def manifestsRows: Seq[Seq[Any]]
+  /** the current snapshot a metadata file of this format names */
+  def currentSnapshotOf(json: String): Option[Long]
+  /** live position-delete files as (qualified URI, size bytes, path as
+    * the metadata lists it), by path */
+  def positionDeleteFiles: Seq[(String, Long, String)]
 
   protected def refs: Map[String, Long]
   protected def hasSnapshot(id: Long): Boolean
@@ -146,6 +167,26 @@ object TableFormat {
       case Left(m) => new GraftFormat(root, m)
       case Right(m) => new IcebergFormat(root, m)
     }
+
+  /** A snapshot as the metadata tables list it. */
+  case class MetaSnapshot(id: Long, parentId: Option[Long], sequence: Long,
+      timestampMs: Long, operation: String)
+
+  /** A data or delete file as the metadata tables list it: `partition`
+    * is the sorted `name=value` pairs joined by '/', `sequence` the data
+    * sequence number, `equalityColumns` the key names joined by ','. */
+  case class MetaFile(path: String, partition: String, specId: Int,
+      content: Int, records: Long, bytes: Long, sequence: Long,
+      equalityColumns: String)
+
+  private def partitionString(values: Map[String, Any]): String =
+    values.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("/")
+
+  /** The files a snapshot added and the paths it removed. `carried`
+    * are the other files the manifests it wrote list (Iceberg's
+    * existing and deleted entries; none in graft). */
+  case class SnapshotFiles(snapshot: MetaSnapshot, added: Seq[MetaFile],
+      removed: Seq[String], carried: Seq[MetaFile])
 
   private val baseCapabilities: Seq[TableCapability] = Seq(
     TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
@@ -309,6 +350,50 @@ object TableFormat {
       table.cherrypick(snapshotId, meta).currentSnapshotId.getOrElse(-1L)
     def fastForward(branch: String, to: String): (Long, Long) = table.fastForward(branch, to)
     def setSortOrder(entries: Seq[String]): Unit = table.setSortOrder(entries)
+
+    private def metaSnapshot(s: Meta.Snapshot): MetaSnapshot =
+      MetaSnapshot(s.snapshotId, s.parentId, s.sequenceNumber, s.timestampMs, s.operation)
+    private def metaFile(f: Meta.DataFile, sequence: Long): MetaFile =
+      MetaFile(f.path, partitionString(f.partitionValues), f.specId, f.content,
+        f.recordCount, f.fileSizeBytes, sequence, f.equalityColumns.mkString(","))
+    def snapshotList: Seq[MetaSnapshot] = meta.snapshots.map(metaSnapshot)
+    // the summary first: counting s.files would read every spilled
+    // manifest group just to size a row
+    def snapshotCounts: Seq[(MetaSnapshot, Int, Int)] = meta.snapshots.map(s =>
+      (metaSnapshot(s), s.summary.get("added-files").map(_.toInt).getOrElse(
+        if (s.manifestPath.isEmpty && s.manifestGroups.isEmpty) s.addedFiles.size
+        else s.files.size), s.removedPaths.size))
+    def liveMetaFiles: Seq[MetaFile] =
+      (meta.liveFilesWithSeq(None) ++ meta.liveDeleteFilesWithSeq(None)).map {
+        case (f, seq) => metaFile(f, seq)
+      }
+    def snapshotFiles: Seq[SnapshotFiles] = meta.snapshots.map(s => SnapshotFiles(
+      metaSnapshot(s),
+      (s.files ++ s.addedDeleteFiles).map(f =>
+        metaFile(f, f.dataSequence.getOrElse(s.sequenceNumber))),
+      s.removedPaths ++ s.removedDeletePaths, Seq.empty))
+    def refsRows: Seq[Seq[Any]] = meta.refs.toSeq.sortBy(_._1).map { case (name, id) =>
+      val r = meta.refRetention.get(name)
+      Seq(name, r.map(_.refType).getOrElse("branch"), id,
+        r.flatMap(_.maxRefAgeMs).map(Long.box).orNull,
+        r.flatMap(_.minSnapshotsToKeep).map(Int.box).orNull,
+        r.flatMap(_.maxSnapshotAgeMs).map(Long.box).orNull)
+    }
+    def manifestsRows: Seq[Seq[Any]] = meta.snapshots.flatMap { s =>
+      if (s.manifestGroups.nonEmpty)
+        s.manifestGroups.map(g => Seq(s.snapshotId, g.path, "group", g.stats.size))
+      else s.manifestPath match {
+        case Some(p) => Seq(Seq(s.snapshotId, p, "spilled", s.manifestStats.size))
+        case None => Seq(Seq(s.snapshotId, "(inline)", "inline",
+          s.addedFiles.flatMap(_.stats.keys).distinct.size))
+      }
+    }
+    def currentSnapshotOf(json: String): Option[Long] = Meta.fromJson(json).currentSnapshotId
+    def positionDeleteFiles: Seq[(String, Long, String)] = {
+      val dataDir = TableIO.path(root, "data")
+      meta.liveDeleteFiles(None).filter(_.content == 1).sortBy(_.path).map(f =>
+        (TableIO.qualified(new Path(dataDir, f.path)), f.fileSizeBytes, f.path))
+    }
   }
 
   /** A real-format Iceberg table (adopted warehouse tables and every
@@ -583,6 +668,66 @@ object TableFormat {
           defaultSortOrderId = orderId)
       }
       ()
+    }
+
+    private def metaSnapshot(s: IcebergMetadata.IceSnapshot): MetaSnapshot =
+      MetaSnapshot(s.snapshotId, s.parentId, s.sequenceNumber, s.timestampMs, s.operation)
+    private def metaFile(mf: IcebergAvro.ManifestFile, e: IcebergAvro.DataFileEntry): MetaFile =
+      MetaFile(e.filePath, partitionString(e.partition), mf.specId, e.content,
+        e.recordCount, e.fileSizeBytes,
+        e.sequenceNumber.getOrElse(mf.sequenceNumber),
+        e.equalityIds.flatMap(id => meta.schema.fields.find(_.id == id).map(_.name))
+          .mkString(","))
+    private type Manifests = Seq[(IcebergAvro.ManifestFile, Seq[IcebergAvro.DataFileEntry])]
+    /** each snapshot's manifests with their entries, every list and
+      * manifest read once per reader */
+    private def manifestReader(): IcebergMetadata.IceSnapshot => Manifests = {
+      val read = scala.collection.mutable.Map[Long, Manifests]()
+      s => read.getOrElseUpdate(s.snapshotId,
+        IcebergAvro.readManifestList(TableIO.path(s.manifestList)).map(mf =>
+          mf -> IcebergAvro.readManifest(TableIO.path(mf.path))))
+    }
+    private def liveEntries(ms: Manifests) =
+      ms.flatMap { case (mf, es) => es.filter(_.status != 2).map(mf -> _) }
+
+    def snapshotList: Seq[MetaSnapshot] = meta.snapshots.map(metaSnapshot)
+    def snapshotCounts: Seq[(MetaSnapshot, Int, Int)] =
+      snapshotFiles.map(s => (s.snapshot, s.added.size, s.removed.size))
+    def liveMetaFiles: Seq[MetaFile] = meta.currentSnapshot.toSeq
+      .flatMap(s => liveEntries(manifestReader()(s))).map((metaFile _).tupled)
+    /** added: the entries the manifests a snapshot wrote mark added;
+      * removed: the paths live in its parent and not in it */
+    def snapshotFiles: Seq[SnapshotFiles] = {
+      val manifests = manifestReader()
+      def livePaths(s: IcebergMetadata.IceSnapshot): Set[String] =
+        liveEntries(manifests(s)).map(_._2.filePath).toSet
+      meta.snapshots.map { s =>
+        val (added, carried) = manifests(s).filter(_._1.addedSnapshotId == s.snapshotId)
+          .flatMap { case (mf, es) => es.map(mf -> _) }.partition(_._2.status == 1)
+        val removed = s.parentId.flatMap(meta.snapshot).toSeq
+          .flatMap(p => (livePaths(p) -- livePaths(s)).toSeq.sorted)
+        SnapshotFiles(metaSnapshot(s), added.map((metaFile _).tupled), removed,
+          carried.map((metaFile _).tupled))
+      }
+    }
+    def refsRows: Seq[Seq[Any]] = meta.refs.toSeq.sortBy(_._1).map { case (name, id) =>
+      val r = meta.refRetention.get(name)
+      Seq(name, meta.refTypes.getOrElse(name, "branch"), id,
+        r.flatMap(_.maxRefAgeMs).map(Long.box).orNull,
+        r.flatMap(_.minSnapshotsToKeep).map(Int.box).orNull,
+        r.flatMap(_.maxSnapshotAgeMs).map(Long.box).orNull)
+    }
+    /** the manifests each snapshot wrote */
+    def manifestsRows: Seq[Seq[Any]] = meta.snapshots.flatMap(s =>
+      IcebergAvro.readManifestList(TableIO.path(s.manifestList))
+        .filter(_.addedSnapshotId == s.snapshotId)
+        .map(mf => Seq(s.snapshotId, mf.path, "avro", mf.partitions.map(_.size).getOrElse(0))))
+    def currentSnapshotOf(json: String): Option[Long] =
+      IcebergMetadata.fromJson(json).currentSnapshotId
+    def positionDeleteFiles: Seq[(String, Long, String)] = {
+      val t = table
+      t.deleteEntries().map(_._1).filter(_.content == 1).sortBy(_.filePath).map(e =>
+        (TableIO.qualified(t.resolvePath(e.filePath)), e.fileSizeBytes, e.filePath))
     }
   }
 }

@@ -650,6 +650,14 @@ class GraftTable private (val root: String, val spark: SparkSession) {
   private def absolute(f: Meta.DataFile): String =
     new HPath(dataDir, f.path).toString
 
+  /** Position-delete files, columns matched by name: a row-level delta
+    * writes them with Iceberg's reserved field ids and
+    * deleteWhereMoRPositional without, so a schema inferred from one
+    * footer would demand ids the other files lack. */
+  private def readPositionDeletes(files: Seq[Meta.DataFile]): DataFrame =
+    spark.read.schema(StructType(Seq(StructField("file_path", StringType),
+      StructField("pos", LongType)))).parquet(files.map(absolute): _*)
+
   /** One raw parquet read over a mixed file list: graft-written files
     * read id-matched; imported (name-mapped) files read under their
     * PINNED import-time names with ids stripped, then aliased back to
@@ -1001,7 +1009,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
             val posPart =
               if (posFiles.isEmpty) Seq.empty
               else {
-                val posDf = spark.read.parquet(posFiles.map(absolute): _*)
+                val posDf = readPositionDeletes(posFiles)
                 val base = readWithDeletes(stayLive, parentDeletes,
                   schema, keepPos = true)
                 def np(c: Column) = regexp_replace(c, "^[a-z]+:/+", "/")
@@ -1036,7 +1044,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
           // broadcast) position-delete entries; update-mor's appended
           // files are its inserts
           val posFiles = s.addedDeleteFiles.filter(_.content == 1)
-          val posDf = spark.read.parquet(posFiles.map(absolute): _*)
+          val posDf = readPositionDeletes(posFiles)
           val base = readWithDeletes(m.liveFilesWithSeq(s.parentId),
             m.liveDeleteFilesWithSeq(s.parentId), schema, keepPos = true)
           def normPath(c: Column) = regexp_replace(c, "^[a-z]+:/+", "/")
@@ -1182,7 +1190,7 @@ class GraftTable private (val root: String, val spark: SparkSession) {
         else {
           val posFiles = deletesWithSeq.map(_._1)
             .filter(d => posPaths.contains(d.path))
-          val delDf = spark.read.parquet(posFiles.map(absolute): _*)
+          val delDf = readPositionDeletes(posFiles)
           // scheme-insensitive path compare: position-delete files may
           // record file:/x, file:///x, or /x depending on the writer
           // (_metadata.file_path vs the connector's qualified URIs) —
@@ -1490,8 +1498,11 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     * partition, rewrite each bin with one job. Rows are preserved
     * exactly; only file boundaries change. A caller that has just read
     * the current metadata passes it as `current`; it serves the commit's
-    * first attempt, and a conflict retry reloads. Returns (data files
-    * rewritten, data files added). */
+    * first attempt, and a conflict retry reloads. The commit requires
+    * every rewritten file still live, so a concurrent delete of one
+    * aborts it with a ConcurrentModificationException instead of
+    * bringing its rows back. Returns (data files rewritten, data files
+    * added). */
   def compact(targetFileBytes: Long = 128L * 1024 * 1024,
       current: Meta.TableMetadata = meta): (Int, Int) = {
     val m = current
@@ -1521,7 +1532,8 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     // bin-pack is the row-preserving "rewrite" streams may skip
     val op = if (m.liveDeleteFilesWithSeq(None).nonEmpty) "rewrite-fold"
              else "rewrite"
-    commit(op, files, allSmall.map(_.path), base = Some(m))
+    commit(op, files, allSmall.map(_.path), requireLive = allSmall.map(_.path),
+      base = Some(m))
     (allSmall.size, files.size)
   }
 
@@ -1573,7 +1585,8 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     val op = if (m.liveDeleteFilesWithSeq(None).nonEmpty) "rewrite-fold"
              else "rewrite"
     commit(op, files, live.map(_.path),
-      removedDeletes = m.liveDeleteFiles(None).map(_.path), base = Some(m))
+      removedDeletes = m.liveDeleteFiles(None).map(_.path),
+      requireLive = live.map(_.path), base = Some(m))
     (live.size, files.size)
   }
 
@@ -1603,7 +1616,8 @@ class GraftTable private (val root: String, val spark: SparkSession) {
     val op = if (m.liveDeleteFilesWithSeq(None).nonEmpty) "rewrite-fold"
              else "rewrite"
     commit(op, files, live.map(_.path),
-      removedDeletes = m.liveDeleteFiles(None).map(_.path), base = Some(m))
+      removedDeletes = m.liveDeleteFiles(None).map(_.path),
+      requireLive = live.map(_.path), base = Some(m))
     (live.size, files.size)
   }
 
@@ -2425,26 +2439,6 @@ class GraftTable private (val root: String, val spark: SparkSession) {
   }
 
   def removeProperties(keys: Seq[String]): GraftTable = updateProperties(Map.empty, keys)
-
-  // ---- metadata tables ------------------------------------------------
-
-  /** `files` metadata table: one row per live data file. */
-  def filesDF: DataFrame = {
-    import spark.implicits._
-    meta.liveFiles(None)
-      .map(f => (f.path, f.partitionValues.map(kv => s"${kv._1}=${kv._2}").toSeq.sorted.mkString("/"),
-        f.recordCount, f.fileSizeBytes))
-      .toDF("path", "partition", "records", "bytes")
-  }
-
-  /** `snapshots` metadata table. */
-  def snapshotsDF: DataFrame = {
-    import spark.implicits._
-    meta.snapshots
-      .map(s => (s.snapshotId, s.parentId.getOrElse(-1L), s.operation,
-        s.files.size, s.removedPaths.size))
-      .toDF("snapshot_id", "parent_id", "operation", "added_files", "removed_files")
-  }
 }
 
 object GraftTable {

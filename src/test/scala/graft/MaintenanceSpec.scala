@@ -290,7 +290,7 @@ class MaintenanceSpec extends AnyFunSuite {
       lt.append(o)
       (zt, lt)
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert(zt.filesDF.count() > 1)
+    assert(zt.meta.liveFiles(None).size > 1)
     // predicate on the SECOND dimension: the linear sort gives every
     // file the full o_orderkey range; z-order gives narrow ranges
     val maxK = o.agg(max("o_orderkey")).collect()(0).getLong(0)
@@ -298,7 +298,7 @@ class MaintenanceSpec extends AnyFunSuite {
     val zPlanned = zt.plannedFiles(Seq(zt.StatFilter("o_orderkey", "<", cut))).size
     val lPlanned = lt.plannedFiles(Seq(lt.StatFilter("o_orderkey", "<", cut))).size
     assert(zPlanned < lPlanned,
-      s"zorder planned $zPlanned vs linear $lPlanned of ${zt.filesDF.count()}")
+      s"zorder planned $zPlanned vs linear $lPlanned of ${zt.meta.liveFiles(None).size}")
     // correctness under the pruned scan
     val want = o.filter(col("o_orderkey") < cut.toLong).count()
     val got = zt.scan(Seq(zt.StatFilter("o_orderkey", "<", cut)))
@@ -323,7 +323,7 @@ class MaintenanceSpec extends AnyFunSuite {
       t.append(df.repartition(8))
       t
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-    val total = t.filesDF.count()
+    val total = t.meta.liveFiles(None).size
     assert(total > 1)
     // prune on EACH dimension: a z-clustered layout gives narrow
     // per-file ranges in both
@@ -347,7 +347,7 @@ class MaintenanceSpec extends AnyFunSuite {
         targetFileBytes = 8 * 1024)
       t
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-    val total = t.filesDF.count()
+    val total = t.meta.liveFiles(None).size
     assert(total > 1, s"rewrite should split into several files, got $total")
     // sort order unchanged (zorder was a one-shot layout op)
     assert(t.meta.sortOrder.isEmpty)
@@ -371,6 +371,28 @@ class MaintenanceSpec extends AnyFunSuite {
     val zs2 = Seq(Int.MinValue, -10, 0, 7, 1000, Int.MaxValue)
       .map(v => ZOrderKeys.zOrder2(fixed, v))
     assert(zs2 === zs2.sorted)
+  }
+
+  // a rewrite computed from a base that a concurrent delete has since
+  // changed must refuse, not retry onto the new base with copies of the
+  // deleted rows
+  for (strategy <- Seq("binpack", "sort", "zorder"))
+  test(s"a $strategy rewrite that loses a race to a delete refuses to commit") {
+    val spark0 = spark
+    import spark0.implicits._
+    def rows(from: Long) =
+      (from until from + 100L).map(k => (k, k * 7 % 13)).toDF("k", "v").coalesce(1)
+    val t = GraftTable.create(spark, tmp(), rows(0L).schema)
+    Seq(0L, 100L, 200L).foreach(from => t.append(rows(from)))
+    if (strategy == "sort") t.setSortOrder(Seq("k"))
+    val m0 = t.meta
+    t.delete(col("k") < 50)
+    intercept[java.util.ConcurrentModificationException](strategy match {
+      case "binpack" => t.compact(current = m0)
+      case "sort" => t.rewriteSort(current = m0)
+      case "zorder" => t.rewriteZOrder(Seq("k", "v"), current = m0)
+    })
+    assert(t.scan().count() === 250L)
   }
 
   test("concurrent appends from independent handles both commit") {

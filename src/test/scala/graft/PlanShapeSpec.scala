@@ -76,6 +76,12 @@ class PlanShapeSpec extends AnyFunSuite {
     assertNoPerVectorAggregate("ann_ivf_topk", phys("ann_ivf_topk"))
   }
 
+  test("ann_pq_topk builds its codebook with the one codebook kernel") {
+    val p = phys("ann_pq_topk")
+    assert(!p.contains("avg("), s"ann_pq_topk aggregates per-dimension avg columns:\n$p")
+    assert(p.contains("centroid_codebook("), s"ann_pq_topk lost its codebook kernel:\n$p")
+  }
+
   test("dd_substring: window-key equi-joins only, never a text product") {
     val p = phys("dd_substring")
     assert(!p.contains("CartesianProduct") &&

@@ -509,6 +509,151 @@ class TableCatalogSpec extends AnyFunSuite {
     spark.sql("DROP TABLE graft_wh.mt.p")
   }
 
+  // the metadata tables render from the table's format handle: the same
+  // SQL over the same history on both formats, each column read with its
+  // format's meaning (an Iceberg snapshot's added_files counts its delete
+  // files; a pure-equality DELETE writes an Iceberg equality delete file
+  // and a graft position delete file)
+  for (format <- Seq("graft", "iceberg"))
+  test("SQL metadata tables and position_deletes over one history" +
+      (if (format == "iceberg") " [iceberg]" else "")) {
+    wh
+    val spark0 = spark
+    import spark0.implicits._
+    val iceberg = format == "iceberg"
+    val ns = s"mh_$format"
+    val t = s"graft_wh.$ns.t"
+    val root = s"$wh/$ns/t"
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_wh.$ns")
+    def batch(from: Long) = (from until from + 30L)
+      .map(k => (k, if (k % 2 == 0) "a" else "b")).toDF("k", "tag").coalesce(1)
+    if (iceberg)
+      graft.table.iceberg.IcebergWrite.create(spark, root, batch(1L), Seq("tag"))
+    else {
+      spark.sql(s"CREATE TABLE $t (k BIGINT, tag STRING) PARTITIONED BY (tag) " +
+        "TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
+      batch(1L).createOrReplaceTempView("mh_src")
+      spark.sql(s"INSERT INTO $t SELECT * FROM mh_src")
+    }
+    batch(31L).createOrReplaceTempView("mh_src")
+    spark.sql(s"INSERT INTO $t SELECT * FROM mh_src")
+    def format0 = graft.spark.TableFormat.resolve(root).get
+    def q(sql: String) = spark.sql(sql.replace("$t", t)).collect()
+    def long(sql: String) = q(sql)(0).getLong(0)
+
+    // two appends: every snapshot on the current ancestry
+    assert(q("SELECT operation FROM $t.snapshots").map(_.getString(0)).toSeq ===
+      Seq("append", "append"))
+    val files = q("SELECT content, records, bytes FROM $t.files")
+    assert(files.forall(r => r.getInt(0) == 0 && r.getLong(2) > 0L))
+    assert(files.map(_.getLong(1)).sum === 60L)
+    val parts = q("SELECT partition, file_count, record_count FROM $t.partitions " +
+      "ORDER BY partition")
+    assert(parts.map(_.getString(0)).toSeq ===
+      (if (iceberg) Seq("tag=a", "tag=b") else Seq("_p_tag=a", "_p_tag=b")))
+    assert(parts.map(_.getLong(1)).sum === files.length.toLong)
+    assert(parts.map(_.getLong(2)).toSeq === Seq(30L, 30L))
+    assert(q("SELECT is_current_ancestor FROM $t.history").map(_.getBoolean(0))
+      .toSeq === Seq(true, true))
+    assert(long("SELECT sum(records) FROM $t.entries WHERE status = 1") === 60L)
+
+    // a merge-on-read DELETE: position_deletes holds one slot per
+    // deleted row, each stamped with its live position delete file
+    spark.sql(s"DELETE FROM $t WHERE k % 10 = 0 AND length(tag) >= 1")
+    def slots = q("SELECT file_path, pos, delete_file FROM $t.position_deletes")
+    val posFiles = q("SELECT path FROM $t.delete_files WHERE content = 1")
+      .map(_.getString(0)).toSet
+    assert(posFiles.nonEmpty)
+    assert(slots.length === 6)
+    assert(slots.forall(r => r.getString(0).endsWith(".parquet") && r.getLong(1) >= 0L))
+    assert(slots.map(_.getString(2)).toSet === posFiles)
+
+    // a pure-equality DELETE
+    spark.sql(s"DELETE FROM $t WHERE k = 5")
+    val dels = q("SELECT content, equality_columns, data_sequence FROM $t.delete_files")
+    assert(dels.forall(_.getLong(2) > 0L))
+    if (iceberg) {
+      assert(dels.filter(_.getInt(0) == 2).map(_.getString(1)).toSeq === Seq("k"))
+      assert(slots.length === 6)
+    } else {
+      assert(dels.forall(_.getInt(0) == 1))
+      assert(slots.length === 7)
+    }
+    val snaps = q("SELECT snapshot_id, added_files FROM $t.snapshots")
+    assert(snaps.length === 4)
+    assert(snaps.last.getLong(0) === format0.currentSnapshotId.get)
+    assert(snaps.last.getInt(1) === (if (iceberg) 1 else 0))
+    assert(long("SELECT count(*) FROM $t.files") ===
+      long("SELECT count(*) FROM $t.delete_files") + files.length)
+    assert(long("SELECT count(*) FROM $t") === 53L)
+
+    // compaction retires files: entries gains removals, all_files keeps
+    // the retired files flagged not live
+    val preCompact = format0.currentSnapshotId.get
+    spark.sql(s"CALL graft_wh.system.rewrite_data_files(table => '$ns.t')")
+    val compacted = format0.currentSnapshotId.get
+    assert(compacted !== preCompact)
+    assert(long("SELECT count(*) FROM $t.entries WHERE status = 2 " +
+      s"AND snapshot_id = $compacted") > 0L)
+    val allFiles = q("SELECT live, count(*) FROM $t.all_files GROUP BY live")
+      .map(r => r.getBoolean(0) -> r.getLong(1)).toMap
+    assert(allFiles(false) > 0L)
+    assert(allFiles(true) === long("SELECT count(*) FROM $t.files"))
+    assert(long("SELECT count(*) FROM $t") === 53L)
+
+    // a branch at the head and a tag before the compaction
+    spark.sql(s"CALL graft_wh.system.create_branch(table => '$ns.t', branch => 'dev')")
+    spark.sql(s"CALL graft_wh.system.create_tag(table => '$ns.t', tag => 'v1', " +
+      s"snapshot_id => $preCompact)")
+    val refs = q("SELECT name, type, snapshot_id FROM $t.refs")
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+    assert(refs === Set(("main", "branch", compacted), ("dev", "branch", compacted),
+      ("v1", "tag", preCompact)))
+
+    // a rollback leaves the compaction in history, off the current ancestry
+    spark.sql(s"CALL graft_wh.system.rollback_to_snapshot(table => '$ns.t', " +
+      s"snapshot_id => $preCompact)")
+    val hist = q("SELECT snapshot_id, is_current_ancestor FROM $t.history")
+      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    assert(hist.size === 5)
+    assert(hist.filter(!_._2).keySet === Set(compacted))
+    assert(long("SELECT count(*) FROM $t.files WHERE content = 0") === files.length.toLong)
+    assert(long("SELECT count(*) FROM $t") === 53L)
+    val snapIds = hist.keySet
+    val manifests = q("SELECT snapshot_id, form FROM $t.manifests")
+    assert(manifests.nonEmpty && manifests.forall(r => snapIds.contains(r.getLong(0))))
+    assert(manifests.map(_.getString(1)).toSet.subsetOf(
+      if (iceberg) Set("avro") else Set("inline", "spilled", "group")))
+
+    // one metadata_log_entries row per metadata version, the newest
+    // naming the current snapshot
+    val log = q("SELECT version, latest_snapshot_id FROM $t.metadata_log_entries " +
+      "ORDER BY version")
+    assert(log.length >= 8) // 2 appends, 2 deletes, rewrite, 2 refs, rollback
+    assert(log.map(_.getInt(0)).distinct.length === log.length)
+    assert(log.last.getLong(1) === preCompact)
+
+    // a real table named like a metadata table still wins resolution
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS graft_wh.$ns.t2")
+    spark.sql(s"CREATE TABLE graft_wh.$ns.t2.files (x BIGINT)")
+    assert(spark.sql(s"SELECT * FROM graft_wh.$ns.t2.files").columns === Array("x"))
+    spark.sql(s"DROP TABLE graft_wh.$ns.t2.files")
+  }
+
+  // the scan of a metadata table resolves the format handle when it is
+  // built, as a table scan loads fresh metadata per builder
+  test("a DataFrame over t.snapshots counts commits made after it was created") {
+    wh
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_wh.mfresh")
+    spark.sql("CREATE TABLE graft_wh.mfresh.t (k BIGINT)")
+    spark.sql("INSERT INTO graft_wh.mfresh.t VALUES (1)")
+    val snaps = spark.table("graft_wh.mfresh.t.snapshots")
+    assert(snaps.count() === 1L)
+    spark.sql("INSERT INTO graft_wh.mfresh.t VALUES (2)")
+    assert(snaps.count() === 2L)
+    spark.sql("DROP TABLE graft_wh.mfresh.t")
+  }
+
   test("SQL UPDATE keeps a sort-ordered table range-clustered") {
     val spark0 = spark
     import spark0.implicits._

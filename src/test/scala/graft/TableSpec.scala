@@ -121,7 +121,7 @@ class TableSpec extends AnyFunSuite {
     t.append(batch2)
     assert(t.scan().count() === li.count())
     assert(t.timeTravel(s1).count() === batch1.count())
-    assert(t.snapshotsDF.count() === 2)
+    assert(t.meta.snapshots.size === 2)
   }
 
   test("stats pruning skips files a predicate cannot match") {
@@ -301,11 +301,11 @@ class TableSpec extends AnyFunSuite {
     val root = tmp()
     val t = GraftTable.create(spark, root, li.schema)
     t.append(li.repartition(40))
-    val before = t.filesDF.count()
+    val before = t.meta.liveFiles(None).size
     val rowsBefore = t.scan().count()
     val hashBefore = t.scan().agg(sum(hash(col("l_orderkey"), col("l_linenumber")).cast("long"))).collect()(0).getLong(0)
     t.compact(targetFileBytes = 512L * 1024 * 1024)
-    val after = t.filesDF.count()
+    val after = t.meta.liveFiles(None).size
     assert(after < before, s"$after !< $before")
     assert(t.scan().count() === rowsBefore)
     val hashAfter = t.scan().agg(sum(hash(col("l_orderkey"), col("l_linenumber")).cast("long"))).collect()(0).getLong(0)
